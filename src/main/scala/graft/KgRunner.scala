@@ -35,7 +35,8 @@ object KgRunner {
     val outDir = if (args.nonEmpty) args(0) else "/tmp/graft_kg"
     val nPages = if (args.length > 1) args(1).toLong else 200L
     val par = if (args.length > 2) args(2).toInt else
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
+      sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString).toInt
 
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", s"local[$par]"))

@@ -1,8 +1,9 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.util.Observed
 
 /** Connected-components canonicalization (north star: "salted
   * connected-components pass, GraphFrames-style iterative joins over
@@ -138,7 +139,7 @@ object Canon {
         .groupBy($"v").agg(min($"label").as("label"))
       // second hop (pointer-jumping): adopt the label's label — this is what
       // makes convergence logarithmic instead of linear in diameter
-      val obs = org.apache.spark.sql.Observation()
+      val obs = Observation()
       val jumped = prop.as("p")
         .join(prop.select($"v".as("lv"), $"label".as("llabel")).as("q"),
           col("p.label") === col("q.lv"), "left")
@@ -147,45 +148,10 @@ object Canon {
             .as("label"))
         .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"))
         .localCheckpoint(eager = true)
-      // the observed metric is posted on the ASYNC listener bus after the
-      // eager checkpoint's action completes — drain the bus before reading
-      // so a fresh session's first iteration doesn't race into the (more
-      // expensive) diff-join fallback
-      // None = metrics row not delivered yet; Some(ZERO) = delivered but
-      // the sum is NULL (EMPTY vertex set — sum over no rows). The two
-      // must stay distinct: conflating them sent every empty-input run
-      // into the fallback no matter how long the bus was drained.
-      def readSum(): Option[java.math.BigDecimal] = {
-        val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-        if (m.isEmpty) None
-        else Some(m.get("label_sum")
-          .map(_.asInstanceOf[java.math.BigDecimal])
-          .filter(_ ne null)
-          .getOrElse(java.math.BigDecimal.ZERO))
-      }
-      var sumOpt = readSum()
-      if (sumOpt.isEmpty) {
-        // bounded drain-and-retry: the bus can re-queue behind a slow
-        // listener under load, so one drain is not always enough
-        val deadline = System.nanoTime() + 2000000000L
-        while (sumOpt.isEmpty && System.nanoTime() < deadline) {
-          org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-          sumOpt = readSum()
-          if (sumOpt.isEmpty) Thread.sleep(20)
-        }
-      }
-      val sumNow = sumOpt.orNull
-      val changed =
-        if (sumNow != null && prevSum != null) sumNow.compareTo(prevSum) != 0
-        else if (sumNow != null) true // first iteration: no baseline yet
-        else { // metric unavailable → fall back to the diff-join check
-          System.err.println(
-            "[canon] observed label_sum unavailable; diff-join fallback")
-          jumped.as("n")
-            .join(labels.as("o"), col("n.v") === col("o.v"))
-            .filter(col("n.label") =!= col("o.label"))
-            .limit(1).count() > 0
-        }
+      // NULL sum = EMPTY vertex set (sum over no rows): read as zero
+      val sumNow = Option(Observed.await(obs).getDecimal(0))
+        .getOrElse(java.math.BigDecimal.ZERO)
+      val changed = prevSum == null || sumNow.compareTo(prevSum) != 0
       prevSum = sumNow
       labels.unpersist(blocking = false)
       labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)

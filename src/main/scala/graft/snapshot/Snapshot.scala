@@ -1,8 +1,9 @@
 package graft.snapshot
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Observed
 
 /** Snapshot-per-stage checkpointing with per-partition lineage + counter
   * metrics (north rule: "resumable from checkpoint with per-partition
@@ -47,13 +48,6 @@ object Snapshot {
     * bucket). Per-partition counts are computed from the data itself —
     * they double as the counter metrics the reference logs every 1000 rows
     * (EnsemblePredict_all.py:415-416), but exact and queryable.
-    *
-    * Counters are OBSERVED METRICS on the write query itself (CollectMetrics
-    * with the TopKFreq count-by-key aggregate): the rows are counted while
-    * they stream to parquet — no post-write re-read job. Round 1 re-read the
-    * whole stage output per snapshot, the largest slice of the ~30 s fixed
-    * end-to-end floor. A defensive fallback re-reads only if the observed
-    * metric is unavailable.
     */
   def write(
       df: DataFrame,
@@ -69,42 +63,41 @@ object Snapshot {
     val arranged =
       if (partitionBy.nonEmpty) df.repartition(partitionBy.map(col): _*)
       else df
+    commit(arranged, dir, stage, partitionBy, parent) { observed =>
+      val writer = observed.write.mode(SaveMode.Overwrite)
+      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+        .parquet(dir)
+    }
+  }
+
+  /** The one commit path: `save` writes `df` with its per-partition row
+    * counts attached as an OBSERVED METRIC (CollectMetrics with the TopKFreq
+    * count-by-key aggregate), so the rows are counted while they stream to
+    * disk — no post-write re-read job. Round 1 re-read the whole stage
+    * output per snapshot, the largest slice of the ~30 s fixed end-to-end
+    * floor. The manifest is written only after `save` returns.
+    */
+  private def commit(
+      df: DataFrame,
+      dir: String,
+      stage: String,
+      partitionBy: Seq[String],
+      parent: String
+  )(save: DataFrame => Unit): Manifest = {
     val keyCol =
       if (partitionBy.nonEmpty)
         concat_ws("/", partitionBy.map(c => col(c).cast("string")): _*)
       else lit("all")
-    val obs = org.apache.spark.sql.Observation()
-    val observed = arranged.observe(obs,
-      graft.functions.TopKFreq
-        .top_k_freq(keyCol, Int.MaxValue, Int.MaxValue).as("part_counts"))
-    val writer = observed.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dir)
-    val spark = df.sparkSession
-    val partCounts: Map[String, Long] = {
-      val viaObs = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts").map {
-        case rows: scala.collection.Seq[_] =>
-          rows.map { case r: org.apache.spark.sql.Row =>
-            r.getString(0) -> r.getLong(1)
-          }.toMap
-      }
-      viaObs.getOrElse {
-        // fallback: post-write re-read (pre-observe behavior)
-        val written = spark.read.parquet(dir)
-        if (partitionBy.nonEmpty)
-          written.groupBy(partitionBy.map(col): _*).count()
-            .collect()
-            .map(r => partitionBy.indices.map(i => String.valueOf(r.get(i)))
-              .mkString("/") -> r.getLong(partitionBy.length))
-            .toMap
-        else Map("all" -> written.count())
-      }
-    }
+    val obs = Observation()
+    save(df.observe(obs, graft.functions.TopKFreq
+      .top_k_freq(keyCol, Int.MaxValue, Int.MaxValue).as("part_counts")))
+    val partCounts = Observed.await(obs).getSeq[Row](0)
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val counts =
       if (partCounts.isEmpty && partitionBy.isEmpty) Map("all" -> 0L)
       else partCounts
     val m = Manifest(stage, counts.values.sum, counts, parent)
-    val out = fs(spark, dir).create(new HPath(manifestPath(dir)), true)
+    val out = fs(df.sparkSession, dir).create(new HPath(manifestPath(dir)), true)
     try out.write(toJson(m).getBytes("UTF-8"))
     finally out.close()
     m
@@ -128,28 +121,15 @@ object Snapshot {
   )(compute: => DataFrame): DataFrame = {
     if (!exists(spark, dir)) {
       val t0 = System.nanoTime()
-      val df = compute
-      val obs = org.apache.spark.sql.Observation()
-      val observed = df.observe(obs,
-        graft.functions.TopKFreq
-          .top_k_freq(lit("all"), Int.MaxValue, Int.MaxValue)
-          .as("part_counts"))
-      spark.sql(s"DROP TABLE IF EXISTS $table")
-      observed.write.mode(SaveMode.Overwrite)
-        .option("path", dir)
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .format("parquet")
-        .saveAsTable(table)
-      val rows = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs).get("part_counts") match {
-        case Some(rs: scala.collection.Seq[_]) =>
-          rs.map { case r: org.apache.spark.sql.Row => r.getLong(1) }.sum
-        case _ => spark.read.parquet(dir).count()
+      commit(compute, dir, name, Nil, parent) { observed =>
+        spark.sql(s"DROP TABLE IF EXISTS $table")
+        observed.write.mode(SaveMode.Overwrite)
+          .option("path", dir)
+          .bucketBy(buckets, bucketCol)
+          .sortBy(bucketCol)
+          .format("parquet")
+          .saveAsTable(table)
       }
-      val m = Manifest(name, rows, Map("all" -> rows), parent)
-      val out = fs(spark, dir).create(new HPath(manifestPath(dir)), true)
-      try out.write(toJson(m).getBytes("UTF-8"))
-      finally out.close()
       System.err.println(
         f"[snapshot] bucketed stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
     }

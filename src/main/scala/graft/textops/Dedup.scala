@@ -670,11 +670,12 @@ object Dedup {
     * (guide §2.3 "shuffle keys instead of payloads"). Identical edges as
     * long as fnv1a64 is injective on the corpus's shingle set: a collision
     * could only MERGE two df=1 shingles into a phantom df=2 edge (or knock
-    * a real df=2 shingle out via df=3), which flips a cluster label and
-    * turns the cluster oracles red — observable, with even odds needing
-    * ~2^32 distinct shingles (birthday bound), far above any per-corpus
-    * shingle count this engine caps buckets for. The string path is kept
-    * for direct SQL-recomputability.
+    * a real df=2 shingle out via df=3). Above ~2^32 distinct shingles
+    * (birthday bound) collisions are EXPECTED, and they are SILENT: nothing
+    * here detects them, and only an oracle comparison against the string
+    * path would show the changed edge or cluster label. `hashShingles=false`
+    * is the collision-free path (it keys on the window strings themselves)
+    * and is kept for that and for direct SQL-recomputability.
     */
   def sharedRareShingleEdges(
       docs: DataFrame,

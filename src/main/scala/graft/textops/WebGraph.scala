@@ -1,7 +1,8 @@
 package graft.textops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.util.Observed
 
 /** Host-level link-graph analytics for web corpora: edge extraction from
   * document text plus an integer-exact damped PageRank (Page et al. 1999,
@@ -390,34 +391,11 @@ object WebGraph {
       // shares only the exchange). Same integer math, same divisors, same
       // scores (warm 2.31 → 1.26 s at sf0.1 for the 3-iteration query).
       def rawMax(df: DataFrame): (DataFrame, Long) = {
-        val spark = df.sparkSession
-        val obs = org.apache.spark.sql.Observation()
+        val obs = Observation()
         val ck = df.observe(obs, max(col("raw")).as("mx"))
           .localCheckpoint(true)
-        def read(): Option[Long] = {
-          val m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-          if (m.isEmpty) None
-          else Some(m.get("mx").map {
-            case null => 0L
-            case v => v.asInstanceOf[Long]
-          }.getOrElse(0L))
-        }
-        var mx = read()
-        if (mx.isEmpty) {
-          val deadline = System.nanoTime() + 2000000000L
-          while (mx.isEmpty && System.nanoTime() < deadline) {
-            org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-            mx = read()
-            if (mx.isEmpty) Thread.sleep(20)
-          }
-        }
-        // fallback: one cheap agg over the checkpointed table (metric lost
-        // to a slow listener bus — same stance as Canon's diff-join)
-        val m = mx.getOrElse {
-          val row = ck.agg(max(col("raw"))).first()
-          if (row.isNullAt(0)) 0L else row.getLong(0)
-        }
-        (ck, m)
+        val row = Observed.await(obs)
+        (ck, if (row.isNullAt(0)) 0L else row.getLong(0))
       }
       for (_ <- 1 to iterations) {
         val (ar, amx) = rawMax(

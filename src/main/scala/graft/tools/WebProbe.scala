@@ -12,7 +12,8 @@ object WebProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString).toInt
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)

@@ -11,13 +11,6 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Non-blocking observed-metric read (`Observation.getOrEmpty` is
-    * private[sql] in Spark 4): empty map when the observed plan's action has
-    * not completed — lets snapshot counters degrade to a re-read instead of
-    * blocking forever if CollectMetrics ever fails to fire on a write.
-    */
-  def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
-
   /** Block until the async SparkListenerBus has delivered every queued
     * event (`listenerBus` is private[spark]; bridged so the measurement
     * tools can read listener-fed counters deterministically instead of

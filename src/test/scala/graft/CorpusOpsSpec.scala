@@ -68,7 +68,12 @@ class CorpusOpsSpec extends AnyFunSuite {
       .select(col("doc_id"), col("text"))
     val weird = Seq(
       (9000001L, ""), (9000002L, "one two"), (9000003L, "one  two"),
-      (9000004L, "   "), (9000005L, "a b c a b c a b c")
+      (9000004L, "   "), (9000005L, "a b c a b c a b c"),
+      // a pair sharing exactly two 3-word shingles found nowhere else
+      // ("qz1 qz2 qz3", "qz2 qz3 qz4"), so the edge set is non-empty
+      // whatever the real documents contain
+      (9000006L, "qz1 qz2 qz3 qz4 alpha"),
+      (9000007L, "beta qz1 qz2 qz3 qz4")
     ).toDF("doc_id", "text")
     val docs = real.unionByName(weird)
     val hashed = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2,
@@ -79,7 +84,8 @@ class CorpusOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hashed == strings,
       s"edge mismatch: only-hashed=${hashed.diff(strings)} only-string=${strings.diff(hashed)}")
-    assert(hashed.nonEmpty, "fixture must produce at least one edge")
+    assert(hashed.contains((9000006L, 9000007L)),
+      "the planted pair must link")
   }
 
   test("md5Bucket: deterministic, in [0,100), engine-stable value") {
