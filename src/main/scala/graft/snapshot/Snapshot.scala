@@ -1,7 +1,9 @@
 package graft.snapshot
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import graft.util.Observed
 
@@ -33,12 +35,26 @@ object Snapshot {
 
   def manifestPath(dir: String): String = s"$dir/_manifest.json"
 
+  /** Hadoop options of every commit (the parquet and bucketed writes and
+    * the manifest IO): `file:` paths go through [[NioLocalFileSystem]], so
+    * creating a dir or file forks no `chmod`. The FileSystem cache is keyed
+    * by scheme, not by implementation, so a `file:` instance cached earlier
+    * would be reused without the second key. Both keys apply only to
+    * `file:`; hdfs:// and s3a:// outDirs are untouched.
+    */
+  private val nioLocal = Map(
+    "fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** All manifest IO goes through the Hadoop FileSystem of the target path,
     * so snapshots gate correctly on hdfs:// and s3a:// outDirs as well as
     * local paths (the spark-submit cluster case, not just the sandbox).
     */
-  private def fs(spark: SparkSession, path: String): FileSystem =
-    new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, path: String): FileSystem = {
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    nioLocal.foreach { case (k, v) => conf.set(k, v) }
+    new HPath(path).getFileSystem(conf)
+  }
 
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new HPath(manifestPath(dir)))
@@ -56,15 +72,20 @@ object Snapshot {
       partitionBy: Seq[String] = Nil,
       parent: String = ""
   ): Manifest = {
-    // shuffle rows onto their target partition before a partitioned write:
-    // otherwise every task writes a file into every partition dir
-    // (tasks × partitions small files — the classic partitioned-write
-    // explosion). One shuffle buys one file per partition per write.
+    // A partitioned write first hashes each leaf's rows onto one task, so
+    // every leaf dir gets one file instead of one per task. The partition
+    // count is given because AQE coalesces an unnumbered repartition of a
+    // small stage into ONE partition, and one task then writes every leaf
+    // file; a numbered one is never coalesced, so up to
+    // `spark.sql.shuffle.partitions` tasks write the leaves.
     val arranged =
-      if (partitionBy.nonEmpty) df.repartition(partitionBy.map(col): _*)
+      if (partitionBy.nonEmpty)
+        df.repartition(
+          df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+          partitionBy.map(col): _*)
       else df
     commit(arranged, dir, stage, partitionBy, parent) { observed =>
-      val writer = observed.write.mode(SaveMode.Overwrite)
+      val writer = observed.write.mode(SaveMode.Overwrite).options(nioLocal)
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .parquet(dir)
     }
@@ -123,7 +144,7 @@ object Snapshot {
       val t0 = System.nanoTime()
       commit(compute, dir, name, Nil, parent) { observed =>
         spark.sql(s"DROP TABLE IF EXISTS $table")
-        observed.write.mode(SaveMode.Overwrite)
+        observed.write.mode(SaveMode.Overwrite).options(nioLocal)
           .option("path", dir)
           .bucketBy(buckets, bucketCol)
           .sortBy(bucketCol)
@@ -139,6 +160,11 @@ object Snapshot {
 
   /** Manifest-gated stage: skip the compute entirely when the snapshot is
     * already committed (resume path), else run and commit.
+    *
+    * An empty partitioned stage leaves no parquet file to infer a schema
+    * from, so it is read back with the compute's schema (partition columns
+    * last, as partition discovery orders them); building `compute` for its
+    * schema is analysis only and runs no Spark job.
     */
   def stage(
       spark: SparkSession,
@@ -147,13 +173,31 @@ object Snapshot {
       partitionBy: Seq[String] = Nil,
       parent: String = ""
   )(compute: => DataFrame): DataFrame = {
-    if (!exists(spark, dir)) {
-      val t0 = System.nanoTime()
-      write(compute, dir, name, partitionBy, parent)
-      System.err.println(
-        f"[snapshot] stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
-    spark.read.parquet(dir)
+    lazy val df = compute
+    val empty =
+      if (!exists(spark, dir)) {
+        val t0 = System.nanoTime()
+        val m = write(df, dir, name, partitionBy, parent)
+        System.err.println(
+          f"[snapshot] stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+        m.rows == 0
+      } else partitionBy.nonEmpty && committedRows(spark, dir) == 0
+    if (empty && partitionBy.nonEmpty) {
+      val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
+      spark.read.schema(StructType(data ++ parts)).parquet(dir)
+    } else spark.read.parquet(dir)
+  }
+
+  private val RowsField = ""","rows":(\d+),""".r
+
+  /** `rows` of a committed manifest. The stage name before it is escaped
+    * (`"` becomes `\"`), so the first `,"rows":` is this field.
+    */
+  private def committedRows(spark: SparkSession, dir: String): Long = {
+    val in = fs(spark, dir).open(new HPath(manifestPath(dir)))
+    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    RowsField.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(
+      throw new IllegalStateException(s"no rows in ${manifestPath(dir)}: $json"))
   }
 
   def toJson(m: Manifest): String = {

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.canon.Canon
 import graft.link.Link
@@ -175,12 +176,103 @@ class SnapshotSpec extends AnyFunSuite {
     Snapshot.stage(spark, s"$base/plain", "plain")(empty)
     assert(manifestOf(s"$base/plain") ==
       """{"stage":"plain","rows":0,"partitions":{"all":0},"parent":""}""")
-    // `write` is the commit `stage` runs; `stage` itself cannot be used
-    // here because an empty partitioned write leaves no parquet file, so
-    // its read-back has no schema to infer
-    Snapshot.write(empty, s"$base/parts", "parts", partitionBy = Seq("k"))
+    // an empty partitioned write leaves no parquet file: the read-back,
+    // on first commit and on resume, takes the compute's schema
+    val first = Snapshot.stage(spark, s"$base/parts", "parts",
+      partitionBy = Seq("k"))(empty)
     assert(manifestOf(s"$base/parts") ==
       """{"stage":"parts","rows":0,"partitions":{},"parent":""}""")
+    val resumed = Snapshot.stage(spark, s"$base/parts", "parts",
+      partitionBy = Seq("k"))(empty)
+    for (df <- Seq(first, resumed)) {
+      assert(df.columns.toSeq == Seq("v", "k") && df.count() == 0)
+    }
+  }
+
+  private def walk(dir: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private def mode(p: java.nio.file.Path): String =
+    java.nio.file.attribute.PosixFilePermissions.toString(
+      java.nio.file.Files.getPosixFilePermissions(p))
+
+  test("a commit forks no process") {
+    import spark.implicits._
+    import jdk.jfr.consumer.RecordingFile
+    val base = java.nio.file.Files.createTempDirectory("snapfork")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val commands = try {
+      Snapshot.stage(spark, s"$base/parts", "parts", partitionBy = Seq("k")) {
+        (1 to 40).map(i => (s"k${i % 9}", i)).toDF("k", "v")
+      }
+      Snapshot.stageBucketed(spark, s"$base/b", "snapshot_spec_forks",
+        "b", "k", buckets = 4) {
+        (1 to 40).map(i => (s"k${i % 9}", i)).toDF("k", "v")
+      }
+      // a launch the recording must see, so an empty record cannot pass
+      new ProcessBuilder("true", base.toString).start().waitFor()
+      rec.stop()
+      val jfr = base.resolve("forks.jfr")
+      rec.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.toList
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command"))
+    } finally {
+      rec.close()
+      spark.sql("DROP TABLE IF EXISTS snapshot_spec_forks")
+    }
+    val inDir = commands.filter(_.contains(base.toString))
+    assert(inDir == Seq(s"true $base"), commands.mkString("\n"))
+    // the commit's file system is never cached, so other `file:` users of
+    // the session keep the default one whichever created it first
+    val shared = org.apache.hadoop.fs.FileSystem.get(base.toUri,
+      spark.sparkContext.hadoopConfiguration)
+    assert(!shared.isInstanceOf[graft.snapshot.NioLocalFileSystem])
+  }
+
+  test("commit modes match chmod's under umask 022; sticky bit still chmods") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("snapmode").toString + "/w"
+    Snapshot.write((1 to 20).map(i => (s"k${i % 3}", i)).toDF("k", "v"),
+      dir, "w", partitionBy = Seq("k"))
+    val paths = walk(dir)
+    val files = paths.filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") || n == "_manifest.json"
+    }
+    val leaves = paths.filter(_.getFileName.toString.startsWith("k="))
+    assert(files.size == 4 && leaves.size == 3)
+    assert(files.map(mode).toSet == Set("rw-r--r--"))
+    assert(leaves.map(mode).toSet == Set("rwxr-xr-x"))
+
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new graft.snapshot.NioLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    val d = java.nio.file.Files.createTempDirectory("snapsticky")
+    val hd = new org.apache.hadoop.fs.Path(d.toUri)
+    fs.setPermission(hd, new FsPermission(java.lang.Short.parseShort("750", 8)))
+    assert(mode(d) == "rwxr-x---")
+    fs.setPermission(hd, new FsPermission(java.lang.Short.parseShort("1755", 8)))
+    val unixMode = java.nio.file.Files.getAttribute(d, "unix:mode").asInstanceOf[Int]
+    assert((unixMode & 0xfff) == Integer.parseInt("1755", 8))
+  }
+
+  test("a partitioned write is spread over several tasks, one file per leaf") {
+    import spark.implicits._
+    val par = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val dir = java.nio.file.Files.createTempDirectory("snapfan").toString + "/w"
+    Snapshot.write((1 to 20 * par).map(i => (s"k${i % (4 * par)}", i)).toDF("k", "v"),
+      dir, "w", partitionBy = Seq("k"))
+    val parquet = walk(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+    val perLeaf = parquet.groupBy(_.getParent)
+    assert(perLeaf.size == 4 * par && perLeaf.values.forall(_.size == 1))
+    val tasks = parquet.map(_.getFileName.toString.take("part-00000".length)).toSet
+    assert(tasks.size > 1, tasks)
   }
 }
 
