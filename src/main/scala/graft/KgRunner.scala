@@ -136,7 +136,7 @@ object KgRunner {
     // mention_tokens and links persist as SURFACE-BUCKETED tables: the link
     // profile aggregations and the canon alias-edge derivation key on
     // surface, so their first pass over these snapshots reads co-located
-    // buckets instead of exchanging (PlanCheck audits this plan).
+    // buckets instead of exchanging (PlanGuardSpec pins this plan).
     val mentionTokensF = Future {
       Snapshot.stageBucketed(spark, s"$outDir/mention_tokens",
         "graft_mention_tokens", "mention_tokens",
@@ -150,8 +150,7 @@ object KgRunner {
     val links = Snapshot.stageBucketed(spark, s"$outDir/links",
       "graft_links", "links",
       bucketCol = "surface", buckets = par, parent = "mention_tokens") {
-      Link.linkTableFromTokens(mentionTokens, b.trie, Ontology.jiebaReverse,
-        prePartitioned = true)
+      Link.linkTableFromTokens(mentionTokens, b.trie, Ontology.jiebaReverse)
     }
     spark.catalog.clearCache() // drop the tf profile cache post-commit
 

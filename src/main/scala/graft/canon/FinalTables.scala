@@ -15,9 +15,11 @@ import graft.pipeline.Annotate.SentenceArtifacts
   *   - `crte_time` is a FIXED timestamp, not now() (:397-398) — wall-clock in
   *     outputs breaks resume byte-identity;
   *   - `head_id` keeps the reference's h%%08d dense-index format (A12,
-  *     :1174-1180) computed by dense_rank over the sorted group keys — the
-  *     distinct-group table is vocabulary-sized, so the global window is
-  *     cheap; the canonical CONTENT ids used for joins remain hashes
+  *     :1174-1180) computed by dense_rank over the sorted group keys in ONE
+  *     global window (one partition). The distinct-group count grows with
+  *     the corpus (46,034 groups over 338,988 sentences at 20k pages), so
+  *     this is a serial step; ROADMAP Direction 3 tracks the distributed
+  *     replacement. The canonical CONTENT ids used for joins remain hashes
   *     (Materialize), this column is format parity only.
   */
 object FinalTables {
@@ -63,8 +65,9 @@ object FinalTables {
       .withColumn("head_onto_id", ontoUdf(col("head_type")))
       .withColumn("crte_time", lit(CrteTime))
       .withColumn("crter", lit(Crter))
-    // A12 head-id: dense index over the sorted group keys (format parity;
-    // distinct groups are vocabulary-sized so the global window is fine)
+    // A12 head-id: dense index over the sorted group keys (format parity).
+    // The global window runs on one partition and the group count grows
+    // with the corpus; ROADMAP Direction 3 tracks a distributed index.
     val groups = base
       .select(col("text_label"), col("text_background"), col("catalog"),
         col("souc_id")).distinct()

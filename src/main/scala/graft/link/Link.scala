@@ -70,20 +70,17 @@ object Link {
     *   - nSurfaces is a broadcast 1-row aggregate inside the same DAG, not a
     *     driver-side count() job.
     *
-    * @param prePartitioned input is already hash-distributed by `surface`
-    *   (e.g. read from a surface-bucketed table) — skips the up-front
-    *   repartition so the whole profile computation is EXCHANGE-FREE.
+    * Over a table bucketed on `surface` with as many buckets as shuffle
+    * partitions (the runner's `mention_tokens`), the planner drops the
+    * up-front repartition, so the corpus-sized side is exchange-free.
     */
   def contextProfiles(
       mentionContexts: DataFrame, // (surface, token)
-      minIdf: Double = 0.1,
-      prePartitioned: Boolean = false
+      minIdf: Double = 0.1
   ): DataFrame = {
     val spark = mentionContexts.sparkSession
     import spark.implicits._
-    val bySurface =
-      if (prePartitioned) mentionContexts
-      else mentionContexts.repartition($"surface")
+    val bySurface = mentionContexts.repartition($"surface")
     // tf is the multi-consumer hub (idf, nSurfaces, w, norms all read it):
     // persist the vocabulary-sized aggregate so the CORPUS-sized input is
     // scanned exactly once — without it, the exchange-free plan re-scans
@@ -140,9 +137,9 @@ object Link {
     if (union == 0) 0.0 else inter / union
   }
 
-  /** Full linking pass over pipeline artifacts: distinct mention surfaces →
-    * candidates → blended score; accepted links become alias edges for
-    * [[graft.canon.Canon]]. Returns (surface, entType, candidate, score).
+  /** Link contexts from pipeline artifacts: every ensemble_strong mention
+    * paired with each seg token (length ≥ 2) of its sentence. Returns
+    * (surface, entType, token).
     */
   def mentionTokens(arts: Dataset[SentenceArtifacts])(
       implicit spark: SparkSession): DataFrame = {
@@ -155,31 +152,22 @@ object Link {
     }.toDF("surface", "entType", "token")
   }
 
-  def linkTable(
-      arts: Dataset[SentenceArtifacts],
-      trieB: Broadcast[Trie],
-      typeOfTag: Map[String, String],
-      minScore: Double = 0.3
-  )(implicit spark: SparkSession): DataFrame =
-    linkTableFromTokens(mentionTokens(arts), trieB, typeOfTag, minScore)
-
-  /** Same, but from a (surface, entType, token) table — the snapshot-stage
-    * entry point used by the resumable runner.
+  /** Full linking pass over a [[mentionTokens]] table: distinct mention
+    * surfaces → candidates → blended score; accepted links become alias
+    * edges for [[graft.canon.Canon]]. Returns (surface, entType, candidate,
+    * score). The snapshot-stage entry point used by the resumable runner.
     */
   def linkTableFromTokens(
       mentionTokens: DataFrame,
       trieB: Broadcast[Trie],
       typeOfTag: Map[String, String],
-      minScore: Double = 0.3,
-      prePartitioned: Boolean = false
+      minScore: Double = 0.3
   )(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val surfaces = mentionTokens.select($"surface", $"entType").distinct()
       .as[(String, String)]
     val cands = candidates(surfaces, trieB, typeOfTag)
-    val profiles = contextProfiles(
-      mentionTokens.select($"surface", $"token"),
-      prePartitioned = prePartitioned)
+    val profiles = contextProfiles(mentionTokens.select($"surface", $"token"))
     val ctxScore = score(cands, profiles)
     val blend = udf { (s: String, c: String, sim: Double) =>
       0.5 * bigramJaccard(s, c) + 0.5 * sim

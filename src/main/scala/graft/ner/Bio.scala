@@ -84,19 +84,6 @@ object Bio {
     (types.toSeq, spans.toSeq, probPairs.toSeq)
   }
 
-  /** Which span (index into `positions`) contains char `n`; -1 if none.
-    * Port of `get_word_ind` (EnsemblePredict_all.py usage at :361).
-    */
-  def wordIndex(positions: Seq[(Int, Int)], n: Int): Int = {
-    var i = 0
-    while (i < positions.length) {
-      val (s, e) = positions(i)
-      if (n >= s && n < e) return i
-      i += 1
-    }
-    -1
-  }
-
   /** Spans + types → BIO sequence of length `len` (the `voted_seq`
     * reconstruction, EnsemblePredict_all.py:380-389).
     */

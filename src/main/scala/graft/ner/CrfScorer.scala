@@ -242,7 +242,6 @@ object CrfScorer {
   val Types: IndexedSeq[String] = Ontology.essential.keys.toIndexedSeq.sorted
   val Labels: IndexedSeq[String] =
     "O" +: Types.flatMap(t => Seq(s"B-$t", s"I-$t"))
-  val NumLabels: Int = Labels.length
   private val labelIdx: Map[String, Int] = Labels.zipWithIndex.toMap
   def labelIndex(l: String): Int = labelIdx(l)
 
@@ -285,31 +284,6 @@ object CrfScorer {
     val d = x - 2.0
     if (d <= 0) 0.0 else 1.0 / (1.0 + 10.0 / (d * d))
   }
-
-  /** Precomputed transition matrix [from][to]; I-T only after B-T/I-T. */
-  private val Trans: Array[Array[Double]] = {
-    val m = Array.ofDim[Double](NumLabels, NumLabels)
-    var from = 0
-    while (from < NumLabels) {
-      val fromL = Labels(from)
-      var to = 0
-      while (to < NumLabels) {
-        val toL = Labels(to)
-        m(from)(to) =
-          if (toL.startsWith("I-")) {
-            val t = toL.substring(2)
-            if ((fromL.startsWith("B-") || fromL.startsWith("I-")) &&
-              fromL.substring(2) == t) 0.2
-            else NegInf
-          } else 0.0
-        to += 1
-      }
-      from += 1
-    }
-    m
-  }
-  private val StartBlocked: Array[Boolean] =
-    Labels.map(_.startsWith("I-")).toArray
 
   /** Viterbi over an active-label sublattice; transitions: I-t reachable only
     * from B-t/I-t of the same type (+0.2), everything else 0.
@@ -388,53 +362,6 @@ object CrfScorer {
     path(n - 1) = bl
     i = n - 1
     while (i > 0) { path(i - 1) = bp(i * nA + path(i)); i -= 1 }
-    path
-  }
-
-  /** emit is a flat n×NumLabels array. */
-  def viterbi(emit: Array[Double], n: Int): Array[Int] = {
-    val dp = Array.ofDim[Double](n * NumLabels)
-    val bp = Array.ofDim[Int](n * NumLabels)
-    var l = 0
-    while (l < NumLabels) {
-      dp(l) = if (StartBlocked(l)) NegInf else emit(l)
-      l += 1
-    }
-    var i = 1
-    while (i < n) {
-      val prevBase = (i - 1) * NumLabels
-      val base = i * NumLabels
-      var to = 0
-      while (to < NumLabels) {
-        var best = NegInf
-        var bestFrom = 0
-        var from = 0
-        while (from < NumLabels) {
-          val tr = Trans(from)(to)
-          if (tr != NegInf) {
-            val s = dp(prevBase + from) + tr
-            if (s > best) { best = s; bestFrom = from }
-          }
-          from += 1
-        }
-        dp(base + to) = best + emit(base + to)
-        bp(base + to) = bestFrom
-        to += 1
-      }
-      i += 1
-    }
-    val path = new Array[Int](n)
-    var bl = 0
-    var bs = NegInf
-    val lastBase = (n - 1) * NumLabels
-    l = 0
-    while (l < NumLabels) {
-      if (dp(lastBase + l) > bs) { bs = dp(lastBase + l); bl = l }
-      l += 1
-    }
-    path(n - 1) = bl
-    i = n - 1
-    while (i > 0) { path(i - 1) = bp(i * NumLabels + path(i)); i -= 1 }
     path
   }
 

@@ -88,16 +88,6 @@ object Sources {
       .map { case (c, tag) => s"$c\t$tag" } :+ ""
   }
 
-  def writeBio(
-      ds: Dataset[(String, Seq[Token])],
-      path: String
-  ): Unit = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.flatMap { case (sent, seg) => bioLines(sent, seg) }
-      .write.mode(SaveMode.Overwrite).text(path)
-  }
-
   /** NER-type substitution for dictionary-missing auxiliary types
     * (generation.py:216-238): a model mention whose type is in `notin_types`
     * and whose [start, end) span EXACTLY equals a seg token's span replaces

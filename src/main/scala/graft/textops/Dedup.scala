@@ -662,7 +662,7 @@ object Dedup {
     * ubiquitous shingles (df > 2) drop out before the pair stage, so no hot
     * keys reach the second shuffle.
     *
-    * r6 (`hashShingles=true`, the [[exactSubstrDedup]] hashGrams stance):
+    * r6 (`hashShingles=true`, the [[exactSubstringDedup]] hashed-gram stance):
     * the inverted index is keyed on [[shingles]]' streamed fnv1a64 hashes
     * instead of the shingle strings — the exploded rows and both shuffles
     * carry an 8-byte long where the string form carries the n-word window
@@ -865,15 +865,14 @@ object Dedup {
     * could not partial-aggregate); unique grams (the overwhelming majority
     * at any scale) die in the partial agg. Coverage and reconstruction are
     * keyed by (doc_id, idx) — partitioned by doc, per-doc memory bounded
-    * by the document's own word count. With `hashGrams` (the default) the
-    * duplicate-gram table is keyed by `xxhash64(gram)` instead of the k-word
-    * string — 8 bytes/row through the corpus-wide shuffle instead of the
-    * gram text (measured ~8× fewer gram-stage shuffle bytes at sf0.1, see
-    * BASELINE.md). A 64-bit collision (~n²/2⁶⁵) could only MERGE two
-    * distinct grams' occurrence groups — deterministic, and it would
-    * surface as a removal diff against the string-keyed DuckDB oracle,
-    * which stays byte-exact on the gram TEXT; `hashGrams = false` retains
-    * the exact-string path.
+    * by the document's own word count. The duplicate-gram table is keyed by
+    * `xxhash64(gram)` instead of the k-word string — 8 bytes/row through the
+    * corpus-wide shuffle instead of the gram text (measured ~8× fewer
+    * gram-stage shuffle bytes at sf0.1, see BASELINE.md). A 64-bit
+    * collision (~n²/2⁶⁵) could only MERGE two distinct grams' occurrence
+    * groups — deterministic, and it would surface as a removal diff against
+    * the string-keyed DuckDB oracle, which stays the exact reference on the
+    * gram TEXT.
     *
     * The (doc_id, words) projection feeds three consumers (shingles,
     * positions, final counts); at 100 TB cache/checkpoint that projection
@@ -886,14 +885,13 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      k: Int = 8,
-      hashGrams: Boolean = true
+      k: Int = 8
   ): DataFrame = {
     val base = docs.select(
       col(idCol).cast("long").as("doc_id"),
       filter(split(coalesce(col(textCol), lit("")), " +", -1),
         w => length(w) > 0).as("w"))
-    val shStr = base.select(col("doc_id"),
+    val sh = base.select(col("doc_id"),
       explode(when(size(col("w")) >= k,
         transform(sequence(lit(1), size(col("w")) - (k - 1)),
           i => struct(i.as("start"),
@@ -901,12 +899,7 @@ object Dedup {
         .otherwise(array().cast("array<struct<start:int,gram:string>>")))
         .as("s"))
       .select(col("doc_id"), col("s.start").as("start"),
-        col("s.gram").as("gram"))
-    val sh =
-      if (hashGrams)
-        shStr.select(col("doc_id"), col("start"),
-          xxhash64(col("gram")).as("gram"))
-      else shStr
+        xxhash64(col("s.gram")).as("gram"))
     val firsts = sh.groupBy("gram").agg(
       count(lit(1)).as("c"),
       min(struct(col("doc_id"), col("start"))).as("first"))

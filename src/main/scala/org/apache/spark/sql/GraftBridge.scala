@@ -10,12 +10,4 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Block until the async SparkListenerBus has delivered every queued
-    * event (`listenerBus` is private[spark]; bridged so the measurement
-    * tools can read listener-fed counters deterministically instead of
-    * sleeping and hoping the bus drained).
-    */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty(30000L)
 }

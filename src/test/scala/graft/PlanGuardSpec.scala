@@ -1,14 +1,20 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
-/** Plan-shape regression guards: the properties PlanCheck audits manually,
-  * enforced as tests so a refactor can't silently regress them — filter
-  * pushdown reaching the scan, broadcast joins on dim tables, no accidental
-  * cartesian products, and the bounded dedup aggregate actually planning as
-  * an object-hash aggregate (partial merge, no full-bucket sort buffer).
+/** Plan-shape regression guards, enforced as tests so a refactor can't
+  * silently regress them — filter pushdown reaching the scan, broadcast
+  * joins on dim tables, no accidental cartesian products, the bounded dedup
+  * aggregate actually planning as an object-hash aggregate (partial merge,
+  * no full-bucket sort buffer), and the exchange-free link profiles over
+  * the surface-bucketed `mention_tokens` snapshot.
   */
-class PlanGuardSpec extends AnyFunSuite {
+class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestBase.spark
   val sf = "/root/testdata/sf0.001"
 
@@ -112,6 +118,75 @@ class PlanGuardSpec extends AnyFunSuite {
       !pt.contains("BroadcastNestedLoopJoin"), pt.take(800))
     // and the wedge stage is really join-shaped (not collapsed to a scan)
     assert(pt.contains("Join"), pt.take(800))
+  }
+
+  /** Every node of `p` paired with whether it runs inside an in-memory
+    * cache: descends through AQE stages and subqueries, and into the plan
+    * of each cached relation it scans.
+    */
+  private def deepNodes(p: SparkPlan,
+      inCache: Boolean = false): Seq[(SparkPlan, Boolean)] =
+    collectWithSubqueries(p) { case n => n }.flatMap {
+      case c: InMemoryTableScanExec =>
+        (c, inCache) +: deepNodes(c.relation.cachedPlan, inCache = true)
+      case n => Seq((n, inCache))
+    }
+
+  private def surfaceKeyed(n: SparkPlan): Boolean = n match {
+    case e: ShuffleExchangeExec => e.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.flatMap(_.references).exists(_.name == "surface")
+      case _ => false
+    }
+    case _ => false
+  }
+
+  test("link profiles over the surface-bucketed mention_tokens exchange nothing on surface") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("plan").toString + "/mt"
+    val table = "plan_guard_mention_tokens"
+    val arts = graft.pipeline.Pipeline.artifacts(
+      graft.corpus.Corpus.pages(spark, 40, 4))
+    // 4 buckets = the session's 4 shuffle partitions, as KgRunner sets them
+    val bucketed = graft.snapshot.Snapshot.stageBucketed(spark, dir, table,
+      "mention_tokens", bucketCol = "surface", buckets = 4) {
+      graft.link.Link.mentionTokens(arts)
+    }
+    def profileNodes(mt: org.apache.spark.sql.DataFrame, aqe: Boolean) = {
+      val before = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      try {
+        val profiles = graft.link.Link.contextProfiles(
+          mt.select(col("surface"), col("token")))
+        profiles.collect()
+        deepNodes(profiles.queryExecution.executedPlan)
+      } finally {
+        spark.catalog.clearCache() // the tf cache: fresh per plan
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+      }
+    }
+    try {
+      Seq(true, false).foreach { aqe =>
+        val nodes = profileNodes(bucketed, aqe)
+        assert(!nodes.exists(n => surfaceKeyed(n._1)), s"aqe=$aqe: " +
+          nodes.map(_._1).filter(surfaceKeyed).mkString("\n"))
+        assert(!nodes.exists {
+          case (_: FileSourceScanExec, inCache) => !inCache
+          case _ => false
+        }, s"aqe=$aqe: the corpus is scanned outside the tf cache")
+        assert(nodes.exists(_._1.isInstanceOf[InMemoryTableScanExec]),
+          s"aqe=$aqe: no tf cache read")
+      }
+      // the resume shape, the same files read back as plain parquet: one
+      // surface exchange, feeding the tf cache
+      Seq(true, false).foreach { aqe =>
+        val keyed = profileNodes(spark.read.parquet(dir), aqe)
+          .filter(n => surfaceKeyed(n._1)).distinct
+        assert(keyed.size == 1 && keyed.head._2,
+          s"aqe=$aqe: " + keyed.mkString("\n"))
+      }
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("langid stays a narrow single-scan aggregation (no join, no extra scan)") {
