@@ -16,7 +16,8 @@ import graft.snapshot.Snapshot
   *
   * Stages (each a committed snapshot; re-running skips completed ones):
   *   1. triples         — pages → extract → annotate → triples (narrow)
-  *   2. mention_tokens  — (surface, entType, token) context table (narrow)
+  *   2. mention_tokens  — (surface, entType, token) context table (narrow),
+  *                        surface-bucketed for the link profiles
   *   3. links           — trie candidates + TF-IDF cosine (agg shuffles)
   *   4. canon           — connected components over alias edges (iterative)
   *   5. nodes / edges   — canonicalized graph, partitioned entType × bucket
@@ -25,6 +26,10 @@ import graft.snapshot.Snapshot
   *                        ner_info / ner_eval / source_segment /
   *                        corpus_info / source_labeled / ner_result
   *                        (reference §1.3 + 6.3/6.4 full table surface)
+  *
+  * Annotate runs for its three consumers (triples, mention_tokens,
+  * ner_result); source_segment and corpus_info read the extract layer's
+  * sentence rows, which annotate only copies.
   *
   * Kill it at any point and re-run with the same outDir: completed snapshots
   * are skipped (manifest-gated), and because every id is a content hash the
@@ -63,16 +68,19 @@ object KgRunner {
     implicit val s: SparkSession = spark
     import spark.implicits._
 
-    // artifacts are RECOMPUTED per consuming stage rather than cached:
-    // the narrow annotate pipeline runs at ~500k sentences/s while
-    // persisting the fat nested rows costs ~3x the recompute (serializing
-    // Seq[Token]/Seq[EntityRow] per row) — when compute < serialization,
-    // caching is a pessimization. Determinism makes recompute safe.
+    // artifacts are RECOMPUTED per consuming stage (three: triples,
+    // mention_tokens, ner_result) rather than cached: the narrow annotate
+    // pipeline runs at ~500k sentences/s while persisting the fat nested
+    // rows costs ~3x the recompute (serializing Seq[Token]/Seq[EntityRow]
+    // per row) — when compute < serialization, caching is a pessimization.
+    // Determinism makes recompute safe.
     val tb0 = System.nanoTime()
     val b = Pipeline.broadcasts(spark) // built + shipped once for all stages
     System.err.println(
       f"[kg] broadcasts built in ${(System.nanoTime() - tb0) / 1e9}%.1f s")
-    def arts = Pipeline.artifacts(Corpus.pages(spark, nPages, par * 4), b)
+    def pages = Corpus.pages(spark, nPages, par * 4)
+    def sentences = Pipeline.sentences(pages)
+    def arts = Pipeline.artifacts(pages, b)
 
     // Every stage that depends ONLY on arts starts IMMEDIATELY as a
     // concurrent Spark job (separate driver threads; the scheduler
@@ -111,11 +119,11 @@ object KgRunner {
       // reference §1.3 final table surface (format parity)
       Future {
         Snapshot.stage(spark, s"$outDir/source_segment", "source_segment") {
-          graft.canon.FinalTables.sourceSegment(arts)
+          graft.canon.FinalTables.sourceSegment(sentences)
         }
         val ci = Snapshot.stage(spark, s"$outDir/corpus_info",
           "corpus_info") {
-          graft.canon.FinalTables.corpusInfo(arts)
+          graft.canon.FinalTables.corpusInfo(sentences)
         }
         Snapshot.stage(spark, s"$outDir/source_labeled", "source_labeled") {
           graft.canon.FinalTables.sourceLabeled(trainingInfoDf, ci)
@@ -133,23 +141,23 @@ object KgRunner {
         Triples.fromArtifacts(arts).toDF()
       }
     }
-    // mention_tokens and links persist as SURFACE-BUCKETED tables: the link
-    // profile aggregations and the canon alias-edge derivation key on
-    // surface, so their first pass over these snapshots reads co-located
+    // mention_tokens persists as a SURFACE-BUCKETED table: the link profile
+    // aggregations key on surface, so their pass over it reads co-located
     // buckets instead of exchanging (PlanGuardSpec pins this plan).
     val mentionTokensF = Future {
       Snapshot.stageBucketed(spark, s"$outDir/mention_tokens",
         "graft_mention_tokens", "mention_tokens",
-        bucketCol = "surface", buckets = par, parent = "triples") {
+        bucketCol = "surface", buckets = par) {
         Link.mentionTokens(arts)
       }
     }
     val triples = Await.result(triplesF, Duration.Inf)
     val mentionTokens = Await.result(mentionTokensF, Duration.Inf)
 
-    val links = Snapshot.stageBucketed(spark, s"$outDir/links",
-      "graft_links", "links",
-      bucketCol = "surface", buckets = par, parent = "mention_tokens") {
+    // canon, the only reader of links, hashes `surface|entType` into alias
+    // edge ids and keys nothing on surface, so links is plain parquet
+    val links = Snapshot.stage(spark, s"$outDir/links", "links",
+      parent = "mention_tokens") {
       Link.linkTableFromTokens(mentionTokens, b.trie, Ontology.jiebaReverse)
     }
     spark.catalog.clearCache() // drop the tf profile cache post-commit

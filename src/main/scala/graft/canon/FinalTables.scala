@@ -3,7 +3,7 @@ package graft.canon
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.model.Ontology
+import graft.model.{Ontology, SentenceRow}
 import graft.pipeline.Annotate.SentenceArtifacts
 
 /** The reference's final materialized table surface (SURVEY.md §1.3):
@@ -47,11 +47,9 @@ object FinalTables {
   /** source_segment: one row per sentence carrying (subject, predicate)
     * lineage — schema per clean_and_save.py:1165-1173 column mapping.
     */
-  def sourceSegment(arts: Dataset[SentenceArtifacts])(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
+  def sourceSegment(sents: Dataset[SentenceRow]): DataFrame = {
     val ontoUdf = udf((t: String) => Ontology.ontologyMapping.getOrElse(t, ""))
-    val base = arts.map(_.row).toDF()
+    val base = sents
       .select(
         col("source").as("corpus"),
         col("book"),
@@ -108,10 +106,8 @@ object FinalTables {
   /** corpus_info with the source_type classification when-chain
     * (clean_and_save.py:1096-1105: id prefix → human-readable kind).
     */
-  def corpusInfo(arts: Dataset[SentenceArtifacts])(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    arts.map(a => (a.row.source, a.row.book)).toDF("corpus", "book")
+  def corpusInfo(sents: Dataset[SentenceRow]): DataFrame =
+    sents.select(col("source").as("corpus"), col("book"))
       .distinct()
       .withColumn("source_id", soucId(col("corpus"), col("book")))
       .withColumn("source_type",
@@ -126,7 +122,6 @@ object FinalTables {
           .otherwise(lit("")))
       .withColumn("crte_time", lit(CrteTime))
       .withColumn("crter", lit(Crter))
-  }
 
   /** model_info + model_eval_results metadata (clean_and_save.py:711-790)
     * from the deterministic fixtures.

@@ -58,11 +58,17 @@ object Pipeline {
     * (rebuilding per stage re-ships the dictionary to every executor).
     */
   def artifacts(pages: Dataset[Page], b: Broadcasts)(
-      implicit spark: SparkSession): Dataset[Annotate.SentenceArtifacts] = {
-    val secs = Extract.sectionsOf(pages)
-    val sents = Extract.sentencesOf(secs)
-    Annotate.annotate(sents, b.trie, b.weights, b.eval, b.refined, b.suffix)
-  }
+      implicit spark: SparkSession): Dataset[Annotate.SentenceArtifacts] =
+    Annotate.annotate(sentences(pages), b.trie, b.weights, b.eval, b.refined,
+      b.suffix)
+
+  /** The extract layer: pages → sections → sentence rows. Annotate copies
+    * these nine fields 1:1 into each artifact's row, so a table that reads
+    * only them is fed from here and skips annotate.
+    */
+  def sentences(pages: Dataset[Page])(
+      implicit spark: SparkSession): Dataset[SentenceRow] =
+    Extract.sentencesOf(Extract.sectionsOf(pages))
 
   /** Full run from n synthetic pages to the triple table. */
   def triples(spark: SparkSession, nPages: Long, partitions: Int = 32): Dataset[Triple] = {

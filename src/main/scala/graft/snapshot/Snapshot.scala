@@ -124,12 +124,15 @@ object Snapshot {
     m
   }
 
-  /** Manifest-gated BUCKETED stage: the snapshot is written as an external
-    * bucketed+sorted table (bucket metadata in the session catalog, files at
-    * `dir`), so the NEXT stage's aggregations/joins keyed by `bucketCol`
-    * read co-located data with ZERO exchange. On resume in a fresh session
-    * (catalog empty) the files read back as plain parquet — same rows, the
-    * bucket optimization simply re-arms once the table is re-registered.
+  /** Manifest-gated BUCKETED stage: the commit writes the snapshot as an
+    * external bucketed+sorted table (bucket metadata in the session catalog
+    * under `table`, files at `dir`) and returns it, so the NEXT stage's
+    * aggregations/joins keyed by `bucketCol` read co-located data with ZERO
+    * exchange when `buckets` equals `spark.sql.shuffle.partitions`. A
+    * resume, in this session or a fresh one, reads `dir` back as plain
+    * parquet: the catalog is keyed by table name, not by dir, so every call
+    * first drops `table`, and a name last bound to another dir can never be
+    * read in place of this one.
     */
   def stageBucketed(
       spark: SparkSession,
@@ -137,13 +140,13 @@ object Snapshot {
       table: String,
       name: String,
       bucketCol: String,
-      buckets: Int = 16,
-      parent: String = ""
+      buckets: Int
   )(compute: => DataFrame): DataFrame = {
-    if (!exists(spark, dir)) {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    if (exists(spark, dir)) spark.read.parquet(dir)
+    else {
       val t0 = System.nanoTime()
-      commit(compute, dir, name, Nil, parent) { observed =>
-        spark.sql(s"DROP TABLE IF EXISTS $table")
+      commit(compute, dir, name, Nil, parent = "") { observed =>
         observed.write.mode(SaveMode.Overwrite).options(nioLocal)
           .option("path", dir)
           .bucketBy(buckets, bucketCol)
@@ -153,9 +156,8 @@ object Snapshot {
       }
       System.err.println(
         f"[snapshot] bucketed stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+      spark.table(table)
     }
-    if (spark.catalog.tableExists(table)) spark.table(table)
-    else spark.read.parquet(dir)
   }
 
   /** Manifest-gated stage: skip the compute entirely when the snapshot is

@@ -169,6 +169,23 @@ class SnapshotSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS snapshot_spec_bucketed")
   }
 
+  test("a resumed bucketed stage reads its own dir, not the one its table names") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("snapbind").toString
+    val table = "snapshot_spec_rebind"
+    def rows(p: String, n: Int) = (1 to n).map(i => (s"$p$i", i))
+    def stage(d: String)(compute: => org.apache.spark.sql.DataFrame) =
+      Snapshot.stageBucketed(spark, s"$base/$d", table, d, "k",
+        buckets = 4)(compute)
+    try {
+      stage("a")(rows("a", 10).toDF("k", "v"))
+      stage("b")(rows("b", 30).toDF("k", "v")) // the table now names b's dir
+      val resumed = stage("a")(throw new AssertionError("a is committed"))
+      assert(resumed.as[(String, Int)].collect().sorted.toSeq ==
+        rows("a", 10).sorted)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+  }
+
   test("empty stage commits zero rows, unpartitioned and partitioned") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("snap").toString

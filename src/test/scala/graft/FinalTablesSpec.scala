@@ -7,11 +7,12 @@ import graft.canon.FinalTables
 class FinalTablesSpec extends AnyFunSuite {
   implicit lazy val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
 
-  lazy val arts = graft.pipeline.Pipeline.artifacts(
-    graft.corpus.Corpus.pages(spark, 25, 4)).persist()
+  lazy val pages = graft.corpus.Corpus.pages(spark, 25, 4)
+  lazy val arts = graft.pipeline.Pipeline.artifacts(pages).persist()
+  lazy val sents = graft.pipeline.Pipeline.sentences(pages)
 
   test("source_segment: schema, souc_id when-chain, h%08d head ids per group") {
-    val ss = FinalTables.sourceSegment(arts)
+    val ss = FinalTables.sourceSegment(sents)
     assert(ss.columns.toSeq == Seq("souc_id", "text_id", "catalog",
       "text_label", "text_background", "head_onto_id", "text_content",
       "crte_time", "crter", "head_id"))
@@ -52,7 +53,7 @@ class FinalTablesSpec extends AnyFunSuite {
   }
 
   test("ner_result joins source_segment on text_id (the triple join)") {
-    val ss = FinalTables.sourceSegment(arts).select(col("text_id"),
+    val ss = FinalTables.sourceSegment(sents).select(col("text_id"),
       col("text_label"))
     val nr = FinalTables.nerResult(arts).select(col("text_id"),
       col("entity_name"))
@@ -113,7 +114,7 @@ class FinalTablesSpec extends AnyFunSuite {
   }
 
   test("source_labeled: dataset → labeled-source ids; 全量数据 gets all") {
-    val ci = FinalTables.corpusInfo(arts)
+    val ci = FinalTables.corpusInfo(sents)
     val sl = FinalTables.sourceLabeled(FinalTables.trainingInfo(spark), ci)
     assert(sl.columns.toSeq == Seq("dataset_id", "souc_id", "label_meth",
       "gene_meth", "dataset_save", "crte_time", "crter"))

@@ -120,6 +120,17 @@ class EndToEndSpec extends AnyFunSuite {
       s"$grounded/${triples.length}")
   }
 
+  test("annotate keeps every sentence row 1:1 (source_segment and corpus_info skip it)") {
+    import spark.implicits._
+    val pages = Corpus.pages(spark, 40, 4)
+    val sents = graft.pipeline.Pipeline.sentences(pages).toDF()
+    val annotated = graft.pipeline.Pipeline.artifacts(pages).map(_.row)
+      .select(sents.columns.toSeq.map(org.apache.spark.sql.functions.col): _*)
+    val n = sents.count()
+    assert(n > 0 && annotated.count() == n)
+    assert(annotated.exceptAll(sents).isEmpty && sents.exceptAll(annotated).isEmpty)
+  }
+
   test("pipeline is deterministic across runs") {
     val t2 = graft.pipeline.Pipeline.triples(spark, 40, 8).collect()
     // different partition count, same result set
