@@ -16,8 +16,7 @@ import graft.snapshot.Snapshot
   *
   * Stages (each a committed snapshot; re-running skips completed ones):
   *   1. triples         — pages → extract → annotate → triples (narrow)
-  *   2. mention_tokens  — (surface, entType, token) context table (narrow),
-  *                        surface-bucketed for the link profiles
+  *   2. mention_tokens  — (surface, entType, token) context table (narrow)
   *   3. links           — trie candidates + TF-IDF cosine (agg shuffles)
   *   4. canon           — connected components over alias edges (iterative)
   *   5. nodes / edges   — canonicalized graph, partitioned entType × bucket
@@ -141,13 +140,11 @@ object KgRunner {
         Triples.fromArtifacts(arts).toDF()
       }
     }
-    // mention_tokens persists as a SURFACE-BUCKETED table: the link profile
-    // aggregations key on surface, so their pass over it reads co-located
-    // buckets instead of exchanging (PlanGuardSpec pins this plan).
+    // plain parquet like every snapshot, so the first build and a resume
+    // run one link plan: one surface exchange, feeding the tf cache
+    // (PlanGuardSpec pins it)
     val mentionTokensF = Future {
-      Snapshot.stageBucketed(spark, s"$outDir/mention_tokens",
-        "graft_mention_tokens", "mention_tokens",
-        bucketCol = "surface", buckets = par) {
+      Snapshot.stage(spark, s"$outDir/mention_tokens", "mention_tokens") {
         Link.mentionTokens(arts)
       }
     }

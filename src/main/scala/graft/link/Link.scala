@@ -69,10 +69,6 @@ object Link {
     *     vocabulary would flip this to a shuffle join);
     *   - nSurfaces is a broadcast 1-row aggregate inside the same DAG, not a
     *     driver-side count() job.
-    *
-    * Over a table bucketed on `surface` with as many buckets as shuffle
-    * partitions (the runner's `mention_tokens`), the planner drops the
-    * up-front repartition, so the corpus-sized side is exchange-free.
     */
   def contextProfiles(
       mentionContexts: DataFrame, // (surface, token)
@@ -81,11 +77,11 @@ object Link {
     val spark = mentionContexts.sparkSession
     import spark.implicits._
     val bySurface = mentionContexts.repartition($"surface")
-    // tf is the multi-consumer hub (idf, nSurfaces, w, norms all read it):
-    // persist the vocabulary-sized aggregate so the CORPUS-sized input is
-    // scanned exactly once — without it, the exchange-free plan re-scans
-    // the corpus per consumer (no shuffle files to reuse). The cache
-    // preserves the surface partitioning, so downstream stays exchange-free.
+    // tf is the multi-consumer hub, and its consumers reach it through
+    // different exchanges (idf by token, nSurfaces global, w and norms
+    // none), so stage reuse cannot share it and each would re-aggregate
+    // it: persist the vocabulary-sized aggregate. The cache preserves the
+    // surface partitioning, so norms and the norm join add no exchange.
     // Long-lived sessions: clearCache()/unpersist after consuming (the KG
     // runner does, post-commit).
     val tf = bySurface.groupBy($"surface", $"token")

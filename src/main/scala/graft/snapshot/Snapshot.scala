@@ -35,9 +35,9 @@ object Snapshot {
 
   def manifestPath(dir: String): String = s"$dir/_manifest.json"
 
-  /** Hadoop options of every commit (the parquet and bucketed writes and
-    * the manifest IO): `file:` paths go through [[NioLocalFileSystem]], so
-    * creating a dir or file forks no `chmod`. The FileSystem cache is keyed
+  /** Hadoop options of every commit (the parquet write and the manifest
+    * IO): `file:` paths go through [[NioLocalFileSystem]], so creating a
+    * dir or file forks no `chmod`. The FileSystem cache is keyed
     * by scheme, not by implementation, so a `file:` instance cached earlier
     * would be reused without the second key. Both keys apply only to
     * `file:`; hdfs:// and s3a:// outDirs are untouched.
@@ -64,6 +64,12 @@ object Snapshot {
     * bucket). Per-partition counts are computed from the data itself —
     * they double as the counter metrics the reference logs every 1000 rows
     * (EnsemblePredict_all.py:415-416), but exact and queryable.
+    *
+    * The counts ride on the write as an OBSERVED METRIC (CollectMetrics
+    * with the TopKFreq count-by-key aggregate), so the rows are counted
+    * while they stream to disk — no post-write re-read job (a re-read per
+    * snapshot was once the largest slice of the fixed end-to-end floor).
+    * The manifest is written only after the parquet write returns.
     */
   def write(
       df: DataFrame,
@@ -84,34 +90,17 @@ object Snapshot {
           df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
           partitionBy.map(col): _*)
       else df
-    commit(arranged, dir, stage, partitionBy, parent) { observed =>
-      val writer = observed.write.mode(SaveMode.Overwrite).options(nioLocal)
-      (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-        .parquet(dir)
-    }
-  }
-
-  /** The one commit path: `save` writes `df` with its per-partition row
-    * counts attached as an OBSERVED METRIC (CollectMetrics with the TopKFreq
-    * count-by-key aggregate), so the rows are counted while they stream to
-    * disk — no post-write re-read job. Round 1 re-read the whole stage
-    * output per snapshot, the largest slice of the ~30 s fixed end-to-end
-    * floor. The manifest is written only after `save` returns.
-    */
-  private def commit(
-      df: DataFrame,
-      dir: String,
-      stage: String,
-      partitionBy: Seq[String],
-      parent: String
-  )(save: DataFrame => Unit): Manifest = {
     val keyCol =
       if (partitionBy.nonEmpty)
         concat_ws("/", partitionBy.map(c => col(c).cast("string")): _*)
       else lit("all")
     val obs = Observation()
-    save(df.observe(obs, graft.functions.TopKFreq
-      .top_k_freq(keyCol, Int.MaxValue, Int.MaxValue).as("part_counts")))
+    val writer = arranged
+      .observe(obs, graft.functions.TopKFreq
+        .top_k_freq(keyCol, Int.MaxValue, Int.MaxValue).as("part_counts"))
+      .write.mode(SaveMode.Overwrite).options(nioLocal)
+    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+      .parquet(dir)
     val partCounts = Observed.await(obs).getSeq[Row](0)
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val counts =
@@ -122,42 +111,6 @@ object Snapshot {
     try out.write(toJson(m).getBytes("UTF-8"))
     finally out.close()
     m
-  }
-
-  /** Manifest-gated BUCKETED stage: the commit writes the snapshot as an
-    * external bucketed+sorted table (bucket metadata in the session catalog
-    * under `table`, files at `dir`) and returns it, so the NEXT stage's
-    * aggregations/joins keyed by `bucketCol` read co-located data with ZERO
-    * exchange when `buckets` equals `spark.sql.shuffle.partitions`. A
-    * resume, in this session or a fresh one, reads `dir` back as plain
-    * parquet: the catalog is keyed by table name, not by dir, so every call
-    * first drops `table`, and a name last bound to another dir can never be
-    * read in place of this one.
-    */
-  def stageBucketed(
-      spark: SparkSession,
-      dir: String,
-      table: String,
-      name: String,
-      bucketCol: String,
-      buckets: Int
-  )(compute: => DataFrame): DataFrame = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    if (exists(spark, dir)) spark.read.parquet(dir)
-    else {
-      val t0 = System.nanoTime()
-      commit(compute, dir, name, Nil, parent = "") { observed =>
-        observed.write.mode(SaveMode.Overwrite).options(nioLocal)
-          .option("path", dir)
-          .bucketBy(buckets, bucketCol)
-          .sortBy(bucketCol)
-          .format("parquet")
-          .saveAsTable(table)
-      }
-      System.err.println(
-        f"[snapshot] bucketed stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      spark.table(table)
-    }
   }
 
   /** Manifest-gated stage: skip the compute entirely when the snapshot is

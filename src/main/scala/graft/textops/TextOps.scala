@@ -1575,7 +1575,7 @@ object TextOps {
     val cleaned = normalizeSteps.foldLeft(composed) { case (c, (p, r)) =>
       regexp_replace(c, p, r)
     }
-    trim(cleaned, " \n")
+    btrim(cleaned, lit(" \n"))
   }
 
   /** DuckDB mirror of [[normalizeText]], generated from the SAME

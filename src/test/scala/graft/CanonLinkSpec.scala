@@ -154,36 +154,16 @@ class SnapshotSpec extends AnyFunSuite {
     java.nio.file.Files.readString(
       java.nio.file.Paths.get(Snapshot.manifestPath(dir)))
 
-  test("stageBucketed manifest rows equal the rows read back") {
+  test("unpartitioned stage manifest rows equal the rows read back") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString + "/b"
-    val df = Snapshot.stageBucketed(spark, dir, "snapshot_spec_bucketed",
-      "bucketed", "k", buckets = 4) {
+    val dir = java.nio.file.Files.createTempDirectory("snap").toString + "/u"
+    val df = Snapshot.stage(spark, dir, "unpartitioned") {
       (1 to 50).map(i => (s"k${i % 7}", i)).toDF("k", "v")
     }
-    try {
-      val rows = spark.read.parquet(dir).count()
-      assert(rows == 50 && df.count() == rows)
-      assert(manifestOf(dir) ==
-        s"""{"stage":"bucketed","rows":$rows,"partitions":{"all":$rows},"parent":""}""")
-    } finally spark.sql("DROP TABLE IF EXISTS snapshot_spec_bucketed")
-  }
-
-  test("a resumed bucketed stage reads its own dir, not the one its table names") {
-    import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("snapbind").toString
-    val table = "snapshot_spec_rebind"
-    def rows(p: String, n: Int) = (1 to n).map(i => (s"$p$i", i))
-    def stage(d: String)(compute: => org.apache.spark.sql.DataFrame) =
-      Snapshot.stageBucketed(spark, s"$base/$d", table, d, "k",
-        buckets = 4)(compute)
-    try {
-      stage("a")(rows("a", 10).toDF("k", "v"))
-      stage("b")(rows("b", 30).toDF("k", "v")) // the table now names b's dir
-      val resumed = stage("a")(throw new AssertionError("a is committed"))
-      assert(resumed.as[(String, Int)].collect().sorted.toSeq ==
-        rows("a", 10).sorted)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
+    val rows = spark.read.parquet(dir).count()
+    assert(rows == 50 && df.count() == rows)
+    assert(manifestOf(dir) ==
+      s"""{"stage":"unpartitioned","rows":$rows,"partitions":{"all":$rows},"parent":""}""")
   }
 
   test("empty stage commits zero rows, unpartitioned and partitioned") {
@@ -226,10 +206,6 @@ class SnapshotSpec extends AnyFunSuite {
       Snapshot.stage(spark, s"$base/parts", "parts", partitionBy = Seq("k")) {
         (1 to 40).map(i => (s"k${i % 9}", i)).toDF("k", "v")
       }
-      Snapshot.stageBucketed(spark, s"$base/b", "snapshot_spec_forks",
-        "b", "k", buckets = 4) {
-        (1 to 40).map(i => (s"k${i % 9}", i)).toDF("k", "v")
-      }
       // a launch the recording must see, so an empty record cannot pass
       new ProcessBuilder("true", base.toString).start().waitFor()
       rec.stop()
@@ -238,10 +214,7 @@ class SnapshotSpec extends AnyFunSuite {
       RecordingFile.readAllEvents(jfr).asScala.toList
         .filter(_.getEventType.getName == "jdk.ProcessStart")
         .map(_.getString("command"))
-    } finally {
-      rec.close()
-      spark.sql("DROP TABLE IF EXISTS snapshot_spec_forks")
-    }
+    } finally rec.close()
     val inDir = commands.filter(_.contains(base.toString))
     assert(inDir == Seq(s"true $base"), commands.mkString("\n"))
     // the commit's file system is never cached, so other `file:` users of
@@ -310,10 +283,18 @@ class KgRunnerSpec extends AnyFunSuite {
     assert(byCanon.filter(col("count") > 1).count() > 0,
       "expected at least one multi-surface canonical group")
     // resume: re-run with same dir; edge bytes unchanged
-    val before = edges.collect().map(_.toString).sorted.toSeq
+    def rows(stage: String) =
+      spark.read.parquet(s"$out/$stage").collect().map(_.toString).sorted.toSeq
+    val before = Seq("links", "nodes", "edges").map(t => t -> rows(t)).toMap
     graft.KgRunner.run(spark, out, nPages = 30, par = 4)
-    val after = spark.read.parquet(s"$out/edges")
-      .collect().map(_.toString).sorted.toSeq
-    assert(before == after)
+    assert(rows("edges") == before("edges"))
+    // a second outDir built in the same session must not leak into a tail
+    // resume of the first: links reads the resumed mention_tokens
+    val other = java.nio.file.Files.createTempDirectory("kg").toString
+    graft.KgRunner.run(spark, other, nPages = 20, par = 4)
+    Seq("links", "canon", "nodes", "edges").foreach(t => java.nio.file.Files
+      .delete(java.nio.file.Paths.get(graft.snapshot.Snapshot.manifestPath(s"$out/$t"))))
+    graft.KgRunner.run(spark, out, nPages = 30, par = 4)
+    before.foreach { case (t, r) => assert(rows(t) == r, t) }
   }
 }

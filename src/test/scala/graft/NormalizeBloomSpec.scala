@@ -55,6 +55,18 @@ class NormalizeBloomSpec extends AnyFunSuite {
     assert(norm1("keep\tthis\nline") == "keep this\nline")
     // already-clean text is identity (the 100 TB common case)
     assert(norm1("already clean text") == "already clean text")
+    // no two-argument `trim(trimStr, str)`: Spark 4.1 resolves it with a
+    // deprecation warning (btrim is the same trim without one). The
+    // unanalyzed plan holds the Column's expression tree as Catalyst nodes.
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import spark.implicits._
+    val calls = Seq("x").toDF("text")
+      .select(TextOps.normalizeText(col("text"))).queryExecution.logical
+      .expressions.flatMap(_.collect { case f: UnresolvedFunction => f })
+    assert(calls.exists(_.nameParts.last == "regexp_replace"), calls)
+    val twoArgTrim = calls.filter(f =>
+      f.nameParts.last.equalsIgnoreCase("trim") && f.arguments.size == 2)
+    assert(twoArgTrim.isEmpty, twoArgTrim.mkString("\n"))
   }
 
   test("normalizeText stays inside whole-stage codegen") {

@@ -141,52 +141,36 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case _ => false
   }
 
-  test("link profiles over the surface-bucketed mention_tokens exchange nothing on surface") {
+  test("link profiles over mention_tokens shuffle once on surface, into the tf cache") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
     import org.apache.spark.sql.functions.col
     val dir = java.nio.file.Files.createTempDirectory("plan").toString + "/mt"
-    val table = "plan_guard_mention_tokens"
     val arts = graft.pipeline.Pipeline.artifacts(
       graft.corpus.Corpus.pages(spark, 40, 4))
-    // 4 buckets = the session's 4 shuffle partitions, as KgRunner sets them
-    val bucketed = graft.snapshot.Snapshot.stageBucketed(spark, dir, table,
-      "mention_tokens", bucketCol = "surface", buckets = 4) {
-      graft.link.Link.mentionTokens(arts)
-    }
-    def profileNodes(mt: org.apache.spark.sql.DataFrame, aqe: Boolean) = {
+    // the committed snapshot, read back as KgRunner's links stage reads it
+    // on the first build and on every resume
+    val mentionTokens = graft.snapshot.Snapshot.stage(spark, dir,
+      "mention_tokens")(graft.link.Link.mentionTokens(arts))
+    Seq(true, false).foreach { aqe =>
       val before = spark.conf.get("spark.sql.adaptive.enabled")
       spark.conf.set("spark.sql.adaptive.enabled", aqe.toString)
-      try {
+      val nodes = try {
         val profiles = graft.link.Link.contextProfiles(
-          mt.select(col("surface"), col("token")))
+          mentionTokens.select(col("surface"), col("token")))
         profiles.collect()
         deepNodes(profiles.queryExecution.executedPlan)
       } finally {
         spark.catalog.clearCache() // the tf cache: fresh per plan
         spark.conf.set("spark.sql.adaptive.enabled", before)
       }
+      val keyed = nodes.filter(n => surfaceKeyed(n._1)).distinct
+      assert(keyed.size == 1 && keyed.head._2,
+        s"aqe=$aqe: " + keyed.mkString("\n"))
+      assert(!nodes.exists {
+        case (_: FileSourceScanExec, inCache) => !inCache
+        case _ => false
+      }, s"aqe=$aqe: the corpus is scanned outside the tf cache")
     }
-    try {
-      Seq(true, false).foreach { aqe =>
-        val nodes = profileNodes(bucketed, aqe)
-        assert(!nodes.exists(n => surfaceKeyed(n._1)), s"aqe=$aqe: " +
-          nodes.map(_._1).filter(surfaceKeyed).mkString("\n"))
-        assert(!nodes.exists {
-          case (_: FileSourceScanExec, inCache) => !inCache
-          case _ => false
-        }, s"aqe=$aqe: the corpus is scanned outside the tf cache")
-        assert(nodes.exists(_._1.isInstanceOf[InMemoryTableScanExec]),
-          s"aqe=$aqe: no tf cache read")
-      }
-      // the resume shape, the same files read back as plain parquet: one
-      // surface exchange, feeding the tf cache
-      Seq(true, false).foreach { aqe =>
-        val keyed = profileNodes(spark.read.parquet(dir), aqe)
-          .filter(n => surfaceKeyed(n._1)).distinct
-        assert(keyed.size == 1 && keyed.head._2,
-          s"aqe=$aqe: " + keyed.mkString("\n"))
-      }
-    } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   test("langid stays a narrow single-scan aggregation (no join, no extra scan)") {
