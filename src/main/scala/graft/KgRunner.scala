@@ -159,7 +159,7 @@ object KgRunner {
     }
     spark.catalog.clearCache() // drop the tf profile cache post-commit
 
-    // NOTE (r5): hoisting the allSurfaces distinct into a future concurrent
+    // NOTE (r5): hoisting the surfaces distinct into a future concurrent
     // with the links stage was tried and MEASURED SLOWER at 80k pages
     // (69.6 s → 86-91 s): with all 8 cores saturated by mention_tokens /
     // links / source_segment, relocating the shuffle just adds contention
@@ -167,11 +167,8 @@ object KgRunner {
     // conserved under saturation — overlap only pays when cores idle.
     val canonMap = Snapshot.stage(spark, s"$outDir/canon", "canon",
       parent = "links") {
-      val allSurfaces = triples
-        .select($"obj".as("surface"), $"objType".as("entType"))
-        .union(triples.select($"subj".as("surface"), $"subjType".as("entType")))
-        .distinct()
-      Canon.canonicalize(allSurfaces, Link.aliasEdges(links))
+      Canon.canonicalize(Materialize.surfaces(triples.as[graft.model.Triple]),
+        Link.aliasEdges(links))
     }
 
     val materialize = Seq(

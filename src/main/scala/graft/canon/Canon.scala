@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.util.Observed
@@ -15,75 +15,71 @@ import graft.util.Observed
   * (boundary-jittered mentions, suffix-merged forms) collapse onto one
   * canonical node.
   *
-  * Algorithm: alternating large-star / small-star (Kiveris et al., "Connected
-  * Components in MapReduce and Beyond", SOCC'14) expressed as DataFrame
-  * self-joins:
-  *   large-star: for each edge (u,v) emit (max(u,v) → min-neighbor-of-u incl u)
-  *   small-star: connect all smaller neighbors to the minimum neighbor
-  * Converges in O(log² n) rounds; alias graphs here are near-stars so it
-  * terminates in 2-4 rounds. Skew handling:
+  * Algorithm: min-label propagation as DataFrame joins. Each round every
+  * vertex adopts the minimum label among itself and its neighbors, then
+  * takes one pointer-jumping hop (it adopts its label's label), so a path
+  * converges in about log2(diameter) rounds; alias graphs here are
+  * near-stars and finish in 2-4. Skew handling:
+  *   - [[preContractHot]] contracts hubs far above the mean degree before
+  *     the first round;
   *   - min() aggregation is algebraic → Spark map-side partial aggregation
   *     absorbs hot canonical ids before the shuffle;
-  *   - AQE skew-join splitting is enabled by the session (Bench/Verify set
+  *   - AQE skew-join splitting is enabled by the session (KgRunner sets
   *     spark.sql.adaptive.*), covering the hot-key join side;
   *   - per-iteration localCheckpoint truncates lineage so plans don't grow
   *     exponentially (SURVEY.md §4.2).
   *
   * Determinism: component label = min vertex id, vertex ids are
-  * content-hashes ([[graft.util.Hashing.id63]]), so labels are stable across
-  * runs, partitionings and cluster sizes — required for resume and for the
+  * content-hashes ([[vertexId]]), so labels are stable across runs,
+  * partitionings and cluster sizes — required for resume and for the
   * MERGE materialization to be idempotent.
   */
 object Canon {
 
+  private val HotDegreeFactor = 50.0 // hub: degree above this × the mean
+  private val MaxIter = 20 // connectedComponents round cap
+
+  /** The vertex id of a typed surface: xxhash64 of `surface|entType`,
+    * masked to 63 bits so ids and min-labels are non-negative.
+    */
+  def vertexId(surface: Column, entType: Column): Column =
+    xxhash64(concat_ws("|", surface, entType)).bitwiseAND(lit(Long.MaxValue))
+
   /** Star-contraction pre-pass for pathologically hot vertices (SURVEY.md
     * §4.1: ubiquitous surfaces like common symptoms can appear in 10^4+
     * alias edges — every join round re-shuffles that fan-in onto one key).
-    * For each vertex whose degree exceeds `threshold` × mean, every incident
-    * edge (x, h) is rewritten to (x, m) with m = min(h, min neighbor of h),
-    * plus the witness edge (h, m) — connectivity-preserving (all of h's
-    * neighborhood meets at m, h reaches m directly), and the hot key's
-    * degree drops to 1 before iteration starts.
+    * For each vertex whose degree exceeds `HotDegreeFactor` × mean, every
+    * incident edge (x, h) is rewritten to (x, m) with m = min(h, min
+    * neighbor of h), plus the witness edge (h, m) — connectivity-preserving
+    * (all of h's neighborhood meets at m, h reaches m directly), and the hot
+    * key's degree drops to 1 before iteration starts.
+    *
+    * One driver action collects the hot set (degree and minimum neighbour
+    * from one aggregate, filtered against its broadcast mean); a graph
+    * without hubs gets its edges back unchanged.
     */
-  def preContractHot(edges: DataFrame, threshold: Double = 10.0): DataFrame = {
+  def preContractHot(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // sym feeds the degree pass AND (when hot keys exist) the hotMin
-    // aggregation; deg feeds the mean action and the hot filter. Cache
-    // both for the duration of the detection — the three driver actions
-    // here (mean, isEmpty, hotMin inside the rewrite plan) otherwise
-    // recompute the symmetrized edge set each time, a fixed per-run cost
-    // on the e2e critical path (VERDICT r4 #7 floor work).
     val sym = edges.select($"src", $"dst")
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .filter($"src" =!= $"dst")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = sym.groupBy($"dst").agg(count(lit(1)).as("d"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val meanRow = deg.agg(avg($"d")).first()
-      if (meanRow.isNullAt(0)) return edges // empty edge set
-      val meanD = meanRow.getDouble(0)
-      val hot = deg.filter($"d" > lit(meanD * threshold))
-        .select($"dst".as("h"))
-      if (hot.isEmpty) return edges
-      val hotMin = sym.join(hot, sym("dst") === hot("h"))
-        .groupBy($"h").agg(least(min($"src"), first($"h")).as("m"))
-        // materialize while sym is still cached (the rewrite plan below is
-        // consumed lazily by connectedComponents AFTER the caches drop)
-        .localCheckpoint(true)
-      val hm = broadcast(hotMin) // hot set is small by construction
+    val deg = sym.groupBy($"dst")
+      .agg(count(lit(1)).as("d"), min($"src").as("minNbr"))
+    val hot = deg.crossJoin(broadcast(deg.agg(avg($"d").as("mean_d"))))
+      .filter($"d" > $"mean_d" * HotDegreeFactor)
+      .select($"dst", least($"minNbr", $"dst"))
+      .as[(Long, Long)].collect()
+    if (hot.isEmpty) edges
+    else {
+      val hm = broadcast(hot.toSeq.toDF("h", "m"))
       // rewrite both endpoints through the hot→m mapping, keep witness edges
-      val rewritten = edges
+      edges
         .join(hm.select($"h".as("src"), $"m".as("srcM")), Seq("src"), "left")
         .join(hm.select($"h".as("dst"), $"m".as("dstM")), Seq("dst"), "left")
         .select(coalesce($"srcM", $"src").as("src"),
           coalesce($"dstM", $"dst").as("dst"))
-      rewritten.union(hotMin.select($"h".as("src"), $"m".as("dst")))
-    } finally {
-      sym.unpersist(false)
-      deg.unpersist(false)
-      ()
+        .union(hm.select($"h".as("src"), $"m".as("dst")))
     }
   }
 
@@ -91,7 +87,7 @@ object Canon {
     * Returns DataFrame(v: Long, component: Long) covering every vertex
     * appearing in the edge set; component = min vertex id in the component.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 
@@ -116,7 +112,13 @@ object Canon {
     // shuffle). The two no-op iterations an edge-free graph pays are
     // cheaper than probing for it.
 
-    // labels: v -> current candidate component (min over seen neighbors)
+    // labels: v -> current candidate component (min over seen neighbors).
+    // Both labels persists (this one and each round's, over an output that
+    // is already a localCheckpoint) stay: without them the dedup_semantic
+    // query fails in Catalyst, `java.util.NoSuchElementException: key not
+    // found: v#1704L` at `UnionBase.rewriteConstraints`
+    // (basicLogicalOperators.scala:527); dropping only the per-round one
+    // fails the same way.
     var labels = e.select($"src".as("v")).distinct()
       .withColumn("label", $"v")
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -131,7 +133,7 @@ object Canon {
     var prevSum: java.math.BigDecimal = null
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // propagate: each vertex adopts min(label of neighbors, own label)
       val prop = e.join(labels, e("dst") === labels("v"))
         .select(e("src").as("v"), labels("label"))
@@ -162,22 +164,19 @@ object Canon {
     labels.select($"v", $"label".as("component"))
   }
 
-  /** Canonicalize typed surfaces: vertices = (surface, entType) hashed;
-    * returns (surface, entType, canonId).
+  /** Canonicalize typed surfaces: vertices = (surface, entType) hashed by
+    * [[vertexId]]; returns (surface, entType, canonId).
     */
   def canonicalize(
       nodes: DataFrame, // (surface, entType)
-      aliasEdges: DataFrame, // (src, dst) over hashed ids
-      skewThreshold: Double = 50.0
+      aliasEdges: DataFrame // (src, dst) over vertexId
   ): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val withId = nodes
-      .withColumn("v", xxhash64(concat_ws("|", $"surface", $"entType"))
-        .bitwiseAND(lit(Long.MaxValue)))
+    val withId = nodes.withColumn("v", vertexId($"surface", $"entType"))
     // live skew guard: hot alias hubs (ubiquitous surfaces) pre-contracted
     // before iteration; connectivity- and label-preserving (see spec)
-    val cc = connectedComponents(preContractHot(aliasEdges, skewThreshold))
+    val cc = connectedComponents(preContractHot(aliasEdges))
     // vertices not in any edge keep their own id as component
     withId.join(cc, Seq("v"), "left")
       .withColumn("canonId", coalesce($"component", $"v"))

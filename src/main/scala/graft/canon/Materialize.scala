@@ -1,6 +1,6 @@
 package graft.canon
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.{Ontology, Triple}
 
@@ -18,19 +18,24 @@ object Materialize {
 
   val NumBuckets = 32
 
-  /** Canonical node table: (canonId, surface, entType, ontoId, bucket). */
+  /** Distinct (surface, entType) over subjects and objects: the vocabulary
+    * canon labels, so every node and edge endpoint finds its canonId.
+    */
+  def surfaces(triples: Dataset[Triple]): DataFrame = {
+    val spark = triples.sparkSession
+    import spark.implicits._
+    triples.select($"obj".as("surface"), $"objType".as("entType"))
+      .union(triples.select($"subj".as("surface"), $"subjType".as("entType")))
+      .distinct()
+  }
+
+  /** Canonical node table: (surface, entType, canonId, ontoId, bucket). */
   def nodes(triples: Dataset[Triple], canonMap: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val surfaces = triples.select($"obj".as("surface"), $"objType".as("entType"))
-      .union(triples.select($"subj".as("surface"), $"subjType".as("entType")))
-      .distinct()
     val ontoMap = Ontology.ontologyMapping
     val ontoUdf = udf((t: String) => ontoMap.getOrElse(t, ""))
-    surfaces.join(canonMap, Seq("surface", "entType"), "left")
-      .withColumn("canonId", coalesce($"canonId",
-        xxhash64(concat_ws("|", $"surface", $"entType"))
-          .bitwiseAND(lit(Long.MaxValue))))
+    surfaces(triples).join(canonMap, Seq("surface", "entType"), "left")
       .withColumn("ontoId", ontoUdf($"entType"))
       .withColumn("bucket", pmod($"canonId", lit(NumBuckets)).cast("int"))
   }
@@ -51,12 +56,6 @@ object Materialize {
     triples.toDF()
       .join(objMap, Seq("obj", "objType"), "left")
       .join(subjMap, Seq("subj", "subjType"), "left")
-      .withColumn("objId", coalesce($"objId",
-        xxhash64(concat_ws("|", $"obj", $"objType"))
-          .bitwiseAND(lit(Long.MaxValue))))
-      .withColumn("subjId", coalesce($"subjId",
-        xxhash64(concat_ws("|", $"subj", $"subjType"))
-          .bitwiseAND(lit(Long.MaxValue))))
       .withColumn("bucket", pmod($"ind", lit(NumBuckets)).cast("int"))
       .select($"subjId", $"subj", $"subjType", $"pred", $"objId", $"obj",
         $"objType", $"ind", $"prob", $"bucket")

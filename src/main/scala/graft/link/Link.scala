@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.canon.Canon
 import graft.dict.Trie
 import graft.pipeline.Annotate.SentenceArtifacts
 
@@ -26,6 +27,9 @@ import graft.pipeline.Annotate.SentenceArtifacts
   *     floor exactly so they cannot create a skewed join.
   */
 object Link {
+
+  private val MinIdf = 0.1 // lower-idf tokens are pruned from profiles
+  private val MinScore = 0.3 // lower-scoring links are not alias edges
 
   /** Candidate pairs via broadcast trie: canonical = longest gazetteer word
     * of the same type that prefixes the surface (catches jitter-extended
@@ -71,8 +75,7 @@ object Link {
     *     driver-side count() job.
     */
   def contextProfiles(
-      mentionContexts: DataFrame, // (surface, token)
-      minIdf: Double = 0.1
+      mentionContexts: DataFrame // (surface, token)
   ): DataFrame = {
     val spark = mentionContexts.sparkSession
     import spark.implicits._
@@ -93,7 +96,7 @@ object Link {
       .agg(countDistinct($"surface").as("df"))
       .crossJoin(broadcast(nSurfaces))
       .withColumn("idf", log((col("n_surfaces") + 1.0) / (col("df") + 1.0)))
-      .filter($"idf" >= minIdf) // prune ubiquitous tokens → no hot-key join
+      .filter($"idf" >= MinIdf) // prune ubiquitous tokens → no hot-key join
       .drop("n_surfaces")
     val w = tf.join(broadcast(idf), "token")
       .withColumn("w", $"tf" * $"idf")
@@ -156,8 +159,7 @@ object Link {
   def linkTableFromTokens(
       mentionTokens: DataFrame,
       trieB: Broadcast[Trie],
-      typeOfTag: Map[String, String],
-      minScore: Double = 0.3
+      typeOfTag: Map[String, String]
   )(implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
     val surfaces = mentionTokens.select($"surface", $"entType").distinct()
@@ -175,17 +177,13 @@ object Link {
     // other table (the filter then sees a stable value too)
     ctxScore
       .withColumn("score", round(blend($"surface", $"candidate", $"sim"), 9))
-      .filter($"score" >= minScore)
+      .filter($"score" >= MinScore)
       .select($"surface", $"entType", $"candidate", $"score")
   }
 
-  /** Alias edges (hashed vertex ids) from accepted links. */
-  def aliasEdges(links: DataFrame): DataFrame = {
-    links
-      .select(
-        xxhash64(concat_ws("|", col("surface"), col("entType")))
-          .bitwiseAND(lit(Long.MaxValue)).as("src"),
-        xxhash64(concat_ws("|", col("candidate"), col("entType")))
-          .bitwiseAND(lit(Long.MaxValue)).as("dst"))
-  }
+  /** Alias edges (src, dst) over [[Canon.vertexId]] from accepted links. */
+  def aliasEdges(links: DataFrame): DataFrame =
+    links.select(
+      Canon.vertexId(col("surface"), col("entType")).as("src"),
+      Canon.vertexId(col("candidate"), col("entType")).as("dst"))
 }

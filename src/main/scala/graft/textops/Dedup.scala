@@ -709,9 +709,9 @@ object Dedup {
 
   /** Canonical-document selection: connected components over near-duplicate
     * edges, cluster label = min doc id in the component, keep = the cluster
-    * representative. Reuses the KG canonicalization CC (large/small-star
-    * with pointer jumping and hot-hub pre-contraction) — corpus dedup at
-    * 100 TB IS a graph problem, and this is the same skew-guarded engine.
+    * representative. Reuses the KG canonicalization CC (min-label
+    * propagation with pointer jumping) — corpus dedup at 100 TB IS a
+    * graph problem, and this is the same engine.
     * Output: (doc_id, cluster, keep) covering EVERY input doc (docs in no
     * edge are their own singleton cluster).
     */

@@ -189,14 +189,12 @@ object WebGraph {
     * mirror-site-family analysis (a component of hosts that only link each
     * other is one "site family" — the unit RefinedWeb-style pipelines
     * apply per-site quality decisions to). Hosts are mapped to [[hostId]]
-    * longs and run through the skew-guarded KG CC engine
-    * ([[graft.canon.Canon.connectedComponents]]: large/small-star pointer
-    * jumping, hot-hub pre-contraction, observed-metric convergence) — the
-    * same engine corpus dedup uses, because a web graph at 10^9 hosts IS
-    * the skewed-graph case it was built for. `component_id` = min
-    * [[hostId]] in the component; a host with no non-self edges is its own
-    * singleton component (the CC engine drops self-loops, so the left join
-    * coalesces those back).
+    * longs and run through the KG CC engine
+    * ([[graft.canon.Canon.connectedComponents]]: min-label propagation,
+    * pointer jumping, observed-metric convergence) — the same engine
+    * corpus dedup uses. `component_id` = min [[hostId]] in the component;
+    * a host with no non-self edges is its own singleton component (the CC
+    * engine drops self-loops, so the left join coalesces those back).
     *
     * Output: (host, component_id) covering every host in the edge set.
     */

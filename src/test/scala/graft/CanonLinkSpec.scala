@@ -44,11 +44,12 @@ class CanonSpec extends AnyFunSuite {
 
   test("preContractHot preserves components and de-skews the hub") {
     import spark.implicits._
-    // hub 500 with 150 spokes + a chain attached to one spoke
+    // hub 500 with 150 spokes + a chain attached to one spoke: degree 150
+    // against 50 × mean (306 / 155 ≈ 1.97) ≈ 99
     val edges = (1L to 150L).map(s => (500L, s)) ++
       Seq((1L, 601L), (601L, 602L), (700L, 701L))
     val df = edges.toDF("src", "dst")
-    val contracted = graft.canon.Canon.preContractHot(df, threshold = 3.0)
+    val contracted = graft.canon.Canon.preContractHot(df)
     // hub degree after contraction: exactly 1 (the witness edge)
     val sym = contracted.select(col("src")).union(contracted.select(col("dst")))
     val hubDeg = sym.filter(col("src") === 500L).count()
@@ -109,10 +110,10 @@ class LinkSpec extends AnyFunSuite {
       ("B", "x"), ("B", "z"), ("B", "common"),
       ("C", "common"), ("C", "w")
     ).toDF("surface", "token")
-    val prof = Link.contextProfiles(ctx, minIdf = 0.2)
+    val prof = Link.contextProfiles(ctx)
     val rows = prof.collect().map(r =>
       (r.getString(0), r.getString(1), r.getDouble(2)))
-    // "common" appears in all 3 surfaces → idf = ln(4/4) = 0 < 0.2 → pruned
+    // "common" appears in all 3 surfaces → idf = ln(4/4) = 0 < 0.1 → pruned
     assert(!rows.exists(_._2 == "common"))
     // per-surface L2 norm ≈ 1
     rows.groupBy(_._1).foreach { case (_, rs) =>
@@ -275,8 +276,10 @@ class KgRunnerSpec extends AnyFunSuite {
     val nodes = spark.read.parquet(s"$out/nodes")
     val edges = spark.read.parquet(s"$out/edges")
     assert(nodes.count() > 0 && edges.count() > 0)
-    // every edge endpoint resolves
+    // every node and edge endpoint resolves: canon covers every triple
+    // surface, so a stale canon shows here as a null id
     assert(edges.filter(col("objId").isNull || col("subjId").isNull).count() == 0)
+    assert(nodes.filter(col("canonId").isNull).count() == 0)
     // canon: a surface and its jitter-extended variant share canonId when both present
     val canon = spark.read.parquet(s"$out/canon")
     val byCanon = canon.groupBy("canonId").count()
