@@ -18,7 +18,8 @@ import graft.snapshot.Snapshot
   *   1. triples         — pages → extract → annotate → triples (narrow)
   *   2. mention_tokens  — (surface, entType, token) context table (narrow)
   *   3. links           — trie candidates + TF-IDF cosine (agg shuffles)
-  *   4. canon           — connected components over alias edges (iterative)
+  *   4. canon           — component labels of the alias star forest (one
+  *                        aggregate and one join)
   *   5. nodes / edges   — canonicalized graph, partitioned entType × bucket
   *   6. group_triples   — drug-group taboo path
   *   7. metadata        — model_info / model_eval_results / training_info /
@@ -124,7 +125,8 @@ object KgRunner {
           "corpus_info") {
           graft.canon.FinalTables.corpusInfo(sentences)
         }
-        Snapshot.stage(spark, s"$outDir/source_labeled", "source_labeled") {
+        Snapshot.stage(spark, s"$outDir/source_labeled", "source_labeled",
+          parent = "corpus_info") {
           graft.canon.FinalTables.sourceLabeled(trainingInfoDf, ci)
         }
       },
@@ -162,11 +164,10 @@ object KgRunner {
     // NOTE (r5): hoisting the surfaces distinct into a future concurrent
     // with the links stage was tried and MEASURED SLOWER at 80k pages
     // (69.6 s → 86-91 s): with all 8 cores saturated by mention_tokens /
-    // links / source_segment, relocating the shuffle just adds contention
-    // and the eager checkpoint forces an extra materialization. Work is
-    // conserved under saturation — overlap only pays when cores idle.
+    // links / source_segment, relocating the shuffle just adds contention.
+    // Work is conserved under saturation — overlap only pays when cores idle.
     val canonMap = Snapshot.stage(spark, s"$outDir/canon", "canon",
-      parent = "links") {
+      parent = "links,triples") {
       Canon.canonicalize(Materialize.surfaces(triples.as[graft.model.Triple]),
         Link.aliasEdges(links))
     }
@@ -174,13 +175,13 @@ object KgRunner {
     val materialize = Seq(
       Future {
         Snapshot.stage(spark, s"$outDir/nodes", "nodes",
-          partitionBy = Seq("entType", "bucket"), parent = "canon") {
+          partitionBy = Seq("entType", "bucket"), parent = "canon,triples") {
           Materialize.nodes(triples.as[graft.model.Triple], canonMap)
         }
       },
       Future {
         Snapshot.stage(spark, s"$outDir/edges", "edges",
-          partitionBy = Seq("objType", "bucket"), parent = "canon") {
+          partitionBy = Seq("objType", "bucket"), parent = "canon,triples") {
           Materialize.edges(triples.as[graft.model.Triple], canonMap)
         }
       }

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.util.Observed
 
-/** Connected-components canonicalization (north star: "salted
-  * connected-components pass, GraphFrames-style iterative joins over
-  * DataFrames, with explicit skew handling").
+/** Canonicalization of typed surfaces, and the connected-components pass
+  * the curation queries share.
   *
   * Reference analog: head_id grouping (clean_and_save.py:1174-1180) assigns
   * one id per identical (head, predicate, catalog, source) group — i.e. CC of
@@ -15,19 +14,20 @@ import graft.util.Observed
   * (boundary-jittered mentions, suffix-merged forms) collapse onto one
   * canonical node.
   *
-  * Algorithm: min-label propagation as DataFrame joins. Each round every
-  * vertex adopts the minimum label among itself and its neighbors, then
-  * takes one pointer-jumping hop (it adopts its label's label), so a path
-  * converges in about log2(diameter) rounds; alias graphs here are
-  * near-stars and finish in 2-4. Skew handling:
-  *   - [[preContractHot]] contracts hubs far above the mean degree before
-  *     the first round;
-  *   - min() aggregation is algebraic → Spark map-side partial aggregation
-  *     absorbs hot canonical ids before the shuffle;
-  *   - AQE skew-join splitting is enabled by the session (KgRunner sets
-  *     spark.sql.adaptive.*), covering the hot-key join side;
-  *   - per-iteration localCheckpoint truncates lineage so plans don't grow
-  *     exponentially (SURVEY.md §4.2).
+  * [[canonicalize]] labels the alias graph in closed form: it is a forest of
+  * stars (see there), so one aggregate and one join give every vertex its
+  * component label, with no iteration and no driver action. A hub is a
+  * centre with many leaves; `min` is algebraic, so Spark's map-side partial
+  * aggregation absorbs it before the shuffle.
+  *
+  * [[connectedComponents]] serves general graphs (dedup, similarity, web
+  * host components): min-label propagation as DataFrame joins. Each round
+  * every vertex adopts the minimum label among itself and its neighbors,
+  * then takes one pointer-jumping hop (it adopts its label's label), so a
+  * path converges in about log2(diameter) rounds. Per-iteration
+  * localCheckpoint truncates lineage so plans don't grow exponentially
+  * (SURVEY.md §4.2); AQE skew-join splitting (the session's
+  * spark.sql.adaptive.*) covers the hot-key join side.
   *
   * Determinism: component label = min vertex id, vertex ids are
   * content-hashes ([[vertexId]]), so labels are stable across runs,
@@ -36,7 +36,6 @@ import graft.util.Observed
   */
 object Canon {
 
-  private val HotDegreeFactor = 50.0 // hub: degree above this × the mean
   private val MaxIter = 20 // connectedComponents round cap
 
   /** The vertex id of a typed surface: xxhash64 of `surface|entType`,
@@ -44,44 +43,6 @@ object Canon {
     */
   def vertexId(surface: Column, entType: Column): Column =
     xxhash64(concat_ws("|", surface, entType)).bitwiseAND(lit(Long.MaxValue))
-
-  /** Star-contraction pre-pass for pathologically hot vertices (SURVEY.md
-    * §4.1: ubiquitous surfaces like common symptoms can appear in 10^4+
-    * alias edges — every join round re-shuffles that fan-in onto one key).
-    * For each vertex whose degree exceeds `HotDegreeFactor` × mean, every
-    * incident edge (x, h) is rewritten to (x, m) with m = min(h, min
-    * neighbor of h), plus the witness edge (h, m) — connectivity-preserving
-    * (all of h's neighborhood meets at m, h reaches m directly), and the hot
-    * key's degree drops to 1 before iteration starts.
-    *
-    * One driver action collects the hot set (degree and minimum neighbour
-    * from one aggregate, filtered against its broadcast mean); a graph
-    * without hubs gets its edges back unchanged.
-    */
-  def preContractHot(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val sym = edges.select($"src", $"dst")
-      .union(edges.select($"dst".as("src"), $"src".as("dst")))
-      .filter($"src" =!= $"dst")
-    val deg = sym.groupBy($"dst")
-      .agg(count(lit(1)).as("d"), min($"src").as("minNbr"))
-    val hot = deg.crossJoin(broadcast(deg.agg(avg($"d").as("mean_d"))))
-      .filter($"d" > $"mean_d" * HotDegreeFactor)
-      .select($"dst", least($"minNbr", $"dst"))
-      .as[(Long, Long)].collect()
-    if (hot.isEmpty) edges
-    else {
-      val hm = broadcast(hot.toSeq.toDF("h", "m"))
-      // rewrite both endpoints through the hot→m mapping, keep witness edges
-      edges
-        .join(hm.select($"h".as("src"), $"m".as("srcM")), Seq("src"), "left")
-        .join(hm.select($"h".as("dst"), $"m".as("dstM")), Seq("dst"), "left")
-        .select(coalesce($"srcM", $"src").as("src"),
-          coalesce($"dstM", $"dst").as("dst"))
-        .union(hm.select($"h".as("src"), $"m".as("dst")))
-    }
-  }
 
   /** edges: DataFrame(src: Long, dst: Long), undirected.
     * Returns DataFrame(v: Long, component: Long) covering every vertex
@@ -165,7 +126,15 @@ object Canon {
   }
 
   /** Canonicalize typed surfaces: vertices = (surface, entType) hashed by
-    * [[vertexId]]; returns (surface, entType, canonId).
+    * [[vertexId]]; returns (surface, entType, canonId), canonId = the
+    * [[connectedComponents]] label, or the vertex's own id off the edges.
+    *
+    * `aliasEdges` must be a star forest: no vertex is both the `src` of a
+    * non-self edge and the `dst` of another, and each `src` is in at most
+    * one non-self edge row. [[graft.link.Link.aliasEdges]] of linker output
+    * is one (PropertySpec pins it): a surface has at most one candidate, a
+    * gazetteer word, and a word's own candidate is itself. A star's label
+    * is then min(centre, min leaf).
     */
   def canonicalize(
       nodes: DataFrame, // (surface, entType)
@@ -173,13 +142,16 @@ object Canon {
   ): DataFrame = {
     val spark = nodes.sparkSession
     import spark.implicits._
-    val withId = nodes.withColumn("v", vertexId($"surface", $"entType"))
-    // live skew guard: hot alias hubs (ubiquitous surfaces) pre-contracted
-    // before iteration; connectivity- and label-preserving (see spec)
-    val cc = connectedComponents(preContractHot(aliasEdges))
+    val spokes = aliasEdges.filter($"src" =!= $"dst")
+      .select($"src".as("v"), $"dst".as("c"))
+    val centres = spokes.groupBy($"c")
+      .agg(least($"c", min($"v")).as("label"))
+    val labels = spokes.join(centres, "c").select($"v", $"label")
+      .union(centres.select($"c".as("v"), $"label"))
     // vertices not in any edge keep their own id as component
-    withId.join(cc, Seq("v"), "left")
-      .withColumn("canonId", coalesce($"component", $"v"))
+    nodes.withColumn("v", vertexId($"surface", $"entType"))
+      .join(labels, Seq("v"), "left")
+      .withColumn("canonId", coalesce($"label", $"v"))
       .select($"surface", $"entType", $"canonId")
   }
 }

@@ -42,30 +42,6 @@ class CanonSpec extends AnyFunSuite {
     assert((1L to 61L).forall(v => m(v) == 1L))
   }
 
-  test("preContractHot preserves components and de-skews the hub") {
-    import spark.implicits._
-    // hub 500 with 150 spokes + a chain attached to one spoke: degree 150
-    // against 50 × mean (306 / 155 ≈ 1.97) ≈ 99
-    val edges = (1L to 150L).map(s => (500L, s)) ++
-      Seq((1L, 601L), (601L, 602L), (700L, 701L))
-    val df = edges.toDF("src", "dst")
-    val contracted = graft.canon.Canon.preContractHot(df)
-    // hub degree after contraction: exactly 1 (the witness edge)
-    val sym = contracted.select(col("src")).union(contracted.select(col("dst")))
-    val hubDeg = sym.filter(col("src") === 500L).count()
-    assert(hubDeg == 1L, s"hub degree $hubDeg")
-    // CC over contracted graph = CC over original
-    def labels(e: org.apache.spark.sql.DataFrame) =
-      graft.canon.Canon.connectedComponents(e).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val a = labels(df)
-    val b = labels(contracted)
-    // same partition of the original vertex set
-    val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    assert(verts.forall(v => a(v) == b(v)),
-      verts.filter(v => a(v) != b(v)).take(5).toString)
-  }
-
   test("label is always a member of the component (partition validity)") {
     val edges = Seq((7L, 3L), (3L, 9L), (12L, 15L))
     val m = cc(edges)
@@ -285,6 +261,11 @@ class KgRunnerSpec extends AnyFunSuite {
     val byCanon = canon.groupBy("canonId").count()
     assert(byCanon.filter(col("count") > 1).count() > 0,
       "expected at least one multi-surface canonical group")
+    // manifests name every snapshot their stage reads
+    def parentOf(stage: String) = java.nio.file.Files.readString(java.nio.file
+      .Paths.get(graft.snapshot.Snapshot.manifestPath(s"$out/$stage")))
+    assert(parentOf("canon").endsWith(""""parent":"links,triples"}"""))
+    assert(parentOf("edges").endsWith(""""parent":"canon,triples"}"""))
     // resume: re-run with same dir; edge bytes unchanged
     def rows(stage: String) =
       spark.read.parquet(s"$out/$stage").collect().map(_.toString).sorted.toSeq

@@ -114,6 +114,84 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("Link.candidates: at most one per surface, and each is its own candidate") {
+    // the invariant that makes every alias graph a star forest, which
+    // Canon.canonicalize labels in closed form: a linker that emits several
+    // candidates per surface, or chains, fails here
+    implicit val spark: org.apache.spark.sql.SparkSession = SparkTestBase.spark
+    import spark.implicits._
+    val typeOfTag = graft.model.Ontology.jiebaReverse
+    val tags = typeOfTag.keys.toSeq.sorted.take(3) // few tags: many same-type hits
+    val charGen = Gen.oneOf('甲', '乙', '丙') // few chars: many shared prefixes
+    def strGen(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).flatMap(Gen.listOfN(_, charGen)).map(_.mkString)
+    val caseGen = for {
+      dict <- Gen.mapOf(Gen.zip(strGen(1, 4), Gen.oneOf(tags)))
+      surfaces <- Gen.listOf(Gen.zip(
+        Gen.zip(strGen(1, 4), strGen(0, 3)).map { case (w, s) => w + s },
+        Gen.oneOf(tags.map(typeOfTag))))
+    } yield (dict, surfaces.distinct)
+    var nonSelf = 0
+    forAll(caseGen, minSuccessful = 20) { case (dict, surfaces) =>
+      val trieB = spark.sparkContext.broadcast(Gazetteer.buildTrie(dict))
+      def candidates(in: Seq[(String, String)]) =
+        graft.link.Link.candidates(in.toDS(), trieB, typeOfTag)
+          .as[(String, String, String)].collect().toSeq
+      val out = candidates(surfaces)
+      assert(out.groupBy(r => (r._1, r._2)).values.forall(_.size == 1), out)
+      val fedBack = out.map(r => (r._3, r._2)).distinct
+      assert(candidates(fedBack).sorted ==
+        fedBack.map { case (c, t) => (c, t, c) }.sorted)
+      nonSelf += out.count(r => r._1 != r._3)
+    }
+    assert(nonSelf > 0, "no generated surface had a non-self candidate")
+  }
+
+  test("canonicalize equals connectedComponents on linker-shaped star forests") {
+    // CC is the oracle: nodes ⋈ connectedComponents(aliasEdges), a vertex
+    // off the edges keeping its own id. Every forest has a hub (a centre
+    // with 200+ leaves), self-links, isolated vertices, and some link
+    // vertices left out of the nodes.
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.coalesce
+    import graft.canon.Canon
+    val types = Seq("DIS", "SYM", "DRU")
+    val starGen =
+      Gen.zip(Gen.choose(0, 6), Gen.oneOf(types), Gen.oneOf(true, false))
+    val forestGen = Gen.zip(Gen.listOf(starGen), Gen.choose(200, 240),
+      Gen.choose(1, 5), Gen.choose(2, 9))
+    forAll(forestGen, minSuccessful = 5) {
+      case (stars, hubLeaves, nIsolated, dropEvery) =>
+        // (surface, entType, candidate): centre `c<i>`, its leaves `c<i>~<j>`
+        val starLinks = ((hubLeaves, "SYM", true) +: stars).zipWithIndex
+          .flatMap { case ((leaves, t, selfLink), i) =>
+            val c = s"c$i"
+            (if (selfLink) Seq((c, t, c)) else Nil) ++
+              (1 to leaves).map(j => (s"$c~$j", t, c))
+          }
+        val isolated = (1 to nIsolated).map(k => (s"iso$k", "DIS"))
+        val links = starLinks :+ ("iso1", "DIS", "iso1")
+        val vertices = (links.flatMap(r => Seq((r._1, r._2), (r._3, r._2))) ++
+          isolated).distinct
+        val nodes = vertices.zipWithIndex
+          .collect { case (v, k) if k % dropEvery != 1 => v }
+          .toDF("surface", "entType")
+        val edges = graft.link.Link.aliasEdges(
+          links.toDF("surface", "entType", "candidate"))
+        val got = Canon.canonicalize(nodes, edges)
+          .as[(String, String, Long)].collect().sorted.toSeq
+        val want = nodes.withColumn("v", Canon.vertexId($"surface", $"entType"))
+          .join(Canon.connectedComponents(edges), Seq("v"), "left")
+          .select($"surface", $"entType", coalesce($"component", $"v"))
+          .as[(String, String, Long)].collect().sorted.toSeq
+        assert(got == want)
+        // at most every second hub vertex is left out of the nodes
+        assert(got.groupBy(_._3).values.exists(_.size >= hubLeaves / 2),
+          "the hub is one group")
+    }
+  }
+
   test("streamed shingle hashing == fnv1a64 of the joined string windows") {
     // r6: shingles() folds window chars straight through fnv1a64 (no
     // per-shingle mkString); this pins value-identity with the retained

@@ -64,41 +64,3 @@ class OnlineNerSpec extends AnyFunSuite {
     assert(annotate("").entities.isEmpty)
   }
 }
-
-class SkewSpec extends AnyFunSuite {
-  lazy val spark = SparkTestBase.spark
-  import graft.util.Skew
-
-  test("salted count equals plain count on a skewed distribution") {
-    import spark.implicits._
-    // hot key "h" with 5000 rows, 50 cold keys with 10 each
-    val rows = (1 to 5000).map(_ => "h") ++
-      (1 to 50).flatMap(k => Seq.fill(10)(s"k$k"))
-    val df = rows.toDF("key")
-    val plain = df.groupBy("key").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(df, Seq("key")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-    assert(salted("h") == 5000L)
-  }
-
-  test("salted sum equals plain sum") {
-    import spark.implicits._
-    val df = ((1 to 1000).map(i => ("h", i.toLong)) ++
-      (1 to 20).map(i => ("c", i.toLong))).toDF("key", "v")
-    val salted = Skew.saltedSum(df, Seq("key"), "v").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted("h") == (1 to 1000).map(_.toLong).sum)
-    assert(salted("c") == (1 to 20).map(_.toLong).sum)
-  }
-
-  test("hotKeys flags the planted hot key only") {
-    import spark.implicits._
-    val rows = (1 to 5000).map(_ => "hot") ++
-      (1 to 50).flatMap(k => Seq.fill(10)(s"cold$k"))
-    val hot = Skew.hotKeys(rows.toDF("key"), Seq("key")).collect()
-      .map(_.getString(0)).toSet
-    assert(hot == Set("hot"))
-  }
-}
