@@ -1,35 +1,38 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.canon.{Canon, Materialize}
+import org.apache.spark.sql.SparkSession
+import graft.canon.{Canon, FinalTables, Materialize}
 import graft.corpus.Corpus
 import graft.link.Link
-import graft.model.Ontology
+import graft.model.{Ontology, Triple}
 import graft.pipeline.{Pipeline, Triples}
-import graft.snapshot.Snapshot
+import graft.snapshot.Snapshot.{Dag, Step}
 
 /** The spark-submit entry point: full KG construction with snapshot-gated
   * resume.
   *
   * Usage: KgRunner <outDir> [nPages] [parallelism]
   *
-  * Stages (each a committed snapshot; re-running skips completed ones):
-  *   1. triples         — pages → extract → annotate → triples (narrow)
-  *   2. mention_tokens  — (surface, entType, token) context table (narrow)
-  *   3. links           — trie candidates + TF-IDF cosine (agg shuffles)
-  *   4. canon           — component labels of the alias star forest (one
-  *                        aggregate and one join)
-  *   5. nodes / edges   — canonicalized graph, partitioned entType × bucket
-  *   6. group_triples   — drug-group taboo path
-  *   7. metadata        — model_info / model_eval_results / training_info /
-  *                        ner_info / ner_eval / source_segment /
-  *                        corpus_info / source_labeled / ner_result
-  *                        (reference §1.3 + 6.3/6.4 full table surface)
+  * `run` declares the 16 stages once, as a [[Dag]] of name, parents,
+  * partition columns and a compute over the parents' committed snapshots:
+  *   - the chain, declared first: triples (pages → extract → annotate,
+  *     narrow) and mention_tokens → links (trie candidates + TF-IDF cosine)
+  *     → canon (labels of the alias star forest: one aggregate, one join)
+  *     → nodes / edges (partitioned entType × bucket);
+  *   - ner_result, source_segment, corpus_info, group_triples and the
+  *     metadata tables (reference §1.3 + 6.3/6.4 table surface);
+  *     ner_eval reads model_eval_results, source_labeled reads corpus_info
+  *     and training_info.
+  * A stage starts on its own thread once its parents have committed.
   *
-  * Annotate runs for its three consumers (triples, mention_tokens,
-  * ner_result); source_segment and corpus_info read the extract layer's
-  * sentence rows, which annotate only copies.
+  * triples, mention_tokens and ner_result each recompute `arts`, so a build
+  * scans annotate three times; source_segment and corpus_info read the
+  * extract layer's sentence rows, which annotate only copies. Round 1
+  * measured persisting the nested artifact rows at ~3x the recompute;
+  * ROADMAP Direction 5 re-measures it. On the old 8-core host (r5),
+  * hoisting canon's surfaces distinct beside links measured SLOWER (69.6 s
+  * → 86-91 s at 80k pages): with every core busy, overlap only adds
+  * contention.
   *
   * Kill it at any point and re-run with the same outDir: completed snapshots
   * are skipped (manifest-gated), and because every id is a content hash the
@@ -53,8 +56,6 @@ object KgRunner {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    implicit val s: SparkSession = spark
-    import spark.implicits._
 
     val t0 = System.nanoTime()
     run(spark, outDir, nPages, par)
@@ -67,13 +68,6 @@ object KgRunner {
   def run(spark: SparkSession, outDir: String, nPages: Long, par: Int): Unit = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-
-    // artifacts are RECOMPUTED per consuming stage (three: triples,
-    // mention_tokens, ner_result) rather than cached: the narrow annotate
-    // pipeline runs at ~500k sentences/s while persisting the fat nested
-    // rows costs ~3x the recompute (serializing Seq[Token]/Seq[EntityRow]
-    // per row) — when compute < serialization, caching is a pessimization.
-    // Determinism makes recompute safe.
     val tb0 = System.nanoTime()
     val b = Pipeline.broadcasts(spark) // built + shipped once for all stages
     System.err.println(
@@ -82,110 +76,36 @@ object KgRunner {
     def sentences = Pipeline.sentences(pages)
     def arts = Pipeline.artifacts(pages, b)
 
-    // Every stage that depends ONLY on arts starts IMMEDIATELY as a
-    // concurrent Spark job (separate driver threads; the scheduler
-    // interleaves their stages across the same executors). Round 1 queued
-    // the final-table branches behind canon — their serialized latency was
-    // part of the ~30 s scale-independent floor. Only nodes/edges truly
-    // need canon; only links needs mention_tokens.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // derived once, shared by the training_info snapshot and source_labeled
-    // (round-4 code derived it twice, once per future)
-    val trainingInfoDf = graft.canon.FinalTables.trainingInfo(spark)
-    val independent = Seq(
-      Future {
-        Snapshot.stage(spark, s"$outDir/group_triples", "group_triples") {
-          Pipeline.groupTriples(spark).toDF()
-        }
-        Snapshot.stage(spark, s"$outDir/model_info", "model_info") {
-          graft.canon.FinalTables.modelInfo(spark)
-        }
-        Snapshot.stage(spark, s"$outDir/model_eval_results",
-          "model_eval_results") {
-          graft.canon.FinalTables.modelEvalResults(spark)
-        }
-        Snapshot.stage(spark, s"$outDir/training_info", "training_info") {
-          trainingInfoDf
-        }
-        Snapshot.stage(spark, s"$outDir/ner_info", "ner_info") {
-          graft.canon.FinalTables.nerInfo(spark)
-        }
-        Snapshot.stage(spark, s"$outDir/ner_eval", "ner_eval") {
-          graft.canon.FinalTables.nerEval(spark)
-        }
+    Dag(
+      Step("triples")(_ => Triples.fromArtifacts(arts).toDF()),
+      Step("mention_tokens")(_ => Link.mentionTokens(arts)),
+      Step("links", Seq("mention_tokens")) { case Seq(mentionTokens) =>
+        Link.linkTableFromTokens(mentionTokens, b.trie, Ontology.jiebaReverse)
       },
-      // reference §1.3 final table surface (format parity)
-      Future {
-        Snapshot.stage(spark, s"$outDir/source_segment", "source_segment") {
-          graft.canon.FinalTables.sourceSegment(sentences)
-        }
-        val ci = Snapshot.stage(spark, s"$outDir/corpus_info",
-          "corpus_info") {
-          graft.canon.FinalTables.corpusInfo(sentences)
-        }
-        Snapshot.stage(spark, s"$outDir/source_labeled", "source_labeled",
-          parent = "corpus_info") {
-          graft.canon.FinalTables.sourceLabeled(trainingInfoDf, ci)
-        }
+      Step("canon", Seq("links", "triples")) { case Seq(links, triples) =>
+        Canon.canonicalize(Materialize.surfaces(triples.as[Triple]),
+          Link.aliasEdges(links))
       },
-      Future {
-        Snapshot.stage(spark, s"$outDir/ner_result", "ner_result") {
-          graft.canon.FinalTables.nerResult(arts)
-        }
-      }
-    )
-
-    val triplesF = Future {
-      Snapshot.stage(spark, s"$outDir/triples", "triples") {
-        Triples.fromArtifacts(arts).toDF()
-      }
-    }
-    // plain parquet like every snapshot, so the first build and a resume
-    // run one link plan: one surface exchange, feeding the tf cache
-    // (PlanGuardSpec pins it)
-    val mentionTokensF = Future {
-      Snapshot.stage(spark, s"$outDir/mention_tokens", "mention_tokens") {
-        Link.mentionTokens(arts)
-      }
-    }
-    val triples = Await.result(triplesF, Duration.Inf)
-    val mentionTokens = Await.result(mentionTokensF, Duration.Inf)
-
-    // canon, the only reader of links, hashes `surface|entType` into alias
-    // edge ids and keys nothing on surface, so links is plain parquet
-    val links = Snapshot.stage(spark, s"$outDir/links", "links",
-      parent = "mention_tokens") {
-      Link.linkTableFromTokens(mentionTokens, b.trie, Ontology.jiebaReverse)
-    }
-    spark.catalog.clearCache() // drop the tf profile cache post-commit
-
-    // NOTE (r5): hoisting the surfaces distinct into a future concurrent
-    // with the links stage was tried and MEASURED SLOWER at 80k pages
-    // (69.6 s → 86-91 s): with all 8 cores saturated by mention_tokens /
-    // links / source_segment, relocating the shuffle just adds contention.
-    // Work is conserved under saturation — overlap only pays when cores idle.
-    val canonMap = Snapshot.stage(spark, s"$outDir/canon", "canon",
-      parent = "links,triples") {
-      Canon.canonicalize(Materialize.surfaces(triples.as[graft.model.Triple]),
-        Link.aliasEdges(links))
-    }
-
-    val materialize = Seq(
-      Future {
-        Snapshot.stage(spark, s"$outDir/nodes", "nodes",
-          partitionBy = Seq("entType", "bucket"), parent = "canon,triples") {
-          Materialize.nodes(triples.as[graft.model.Triple], canonMap)
-        }
+      Step("nodes", Seq("canon", "triples"), Seq("entType", "bucket")) {
+        case Seq(canon, triples) => Materialize.nodes(triples.as[Triple], canon)
       },
-      Future {
-        Snapshot.stage(spark, s"$outDir/edges", "edges",
-          partitionBy = Seq("objType", "bucket"), parent = "canon,triples") {
-          Materialize.edges(triples.as[graft.model.Triple], canonMap)
-        }
+      Step("edges", Seq("canon", "triples"), Seq("objType", "bucket")) {
+        case Seq(canon, triples) => Materialize.edges(triples.as[Triple], canon)
+      },
+      Step("ner_result")(_ => FinalTables.nerResult(arts)),
+      Step("source_segment")(_ => FinalTables.sourceSegment(sentences)),
+      Step("corpus_info")(_ => FinalTables.corpusInfo(sentences)),
+      Step("group_triples")(_ => Pipeline.groupTriples(spark).toDF()),
+      Step("model_info")(_ => FinalTables.modelInfo(spark)),
+      Step("model_eval_results")(_ => FinalTables.modelEvalResults(spark)),
+      Step("training_info")(_ => FinalTables.trainingInfo(spark)),
+      Step("ner_info")(_ => FinalTables.nerInfo(spark)),
+      Step("ner_eval", Seq("model_eval_results")) {
+        case Seq(modelEval) => FinalTables.nerEval(modelEval)
+      },
+      Step("source_labeled", Seq("corpus_info", "training_info")) {
+        case Seq(corpusInfo, training) => FinalTables.sourceLabeled(training, corpusInfo)
       }
-    )
-    (materialize ++ independent).foreach(Await.result(_, Duration.Inf))
+    ).run(spark, outDir)
   }
 }

@@ -18,7 +18,7 @@ import graft.pipeline.Annotate.SentenceArtifacts
   *     :1174-1180) computed by dense_rank over the sorted group keys in ONE
   *     global window (one partition). The distinct-group count grows with
   *     the corpus (46,034 groups over 338,988 sentences at 20k pages), so
-  *     this is a serial step; ROADMAP Direction 3 tracks the distributed
+  *     this is a serial step; ROADMAP Direction 5 tracks the distributed
   *     replacement. The canonical CONTENT ids used for joins remain hashes
   *     (Materialize), this column is format parity only.
   */
@@ -65,7 +65,7 @@ object FinalTables {
       .withColumn("crter", lit(Crter))
     // A12 head-id: dense index over the sorted group keys (format parity).
     // The global window runs on one partition and the group count grows
-    // with the corpus; ROADMAP Direction 3 tracks a distributed index.
+    // with the corpus; ROADMAP Direction 5 tracks a distributed index.
     val groups = base
       .select(col("text_label"), col("text_background"), col("catalog"),
         col("souc_id")).distinct()
@@ -227,8 +227,8 @@ object FinalTables {
     * type → conf_entitytype, partial → conf_vague_coor, and
     * model_conf = prob = the strict score (probs[0], :741).
     */
-  def nerEval(spark: SparkSession): DataFrame =
-    modelEvalResults(spark).select(
+  def nerEval(modelEvalResults: DataFrame): DataFrame =
+    modelEvalResults.select(
       col("model_id").as("ner_model_id"),
       col("dataset").as("dataset_id"),
       col("ent_type").as("onto_id"),

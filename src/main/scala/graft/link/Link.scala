@@ -86,7 +86,7 @@ object Link {
     // it: persist the vocabulary-sized aggregate. The cache preserves the
     // surface partitioning, so norms and the norm join add no exchange.
     // Long-lived sessions: clearCache()/unpersist after consuming (the KG
-    // runner does, post-commit).
+    // build clears the session cache when its last stage has ended).
     val tf = bySurface.groupBy($"surface", $"token")
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

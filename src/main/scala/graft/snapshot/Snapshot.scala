@@ -1,5 +1,7 @@
 package graft.snapshot
 
+import java.util.concurrent.{CompletableFuture, CompletionException, Executors}
+import scala.util.Try
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
@@ -141,6 +143,56 @@ object Snapshot {
       val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
       spark.read.schema(StructType(data ++ parts)).parquet(dir)
     } else spark.read.parquet(dir)
+  }
+
+  /** One declared stage of a [[Dag]]: it commits into `<outDir>/<name>`,
+    * `compute` gets the committed DataFrames of `parents` in their declared
+    * order, and the manifest's `parent` is `parents.mkString(",")`.
+    */
+  final case class Step(name: String, parents: Seq[String] = Nil,
+      partitionBy: Seq[String] = Nil)(val compute: Seq[DataFrame] => DataFrame)
+
+  /** A stage graph declared once. Names are unique and every parent names an
+    * earlier step, so declaration order is a topological order; both are
+    * checked here, before any thread or Spark job starts.
+    */
+  final case class Dag(steps: Step*) {
+    steps.foldLeft(Set.empty[String]) { (declared, s) =>
+      require(!declared(s.name), s"stage ${s.name} is declared twice")
+      s.parents.foreach(p => require(declared(p),
+        s"stage ${s.name}: parent $p is not declared before it"))
+      declared + s.name
+    }
+
+    /** Commit every step into `outDir`, each on its own thread once all its
+      * parents have committed (the pool has a thread per step, so no step
+      * waits for one); steps without parents start in declaration order. A
+      * step whose parent failed never starts. Returns or throws only after
+      * every started step has ended; the exception is the first failed
+      * step's, in declaration order. The session cache is cleared when the
+      * build ends.
+      */
+    def run(spark: SparkSession, outDir: String): Unit = {
+      val pool = Executors.newFixedThreadPool(steps.size)
+      try {
+        val committed = steps.foldLeft(
+            Map.empty[String, CompletableFuture[DataFrame]]) { (done, s) =>
+          val ins = s.parents.map(done)
+          done + (s.name -> CompletableFuture.allOf(ins: _*).thenApplyAsync(
+            (_: Void) => stage(spark, s"$outDir/${s.name}", s.name,
+              s.partitionBy, s.parents.mkString(","))(s.compute(ins.map(_.join()))),
+            pool))
+        }
+        steps.flatMap(s => Try(committed(s.name).join()).failed.toOption)
+          .headOption.foreach {
+            case e: CompletionException => throw e.getCause
+            case e => throw e
+          }
+      } finally {
+        pool.shutdown()
+        spark.catalog.clearCache()
+      }
+    }
   }
 
   private val RowsField = ""","rows":(\d+),""".r

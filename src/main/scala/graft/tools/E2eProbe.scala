@@ -2,9 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Timed END-TO-END KgRunner run — all snapshot stages: narrow triple
-  * extraction, bucketed mention/link tables, iterative CC canonicalization,
-  * partitioned nodes/edges MERGE, metadata. This is the executor-pair scale
+/** Timed END-TO-END KgRunner run — all 16 snapshot stages: narrow triple
+  * extraction, mention/link tables, star-forest canonicalization,
+  * partitioned nodes/edges, metadata. This is the executor-pair scale
   * point for the shuffle/write stages that the narrow [[ScaleProbe]]
   * pipeline doesn't exercise (a real cluster diverges from threads exactly
   * there).

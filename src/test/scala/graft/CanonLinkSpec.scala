@@ -241,6 +241,39 @@ class SnapshotSpec extends AnyFunSuite {
     val tasks = parquet.map(_.getFileName.toString.take("part-00000".length)).toSet
     assert(tasks.size > 1, tasks)
   }
+
+  import Snapshot.{Dag, Step}
+  private val never = (_: Seq[org.apache.spark.sql.DataFrame]) =>
+    fail("a rejected declaration must not compute")
+
+  test("a stage graph rejects a duplicate name and a parent not declared before it") {
+    // a Dag takes no session, so declaring one cannot start a Spark job
+    val dup = intercept[IllegalArgumentException](
+      Dag(Step("a")(never), Step("b", Seq("a"))(never), Step("a")(never)))
+    assert(dup.getMessage.contains("stage a is declared twice"))
+    val later = intercept[IllegalArgumentException](
+      Dag(Step("b", Seq("a"))(never), Step("a")(never)))
+    assert(later.getMessage.contains("stage b: parent a is not declared before it"))
+    val missing = intercept[IllegalArgumentException](
+      Dag(Step("a")(never), Step("b", Seq("a", "z"))(never)))
+    assert(missing.getMessage.contains("stage b: parent z is not declared before it"))
+  }
+
+  test("a failed stage surfaces after every started stage has ended; its child never starts") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("snapdag").toString
+    val boom = new IllegalStateException("A failed")
+    val childRan = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val dag = Dag(
+      Step("A")(_ => throw boom),
+      Step("B", Seq("A")) { _ => childRan.set(true); Seq(1).toDF("v") },
+      Step("C") { _ => Thread.sleep(3000); Seq(2).toDF("v") })
+    val thrown = intercept[IllegalStateException](dag.run(spark, out))
+    assert(thrown eq boom)
+    assert(!childRan.get() && !Snapshot.exists(spark, s"$out/B"))
+    assert(manifestOf(s"$out/C") ==
+      """{"stage":"C","rows":1,"partitions":{"all":1},"parent":""}""")
+  }
 }
 
 class KgRunnerSpec extends AnyFunSuite {
@@ -264,8 +297,19 @@ class KgRunnerSpec extends AnyFunSuite {
     // manifests name every snapshot their stage reads
     def parentOf(stage: String) = java.nio.file.Files.readString(java.nio.file
       .Paths.get(graft.snapshot.Snapshot.manifestPath(s"$out/$stage")))
-    assert(parentOf("canon").endsWith(""""parent":"links,triples"}"""))
-    assert(parentOf("edges").endsWith(""""parent":"canon,triples"}"""))
+    Seq("canon" -> "links,triples", "edges" -> "canon,triples",
+      "nodes" -> "canon,triples", "links" -> "mention_tokens",
+      "source_labeled" -> "corpus_info,training_info",
+      "ner_eval" -> "model_eval_results").foreach { case (stage, parents) =>
+      assert(parentOf(stage).endsWith(s""""parent":"$parents"}"""), stage)
+    }
+    // the build commits exactly its 16 snapshot dirs and nothing else
+    val dirs = new java.io.File(out).listFiles().toSeq
+    assert(dirs.forall(d => graft.snapshot.Snapshot.exists(spark, d.getPath)))
+    assert(dirs.map(_.getName).toSet == Set("triples", "mention_tokens",
+      "links", "canon", "nodes", "edges", "ner_result", "source_segment",
+      "corpus_info", "group_triples", "model_info", "model_eval_results",
+      "training_info", "ner_info", "ner_eval", "source_labeled"))
     // resume: re-run with same dir; edge bytes unchanged
     def rows(stage: String) =
       spark.read.parquet(s"$out/$stage").collect().map(_.toString).sorted.toSeq

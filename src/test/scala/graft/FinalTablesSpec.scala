@@ -104,7 +104,7 @@ class FinalTablesSpec extends AnyFunSuite {
   }
 
   test("ner_eval: re-columned eval matrix, model_conf = strict score") {
-    val ne = FinalTables.nerEval(spark)
+    val ne = FinalTables.nerEval(FinalTables.modelEvalResults(spark))
     assert(ne.columns.toSeq == Seq("ner_model_id", "dataset_id", "onto_id",
       "conf_precision", "conf_coordinate", "conf_entitytype",
       "conf_vague_coor", "model_conf", "crte_time", "crter"))
