@@ -915,13 +915,16 @@ object SparkEntry {
       // chain ran twice over every URL. Persist the narrow (id, canon_url)
       // projection (guide §8: decide with small rows), materialize the
       // result, release the cache — one canonicalization pass total.
+      // Both join sides fit under the broadcast threshold; the hint pins the
+      // build side to canon, so the streamed `first` emits rows grouped by
+      // URL, and the written file is the same, smaller one on every run.
       val canon = docs.select(col("doc_id"),
         graft.textops.TextOps.urlCanonicalize(col("url")).as("canon_url"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val first = canon.groupBy(col("canon_url"))
           .agg(min(col("doc_id")).as("first_doc"))
-        canon.join(first, Seq("canon_url"))
+        broadcast(canon).join(first, Seq("canon_url"))
           .select(col("doc_id"), col("canon_url"),
             (col("doc_id") === col("first_doc")).as("keep"))
           .localCheckpoint(true)

@@ -2,6 +2,7 @@ package graft.link
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.canon.Canon
 import graft.dict.Trie
@@ -22,9 +23,11 @@ import graft.pipeline.Annotate.SentenceArtifacts
   *     by vocabulary size, not corpus size;
   *   - candidate generation is a broadcast trie probe (no shuffle);
   *   - TF-IDF profiles are algebraic aggregations (map-side combinable);
-  *   - the final cosine join joins profile vectors keyed by token — token df
-  *     caps the fan-out, and hot tokens (stopword-ish) get pruned by an idf
-  *     floor exactly so they cannot create a skewed join.
+  *   - the cosine score reads the profiles once: each candidate pair asks
+  *     for its surface's and its candidate's profile in one row set, joined
+  *     to the profiles on surface, so both sides share one profile subtree
+  *     under one exchange; hot tokens (stopword-ish) are pruned by an idf
+  *     floor, which caps the per-pair token fan-out.
   */
 object Link {
 
@@ -63,16 +66,19 @@ object Link {
     * sentences where the surface was extracted. Returns
     * (surface, token, weight) L2-normalized per surface.
     *
-    * Shuffle shape (round-2 rework — round 1 shuffled at tf, idf, norms AND
-    * the norm join, plus ran a separate count() job for nSurfaces):
-    *   - ONE surface-hash partitioning up front; tf (groupBy surface,token),
-    *     norms (groupBy surface) and the norm join are all satisfied by it —
-    *     Catalyst inserts no further exchange;
+    * Shuffle shape:
+    *   - ONE surface-hash partitioning up front; tf (groupBy surface,token)
+    *     and the norm (a window over surface) are both satisfied by it —
+    *     Catalyst inserts no further exchange, and the weighted tf has one
+    *     consumer, so the plan computes it once;
     *   - idf is a vocabulary-sized aggregate joined back by BROADCAST (the
     *     gazetteer-driven token vocabulary is dictionary-scale; an open-web
-    *     vocabulary would flip this to a shuffle join);
+    *     vocabulary would flip this to a shuffle join); a token's df is a
+    *     plain row count, since tf holds one row per (surface, token);
     *   - nSurfaces is a broadcast 1-row aggregate inside the same DAG, not a
-    *     driver-side count() job.
+    *     driver-side count() job;
+    *   - [[linkTableFromTokens]] consumes the result through ONE join, so
+    *     the plan holds one copy of this subtree, not one per pair side.
     */
   def contextProfiles(
       mentionContexts: DataFrame // (surface, token)
@@ -81,10 +87,10 @@ object Link {
     import spark.implicits._
     val bySurface = mentionContexts.repartition($"surface")
     // tf is the multi-consumer hub, and its consumers reach it through
-    // different exchanges (idf by token, nSurfaces global, w and norms
-    // none), so stage reuse cannot share it and each would re-aggregate
-    // it: persist the vocabulary-sized aggregate. The cache preserves the
-    // surface partitioning, so norms and the norm join add no exchange.
+    // different exchanges (idf by token, nSurfaces global, w none), so
+    // stage reuse cannot share it and each would re-aggregate it: persist
+    // the vocabulary-sized aggregate. The cache preserves the surface
+    // partitioning, so the norm window adds no exchange.
     // Long-lived sessions: clearCache()/unpersist after consuming (the KG
     // build clears the session cache when its last stage has ended).
     val tf = bySurface.groupBy($"surface", $"token")
@@ -93,35 +99,15 @@ object Link {
     val nSurfaces = tf.agg(
       countDistinct($"surface").cast("double").as("n_surfaces"))
     val idf = tf.groupBy($"token")
-      .agg(countDistinct($"surface").as("df"))
+      .agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nSurfaces))
       .withColumn("idf", log((col("n_surfaces") + 1.0) / (col("df") + 1.0)))
       .filter($"idf" >= MinIdf) // prune ubiquitous tokens → no hot-key join
       .drop("n_surfaces")
     val w = tf.join(broadcast(idf), "token")
       .withColumn("w", $"tf" * $"idf")
-    val norms = w.groupBy($"surface")
-      .agg(sqrt(sum($"w" * $"w")).as("norm"))
-    w.join(norms, "surface")
-      .select($"surface", $"token", ($"w" / $"norm").as("weight"))
-  }
-
-  /** Cosine similarity between mention-surface profiles and candidate
-    * profiles; returns (surface, entType, candidate, sim).
-    */
-  def score(
-      candidatePairs: DataFrame, // (surface, entType, candidate)
-      profiles: DataFrame // (surface, token, weight)
-  ): DataFrame = {
-    val spark = candidatePairs.sparkSession
-    import spark.implicits._
-    val mp = profiles.toDF("surface", "token", "mw")
-    val cp = profiles.toDF("candidate", "token", "cw")
-    candidatePairs
-      .join(mp, Seq("surface"), "left")
-      .join(cp, Seq("candidate", "token"), "left")
-      .groupBy($"surface", $"entType", $"candidate")
-      .agg(coalesce(sum($"mw" * $"cw"), lit(0.0)).as("sim"))
+    val norm = sqrt(sum($"w" * $"w").over(Window.partitionBy($"surface")))
+    w.select($"surface", $"token", ($"w" / norm).as("weight"))
   }
 
   /** Char-bigram Jaccard between two surfaces (the cheap string-side signal
@@ -166,7 +152,24 @@ object Link {
       .as[(String, String)]
     val cands = candidates(surfaces, trieB, typeOfTag)
     val profiles = contextProfiles(mentionTokens.select($"surface", $"token"))
-    val ctxScore = score(cands, profiles)
+    // cosine of the surface's and the candidate's profiles: each pair asks
+    // for both in one row set (side 0 its surface, side 1 its candidate),
+    // read through one left join, so a pair with no shared token, or with a
+    // side that has no profile, keeps sim 0. One pair-keyed exchange serves
+    // both aggregates, the per-token product and the per-pair sum
+    val pair = Seq($"surface", $"entType", $"candidate")
+    def side(i: Int) = max(when($"side" === i, $"weight"))
+    val ctxScore = cands
+      .select(pair :+ explode(array(
+        struct($"surface".as("p"), lit(0).as("side")),
+        struct($"candidate".as("p"), lit(1).as("side")))).as("s"): _*)
+      .select(pair :+ $"s.p".as("p") :+ $"s.side".as("side"): _*)
+      .join(profiles.withColumnRenamed("surface", "p"), Seq("p"), "left")
+      .repartition(pair: _*)
+      .groupBy(pair :+ $"token": _*)
+      .agg((side(0) * side(1)).as("dot"))
+      .groupBy(pair: _*)
+      .agg(coalesce(sum($"dot"), lit(0.0)).as("sim"))
     val blend = udf { (s: String, c: String, sim: Double) =>
       0.5 * bigramJaccard(s, c) + 0.5 * sim
     }

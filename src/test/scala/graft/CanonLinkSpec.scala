@@ -102,11 +102,12 @@ class LinkSpec extends AnyFunSuite {
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import graft.snapshot.Snapshot
+  import SparkTestBase.withTempDir
 
-  test("stage writes manifest with per-partition counts and skips on resume") {
+  test("stage writes manifest with per-partition counts and skips on resume") { withTempDir("snap") { tmp =>
     implicit val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString + "/t1"
+    val dir = tmp.toString + "/t1"
     var computes = 0
     val df1 = Snapshot.stage(spark, dir, "test", partitionBy = Seq("k")) {
       computes += 1
@@ -124,16 +125,16 @@ class SnapshotSpec extends AnyFunSuite {
       Seq(("x", 9)).toDF("k", "v")
     }
     assert(computes == 1 && df2.count() == 3)
-  }
+  }}
 
   // manifest counts come only from the observed metric on the write itself
   private def manifestOf(dir: String): String =
     java.nio.file.Files.readString(
       java.nio.file.Paths.get(Snapshot.manifestPath(dir)))
 
-  test("unpartitioned stage manifest rows equal the rows read back") {
+  test("unpartitioned stage manifest rows equal the rows read back") { withTempDir("snap") { tmp =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snap").toString + "/u"
+    val dir = tmp.toString + "/u"
     val df = Snapshot.stage(spark, dir, "unpartitioned") {
       (1 to 50).map(i => (s"k${i % 7}", i)).toDF("k", "v")
     }
@@ -141,11 +142,11 @@ class SnapshotSpec extends AnyFunSuite {
     assert(rows == 50 && df.count() == rows)
     assert(manifestOf(dir) ==
       s"""{"stage":"unpartitioned","rows":$rows,"partitions":{"all":$rows},"parent":""}""")
-  }
+  }}
 
-  test("empty stage commits zero rows, unpartitioned and partitioned") {
+  test("empty stage commits zero rows, unpartitioned and partitioned") { withTempDir("snap") { tmp =>
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("snap").toString
+    val base = tmp.toString
     val empty = Seq(("a", 1)).toDF("k", "v").filter($"v" < 0)
     Snapshot.stage(spark, s"$base/plain", "plain")(empty)
     assert(manifestOf(s"$base/plain") ==
@@ -161,7 +162,7 @@ class SnapshotSpec extends AnyFunSuite {
     for (df <- Seq(first, resumed)) {
       assert(df.columns.toSeq == Seq("v", "k") && df.count() == 0)
     }
-  }
+  }}
 
   private def walk(dir: String): Seq[java.nio.file.Path] = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -172,10 +173,9 @@ class SnapshotSpec extends AnyFunSuite {
     java.nio.file.attribute.PosixFilePermissions.toString(
       java.nio.file.Files.getPosixFilePermissions(p))
 
-  test("a commit forks no process") {
+  test("a commit forks no process") { withTempDir("snapfork") { base =>
     import spark.implicits._
     import jdk.jfr.consumer.RecordingFile
-    val base = java.nio.file.Files.createTempDirectory("snapfork")
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
@@ -199,11 +199,11 @@ class SnapshotSpec extends AnyFunSuite {
     val shared = org.apache.hadoop.fs.FileSystem.get(base.toUri,
       spark.sparkContext.hadoopConfiguration)
     assert(!shared.isInstanceOf[graft.snapshot.NioLocalFileSystem])
-  }
+  }}
 
-  test("commit modes match chmod's under umask 022; sticky bit still chmods") {
+  test("commit modes match chmod's under umask 022; sticky bit still chmods") { withTempDir("snapmode") { tmp =>
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("snapmode").toString + "/w"
+    val dir = tmp.toString + "/w"
     Snapshot.write((1 to 20).map(i => (s"k${i % 3}", i)).toDF("k", "v"),
       dir, "w", partitionBy = Seq("k"))
     val paths = walk(dir)
@@ -220,19 +220,19 @@ class SnapshotSpec extends AnyFunSuite {
     val fs = new graft.snapshot.NioLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"),
       new org.apache.hadoop.conf.Configuration())
-    val d = java.nio.file.Files.createTempDirectory("snapsticky")
+    val d = java.nio.file.Files.createDirectory(tmp.resolve("sticky"))
     val hd = new org.apache.hadoop.fs.Path(d.toUri)
     fs.setPermission(hd, new FsPermission(java.lang.Short.parseShort("750", 8)))
     assert(mode(d) == "rwxr-x---")
     fs.setPermission(hd, new FsPermission(java.lang.Short.parseShort("1755", 8)))
     val unixMode = java.nio.file.Files.getAttribute(d, "unix:mode").asInstanceOf[Int]
     assert((unixMode & 0xfff) == Integer.parseInt("1755", 8))
-  }
+  }}
 
-  test("a partitioned write is spread over several tasks, one file per leaf") {
+  test("a partitioned write is spread over several tasks, one file per leaf") { withTempDir("snapfan") { tmp =>
     import spark.implicits._
     val par = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val dir = java.nio.file.Files.createTempDirectory("snapfan").toString + "/w"
+    val dir = tmp.toString + "/w"
     Snapshot.write((1 to 20 * par).map(i => (s"k${i % (4 * par)}", i)).toDF("k", "v"),
       dir, "w", partitionBy = Seq("k"))
     val parquet = walk(dir).filter(_.getFileName.toString.endsWith(".parquet"))
@@ -240,7 +240,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(perLeaf.size == 4 * par && perLeaf.values.forall(_.size == 1))
     val tasks = parquet.map(_.getFileName.toString.take("part-00000".length)).toSet
     assert(tasks.size > 1, tasks)
-  }
+  }}
 
   import Snapshot.{Dag, Step}
   private val never = (_: Seq[org.apache.spark.sql.DataFrame]) =>
@@ -259,9 +259,9 @@ class SnapshotSpec extends AnyFunSuite {
     assert(missing.getMessage.contains("stage b: parent z is not declared before it"))
   }
 
-  test("a failed stage surfaces after every started stage has ended; its child never starts") {
+  test("a failed stage surfaces after every started stage has ended; its child never starts") { withTempDir("snapdag") { tmp =>
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("snapdag").toString
+    val out = tmp.toString
     val boom = new IllegalStateException("A failed")
     val childRan = new java.util.concurrent.atomic.AtomicBoolean(false)
     val dag = Dag(
@@ -273,14 +273,15 @@ class SnapshotSpec extends AnyFunSuite {
     assert(!childRan.get() && !Snapshot.exists(spark, s"$out/B"))
     assert(manifestOf(s"$out/C") ==
       """{"stage":"C","rows":1,"partitions":{"all":1},"parent":""}""")
-  }
+  }}
 }
 
 class KgRunnerSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
+  import SparkTestBase.withTempDir
 
-  test("full runner: snapshots commit, canon groups alias variants, resume is byte-stable") {
-    val out = java.nio.file.Files.createTempDirectory("kg").toString
+  test("full runner: snapshots commit, canon groups alias variants, resume is byte-stable") { withTempDir("kg") { tmp =>
+    val out = tmp.toString
     graft.KgRunner.run(spark, out, nPages = 30, par = 4)
     val nodes = spark.read.parquet(s"$out/nodes")
     val edges = spark.read.parquet(s"$out/edges")
@@ -318,11 +319,11 @@ class KgRunnerSpec extends AnyFunSuite {
     assert(rows("edges") == before("edges"))
     // a second outDir built in the same session must not leak into a tail
     // resume of the first: links reads the resumed mention_tokens
-    val other = java.nio.file.Files.createTempDirectory("kg").toString
-    graft.KgRunner.run(spark, other, nPages = 20, par = 4)
+    withTempDir("kg")(other =>
+      graft.KgRunner.run(spark, other.toString, nPages = 20, par = 4))
     Seq("links", "canon", "nodes", "edges").foreach(t => java.nio.file.Files
       .delete(java.nio.file.Paths.get(graft.snapshot.Snapshot.manifestPath(s"$out/$t"))))
     graft.KgRunner.run(spark, out, nPages = 30, par = 4)
     before.foreach { case (t, r) => assert(rows(t) == r, t) }
-  }
+  }}
 }

@@ -1,18 +1,23 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.expressions.Divide
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, ProjectExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
 /** Plan-shape regression guards, enforced as tests so a refactor can't
   * silently regress them — filter pushdown reaching the scan, broadcast
   * joins on dim tables, no accidental cartesian products, the bounded dedup
   * aggregate actually planning as an object-hash aggregate (partial merge,
-  * no full-bucket sort buffer), and the exchange-free link profiles over
-  * the surface-bucketed `mention_tokens` snapshot.
+  * no full-bucket sort buffer), the link profiles shuffling the
+  * `mention_tokens` snapshot once, the link score reading those profiles
+  * once, and `dedup_url_exact` building its join from the same side on
+  * every run.
   */
 class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestBase.spark
@@ -30,16 +35,22 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * is just a checkpoint scan — the real pipeline plan is captured from
     * the listener channel, keyed by the observe-node metric name.
     */
-  private def internalExecutedPlan(name: String, metricName: String): String = {
-    @volatile var captured: Option[String] = None
+  private def internalExecutedPlan(name: String, metricName: String): String =
+    capturedPlan(name)((_, qe) => qe.observedMetrics.contains(metricName))
+      .toString
+
+  /** Executed plan of the first action of query `name` that `pick` selects,
+    * by the action's name and its query execution.
+    */
+  private def capturedPlan(name: String)(
+      pick: (String, QueryExecution) => Boolean): SparkPlan = {
+    @volatile var captured: Option[SparkPlan] = None
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
+      override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit =
-        if (qe.observedMetrics.contains(metricName))
-          captured = Some(qe.executedPlan.toString)
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
+        if (captured.isEmpty && pick(funcName, qe))
+          captured = Some(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
@@ -95,6 +106,16 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the persisted signature stage is actually read from cache in the
     // internal plan (the single-pass contract)
     assert(p.contains("InMemoryTableScan"), "sigs cache not in the plan")
+  }
+
+  test("dedup_url_exact builds its join from canon (BroadcastHashJoin, BuildLeft)") {
+    // the query's result is a local checkpoint: its plan comes from the
+    // listener channel. Building from canon streams the 25-row `first`, so
+    // the written rows are grouped by URL on every run
+    val p = capturedPlan("dedup_url_exact")((f, _) => f == "localCheckpoint")
+    val joins = collect(p) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1 && joins.head.buildSide == BuildLeft &&
+      joins.head.left.output.exists(_.name == "doc_id"), p.toString.take(1200))
   }
 
   test("as-of join is ONE window over the union — no join operator at all") {
@@ -170,6 +191,55 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         case (_: FileSourceScanExec, inCache) => !inCache
         case _ => false
       }, s"aqe=$aqe: the corpus is scanned outside the tf cache")
+    }
+  }
+
+  test("links read the context profiles once: one profile subtree, at most 12 jobs") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val sc = spark.sparkContext
+    SparkTestBase.withTempDir("planlinks") { tmp =>
+      val b = graft.pipeline.Pipeline.broadcasts(spark)
+      val arts = graft.pipeline.Pipeline.artifacts(
+        graft.corpus.Corpus.pages(spark, 40, 4), b)
+      val mentionTokens = graft.snapshot.Snapshot.stage(spark,
+        s"$tmp/mt", "mention_tokens")(graft.link.Link.mentionTokens(arts))
+      val group = "plan-guard-links"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (j.properties != null &&
+              j.properties.getProperty("spark.jobGroup.id") == group)
+            jobs.incrementAndGet()
+      }
+      val before = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      sc.addSparkListener(listener)
+      val plan = try {
+        sc.setJobGroup(group, "links")
+        val links = graft.link.Link.linkTableFromTokens(mentionTokens, b.trie,
+          graft.model.Ontology.jiebaReverse)
+        links.collect()
+        org.apache.spark.graft.Bus.drain(sc)
+        links.queryExecution.executedPlan
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+        spark.catalog.clearCache() // the tf cache: fresh per plan
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+      }
+      // the two-join score ran 36 jobs here
+      assert(jobs.get <= 12, s"links ran ${jobs.get} jobs")
+      // a profile subtree ends in the projection that divides the weighted
+      // tf `w` by its surface's norm; one copy of it means no two exchanges
+      // can sit over copies of the same profiles
+      val profileRoots = collectWithSubqueries(plan) {
+        case p: ProjectExec if p.projectList.exists(_.exists {
+          case d: Divide => d.left.references.exists(_.name == "w")
+          case _ => false
+        }) => p
+      }
+      assert(profileRoots.size == 1, plan.toString.take(4000))
     }
   }
 

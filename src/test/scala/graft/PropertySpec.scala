@@ -2,7 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.dict.Gazetteer
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.dict.{Gazetteer, Trie}
+import graft.link.Link
 import graft.ner.{Bio, BioRaw, EnsemblesRaw, Tagged}
 
 /** Property tests (SURVEY.md §5.2). */
@@ -145,6 +149,110 @@ class PropertySpec extends AnyFunSuite {
       nonSelf += out.count(r => r._1 != r._3)
     }
     assert(nonSelf > 0, "no generated surface had a non-self candidate")
+  }
+
+  /** The oracle of [[Link.linkTableFromTokens]]: the two-join formulation
+    * it replaced. Profiles take a token's df as countDistinct(surface), and
+    * the score left-joins the profiles twice, once on the surface and once
+    * on (candidate, token). No persist and no partitioning: only the rows
+    * matter here.
+    */
+  private def twoJoinLinks(mentionTokens: DataFrame, trieB: Broadcast[Trie],
+      typeOfTag: Map[String, String])(implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    val cands = Link.candidates(
+      mentionTokens.select($"surface", $"entType").distinct()
+        .as[(String, String)], trieB, typeOfTag)
+    val tf = mentionTokens.groupBy($"surface", $"token")
+      .agg(count(lit(1)).as("tf"))
+    val nSurfaces = tf.agg(
+      countDistinct($"surface").cast("double").as("n_surfaces"))
+    val idf = tf.groupBy($"token").agg(countDistinct($"surface").as("df"))
+      .crossJoin(nSurfaces)
+      .withColumn("idf", log((col("n_surfaces") + 1.0) / (col("df") + 1.0)))
+      .filter($"idf" >= 0.1)
+      .drop("n_surfaces")
+    val w = tf.join(idf, "token").withColumn("w", $"tf" * $"idf")
+    val norms = w.groupBy($"surface").agg(sqrt(sum($"w" * $"w")).as("norm"))
+    val profiles = w.join(norms, "surface")
+      .select($"surface", $"token", ($"w" / $"norm").as("weight"))
+    val mp = profiles.toDF("surface", "token", "mw")
+    val cp = profiles.toDF("candidate", "token", "cw")
+    val blend = udf { (s: String, c: String, sim: Double) =>
+      0.5 * Link.bigramJaccard(s, c) + 0.5 * sim
+    }
+    cands
+      .join(mp, Seq("surface"), "left")
+      .join(cp, Seq("candidate", "token"), "left")
+      .groupBy($"surface", $"entType", $"candidate")
+      .agg(coalesce(sum($"mw" * $"cw"), lit(0.0)).as("sim"))
+      .withColumn("score", round(blend($"surface", $"candidate", $"sim"), 9))
+      .filter($"score" >= 0.3)
+      .select($"surface", $"entType", $"candidate", $"score")
+  }
+
+  private def linkRows(links: DataFrame): Set[(String, String, String, Double)] =
+    links.collect().map(r =>
+      (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3))).toSet
+
+  test("Link.linkTableFromTokens equals the two-join oracle on generated mention tokens") {
+    implicit val spark: SparkSession = SparkTestBase.spark
+    import spark.implicits._
+    val typeOfTag = graft.model.Ontology.jiebaReverse
+    val Seq(tagA, tagB) = typeOfTag.keys.toSeq.sorted.take(2)
+    val (typeA, typeB) = (typeOfTag(tagA), typeOfTag(tagB))
+    val charGen = Gen.oneOf('甲', '乙', '丙', '丁') // few chars: shared prefixes
+    def strGen(lo: Int, hi: Int) =
+      Gen.choose(lo, hi).flatMap(Gen.listOfN(_, charGen)).map(_.mkString)
+    // fixed gazetteer words and their surfaces, next to generated ones:
+    //   甲乙丙  a self-candidate; a1 twice, so tf = 2
+    //   甲乙丙丁 links to 甲乙丙 through the shared token a1
+    //   甲乙丙乙 links to 甲乙丙 with no shared token: sim 0, Jaccard only
+    //   乙丙甲丁 links to 乙丙甲, which is never a surface: no profile
+    //   丙甲乙  a self-candidate whose one token is pruned: no profile
+    // and every surface has the token `common`, which idf prunes
+    val fixedDict = Map("甲乙丙" -> tagA, "乙丙甲" -> tagA, "丙甲乙" -> tagB)
+    val fixedRows = Seq(
+      ("甲乙丙", typeA, "a1"), ("甲乙丙", typeA, "a1"), ("甲乙丙", typeA, "a2"),
+      ("甲乙丙丁", typeA, "a1"), ("甲乙丙丁", typeA, "b1"),
+      ("甲乙丙乙", typeA, "e1"),
+      ("乙丙甲丁", typeA, "c1"))
+    val fixedSurfaces = fixedRows.map(_._1).toSet + "乙丙甲" + "丙甲乙"
+    val caseGen = for {
+      dict <- Gen.mapOf(Gen.zip(strGen(2, 3), Gen.oneOf(tagA, tagB)))
+      rows <- Gen.listOf(Gen.zip(
+        Gen.zip(strGen(2, 3), strGen(0, 2)).map { case (w, x) => w + x },
+        Gen.oneOf(typeA, typeB), Gen.oneOf("t1", "t2", "t3", "t4", "t5")))
+    } yield (dict ++ fixedDict,
+      rows.filterNot(r => fixedSurfaces(r._1)) ++ fixedRows)
+    forAll(caseGen, minSuccessful = 8) { case (dict, rows) =>
+      val trieB = spark.sparkContext.broadcast(Gazetteer.buildTrie(dict))
+      val common = rows.map(r => (r._1, r._2, "common")).distinct :+
+        (("丙甲乙", typeB, "common"))
+      val mentionTokens = (rows ++ common).toDF("surface", "entType", "token")
+      val got = try linkRows(
+        Link.linkTableFromTokens(mentionTokens, trieB, typeOfTag))
+      finally spark.catalog.clearCache() // the tf cache
+      assert(got == linkRows(twoJoinLinks(mentionTokens, trieB, typeOfTag)))
+      val third = math.round(1e9 / 3) / 1e9 // 0.5 · Jaccard 2/3, sim 0
+      assert(got.contains(("丙甲乙", typeB, "丙甲乙", 0.5)) &&
+        got.contains(("甲乙丙乙", typeA, "甲乙丙", third)) &&
+        got.contains(("乙丙甲丁", typeA, "乙丙甲", third)), got)
+      assert(got.exists(r => r._1 == "甲乙丙" && r._3 == "甲乙丙" && r._4 == 1.0))
+    }
+  }
+
+  test("Link.linkTableFromTokens equals the two-join oracle on 40 pages") {
+    implicit val spark: SparkSession = SparkTestBase.spark
+    val b = graft.pipeline.Pipeline.broadcasts(spark)
+    val mentionTokens = Link.mentionTokens(graft.pipeline.Pipeline.artifacts(
+      graft.corpus.Corpus.pages(spark, 40, 4), b)).cache()
+    try {
+      val typeOfTag = graft.model.Ontology.jiebaReverse
+      val got = linkRows(Link.linkTableFromTokens(mentionTokens, b.trie, typeOfTag))
+      assert(got.nonEmpty && got.exists(r => r._1 != r._3))
+      assert(got == linkRows(twoJoinLinks(mentionTokens, b.trie, typeOfTag)))
+    } finally spark.catalog.clearCache()
   }
 
   test("canonicalize equals connectedComponents on linker-shaped star forests") {

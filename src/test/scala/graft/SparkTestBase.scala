@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for suites (one per JVM; sbt forks one JVM for
@@ -16,5 +17,19 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Runs `body` on a fresh temp dir named `prefix…`, then deletes the dir
+    * and everything written under it, whether `body` passed or threw.
+    */
+  def withTempDir[A](prefix: String)(body: Path => A): A = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir)
+    finally {
+      val tree = Files.walk(dir)
+      try tree.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally tree.close()
+    }
   }
 }
