@@ -132,7 +132,7 @@ final case class Triple(
     prob: Double
 )
 
-/** Canonicalized graph node (post connected-components). */
+/** Canonicalized graph node (star-forest label of `Canon.canonicalize`). */
 final case class Node(
     canonId: Long,
     surface: String,

@@ -77,10 +77,6 @@ final class CrfScorer(
     (evScratchB, evScratchI)
   }
 
-  /** Per-char (BIO label, prob) for one sentence — compat wrapper. */
-  def predict(sentence: String): Array[(String, Double)] =
-    predictRaw(sentence).toPairs
-
   def predictRaw(sentence: String): Tagged =
     predictRaw(sentence, CrfScorer.dictScan(trie, sentence))
 

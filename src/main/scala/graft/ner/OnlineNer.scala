@@ -26,7 +26,9 @@ object OnlineNer {
       entities: Seq[OnlineEntity]
   )
 
-  /** Build a scoring function once (broadcast-analog: reuse across calls). */
+  /** Build a scoring function once (broadcast-analog: reuse across calls);
+    * each call answers one request of app_multi.py:154-253.
+    */
   def annotator(trie: Trie,
       weights: Map[String, Map[String, Double]]): String => OnlineResult = {
     val scorers = CrfScorer.productionScorers(trie)

@@ -11,8 +11,9 @@ import graft.model._
   *
   * Broadcast state (trie, weights, eval matrix) is built once on the driver —
   * O(dictionary) bytes, shipped once per executor; every stage up to triple
-  * emission is narrow (no shuffle). Shuffles appear only in downstream
-  * canonicalization (connected components) and final materialization.
+  * emission is narrow (no shuffle; PlanGuardSpec pins it). Shuffles appear
+  * only downstream: in the link profiles and score, in canonicalization's
+  * one aggregate and join, and in the partitioned node/edge writes.
   */
 object Pipeline {
 

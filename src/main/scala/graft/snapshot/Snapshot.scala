@@ -15,9 +15,11 @@ import graft.util.Observed
   *
   * Each pipeline stage writes its output as a partitioned parquet dir plus a
   * `_manifest.json` carrying the stage name, total row count, per-partition
-  * row counts and the input snapshot it derived from. A stage whose manifest
-  * exists is skipped on resume (idempotent re-run = same bytes because every
-  * id is a content hash — no monotonically_increasing_id anywhere).
+  * row counts and its parents: the stages it read, declared once in its
+  * [[Step]] and comma-joined (empty for a stage that reads none). A stage
+  * whose manifest exists is skipped on resume (idempotent re-run = same
+  * bytes because every id is a content hash — no monotonically_increasing_id
+  * anywhere).
   *
   * This emulates Iceberg snapshot commits (no iceberg jar ships in
   * /opt/spark/jars): the manifest plays the role of the snapshot metadata

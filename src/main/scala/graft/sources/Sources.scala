@@ -33,13 +33,17 @@ object Sources {
     StructField("ind", LongType)
   ))
 
-  /** S3: JSON record scan with explicit schema (no inference). */
+  /** S3: JSON record scan with explicit schema (no inference) — the
+    * annotated-sentence `json.load` of generation.py:149-151.
+    */
   def readSentencesJson(spark: SparkSession, path: String): Dataset[SentenceRow] = {
     import spark.implicits._
     spark.read.schema(sentenceJsonSchema).json(path).as[SentenceRow]
   }
 
-  /** S7: JSON sink for stage-boundary interchange. */
+  /** S7: JSON sink for stage-boundary interchange — the record-array
+    * `json.dump` of generation.py:164-165.
+    */
   def writeSentencesJson(ds: Dataset[SentenceRow], path: String): Unit =
     ds.write.mode(SaveMode.Overwrite).json(path)
 
@@ -59,12 +63,18 @@ object Sources {
     StructField("probType", DoubleType)
   ))
 
+  /** S2: entity-row CSV scan with [[entityCsvSchema]] — reads back the
+    * extraction-results table of EnsemblePredict_all.py:582-585.
+    */
   def readEntitiesCsv(spark: SparkSession, path: String): Dataset[EntityRow] = {
     import spark.implicits._
     spark.read.schema(entityCsvSchema).option("header", "true").csv(path)
       .as[EntityRow]
   }
 
+  /** S6: entity-row CSV sink — the extraction-results `to_csv` of
+    * EnsemblePredict_all.py:582-585.
+    */
   def writeEntitiesCsv(ds: Dataset[EntityRow], path: String): Unit =
     ds.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
 
@@ -88,6 +98,11 @@ object Sources {
       .map { case (c, tag) => s"$c\t$tag" } :+ ""
   }
 
+  /** The reference's `notin_types`: auxiliary types the dictionary lacks. */
+  val NotinTypes: Set[String] = Set("FW", "DEG", "AT", "DUR", "PSB", "PT")
+
+  private val SeparatorChars = Set('、', '；', '，', ';')
+
   /** NER-type substitution for dictionary-missing auxiliary types
     * (generation.py:216-238): a model mention whose type is in `notin_types`
     * and whose [start, end) span EXACTLY equals a seg token's span replaces
@@ -95,10 +110,6 @@ object Sources {
     * skipped — the reference treats those as mis-merged enumerations.
     * Row-local, no shuffle.
     */
-  val NotinTypes: Set[String] = Set("FW", "DEG", "AT", "DUR", "PSB", "PT")
-
-  private val SeparatorChars = Set('、', '；', '，', ';')
-
   def substituteNotinTypes(
       seg: Seq[Token],
       ner: Seq[graft.model.Mention]
@@ -126,9 +137,9 @@ object Sources {
     else if (i % 90 == 0) "test"
     else "training"
 
-  /** S8 with the reference's three-way split: ONE scan, partitioned write —
-    * `path/split=training|validation|test`. Input carries the corpus
-    * ordinal (the reference's enumerate index).
+  /** S8 with the reference's three-way split (generation.py:446-455): ONE
+    * scan, partitioned write — `path/split=training|validation|test`. Input
+    * carries the corpus ordinal (the reference's enumerate index).
     */
   def writeBioSplit(
       ds: Dataset[(Long, String, Seq[Token])],

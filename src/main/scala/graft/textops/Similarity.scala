@@ -83,14 +83,12 @@ object Similarity {
         (b * 1315 + d).toLong)) - 0.5)
     }
 
-  def signBucket(emb: Seq[Float], planes: Array[Array[Double]]): Int =
-    signBucketArr(toArr(emb), planes)
-
-  /** Primitive-array kernel of [[signBucket]] — the UDFs receive embeddings
-    * as Seq[Float] (WrappedArray), and every element access through that
-    * interface boxes; converting once per row keeps the nTables × nBits ×
-    * dim inner loop on primitive reads (r6: the bucket-assignment UDF was
-    * warm-time-bound on boxed accesses, ~66M per sf0.1 pass).
+  /** Sign-LSH bucket of one embedding over `planes`, on a primitive array —
+    * the UDFs receive embeddings as Seq[Float] (WrappedArray), and every
+    * element access through that interface boxes; converting once per row
+    * keeps the nTables × nBits × dim inner loop on primitive reads (r6: the
+    * bucket-assignment UDF was warm-time-bound on boxed accesses, ~66M per
+    * sf0.1 pass).
     */
   private[textops] def signBucketArr(
       emb: Array[Float], planes: Array[Array[Double]]): Int = {

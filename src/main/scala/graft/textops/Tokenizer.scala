@@ -243,37 +243,6 @@ object Tokenizer {
       .toDF("merge_ix", "left", "right", "pair_count")
   }
 
-  /** Apply a learned merge table to a corpus: (doc_id, n_words, n_tokens,
-    * tokens_fp) per document — token count plus an md5 fingerprint of the
-    * token stream (the compression-ratio / drift signal a tokenizer change
-    * is judged by). Merges apply in learned order per word, exactly
-    * [[applyMerge]]; the merge list ships as a broadcast local value and
-    * the whole step is one narrow typed map (a 30k-deep chain of
-    * `aggregate` expressions would defeat codegen, so this is the
-    * documented Dataset-API exception).
-    */
-  def bpeApply(
-      docs: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(merges)
-    docs.select(col(idCol).cast("long").as("id"),
-      coalesce(col(textCol), lit("")).as("txt"))
-      .as[(Long, String)]
-      .map { case (id, txt) =>
-        val ws = wordsOf(txt)
-        val toks = ws.flatMap { w =>
-          bc.value.foldLeft(w.split("").toList) { case (s, (l, r)) =>
-            applyMerge(s, l, r)
-          }
-        }
-        (id, ws.size.toLong, toks.size.toLong,
-          graft.util.Hashing.md5Hex(toks.mkString(" ")))
-      }
-      .toDF("doc_id", "n_words", "n_tokens", "tokens_fp")
-  }
-
   /** Deterministic fixture corpus for the oracle query: repeated subword
     * structure ("ing", "th", "er" families) so the first dozen merges are
     * meaningful and stable. In-repo constant — the generated-VALUES oracle

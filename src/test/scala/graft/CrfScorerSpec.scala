@@ -16,14 +16,14 @@ class CrfScorerSpec extends AnyFunSuite {
   test("deterministic: same (model, sentence) → same output") {
     val s = "患者高血压伴呼吸困难，服阿司匹林。"
     scorers.foreach { sc =>
-      assert(sc.predict(s).toSeq == sc.predict(s).toSeq)
+      assert(sc.predictRaw(s).toPairs.toSeq == sc.predictRaw(s).toPairs.toSeq)
     }
   }
 
   test("BIO well-formed: no I- without preceding B-/I- of same type") {
     val s = "高血压呼吸困难阿司匹林心脏胸部X线"
     scorers.foreach { sc =>
-      val tags = sc.predict(s).map(_._1)
+      val tags = sc.predictRaw(s).toPairs.map(_._1)
       tags.zipWithIndex.foreach { case (t, i) =>
         if (t.startsWith("I-")) {
           val prev = tags(i - 1)
@@ -42,7 +42,7 @@ class CrfScorerSpec extends AnyFunSuite {
     var found = 0
     var expected = 0
     sents.foreach { s =>
-      val pred = scorers.map(sc => sc.model -> sc.predict(s)).toMap
+      val pred = scorers.map(sc => sc.model -> sc.predictRaw(s).toPairs).toMap
       val r = Ensembles.run(pred, weights)
       val mentions = r.boundaries.map { case (st, e) => s.substring(st, e) }.toSet
       expected += 3
@@ -56,7 +56,7 @@ class CrfScorerSpec extends AnyFunSuite {
   test("probs are in (0,1) and spans carry higher probs than O chars on average") {
     val s = "高血压者呼吸困难。"
     val sc = scorers.head
-    val out = sc.predict(s)
+    val out = sc.predictRaw(s).toPairs
     assert(out.forall { case (_, p) => p >= 0.0 && p < 1.0 })
     val (tagged, oTagged) = out.partition(_._1 != "O")
     if (tagged.nonEmpty && oTagged.nonEmpty) {

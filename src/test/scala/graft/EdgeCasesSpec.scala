@@ -11,18 +11,14 @@ import org.apache.spark.sql.functions._
 class EdgeCasesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  /** Schema-identical, zero-row copies of every sf table. */
-  lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("empty_sf").toString
+  test("every sf-reading contract query survives empty input tables") { SparkTestBase.withTempDir("empty_sf") { tmp =>
+    // schema-identical, zero-row copies of every sf table
+    val emptyDir = tmp.toString
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       spark.read.parquet(s"/root/testdata/sf0.001/$t.parquet").limit(0)
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/$t.parquet")
+        .coalesce(1).write.mode("overwrite").parquet(s"$emptyDir/$t.parquet")
     }
-    dir
-  }
-
-  test("every sf-reading contract query survives empty input tables") {
     // these entries synthesize their own input and never read sfDir
     val selfSourced = Set("kg_triples", "kg_group_taboo", "kg_seen_unseen",
       "kg_top_surfaces", "mm_features", "kg_drug_instructions",
@@ -33,7 +29,7 @@ class EdgeCasesSpec extends AnyFunSuite {
         catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }.flatten
     assert(failures.isEmpty, failures.mkString("\n"))
-  }
+  }}
 
   test("langIdCol agrees with the scalar langId on real documents") {
     import spark.implicits._

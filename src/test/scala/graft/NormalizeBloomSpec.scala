@@ -193,14 +193,14 @@ class NormalizeBloomSpec extends AnyFunSuite {
     }
   }
 
-  test("updateCorpusBloom folds a crawl in; capacity mismatch rejected") {
+  test("updateCorpusBloom folds a crawl in; capacity mismatch rejected") { SparkTestBase.withTempDir("bloomup") { tmp =>
     import spark.implicits._
     val capacity = 1000L
     val corpus = (0 until 50)
       .map(i => (i.toLong, s"gen0 doc $i")).toDF("doc_id", "text")
     val crawl = (0 until 30)
       .map(i => (1000L + i, s"crawl1 doc $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("bloomup").toString
+    val dir = tmp.toString
     val path = s"$dir/corpus.bloom"
     Dedup.saveBloom(spark,
       Dedup.corpusBloom(corpus, "text", 0.01, capacity), path)
@@ -218,14 +218,14 @@ class NormalizeBloomSpec extends AnyFunSuite {
     Dedup.updateCorpusBloom(spark, path,
       crawl.filter(lit(false)), "text", capacity)
     assert(allFps.forall(Dedup.loadBloom(spark, path).mightContainString))
-  }
+  }}
 
-  test("corpusBloom save/load round-trip probes identically") {
+  test("corpusBloom save/load round-trip probes identically") { SparkTestBase.withTempDir("bloomrt") { tmp =>
     import spark.implicits._
     val corpus = (0 until 100)
       .map(i => (i.toLong, s"doc body $i")).toDF("doc_id", "text")
     val bf = Dedup.corpusBloom(corpus, "text")
-    val dir = java.nio.file.Files.createTempDirectory("bloomrt").toString
+    val dir = tmp.toString
     val path = s"$dir/corpus.bloom"
     Dedup.saveBloom(spark, bf, path)
     val bf2 = Dedup.loadBloom(spark, path)
@@ -245,5 +245,5 @@ class NormalizeBloomSpec extends AnyFunSuite {
     assert(f.renameTo(new java.io.File(path + ".prev")))
     assert(fps.forall(Dedup.loadBloom(spark, path).mightContainString),
       "load must recover from the backup when the live file is missing")
-  }
+  }}
 }

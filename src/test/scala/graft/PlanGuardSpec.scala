@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
   * aggregate actually planning as an object-hash aggregate (partial merge,
   * no full-bucket sort buffer), the link profiles shuffling the
   * `mention_tokens` snapshot once, the link score reading those profiles
-  * once, and `dedup_url_exact` building its join from the same side on
-  * every run.
+  * once, `dedup_url_exact` building its join from the same side on every
+  * run, and the triple pipeline up to emission planning no shuffle.
   */
 class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestBase.spark
@@ -162,10 +162,10 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case _ => false
   }
 
-  test("link profiles over mention_tokens shuffle once on surface, into the tf cache") {
+  test("link profiles over mention_tokens shuffle once on surface, into the tf cache") { SparkTestBase.withTempDir("plan") { tmp =>
     implicit val s: org.apache.spark.sql.SparkSession = spark
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files.createTempDirectory("plan").toString + "/mt"
+    val dir = tmp.toString + "/mt"
     val arts = graft.pipeline.Pipeline.artifacts(
       graft.corpus.Corpus.pages(spark, 40, 4))
     // the committed snapshot, read back as KgRunner's links stage reads it
@@ -192,7 +192,7 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         case _ => false
       }, s"aqe=$aqe: the corpus is scanned outside the tf cache")
     }
-  }
+  }}
 
   test("links read the context profiles once: one profile subtree, at most 12 jobs") {
     implicit val s: org.apache.spark.sql.SparkSession = spark
@@ -241,6 +241,22 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       }
       assert(profileRoots.size == 1, plan.toString.take(4000))
     }
+  }
+
+  test("pages → extract → annotate → triples is narrow: no shuffle exchange") {
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    val before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try {
+      val triples = graft.pipeline.Triples.fromArtifacts(
+        graft.pipeline.Pipeline.artifacts(graft.corpus.Corpus.pages(spark, 40, 4),
+          graft.pipeline.Pipeline.broadcasts(spark)))
+      assert(triples.collect().nonEmpty)
+      val exchanges = collectWithSubqueries(triples.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      assert(exchanges.isEmpty, exchanges.mkString("\n"))
+    } finally spark.conf.set("spark.sql.adaptive.enabled", before)
   }
 
   test("langid stays a narrow single-scan aggregation (no join, no extra scan)") {

@@ -8,7 +8,7 @@ import graft.sources.Sources
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
 
-  test("JSON sentence interchange round-trips with explicit schema") {
+  test("JSON sentence interchange round-trips with explicit schema") { SparkTestBase.withTempDir("src") { tmp =>
     import spark.implicits._
     val rows = Seq(
       SentenceRow("u1", "b", "|一|二", "clinical", "患者心悸", "心衰竭",
@@ -16,13 +16,13 @@ class SourcesSpec extends AnyFunSuite {
       SentenceRow("u2", "b2", "|三|四", "indications", "服阿司匹林", "胃切除术",
         "SUR", "m", 43L)
     )
-    val dir = java.nio.file.Files.createTempDirectory("src").toString + "/sj"
+    val dir = tmp.toString + "/sj"
     Sources.writeSentencesJson(rows.toDS(), dir)
     val back = Sources.readSentencesJson(spark, dir).collect().sortBy(_.ind)
     assert(back.toSeq == rows.sortBy(_.ind))
-  }
+  }}
 
-  test("CSV entity interchange round-trips with explicit schema") {
+  test("CSV entity interchange round-trips with explicit schema") { SparkTestBase.withTempDir("src") { tmp =>
     import spark.implicits._
     val rows = Seq(
       graft.model.EntityRow(1L, "ensemble_strong", "心衰竭", "DIS", 0, 3,
@@ -30,11 +30,11 @@ class SourcesSpec extends AnyFunSuite {
       graft.model.EntityRow(2L, "refined_dictionary", "心悸", "SYM", 5, 7,
         0.95, 0.95, 0.95, 0.95)
     )
-    val dir = java.nio.file.Files.createTempDirectory("src").toString + "/ec"
+    val dir = tmp.toString + "/ec"
     Sources.writeEntitiesCsv(rows.toDS(), dir)
     val back = Sources.readEntitiesCsv(spark, dir).collect().sortBy(_.ind)
     assert(back.toSeq == rows.sortBy(_.ind))
-  }
+  }}
 
   test("BIO sink: char per line, tab-separated, blank line between sentences (generation.py:64-98)") {
     val lines = Sources.bioLines("头痛不止",

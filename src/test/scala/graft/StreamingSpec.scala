@@ -1,108 +1,16 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
-import graft.streaming.StreamOps
 
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
-  val sf = "/root/testdata/sf0.001"
 
-  test("windowed counts: streaming replay equals batch computation") {
-    val q = StreamOps.replayToMemorySink(spark, s"$sf/events.parquet",
-      "win_sink")
-    q.awaitTermination(120000)
-    val streamed = spark.table("win_sink")
-      .select(col("window.start").cast("long").as("ws"),
-        col("event_type"), col("n"), col("total_value"))
-      .collect().map(_.toString).sorted.toSeq
-    val batch = StreamOps.windowedCounts(
-      spark.read.parquet(s"$sf/events.parquet"))
-      .select(col("window.start").cast("long").as("ws"),
-        col("event_type"), col("n"), col("total_value"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed.nonEmpty)
-    // append mode emits a window only once the watermark passes it — the
-    // tail windows of a bounded replay are (correctly) withheld, so the
-    // streamed result is a large subset of the batch result, never different
-    assert(streamed.toSet.subsetOf(batch.toSet),
-      s"stream emitted rows batch doesn't have: ${streamed.toSet.diff(batch.toSet).take(3)}")
-    assert(streamed.size >= batch.size / 2, s"${streamed.size} vs ${batch.size}")
-  }
-
-  test("stateful dedup counts duplicates per (user, type)") {
-    import spark.implicits._
-    val in = Seq(
-      StreamOps.EventIn(1L, "click", 1000L),
-      StreamOps.EventIn(1L, "click", 2000L),
-      StreamOps.EventIn(1L, "click", 3000L),
-      StreamOps.EventIn(2L, "view", 500L)
-    ).toDS()
-    val out = StreamOps.dedupWithState(in).collect()
-      .map(o => (o.userId, o.eventType) -> o).toMap
-    assert(out((1L, "click")).dupCount == 2)
-    assert(out((1L, "click")).firstTsMs == 1000L)
-    assert(out((2L, "view")).dupCount == 0)
-  }
-
-  test("streaming doc dedup: first-seen wins across micro-batches, later copies suppressed") {
-    import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("dd_src")
-    // three micro-batches with overlapping fingerprints; order forced by
-    // mtime (the file source orders by modification time)
-    val batches = Seq(
-      Seq((10L, 1L, 100L), (11L, 2L, 110L), (12L, 2L, 105L)), // fp2 twice IN batch
-      Seq((20L, 2L, 200L), (21L, 3L, 210L)),                  // fp2 is a re-crawl
-      Seq((30L, 1L, 300L), (31L, 3L, 310L), (32L, 4L, 320L))) // fp1/fp3 re-crawls
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val d = srcDir.resolve(s"b$i")
-      rows.toDF("docId", "fp", "tsMs").coalesce(1)
-        .write.mode("overwrite").parquet(d.toString)
-      val part = new java.io.File(d.toString).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = srcDir.resolve(s"f$i.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(1000000L + i * 60000L)
-    }
-    val stream = spark.readStream
-      .schema("docId LONG, fp LONG, tsMs LONG")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir.toString)
-      .as[StreamOps.DocIn]
-    val q = StreamOps.streamingDocDedup(stream, ttl = None) // bounded replay
-      .writeStream.queryName("dd_sink")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .format("memory").start()
-    q.awaitTermination(180000)
-    val out = spark.table("dd_sink").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(out.size == 4) // one emission per fingerprint, ever
-    assert(out(1L) == ((10L, 100L)))
-    assert(out(2L) == ((12L, 105L))) // within-batch: (tsMs, docId)-minimal copy
-    assert(out(3L) == ((21L, 210L)))
-    assert(out(4L) == ((32L, 320L)))
-  }
-
-  test("streaming doc dedup, TTL path (batch mode): one emission per fingerprint") {
-    import spark.implicits._
-    val in = Seq(
-      StreamOps.DocIn(1L, 7L, 500L),
-      StreamOps.DocIn(2L, 7L, 400L), // earlier ts wins within the batch
-      StreamOps.DocIn(3L, 8L, 600L)
-    ).toDS()
-    val out = StreamOps.streamingDocDedup(in).collect()
-      .map(f => f.fp -> ((f.docId, f.tsMs))).toMap
-    assert(out.size == 2)
-    assert(out(7L) == ((2L, 400L)))
-    assert(out(8L) == ((3L, 600L)))
-  }
-
-  test("stream/batch triple parity: foreachBatch micro-batches emit the exact batch triple set") {
+  test("stream/batch triple parity: foreachBatch micro-batches emit the exact batch triple set") { SparkTestBase.withTempDir("stream") { tmp =>
     import spark.implicits._
     implicit val ss: org.apache.spark.sql.SparkSession = spark
     // stage 12 fixture pages as 3 parquet files -> one micro-batch each
-    val dir = java.nio.file.Files.createTempDirectory("stream_pages").toString
+    val dir = tmp.resolve("pages").toString
+    val srcDir = java.nio.file.Files.createDirectory(tmp.resolve("src"))
     val pages = graft.corpus.Corpus.pages(spark, 12, 1)
     Seq((0L, 4L), (4L, 9L), (9L, 12L)).zipWithIndex.foreach { case ((a, b), i) =>
       pages.filter(p => p.url.split("/").last.toLong >= a &&
@@ -111,7 +19,6 @@ class StreamingSpec extends AnyFunSuite {
     }
     val staged = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-    val srcDir = java.nio.file.Files.createTempDirectory("stream_src2")
     staged.zipWithIndex.foreach { case (f, i) =>
       java.nio.file.Files.copy(f.toPath, srcDir.resolve(s"part$i.parquet"))
     }
@@ -141,31 +48,5 @@ class StreamingSpec extends AnyFunSuite {
     // exact equality incl. probs: triple emission is row-local, so the
     // micro-batch split cannot change a single byte
     assert(buf.toSet == batchTriples.toSet)
-  }
-
-  test("triplesStream: streaming sink parquet equals the batch triple set; restart is exactly-once") {
-    import spark.implicits._
-    implicit val ss: org.apache.spark.sql.SparkSession = spark
-    val srcDir = java.nio.file.Files.createTempDirectory("ts_src")
-    val outDir = java.nio.file.Files.createTempDirectory("ts_out").toString
-    val ckDir = java.nio.file.Files.createTempDirectory("ts_ck").toString
-    val pages = graft.corpus.Corpus.pages(spark, 8, 1)
-    pages.coalesce(1).write.mode("overwrite").parquet(srcDir.toString + "/f0")
-    val b = graft.pipeline.Pipeline.broadcasts(spark)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(pages.schema)
-        .option("maxFilesPerTrigger", "1").parquet(srcDir.toString + "/f0")
-      val q = graft.streaming.StreamOps.triplesStream(stream, b, outDir, ckDir)
-      q.awaitTermination(180000)
-    }
-    runOnce()
-    val streamed = spark.read.parquet(outDir)
-    val batch = graft.pipeline.Triples.fromArtifacts(
-      graft.pipeline.Pipeline.artifacts(pages, b)).toDF()
-    assert(streamed.count() == batch.count() && streamed.count() > 0)
-    assert(streamed.except(batch).count() == 0 && batch.except(streamed).count() == 0)
-    // restart with the same checkpoint: no new files to process -> no dupes
-    runOnce()
-    assert(spark.read.parquet(outDir).count() == batch.count())
-  }
+  }}
 }

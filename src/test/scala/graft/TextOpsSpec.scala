@@ -166,10 +166,9 @@ class TextOpsSpec extends AnyFunSuite {
     assert(!pairs.exists(_._1 == 20000000L), "fresh doc matched the corpus")
   }
 
-  test("commitCrawlSigs: two-crawl loop — crawl 2 catches a dup of crawl 1's NEW docs") {
+  test("commitCrawlSigs: two-crawl loop — crawl 2 catches a dup of crawl 1's NEW docs") { SparkTestBase.withTempDir("graft_corpus_sigs") { tmp =>
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_corpus_sigs").toString
+    val base = tmp.toString
     val mk = (id: Long, body: String) => (id, body)
     val seedBody = "alpha beta gamma delta epsilon zeta eta theta iota " +
       "kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi"
@@ -213,7 +212,7 @@ class TextOpsSpec extends AnyFunSuite {
           "with completely rewritten content words")).toDF("doc_id", "text"),
         "doc_id", "text"))
     assert(recrawl.count() == 3)
-  }
+  }}
 
   test("bucket cap keeps BOTH ends: extreme-id pair survives a truncated bucket") {
     import spark.implicits._

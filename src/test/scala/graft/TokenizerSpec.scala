@@ -107,29 +107,6 @@ class TokenizerSpec extends AnyFunSuite {
     }
   }
 
-  test("bpeApply: token counts shrink under merges, fingerprint stable") {
-    import spark.implicits._
-    val merges = Tokenizer.bpeTrainLocal(Tokenizer.fixtureCorpus, 12)
-      .map(m => (m.left, m.right))
-    val docs = Seq((1L, "the thing sing"), (2L, ""), (3L, "zz zz"))
-      .toDF("doc_id", "text")
-    val out = Tokenizer.bpeApply(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
-    // "the" is a learned token family: tokens < raw chars
-    val (w1, t1, fp1) = out(1L)
-    assert(w1 == 3L && t1 < "thethingsing".length && t1 >= 3L)
-    assert(out(2L) == ((0L, 0L, graft.util.Hashing.md5Hex(""))))
-    // applying NO merges = per-char tokens
-    val raw = Tokenizer.bpeApply(docs, "doc_id", "text", Nil)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(raw(1L) == "thethingsing".length.toLong)
-    // determinism: same input, same fingerprint
-    val fp2 = Tokenizer.bpeApply(docs, "doc_id", "text", merges)
-      .collect().map(r => r.getLong(0) -> r.getString(3)).toMap
-    assert(fp2(1L) == fp1)
-  }
-
   test("ngramCounts: occurrence counts, lowercase, min-count prune, short docs skipped") {
     import spark.implicits._
     val docs = Seq(

@@ -52,10 +52,10 @@ class TrainingParitySpec extends AnyFunSuite {
     assert(labels.count(_ == "test") == 8 - 1) // 720-multiples go to val
   }
 
-  test("writeBioSplit: one pass, partitioned dirs, char/tag line shape") {
+  test("writeBioSplit: one pass, partitioned dirs, char/tag line shape") { SparkTestBase.withTempDir("biosplit") { tmp =>
     val spark = SparkTestBase.spark
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("biosplit").toString
+    val dir = tmp.toString
     // fixed-length sentences so line counts divide evenly per sentence
     val rows = (0L until 200L).map { i =>
       (i, "头痛发热", Seq(Token("头痛", "SYM", 0, 2)))
@@ -76,5 +76,5 @@ class TrainingParitySpec extends AnyFunSuite {
     val first = spark.read.text(s"$dir/split=training")
       .collect().map(_.getString(0)).find(_.nonEmpty).get
     assert(first.matches(".\t(B|I)-[A-Z]+|.\tO"), first)
-  }
+  }}
 }
