@@ -60,7 +60,7 @@ object KgRunner {
     val t0 = System.nanoTime()
     run(spark, outDir, nPages, par)
     val secs = (System.nanoTime() - t0) / 1e9
-    val triples = spark.read.parquet(s"$outDir/edges").count()
+    val triples = graft.snapshot.Snapshot.manifest(spark, s"$outDir/edges").rows
     println(f"""{"stage":"kg_complete","triples":$triples,"sec":$secs%.2f,"triples_per_sec":${triples / secs}%.1f}""")
     spark.stop()
   }

@@ -93,7 +93,9 @@ object ModelEval {
   }
 
   /** Live re-derived vote weights (from the "m"-source labeled corpus —
-    * the reference derives one weight set from its single eval folder).
+    * the reference derives one weight set from its single eval folder):
+    * the weight re-derivation, the retraining path's stand-in for the
+    * shipped `Fixtures.modelWeights` (ModelEvalSpec builds triples on it).
     */
   lazy val derivedWeights: Map[String, Map[String, Double]] =
     weightsFromEval(evalMatrix("m"))

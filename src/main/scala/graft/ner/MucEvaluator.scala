@@ -107,7 +107,10 @@ object MucEvaluator {
     }
   }
 
-  /** Aggregate counts over a corpus of (gold, pred) sentence pairs. */
+  /** Aggregate counts over a corpus of (gold, pred) sentence pairs: the
+    * port of the reference's `Evaluator(...).evaluate()` call
+    * (multi_ner_prediction.py:595-606).
+    */
   def evaluate(pairs: Iterable[(Seq[Span], Seq[Span])]): Counts = {
     val c = new Counts
     pairs.foreach { case (gold, pred) => addSentence(c, gold, pred) }

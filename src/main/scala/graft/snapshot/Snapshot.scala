@@ -5,8 +5,10 @@ import scala.util.Try
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 import graft.util.Observed
 
 /** Snapshot-per-stage checkpointing with per-partition lineage + counter
@@ -15,25 +17,32 @@ import graft.util.Observed
   *
   * Each pipeline stage writes its output as a partitioned parquet dir plus a
   * `_manifest.json` carrying the stage name, total row count, per-partition
-  * row counts and its parents: the stages it read, declared once in its
-  * [[Step]] and comma-joined (empty for a stage that reads none). A stage
-  * whose manifest exists is skipped on resume (idempotent re-run = same
-  * bytes because every id is a content hash — no monotonically_increasing_id
-  * anywhere).
+  * row counts, the schema the snapshot is read back with, and its parents:
+  * the stages it read, declared once in its [[Step]] and comma-joined
+  * (empty for a stage that reads none). A stage whose manifest exists is
+  * skipped on resume (idempotent re-run = same bytes because every id is a
+  * content hash — no monotonically_increasing_id anywhere).
   *
-  * This emulates Iceberg snapshot commits (no iceberg jar ships in
-  * /opt/spark/jars): the manifest plays the role of the snapshot metadata
-  * file, and "commit" is the atomic rename-free write of _manifest.json
-  * AFTER the parquet write succeeds — readers gate on the manifest, so a
-  * half-written stage is invisible, which is the same correctness contract
-  * as an Iceberg MERGE commit.
+  * This emulates Iceberg snapshot commits (no iceberg jar ships with
+  * Spark): the manifest plays the role of the snapshot metadata file, and
+  * "commit" is the atomic rename-free write of _manifest.json AFTER the
+  * parquet write succeeds — readers gate on the manifest, so a half-written
+  * stage is invisible, which is the same correctness contract as an Iceberg
+  * MERGE commit. As an Iceberg reader takes the table schema from the
+  * metadata, every read-back takes it from the manifest: no parquet footer
+  * is read to infer it, so a read-back plans no Spark job.
   */
 object Snapshot {
 
+  /** `schema` is the read-back schema: the data columns in write order,
+    * then the `partitionBy` columns in `partitionBy` order (the order
+    * partition discovery gives), all nullable as parquet reads them.
+    */
   final case class Manifest(
       stage: String,
       rows: Long,
       partitions: Map[String, Long],
+      schema: StructType,
       parent: String
   )
 
@@ -63,6 +72,34 @@ object Snapshot {
   def exists(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new HPath(manifestPath(dir)))
 
+  /** Fields in declaration order, `schema` nested: text readers rely on
+    * `rows` coming second (perfbench) and `parent` last (KgRunnerSpec).
+    */
+  private def toJson(m: Manifest): String = compact(render(JObject(
+    "stage" -> JString(m.stage),
+    "rows" -> JLong(m.rows),
+    "partitions" -> JObject(m.partitions.toList.sortBy(_._1)
+      .map { case (k, v) => k -> JLong(v) }),
+    "schema" -> parse(m.schema.json),
+    "parent" -> JString(m.parent))))
+
+  private implicit val formats: Formats = DefaultFormats
+
+  /** The committed manifest of `dir`. A field it lacks (a manifest written
+    * before the field existed) is an `IllegalStateException` naming it.
+    */
+  def manifest(spark: SparkSession, dir: String): Manifest = {
+    val path = manifestPath(dir)
+    val in = fs(spark, dir).open(new HPath(path))
+    val json = try parse(in) finally in.close()
+    def field(k: String) = (json \ k).toOption.getOrElse(
+      throw new IllegalStateException(s"no $k in $path"))
+    Manifest(field("stage").extract[String], field("rows").extract[Long],
+      field("partitions").extract[Map[String, Long]],
+      DataType.fromJson(compact(field("schema"))).asInstanceOf[StructType],
+      field("parent").extract[String])
+  }
+
   /** Write df → dir (overwrite), then commit the manifest. `partitionBy`
     * columns become physical partitions (e.g. entity type + url-hash
     * bucket). Per-partition counts are computed from the data itself —
@@ -81,7 +118,7 @@ object Snapshot {
       stage: String,
       partitionBy: Seq[String] = Nil,
       parent: String = ""
-  ): Manifest = {
+  ): Unit = {
     // A partitioned write first hashes each leaf's rows onto one task, so
     // every leaf dir gets one file instead of one per task. The partition
     // count is given because AQE coalesces an unnumbered repartition of a
@@ -110,20 +147,17 @@ object Snapshot {
     val counts =
       if (partCounts.isEmpty && partitionBy.isEmpty) Map("all" -> 0L)
       else partCounts
-    val m = Manifest(stage, counts.values.sum, counts, parent)
+    val data = df.schema.filterNot(f => partitionBy.contains(f.name))
+    val schema = StructType(data ++ partitionBy.map(df.schema(_))).toNullable
+    val m = Manifest(stage, counts.values.sum, counts, schema, parent)
     val out = fs(df.sparkSession, dir).create(new HPath(manifestPath(dir)), true)
     try out.write(toJson(m).getBytes("UTF-8"))
     finally out.close()
-    m
   }
 
   /** Manifest-gated stage: skip the compute entirely when the snapshot is
-    * already committed (resume path), else run and commit.
-    *
-    * An empty partitioned stage leaves no parquet file to infer a schema
-    * from, so it is read back with the compute's schema (partition columns
-    * last, as partition discovery orders them); building `compute` for its
-    * schema is analysis only and runs no Spark job.
+    * already committed (resume path), else run and commit. Either way the
+    * snapshot is read back with the schema its manifest records.
     */
   def stage(
       spark: SparkSession,
@@ -132,19 +166,13 @@ object Snapshot {
       partitionBy: Seq[String] = Nil,
       parent: String = ""
   )(compute: => DataFrame): DataFrame = {
-    lazy val df = compute
-    val empty =
-      if (!exists(spark, dir)) {
-        val t0 = System.nanoTime()
-        val m = write(df, dir, name, partitionBy, parent)
-        System.err.println(
-          f"[snapshot] stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        m.rows == 0
-      } else partitionBy.nonEmpty && committedRows(spark, dir) == 0
-    if (empty && partitionBy.nonEmpty) {
-      val (parts, data) = df.schema.partition(f => partitionBy.contains(f.name))
-      spark.read.schema(StructType(data ++ parts)).parquet(dir)
-    } else spark.read.parquet(dir)
+    if (!exists(spark, dir)) {
+      val t0 = System.nanoTime()
+      write(compute, dir, name, partitionBy, parent)
+      System.err.println(
+        f"[snapshot] stage $name committed in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    }
+    spark.read.schema(manifest(spark, dir).schema).parquet(dir)
   }
 
   /** One declared stage of a [[Dag]]: it commits into `<outDir>/<name>`,
@@ -195,29 +223,5 @@ object Snapshot {
         spark.catalog.clearCache()
       }
     }
-  }
-
-  private val RowsField = ""","rows":(\d+),""".r
-
-  /** `rows` of a committed manifest. The stage name before it is escaped
-    * (`"` becomes `\"`), so the first `,"rows":` is this field.
-    */
-  private def committedRows(spark: SparkSession, dir: String): Long = {
-    val in = fs(spark, dir).open(new HPath(manifestPath(dir)))
-    val json = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    RowsField.findFirstMatchIn(json).map(_.group(1).toLong).getOrElse(
-      throw new IllegalStateException(s"no rows in ${manifestPath(dir)}: $json"))
-  }
-
-  def toJson(m: Manifest): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-    val parts = m.partitions.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":$v""" }.mkString(",")
-    s"""{"stage":"${esc(m.stage)}","rows":${m.rows},"partitions":{$parts},"parent":"${esc(m.parent)}"}"""
   }
 }

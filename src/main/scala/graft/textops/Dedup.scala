@@ -208,7 +208,8 @@ object Dedup {
   /** Audit view of the MinHash LSH bucket distribution:
     * (band, bucket, n_total, truncated). Run this to quantify how many
     * candidate ids the MaxBucket cap drops on a given corpus (boilerplate-
-    * heavy crawls are the risk case).
+    * heavy crawls are the risk case). The audit twin of the
+    * `graft.dedup.minhash_buckets` metric [[minhashLsh]] observes.
     */
   def minhashBucketStats(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {

@@ -23,7 +23,8 @@ object TextOps {
   )
 
   /** Predict language: CJK-ratio shortcut then stopword-hit argmax.
-    * Pure Scala (used via typed map); deterministic.
+    * Pure Scala; deterministic. The scalar oracle of [[langIdCol]]
+    * (EdgeCasesSpec compares the two).
     */
   def langId(text: String): String = {
     if (text == null || text.isEmpty) return "und"
@@ -150,11 +151,10 @@ object TextOps {
 
   /** Column-expression composite quality score, integer-scaled:
     * floor(q × 1e6) with q = 0.4·lenScore + 0.3·wordLenScore + 0.3·alphaRatio
-    * (the [[qualityScore]] composite re-based on character/regex features
-    * available identically in SQL). Both engines evaluate the same IEEE
-    * double expression tree and floor() it, so the BIGINT result is
-    * engine-exact — which is what makes the score oracle-checkable where the
-    * scalar double average was not.
+    * (length, word-shape and alpha-ratio features, each available
+    * identically in SQL). Both engines evaluate the same IEEE double
+    * expression tree and floor() it, so the BIGINT result is engine-exact,
+    * which is what makes the score oracle-checkable.
     */
   def qualityScoreX1e6(text: Column): Column = {
     val t = coalesce(text, lit(""))
@@ -185,21 +185,6 @@ object TextOps {
        |          / greatest(CAST(len(words) AS DOUBLE), 1.0) AS mwl
        |   FROM (SELECT t, list_filter(string_split_regex(t, ' +'), w -> length(w) > 0) AS words
        |     FROM (SELECT coalesce($textExpr, '') AS t))))""".stripMargin
-
-  /** Scalar quality score in [0,1] (length, word-shape, alpha ratio) —
-    * the composite the SQL oracle can't express; rows-only checked.
-    */
-  def qualityScore(text: String): Double = {
-    if (text == null || text.isEmpty) return 0.0
-    val n = text.length
-    val words = text.split(" +")
-    val meanWl = words.iterator.map(_.length).sum.toDouble / math.max(words.length, 1)
-    val alpha = text.count(_.isLetter).toDouble / n
-    val lenScore = math.min(n / 500.0, 1.0)
-    val wlScore = if (meanWl >= 3 && meanWl <= 10) 1.0
-      else math.max(0.0, 1.0 - math.abs(meanWl - 6.5) / 10.0)
-    0.4 * lenScore + 0.3 * wlScore + 0.3 * alpha
-  }
 
   // ---- token counting -----------------------------------------------------
 
@@ -1685,7 +1670,8 @@ object TextOps {
     * standard small-range (linear counting) correction. Plain doubles are
     * fine here: this runs on m values on the driver, determinism across
     * engines is carried by the REGISTERS (the oracle-checked state), and
-    * the estimate is only ever compared against an error bound.
+    * the estimate is only ever compared against an error bound. The
+    * estimator over the rows of [[hllRegistersSql]].
     */
   def hllEstimate(registers: Map[Long, Long]): Double = {
     val m = hllBuckets.toDouble
@@ -1776,7 +1762,8 @@ object TextOps {
 
   /** Point-frequency estimate from a collected sketch: min over rows of
     * the addressed counter — an OVERestimate of the true count, never
-    * under (the CMS guarantee; spec-pinned both ways).
+    * under (the CMS guarantee; spec-pinned both ways). The estimator over
+    * the rows of [[cmsCountersSql]].
     */
   def cmsEstimate(counters: Map[(Long, Long), Long], token: String): Long =
     (0 until cmsDepth)

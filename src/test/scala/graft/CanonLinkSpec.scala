@@ -132,6 +132,11 @@ class SnapshotSpec extends AnyFunSuite {
     java.nio.file.Files.readString(
       java.nio.file.Paths.get(Snapshot.manifestPath(dir)))
 
+  // the manifest's read-back schema: every column nullable, as parquet reads it
+  private def schemaOf(cols: (String, String)*): String = cols.map { case (n, t) =>
+    s"""{"name":"$n","type":"$t","nullable":true,"metadata":{}}"""
+  }.mkString("""{"type":"struct","fields":[""", ",", "]}")
+
   test("unpartitioned stage manifest rows equal the rows read back") { withTempDir("snap") { tmp =>
     import spark.implicits._
     val dir = tmp.toString + "/u"
@@ -141,7 +146,7 @@ class SnapshotSpec extends AnyFunSuite {
     val rows = spark.read.parquet(dir).count()
     assert(rows == 50 && df.count() == rows)
     assert(manifestOf(dir) ==
-      s"""{"stage":"unpartitioned","rows":$rows,"partitions":{"all":$rows},"parent":""}""")
+      s"""{"stage":"unpartitioned","rows":$rows,"partitions":{"all":$rows},"schema":${schemaOf("k" -> "string", "v" -> "integer")},"parent":""}""")
   }}
 
   test("empty stage commits zero rows, unpartitioned and partitioned") { withTempDir("snap") { tmp =>
@@ -150,18 +155,63 @@ class SnapshotSpec extends AnyFunSuite {
     val empty = Seq(("a", 1)).toDF("k", "v").filter($"v" < 0)
     Snapshot.stage(spark, s"$base/plain", "plain")(empty)
     assert(manifestOf(s"$base/plain") ==
-      """{"stage":"plain","rows":0,"partitions":{"all":0},"parent":""}""")
+      s"""{"stage":"plain","rows":0,"partitions":{"all":0},"schema":${schemaOf("k" -> "string", "v" -> "integer")},"parent":""}""")
     // an empty partitioned write leaves no parquet file: the read-back,
-    // on first commit and on resume, takes the compute's schema
+    // on first commit and on resume, takes the manifest's schema
     val first = Snapshot.stage(spark, s"$base/parts", "parts",
       partitionBy = Seq("k"))(empty)
     assert(manifestOf(s"$base/parts") ==
-      """{"stage":"parts","rows":0,"partitions":{},"parent":""}""")
+      s"""{"stage":"parts","rows":0,"partitions":{},"schema":${schemaOf("v" -> "integer", "k" -> "string")},"parent":""}""")
     val resumed = Snapshot.stage(spark, s"$base/parts", "parts",
       partitionBy = Seq("k"))(empty)
     for (df <- Seq(first, resumed)) {
       assert(df.columns.toSeq == Seq("v", "k") && df.count() == 0)
     }
+  }}
+
+  test("a committed stage's read-back runs no Spark job") { withTempDir("snapjobs") { tmp =>
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val kv = (1 to 20).map(i => (s"k${i % 3}", i)).toDF("k", "v")
+    // unpartitioned, partitioned, and partitioned with no parquet file
+    val stages = Seq(("plain", Nil, kv), ("parts", Seq("k"), kv),
+      ("empty", Seq("k"), kv.filter($"v" < 0)))
+    stages.foreach { case (n, by, df) =>
+      Snapshot.stage(spark, s"$tmp/$n", n, partitionBy = by)(df) }
+    val group = "snapshot-read-back"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val resumed = try {
+      sc.setJobGroup(group, "read-back")
+      val dfs = stages.map { case (n, by, _) =>
+        Snapshot.stage(spark, s"$tmp/$n", n, partitionBy = by)(
+          fail(s"committed stage $n recomputed"))
+      }
+      org.apache.spark.graft.Bus.drain(sc)
+      dfs
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0)
+    assert(resumed.map(df => (df.columns.toSeq, df.count())) == Seq(
+      (Seq("k", "v"), 20L), (Seq("v", "k"), 20L), (Seq("v", "k"), 0L)))
+    // a manifest without a schema fails the stage: nothing infers one
+    val legacy = Snapshot.manifestPath(s"$tmp/plain")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(legacy),
+      """{"stage":"plain","rows":20,"partitions":{"all":20},"parent":""}""")
+    // the commit's checksum file no longer matches the edited manifest
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$tmp/plain/._manifest.json.crc"))
+    val thrown = intercept[IllegalStateException](Snapshot.stage(spark,
+      s"$tmp/plain", "plain")(fail("committed stage plain recomputed")))
+    assert(thrown.getMessage == s"no schema in $legacy")
   }}
 
   private def walk(dir: String): Seq[java.nio.file.Path] = {
@@ -272,7 +322,7 @@ class SnapshotSpec extends AnyFunSuite {
     assert(thrown eq boom)
     assert(!childRan.get() && !Snapshot.exists(spark, s"$out/B"))
     assert(manifestOf(s"$out/C") ==
-      """{"stage":"C","rows":1,"partitions":{"all":1},"parent":""}""")
+      s"""{"stage":"C","rows":1,"partitions":{"all":1},"schema":${schemaOf("v" -> "integer")},"parent":""}""")
   }}
 }
 
@@ -311,6 +361,12 @@ class KgRunnerSpec extends AnyFunSuite {
       "links", "canon", "nodes", "edges", "ner_result", "source_segment",
       "corpus_info", "group_triples", "model_info", "model_eval_results",
       "training_info", "ner_info", "ner_eval", "source_labeled"))
+    // a resumed stage reads back with the schema inference would give
+    dirs.foreach { d =>
+      val resumed = graft.snapshot.Snapshot.stage(spark, d.getPath, d.getName)(
+        fail(s"committed stage ${d.getName} recomputed"))
+      assert(resumed.schema == spark.read.parquet(d.getPath).schema, d.getName)
+    }
     // resume: re-run with same dir; edge bytes unchanged
     def rows(stage: String) =
       spark.read.parquet(s"$out/$stage").collect().map(_.toString).sorted.toSeq

@@ -21,12 +21,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(TextOps.rollingHash("ab") != TextOps.rollingHash("ba"))
   }
 
-  test("qualityScore monotone-ish in length, bounded [0,1]") {
-    val short = TextOps.qualityScore("hi")
-    val long = TextOps.qualityScore(("the quick brown fox jumps " * 30).trim)
-    assert(short < long && long <= 1.0 && short >= 0.0)
-  }
-
   test("minhash LSH finds planted near-duplicates with high jaccard") {
     import spark.implicits._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
