@@ -134,7 +134,7 @@ object Bench {
       val t0 = System.nanoTime()
       val futs = (0 until threads).map { t =>
         pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = {
+          override def call(): Long = {
             var h: Long = t.toLong
             var i = 0
             while (i < 30000000) { h = graft.util.Hashing.mix(h); i += 1 }

@@ -25,12 +25,13 @@ import graft.util.Observed
   *
   * This emulates Iceberg snapshot commits (no iceberg jar ships with
   * Spark): the manifest plays the role of the snapshot metadata file, and
-  * "commit" is the atomic rename-free write of _manifest.json AFTER the
-  * parquet write succeeds — readers gate on the manifest, so a half-written
-  * stage is invisible, which is the same correctness contract as an Iceberg
-  * MERGE commit. As an Iceberg reader takes the table schema from the
-  * metadata, every read-back takes it from the manifest: no parquet footer
-  * is read to infer it, so a read-back plans no Spark job.
+  * "commit" is the rename of a fully written `_manifest.json.tmp` to
+  * `_manifest.json` AFTER the parquet write succeeds — readers gate on the
+  * manifest, so a half-written stage or manifest is invisible, which is the
+  * same correctness contract as an Iceberg MERGE commit. As an Iceberg
+  * reader takes the table schema from the metadata, every read-back takes
+  * it from the manifest: no parquet footer is read to infer it, so a
+  * read-back plans no Spark job.
   */
 object Snapshot {
 
@@ -110,7 +111,10 @@ object Snapshot {
     * with the TopKFreq count-by-key aggregate), so the rows are counted
     * while they stream to disk — no post-write re-read job (a re-read per
     * snapshot was once the largest slice of the fixed end-to-end floor).
-    * The manifest is written only after the parquet write returns.
+    * The manifest is written only after the parquet write returns, to a
+    * `_`-prefixed temp file that Spark's file index skips, and renamed into
+    * place once closed: a file system shows a created file before its bytes
+    * are flushed, so a process killed mid-write leaves no empty manifest.
     */
   def write(
       df: DataFrame,
@@ -150,9 +154,14 @@ object Snapshot {
     val data = df.schema.filterNot(f => partitionBy.contains(f.name))
     val schema = StructType(data ++ partitionBy.map(df.schema(_))).toNullable
     val m = Manifest(stage, counts.values.sum, counts, schema, parent)
-    val out = fs(df.sparkSession, dir).create(new HPath(manifestPath(dir)), true)
+    val fileSystem = fs(df.sparkSession, dir)
+    val committed = new HPath(manifestPath(dir))
+    val tmp = new HPath(s"$committed.tmp")
+    val out = fileSystem.create(tmp, true)
     try out.write(toJson(m).getBytes("UTF-8"))
     finally out.close()
+    if (!fileSystem.rename(tmp, committed))
+      throw new java.io.IOException(s"rename $tmp -> $committed failed")
   }
 
   /** Manifest-gated stage: skip the compute entirely when the snapshot is

@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.util.Hashing
 
@@ -308,9 +308,9 @@ object Dedup {
 
   /** INCREMENTAL near-dup: a new crawl against an EXISTING corpus
     * signature table ((id, sig, shingles) — the [[minhashSigsDf]] layout,
-    * computed once per corpus snapshot and stored; recomputing corpus
-    * signatures per crawl is exactly the cost this function avoids at
-    * 100 TB). New-side signatures are computed fresh (the new crawl is
+    * which the caller computes from the corpus and passes in; this function
+    * never recomputes it, so a caller can reuse one table across crawls).
+    * New-side signatures are computed fresh (the new crawl is
     * the small side), both sides are banded, the CORPUS side is capped
     * per bucket with the same both-ends BoundedEnds guard as
     * [[cappedPairs]] (an unbounded boilerplate bucket on the corpus side
@@ -377,228 +377,28 @@ object Dedup {
     }
   }
 
-  // ---- corpus-signature maintenance (the incremental-dedup loop) ----------
-
-  /** Read the stored corpus signature table: the union of every COMMITTED
-    * crawl generation under `baseDir` (see [[commitCrawlSigs]]). Empty
-    * corpus → empty frame with the [[minhashSigsDf]] schema. One parquet
-    * read over immutable generation dirs — the Iceberg table-scan shape.
-    */
-  def corpusSigs(spark: SparkSession, baseDir: String): DataFrame = {
-    val gens = committedGenerations(spark, baseDir)
-    if (gens.isEmpty) {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("id", LongType),
-          StructField("sig", ArrayType(LongType)),
-          StructField("shingles", ArrayType(LongType)))))
-    } else spark.read.parquet(gens: _*)
-  }
-
-  /** Commit a crawl's signatures into the stored corpus as an APPEND-ONLY
-    * delta generation — the post-crawl write-back [[incrementalMinhash]]'s
-    * contract promises (VERDICT r4 #4): crawl N+1 then dedups against
-    * crawl N's union with zero corpus recompute.
-    *
-    * Iceberg-MERGE emulation on the [[graft.snapshot.Snapshot]] pattern:
-    * each crawl writes ONLY its delta (new sigs anti-joined against the
-    * current union by id — a re-crawled id keeps its stored first-seen
-    * version) into `baseDir/gen-<crawlId>`, committed by the manifest
-    * AFTER the parquet write, so a half-written generation is invisible
-    * and re-running a committed crawlId is a no-op (idempotent resume).
-    * The corpus "table" is never rewritten — at 100 TB a crawl commit
-    * costs one membership anti-join plus a delta-sized write, not a
-    * corpus-sized rewrite.
-    *
-    * `newSigs` is the crawl's signature frame ([[minhashSigsDf]] layout);
-    * callers typically pre-filter ids that [[incrementalMinhash]] verified
-    * as near-duplicates so the corpus accumulates only kept documents.
-    * Returns the post-commit corpus union.
-    */
-  def commitCrawlSigs(
-      spark: SparkSession,
-      baseDir: String,
-      crawlId: String,
-      newSigs: DataFrame): DataFrame = {
-    require(crawlId.nonEmpty && crawlId.forall(c =>
-      c.isLetterOrDigit || c == '-' || c == '_'),
-      s"crawlId must be a plain token, got '$crawlId'")
-    val dir = s"$baseDir/gen-$crawlId"
-    if (!graft.snapshot.Snapshot.exists(spark, dir)) {
-      val existing = committedGenerations(spark, baseDir)
-      val delta =
-        if (existing.isEmpty) newSigs
-        else newSigs.join(
-          spark.read.parquet(existing: _*).select(col("id")),
-          Seq("id"), "left_anti")
-      graft.snapshot.Snapshot.write(delta, dir, s"corpus_sigs:$crawlId",
-        parent = existing.sorted.mkString(","))
-      // Optimistic concurrency check (real Iceberg MERGE detects commit
-      // conflicts; a plain FS has no CAS): if another crawl committed
-      // between our generation listing and our manifest write, our
-      // anti-join may have missed its ids — fail loudly so the caller
-      // re-runs this crawl against the updated union, instead of silently
-      // storing a duplicate id and breaking the first-seen invariant.
-      // Single-writer-per-baseDir remains the documented deployment
-      // contract (as for Snapshot-gated pipeline stages); this check turns
-      // an accidental violation into an error, not a corruption.
-      // compare by generation NAME: committedGenerations returns
-      // FileSystem URIs (file:/...) while dir is the caller's raw path
-      def genName(p: String) = p.split('/').last
-      val after = committedGenerations(spark, baseDir)
-        .map(genName).filterNot(_ == s"gen-$crawlId")
-      require(after.sorted == existing.map(genName).sorted,
-        s"commitCrawlSigs: concurrent commit detected under $baseDir " +
-          s"(expected ${existing.size} prior generations, found " +
-          s"${after.size}); delete $dir and re-run crawl '$crawlId'")
-    }
-    corpusSigs(spark, baseDir)
-  }
-
-  /** Committed (manifest-bearing) generation dirs under `baseDir`. */
-  private def committedGenerations(
-      spark: SparkSession, baseDir: String): Seq[String] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val base = new HPath(baseDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      .map(_.getPath.toString)
-      .filter(d => graft.snapshot.Snapshot.exists(spark, d))
-      .sorted
-  }
-
   // ---- exact-membership prefilter (Bloom filter over content hashes) ------
 
   /** Content key shared by the bloom build and the resolve join. */
   private def contentFp(textCol: String): Column =
     md5(coalesce(col(textCol), lit("")))
 
-  /** Bloom filter over the corpus' content fingerprints — built ONCE per
-    * corpus snapshot (tree-aggregated by Spark's sketch builder), then
-    * persisted with [[saveBloom]] and shipped to every subsequent crawl:
-    * the reuse across crawls is what Spark's automatic runtime bloom
-    * filters (which rebuild per query) cannot give. Sizing: ~1.2 GB at
-    * 10⁹ keys / 1% fpp — broadcastable; beyond ~10⁹ corpus documents skip
+  /** Bloom filter over the corpus' content fingerprints (tree-aggregated
+    * by Spark's sketch builder), sized to the corpus: ~1.2 GB at 10⁹ keys
+    * and 1% fpp — broadcastable; beyond ~10⁹ corpus documents skip
     * the prefilter and run the plain anti-join of [[bloomNewDocs]]'s
-    * resolve stage over everything.
+    * resolve stage over everything. A zero-row sketch aggregate leaves the
+    * bit buffer null, so an empty corpus gets a valid empty filter
+    * (mightContain always false).
     */
-  def corpusBloom(
+  private def corpusBloom(
       corpus: DataFrame,
       textCol: String,
-      fpp: Double = 0.01,
-      expectedItems: Long = -1L): org.apache.spark.util.sketch.BloomFilter = {
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     val keys = corpus.select(contentFp(textCol).as("fp"))
-    // expectedItems > 0 fixes the capacity up front — REQUIRED when the
-    // bloom will grow via updateCorpusBloom (bit arrays can't resize, so
-    // bootstrap with the eventual corpus size); default sizes to the
-    // current corpus for one-shot use. A zero-row sketch aggregate leaves
-    // the bit buffer null, so empty inputs get a valid empty filter
-    // (mightContain always false) — probed via count() on the default
-    // path (where the count is needed anyway) and isEmpty on the
-    // explicit-capacity path (no second corpus scan when count() already
-    // proved n > 0).
-    if (expectedItems > 0L) {
-      if (keys.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
-      else keys.stat.bloomFilter("fp", expectedItems, fpp)
-    } else {
-      val n = keys.count()
-      if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
-      else keys.stat.bloomFilter("fp", n, fpp)
-    }
-  }
-
-  /** Persist a corpus bloom through the Hadoop FS API (any supported
-    * scheme; the crawl-N+1 job loads it instead of re-scanning the
-    * corpus). Overwrite is crash-safe at every step: write tmp → rename
-    * the live file ASIDE (.prev) → rename tmp in → drop the backup. A
-    * death in any window leaves either the old or the new filter
-    * loadable ([[loadBloom]] falls back to `.prev` when the live file is
-    * missing) — a plain delete-then-rename would destroy the committed
-    * artifact before its replacement exists.
-    */
-  def saveBloom(
-      spark: SparkSession,
-      bf: org.apache.spark.util.sketch.BloomFilter,
-      path: String): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new HPath(path + ".tmp")
-    val prev = new HPath(path + ".prev")
-    val out = fs.create(tmp, true)
-    try bf.writeTo(out) finally out.close()
-    if (fs.exists(prev)) fs.delete(prev, false)
-    if (fs.exists(p)) require(fs.rename(p, prev),
-      s"saveBloom: backup rename $p -> $prev failed")
-    require(fs.rename(tmp, p), s"saveBloom: rename $tmp -> $p failed")
-    fs.delete(prev, false)
-    ()
-  }
-
-  def loadBloom(
-      spark: SparkSession,
-      path: String): org.apache.spark.util.sketch.BloomFilter = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a writer that died between its two renames leaves only the backup
-    val src = if (fs.exists(p)) p else new HPath(path + ".prev")
-    val in = fs.open(src)
-    try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-    finally in.close()
-  }
-
-  /** Fold a crawl's content keys into the stored corpus bloom — the bloom
-    * analog of [[commitCrawlSigs]], so crawl N+1 prefilters against crawl
-    * N's union without a corpus re-scan. `expectedItems`/`fpp` are the
-    * BOOTSTRAP capacity parameters (size the filter for the EVENTUAL
-    * corpus at creation time — bloom bit arrays cannot grow): the delta
-    * is built with the same parameters so the sketches are mergeable;
-    * mismatched capacity is rejected up front rather than silently
-    * degrading the fpp. Load → mergeInPlace → crash-safe re-save via
-    * [[saveBloom]], with the same OPTIMISTIC concurrency stance as
-    * [[commitCrawlSigs]]: the live file's (length, modTime) signature is
-    * captured at load and re-checked just before the save — a concurrent
-    * updater raises loudly instead of having its keys silently
-    * overwritten (lost bloom keys become FALSE NEGATIVES, i.e. dropped-
-    * duplicate documents passing as new — the one failure mode a bloom
-    * must never have).
-    */
-  def updateCorpusBloom(
-      spark: SparkSession,
-      path: String,
-      newDocs: DataFrame,
-      textCol: String,
-      expectedItems: Long,
-      fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val p = new HPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def signature(): Option[(Long, Long)] =
-      if (fs.exists(p)) {
-        val st = fs.getFileStatus(p)
-        Some((st.getLen, st.getModificationTime))
-      } else None
-    val sigAtLoad = signature()
-    val stored = loadBloom(spark, path)
-    val keys = newDocs.select(contentFp(textCol).as("fp"))
-    val delta =
-      if (keys.isEmpty)
-        org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
-      else keys.stat.bloomFilter("fp", expectedItems, fpp)
-    require(stored.isCompatible(delta),
-      s"updateCorpusBloom: stored bloom at $path was built with different " +
-        s"capacity parameters than (expectedItems=$expectedItems, fpp=$fpp)")
-    stored.mergeInPlace(delta)
-    require(signature() == sigAtLoad,
-      s"updateCorpusBloom: concurrent update detected at $path " +
-        "(file changed since load); re-run this crawl's update")
-    saveBloom(spark, stored, path)
-    stored
+    val n = keys.count()
+    if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
+    else keys.stat.bloomFilter("fp", n, fpp)
   }
 
   /** Exact-membership dedup of a new crawl against a stored corpus with a

@@ -52,20 +52,6 @@ class BoundedEndsSpec extends AnyFunSuite {
     assert(!got.contains(-1L))
   }
 
-  test("SQL registration via the extensions descriptor") {
-    import spark.implicits._
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bounded_ends", graft.plans.GraftExtensions.boundedEndsDescriptor._3,
-      "scala_udf")
-    (1L to 100L).map(v => (0L, v)).toDF("g", "v")
-      .createOrReplaceTempView("be_t")
-    val r = spark.sql(
-      "SELECT bounded_ends(v, 3) AS be FROM be_t GROUP BY g").collect().head
-    val be = r.getStruct(0)
-    assert(be.getLong(0) == 100L)
-    assert(be.getSeq[Long](1) == Seq(1L, 2L, 3L, 98L, 99L, 100L))
-  }
-
   test("design point: 10^5-member bucket, flat buffer memory, exact ends") {
     // the 10^8-boilerplate-bucket claim, demonstrated at its memory
     // invariant: the buffer is a FIXED 2k+1 long array regardless of input

@@ -99,6 +99,33 @@ class LinkSpec extends AnyFunSuite {
   }
 }
 
+/** The raw local file system under the `killfs:` scheme. While
+  * [[KillFs.armed]], the next manifest stream it creates dies on `close`
+  * before it flushes, as a process killed mid-write leaves it: the created
+  * file stays visible with zero bytes.
+  */
+class KillFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("killfs:///")
+  override def getScheme: String = "killfs"
+  override protected def createOutputStreamWithMode(f: org.apache.hadoop.fs.Path,
+      append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission
+  ): java.io.OutputStream = {
+    val out = super.createOutputStreamWithMode(f, append, permission)
+    if (!f.getName.startsWith("_manifest.json") || !KillFs.armed.getAndSet(false)) out
+    else {
+      out.close()
+      new java.io.OutputStream {
+        override def write(b: Int): Unit = ()
+        override def close(): Unit = throw new java.io.IOException(s"killed before $f was flushed")
+      }
+    }
+  }
+}
+
+object KillFs {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import graft.snapshot.Snapshot
@@ -290,6 +317,25 @@ class SnapshotSpec extends AnyFunSuite {
     assert(perLeaf.size == 4 * par && perLeaf.values.forall(_.size == 1))
     val tasks = parquet.map(_.getFileName.toString.take("part-00000".length)).toSet
     assert(tasks.size > 1, tasks)
+  }}
+
+  test("a kill during the manifest write leaves a stage the next run recomputes") { withTempDir("snapkill") { tmp =>
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.killfs.impl", classOf[KillFs].getName)
+    val dir = s"killfs:$tmp/k"
+    var computes = 0
+    def run() = Snapshot.stage(spark, dir, "k") {
+      computes += 1
+      Seq(1, 2).toDF("v")
+    }
+    try {
+      KillFs.armed.set(true)
+      intercept[java.io.IOException](run())
+      assert(!Snapshot.exists(spark, dir))
+      assert(run().count() == 2 && computes == 2)
+      assert(Snapshot.manifest(spark, dir).rows == 2)
+    } finally conf.unset("fs.killfs.impl")
   }}
 
   import Snapshot.{Dag, Step}

@@ -64,16 +64,4 @@ class CosineSimSpec extends AnyFunSuite {
       s"no codegen stage in:\n$executed")
     assert(emb.collect().forall(r => math.abs(r.getDouble(0) - 1.0) < 1e-9))
   }
-
-  test("SQL registration via the extensions descriptor") {
-    import spark.implicits._
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", graft.plans.GraftExtensions.cosineSimDescriptor._3,
-      "scala_udf")
-    spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .limit(5).createOrReplaceTempView("cos_t")
-    val r = spark.sql(
-      "SELECT cosine_sim(embedding, embedding) AS c FROM cos_t").collect()
-    assert(r.nonEmpty && r.forall(x => math.abs(x.getDouble(0) - 1.0) < 1e-9))
-  }
 }

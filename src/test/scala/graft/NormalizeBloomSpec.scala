@@ -192,58 +192,4 @@ class NormalizeBloomSpec extends AnyFunSuite {
       TextOps.hashSplit(docs, "doc_id", Seq("a" -> 60, "b" -> 30))
     }
   }
-
-  test("updateCorpusBloom folds a crawl in; capacity mismatch rejected") { SparkTestBase.withTempDir("bloomup") { tmp =>
-    import spark.implicits._
-    val capacity = 1000L
-    val corpus = (0 until 50)
-      .map(i => (i.toLong, s"gen0 doc $i")).toDF("doc_id", "text")
-    val crawl = (0 until 30)
-      .map(i => (1000L + i, s"crawl1 doc $i")).toDF("doc_id", "text")
-    val dir = tmp.toString
-    val path = s"$dir/corpus.bloom"
-    Dedup.saveBloom(spark,
-      Dedup.corpusBloom(corpus, "text", 0.01, capacity), path)
-    Dedup.updateCorpusBloom(spark, path, crawl, "text", capacity)
-    val merged = Dedup.loadBloom(spark, path)
-    val allFps = corpus.unionByName(crawl)
-      .select(md5(col("text")).as("fp")).collect().map(_.getString(0))
-    assert(allFps.forall(merged.mightContainString),
-      "both generations' keys must hit after the fold")
-    // wrong bootstrap capacity → different sketch geometry → reject
-    intercept[IllegalArgumentException] {
-      Dedup.updateCorpusBloom(spark, path, crawl, "text", capacity * 64)
-    }
-    // empty crawl is a no-op fold, not a crash
-    Dedup.updateCorpusBloom(spark, path,
-      crawl.filter(lit(false)), "text", capacity)
-    assert(allFps.forall(Dedup.loadBloom(spark, path).mightContainString))
-  }}
-
-  test("corpusBloom save/load round-trip probes identically") { SparkTestBase.withTempDir("bloomrt") { tmp =>
-    import spark.implicits._
-    val corpus = (0 until 100)
-      .map(i => (i.toLong, s"doc body $i")).toDF("doc_id", "text")
-    val bf = Dedup.corpusBloom(corpus, "text")
-    val dir = tmp.toString
-    val path = s"$dir/corpus.bloom"
-    Dedup.saveBloom(spark, bf, path)
-    val bf2 = Dedup.loadBloom(spark, path)
-    val fps = corpus.select(md5(col("text")).as("fp"))
-      .collect().map(_.getString(0))
-    assert(fps.forall(bf2.mightContainString), "stored keys must all hit")
-    val probes = (0 until 200).map(i => s"probe $i")
-    assert(probes.forall(p =>
-      bf.mightContainString(p) == bf2.mightContainString(p)),
-      "round-trip must preserve every probe verdict")
-    // idempotent overwrite (the write-then-rename path with existing file)
-    Dedup.saveBloom(spark, bf, path)
-    assert(fps.forall(Dedup.loadBloom(spark, path).mightContainString))
-    // crash window: a writer that died after renaming the live file aside
-    // leaves only the .prev backup — loadBloom must fall back to it
-    val f = new java.io.File(path)
-    assert(f.renameTo(new java.io.File(path + ".prev")))
-    assert(fps.forall(Dedup.loadBloom(spark, path).mightContainString),
-      "load must recover from the backup when the live file is missing")
-  }}
 }

@@ -160,54 +160,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(!pairs.exists(_._1 == 20000000L), "fresh doc matched the corpus")
   }
 
-  test("commitCrawlSigs: two-crawl loop — crawl 2 catches a dup of crawl 1's NEW docs") { SparkTestBase.withTempDir("graft_corpus_sigs") { tmp =>
-    import spark.implicits._
-    val base = tmp.toString
-    val mk = (id: Long, body: String) => (id, body)
-    val seedBody = "alpha beta gamma delta epsilon zeta eta theta iota " +
-      "kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi"
-    val crawl1 = Seq(
-      mk(1L, seedBody + " one"),
-      mk(2L, "totally different second document body with its own words " +
-        "running long enough to shingle and sign distinctly from the first"))
-      .toDF("doc_id", "text")
-    // bootstrap: empty corpus → crawl 1 commits everything
-    assert(Dedup.corpusSigs(spark, base).count() == 0)
-    val afterC1 = Dedup.commitCrawlSigs(spark, base, "c1",
-      Dedup.minhashSigsDf(crawl1, "doc_id", "text"))
-    assert(afterC1.select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
-    // crawl 2: doc 10 near-dups crawl 1's NEW doc 1; doc 11 is fresh —
-    // dedup runs against the STORED union, no corpus recompute
-    val crawl2 = Seq(
-      mk(10L, seedBody + " two"),
-      mk(11L, "entirely fresh third topic nothing shared with previous " +
-        "crawls whatsoever in any shingle of this particular document"))
-      .toDF("doc_id", "text")
-    val stored = Dedup.corpusSigs(spark, base)
-    val dups = Dedup.incrementalMinhash(
-      crawl2, "doc_id", "text", stored, 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(dups.contains((10L, 1L)), s"crawl-2 dup of crawl-1 doc missed: $dups")
-    assert(!dups.exists(_._1 == 11L))
-    // commit crawl 2 keeping only verified-unique docs
-    val c2sigs = Dedup.minhashSigsDf(crawl2, "doc_id", "text")
-      .filter(!col("id").isInCollection(dups.map(_._1).toSeq))
-    val afterC2 = Dedup.commitCrawlSigs(spark, base, "c2", c2sigs)
-    assert(afterC2.select("id").as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L, 11L))
-    // idempotent re-run: same crawlId is a committed no-op
-    val again = Dedup.commitCrawlSigs(spark, base, "c2", c2sigs)
-    assert(again.count() == 3)
-    // re-crawled id keeps its stored first-seen version: committing an id
-    // already in the corpus adds nothing
-    val recrawl = Dedup.commitCrawlSigs(spark, base, "c3",
-      Dedup.minhashSigsDf(
-        Seq(mk(2L, "changed body for the same stable id re-crawled later " +
-          "with completely rewritten content words")).toDF("doc_id", "text"),
-        "doc_id", "text"))
-    assert(recrawl.count() == 3)
-  }}
-
   test("bucket cap keeps BOTH ends: extreme-id pair survives a truncated bucket") {
     import spark.implicits._
     // 80 identical docs, ids 0..78 plus one far outlier id 10_000_050: a
