@@ -48,7 +48,6 @@ object FinalTables {
     * lineage — schema per clean_and_save.py:1165-1173 column mapping.
     */
   def sourceSegment(sents: Dataset[SentenceRow]): DataFrame = {
-    val ontoUdf = udf((t: String) => Ontology.ontologyMapping.getOrElse(t, ""))
     val base = sents
       .select(
         col("source").as("corpus"),
@@ -60,7 +59,7 @@ object FinalTables {
         col("entity1Type").as("head_type"),
         col("sentence").as("text_content"))
       .withColumn("souc_id", soucId(col("corpus"), col("book")))
-      .withColumn("head_onto_id", ontoUdf(col("head_type")))
+      .withColumn("head_onto_id", Ontology.ontologyIdCol(col("head_type")))
       .withColumn("crte_time", lit(CrteTime))
       .withColumn("crter", lit(Crter))
     // A12 head-id: dense index over the sorted group keys (format parity).
@@ -87,15 +86,13 @@ object FinalTables {
   def nerResult(arts: Dataset[SentenceArtifacts])(
       implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val ontoMap = Ontology.ontologyMapping
     arts.flatMap { a =>
-      a.entities.filter(e => e.entName.nonEmpty &&
-        Ontology.essentialTypes.contains(e.entType)).map { e =>
+      a.entities.filter(Ontology.essentialMention).map { e =>
         val entityId = graft.util.Hashing.id63(
           e.entName, "|", e.entType, "|", a.row.ind.toString, "|",
           e.start.toString, "|", e.model)
         (entityId, e.model, a.row.ind, a.row.sentence,
-          ontoMap.getOrElse(e.entType, ""), e.entName, e.start, e.end,
+          Ontology.ontologyId(e.entType), e.entName, e.start, e.end,
           e.prob, CrteTime, Crter)
       }
     }.toDF("entity_id", "ner_model_id", "text_id", "text_content",

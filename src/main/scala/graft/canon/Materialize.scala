@@ -33,10 +33,8 @@ object Materialize {
   def nodes(triples: Dataset[Triple], canonMap: DataFrame): DataFrame = {
     val spark = triples.sparkSession
     import spark.implicits._
-    val ontoMap = Ontology.ontologyMapping
-    val ontoUdf = udf((t: String) => ontoMap.getOrElse(t, ""))
     surfaces(triples).join(canonMap, Seq("surface", "entType"), "left")
-      .withColumn("ontoId", ontoUdf($"entType"))
+      .withColumn("ontoId", Ontology.ontologyIdCol($"entType"))
       .withColumn("bucket", pmod($"canonId", lit(NumBuckets)).cast("int"))
   }
 

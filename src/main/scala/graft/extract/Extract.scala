@@ -85,24 +85,31 @@ object Extract {
     out.result()
   }
 
-  /** Dataset stage: zh pages → sections. Column pruning matters at scale:
-    * this reads (url, text, lang) only — never `html` (the extractor ran at
-    * ingest or html is re-derived only in the parity check).
+  /** One page → its sections: a non-zh page has none; a zh page's text is
+    * extracted from its `html`, its first line is the book, and its source
+    * is "c" (clinical) or "m" (manual) by url, else by whether the first
+    * line starts with 临床. Pure; every page-to-sections caller runs it.
+    */
+  def pageSections(p: Page): Seq[Section] =
+    if (p.lang != "zh") Seq.empty
+    else {
+      val text = HtmlText.extract(p.html)
+      val firstLine = text.takeWhile(_ != '\n')
+      val source =
+        if (p.url.contains("/med/c/")) "c"
+        else if (p.url.contains("/med/m/")) "m"
+        else if (firstLine.startsWith("临床")) "c"
+        else "m"
+      sections(p.url, firstLine, source, text)
+    }
+
+  /** Dataset stage: pages → sections, one [[pageSections]] per page. The
+    * text comes from `html`; the `text` column is only the expected side of
+    * the byte-identity check (GoldenSpec).
     */
   def sectionsOf(pages: Dataset[Page])(implicit spark: SparkSession): Dataset[Section] = {
     import spark.implicits._
-    pages
-      .filter(_.lang == "zh")
-      .flatMap { p =>
-        val text = HtmlText.extract(p.html)
-        val firstLine = text.takeWhile(_ != '\n')
-        val source =
-          if (p.url.contains("/med/c/")) "c"
-          else if (p.url.contains("/med/m/")) "m"
-          else if (firstLine.startsWith("临床")) "c"
-          else "m"
-        sections(p.url, firstLine, source, text)
-      }
+    pages.flatMap(pageSections)
   }
 
   /** Sentence split (P4, pre_labeling.py:84-87): split on the reference's

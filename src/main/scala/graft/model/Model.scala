@@ -131,11 +131,3 @@ final case class Triple(
     ind: Long,
     prob: Double
 )
-
-/** Canonicalized graph node (star-forest label of `Canon.canonicalize`). */
-final case class Node(
-    canonId: Long,
-    surface: String,
-    entType: String,
-    ontoId: String
-)

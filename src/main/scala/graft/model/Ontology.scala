@@ -1,5 +1,8 @@
 package graft.model
 
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.udf
+
 /** The fixed type system of the pipeline — a faithful port of the reference
   * ontology (config.yaml:55-114).
   */
@@ -104,6 +107,20 @@ object Ontology {
     "DUR" -> "omahaT054",
     "EQM" -> "omahaT033"
   )
+
+  /** Type → ontology id, "" for a type `ontologyMapping` lacks. */
+  def ontologyId(entType: String): String = ontologyMapping.getOrElse(entType, "")
+
+  /** The column form of [[ontologyId]]; lazy, so the Spark-free callers of
+    * this object (OnlineNer) never build a UDF.
+    */
+  lazy val ontologyIdCol: UserDefinedFunction = udf(ontologyId _)
+
+  /** A mention that forms a triple and a ner_result row: a non-empty name
+    * of an essential type.
+    */
+  def essentialMention(e: EntityRow): Boolean =
+    e.entName.nonEmpty && essentialTypes.contains(e.entType)
 
   /** The 4 CRF-style scorer/model codes mirroring the reference's prediction
     * model list params_o_cnn_{kd,a,c,d}.pkl (config.yaml:48-49).

@@ -36,7 +36,6 @@ import graft.util.Hashing
   */
 final class CrfScorer(
     val model: String,
-    trie: Trie,
     missPct: Int,
     jitterPct: Int
 ) extends Serializable {
@@ -77,9 +76,6 @@ final class CrfScorer(
     (evScratchB, evScratchI)
   }
 
-  def predictRaw(sentence: String): Tagged =
-    predictRaw(sentence, CrfScorer.dictScan(trie, sentence))
-
   /** Hot-path form: int labels + primitive probs (see [[Tagged]]).
     *
     * Lattice restriction: unevidenced B-/I- labels can never enter the
@@ -88,8 +84,8 @@ final class CrfScorer(
     * the Viterbi runs over {O} ∪ {B-t, I-t : t evidenced in this sentence}
     * only. Output-identical to the full 21-label lattice, ~5x cheaper on
     * typical sentences (1-3 evidenced types).
-    */
-  /** @param matches shared per-sentence dict scan ([[CrfScorer.dictScan]]) —
+    *
+    * @param matches shared per-sentence dict scan ([[CrfScorer.dictScan]]) —
     * the 4 scorers consume the SAME maximal matches and differ only in their
     * per-(model, occurrence) dropout/jitter rolls, so the scan runs once per
     * sentence instead of once per model.
@@ -273,6 +269,16 @@ object CrfScorer {
     out.toArray
   }
 
+  /** The scorer pass: every scorer over ONE shared [[dictScan]] of the
+    * sentence, model → tagged. Annotate, the online annotator, the eval
+    * matrix and the ensemble goldens all score through it.
+    */
+  def predictAll(trie: Trie, scorers: Seq[CrfScorer],
+      sentence: String): Map[String, Tagged] = {
+    val matches = dictScan(trie, sentence)
+    scorers.map(sc => sc.model -> sc.predictRaw(sentence, matches)).toMap
+  }
+
   /** Reference probability squash (multi_source_ner.py:109-110):
     * 1 / (1 + 10/(x-2)^2). Monotone for x > 2; 0 at x = 2.
     */
@@ -364,11 +370,13 @@ object CrfScorer {
   /** The 4 production scorers with per-model miss/jitter rates (stand-in for
     * the 4 trained nets' differing recall; rates chosen so majority-vote ≥2
     * keeps ~all true mentions while single-model noise is filtered).
+    * `trie` is unused: a scorer reads the dict scan [[predictAll]] hands it;
+    * perfbench's Layers still passes one.
     */
-  def productionScorers(trie: Trie): Seq[CrfScorer] = Seq(
-    new CrfScorer("kd", trie, missPct = 10, jitterPct = 5),
-    new CrfScorer("a", trie, missPct = 5, jitterPct = 3),
-    new CrfScorer("c", trie, missPct = 15, jitterPct = 6),
-    new CrfScorer("d", trie, missPct = 20, jitterPct = 8)
+  def productionScorers(@annotation.unused trie: Trie): Seq[CrfScorer] = Seq(
+    new CrfScorer("kd", missPct = 10, jitterPct = 5),
+    new CrfScorer("a", missPct = 5, jitterPct = 3),
+    new CrfScorer("c", missPct = 15, jitterPct = 6),
+    new CrfScorer("d", missPct = 20, jitterPct = 8)
   )
 }

@@ -31,23 +31,8 @@ object ModelEval {
   /** Evaluated types, sorted — the eval-matrix key order. */
   val types: Seq[String] = Ontology.essentialTypes.toSeq.sorted
 
-  /** Per-model predicted spans for one sentence (shared dict scan, exactly
-    * the pipeline's scorer invocation shape).
-    */
-  private def predSpans(
-      sc: CrfScorer, trie: graft.dict.Trie, sentence: String,
-      matches: Array[Long]): Seq[MucEvaluator.Span] = {
-    val tagged = sc.predictRaw(sentence, matches)
-    val (typeIdxs, spans) = BioRaw.getPositions(tagged.labels)
-    (0 until spans.length).map { k =>
-      MucEvaluator.Span(CrfScorer.Types(typeIdxs(k)),
-        BioRaw.spanStart(spans(k)),
-        math.min(BioRaw.spanEnd(spans(k)), sentence.length))
-    }
-  }
-
   /** model → type → [strict_p, partial_p, exact_p, type_p] on `source`'s
-    * labeled corpus.
+    * labeled corpus, each sentence scored by the pipeline's scorer pass.
     */
   def evalFor(
       source: String,
@@ -55,14 +40,17 @@ object ModelEval {
   ): Map[String, Map[String, Array[Double]]] = {
     val trie = Gazetteer.buildTrie(Vocab.jiebaDict)
     val scorers = CrfScorer.productionScorers(trie)
-    val labeled = Fixtures.labeledSentences(source, nSentences)
-    val withScans = labeled.map { ls =>
-      (ls, CrfScorer.dictScan(trie, ls.sentence))
+    val scored = Fixtures.labeledSentences(source, nSentences).map { ls =>
+      (ls, CrfScorer.predictAll(trie, scorers, ls.sentence))
     }
     scorers.map { sc =>
-      val pairs = withScans.map { case (ls, matches) =>
+      val pairs = scored.map { case (ls, pred) =>
         val gold = ls.gold.map(g => MucEvaluator.Span(g.tpe, g.start, g.end))
-        (gold, predSpans(sc, trie, ls.sentence, matches))
+        val (typeIdxs, spans) = BioRaw.getPositions(pred(sc.model).labels)
+        (gold, spans.indices.map { k =>
+          val m = BioRaw.mention(ls.sentence, typeIdxs(k), spans(k))
+          MucEvaluator.Span(m.tpe, m.start, m.end)
+        })
       }
       sc.model -> MucEvaluator.evaluateByType(pairs, types)
         .map { case (t, c) => t -> c.precisions }

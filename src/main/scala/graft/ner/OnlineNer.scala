@@ -6,10 +6,11 @@ import graft.model.Ontology
 /** Online single-sentence NER (reference S10): the Spark-free analog of the
   * Flask API (app_multi.py:154-253) — same union + majority ensemble as the
   * batch path, same response shape (entities with spans, types, display
-  * names). Exists so the online and offline extraction paths CANNOT drift:
-  * both call the identical scorers/ensemble code. In a serving deployment
-  * this sits behind any HTTP layer, or inside foreachBatch for micro-batch
-  * scoring.
+  * names). It cannot drift from the offline path because every step is the
+  * function `Annotate.annotateOne` also calls: the scorer pass
+  * [[CrfScorer.predictAll]], [[EnsemblesRaw.run]] and the span decode
+  * [[BioRaw.mention]]. In a serving deployment this sits behind any HTTP
+  * layer, or inside foreachBatch for micro-batch scoring.
   */
 object OnlineNer {
 
@@ -34,15 +35,12 @@ object OnlineNer {
     val scorers = CrfScorer.productionScorers(trie)
     val wIdx = Ensembles.weightsIdx(weights)
     sentence => {
-      val pred = scorers.map(sc => sc.model -> sc.predictRaw(sentence)).toMap
-      val ens = EnsemblesRaw.run(pred, wIdx)
-      val entities = ens.boundaries.toSeq.zip(ens.typeIdxs.toSeq).map {
-        case (span, ti) =>
-          val s = BioRaw.spanStart(span)
-          val e = math.min(BioRaw.spanEnd(span), sentence.length)
-          val tpe = CrfScorer.Types(ti)
-          OnlineEntity(sentence.substring(s, e), tpe,
-            Ontology.tagMapping.getOrElse(tpe, ""), s, e)
+      val ens = EnsemblesRaw.run(
+        CrfScorer.predictAll(trie, scorers, sentence), wIdx)
+      val entities = ens.boundaries.indices.map { k =>
+        val m = BioRaw.mention(sentence, ens.typeIdxs(k), ens.boundaries(k))
+        OnlineEntity(m.word, m.tpe, Ontology.tagMapping.getOrElse(m.tpe, ""),
+          m.start, m.end)
       }
       OnlineResult(sentence, entities)
     }

@@ -1,6 +1,6 @@
 package graft.ner
 
-import graft.model.Ontology
+import graft.model.{Mention, Ontology}
 import scala.collection.mutable.ArrayBuffer
 
 /** Primitive-array representation of a tagged sentence — the 100 TB hot-path
@@ -75,6 +75,15 @@ object BioRaw {
 
   def spanStart(s: Long): Int = (s >>> 32).toInt
   def spanEnd(s: Long): Int = (s & 0xffffffffL).toInt
+
+  /** The span decode: (type index, packed span) of `sentence` → its mention,
+    * end clamped to the sentence, probabilities 0.
+    */
+  def mention(sentence: String, typeIdx: Int, span: Long): Mention = {
+    val s = spanStart(span)
+    val e = math.min(spanEnd(span), sentence.length)
+    Mention(sentence.substring(s, e), CrfScorer.Types(typeIdx), s, e, 0.0, 0.0)
+  }
 }
 
 /** Int-label ensemble core — allocation-free per char; see [[Ensembles]] for

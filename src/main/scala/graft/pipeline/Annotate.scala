@@ -91,18 +91,13 @@ object Annotate {
 
     // STEP B: 4 scorers + ensembles (EnsemblePredict_all.py:226-395) —
     // raw int-label path; ONE shared trie scan feeds all 4 scorers
-    val dictMatches = CrfScorer.dictScan(trie, sent)
-    val pred = scorers.map(sc => sc.model -> sc.predictRaw(sent, dictMatches)).toMap
+    val pred = CrfScorer.predictAll(trie, scorers, sent)
     val modelOrder = Ontology.models.filter(pred.contains)
     val ens = EnsemblesRaw.run(pred, weightsIdx)
 
     // ensemble mentions for the merge path (:391-395), normalized spans
-    val ensembleMentions = Spans.normalize(
-      ens.boundaries.toSeq.zip(ens.typeIdxs.toSeq).map { case (span, ti) =>
-        val s = BioRaw.spanStart(span)
-        val e2 = math.min(BioRaw.spanEnd(span), sent.length)
-        Mention(sent.substring(s, e2), CrfScorer.Types(ti), s, e2, 0.0, 0.0)
-      })
+    val ensembleMentions = Spans.normalize(ens.boundaries.indices.map(k =>
+      BioRaw.mention(sent, ens.typeIdxs(k), ens.boundaries(k))))
 
     // STEP C: per-model + ensemble_strong confidence rows (:500-552)
     val spanModels: Map[(Int, Int), Seq[String]] =

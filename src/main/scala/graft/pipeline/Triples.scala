@@ -42,8 +42,7 @@ object Triples {
         .values
         .map(_.minBy(e => (-e.prob, rank(e.model))))
       deduped
-        .filter(e => e.entName.nonEmpty &&
-          Ontology.essentialTypes.contains(e.entType))
+        .filter(Ontology.essentialMention)
         .map { e =>
           Triple(a.row.entity1, a.row.entity1Type, a.row.paragraph,
             e.entName, e.entType, a.row.ind, e.prob)

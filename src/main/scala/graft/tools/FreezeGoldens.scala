@@ -42,39 +42,31 @@ object FreezeGoldens {
     val wIdx = Ensembles.weightsIdx(graft.corpus.Fixtures.modelWeights)
     val out = Seq.newBuilder[String]
     (0L until 10L).foreach { i =>
-      val p = graft.corpus.Corpus.page(i)
-      if (p.lang == "zh") {
-        val firstLine = p.text.takeWhile(_ != '\n')
-        val source = if (p.url.contains("/med/c/")) "c" else "m"
-        graft.extract.Extract.sections(p.url, firstLine, source, p.text)
-          .flatMap(graft.extract.Extract.sentences)
-          .foreach { sr =>
-            val matches = CrfScorer.dictScan(trie, sr.sentence)
-            val pred = scorers.map(sc =>
-              sc.model -> sc.predictRaw(sr.sentence, matches)).toMap
-            val r = EnsemblesRaw.run(pred, wIdx)
-            def spansOf(t: Tagged, method: String): Unit = {
-              val (tys, sps) = BioRaw.getPositions(t.labels)
-              sps.indices.foreach { k =>
-                val s = BioRaw.spanStart(sps(k))
-                val e = math.min(BioRaw.spanEnd(sps(k)), sr.sentence.length)
-                var pmin = 1.0
-                var pmax = 0.0
-                var j = s
-                while (j < e) {
-                  val p = t.probs(j)
-                  if (p < pmin) pmin = p
-                  if (p > pmax) pmax = p
-                  j += 1
-                }
-                out += f"${sr.ind}|$method|${sr.sentence.substring(s, e)}|${CrfScorer.Types(tys(k))}|$s|$e|$pmin%.9f|$pmax%.9f"
+      graft.extract.Extract.pageSections(graft.corpus.Corpus.page(i))
+        .flatMap(graft.extract.Extract.sentences)
+        .foreach { sr =>
+          val r = EnsemblesRaw.run(
+            CrfScorer.predictAll(trie, scorers, sr.sentence), wIdx)
+          def spansOf(t: Tagged, method: String): Unit = {
+            val (tys, sps) = BioRaw.getPositions(t.labels)
+            sps.indices.foreach { k =>
+              val m = BioRaw.mention(sr.sentence, tys(k), sps(k))
+              var pmin = 1.0
+              var pmax = 0.0
+              var j = m.start
+              while (j < m.end) {
+                val p = t.probs(j)
+                if (p < pmin) pmin = p
+                if (p > pmax) pmax = p
+                j += 1
               }
+              out += f"${sr.ind}|$method|${m.word}|${m.tpe}|${m.start}|${m.end}|$pmin%.9f|$pmax%.9f"
             }
-            spansOf(r.votes, "votes")
-            spansOf(r.union, "union")
-            spansOf(r.strong, "strong")
           }
-      }
+          spansOf(r.votes, "votes")
+          spansOf(r.union, "union")
+          spansOf(r.strong, "strong")
+        }
     }
     out.result().sorted
   }

@@ -3,16 +3,11 @@ package graft.tools
 import java.io.{BufferedInputStream, FileInputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths}
 import java.util.jar.{JarEntry, JarOutputStream}
-import org.apache.spark.sql.SparkSession
 
-/** Real multi-executor measurement WITHOUT spark-submit: zips the compiled
-  * classes directory into a jar and opens a `local-cluster[E,C,MB]` session
-  * with `spark.jars` pointing at it, so the separate executor JVMs can fetch
-  * the application classes (they cannot see sbt's target/classes on their
-  * own — the round-1 finding that previously forced the packaged-jar +
-  * spark-submit protocol).
-  *
-  * Usage: runMain graft.tools.LocalClusterProbe <executors> <coresPerExec> <pages>
+/** The application-classes jar for real multi-executor runs WITHOUT a
+  * packaged jar: `Bench` passes it to the `ScaleProbe` children it
+  * spark-submits on `local-cluster[E,C,MB]`, whose separate executor JVMs
+  * cannot see sbt's target/classes on their own.
   */
 object LocalClusterProbe {
 
@@ -43,35 +38,5 @@ object LocalClusterProbe {
       }
     } finally jos.close()
     out.toAbsolutePath.toString
-  }
-
-  def session(executors: Int, cores: Int, memMb: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$executors,$cores,$memMb]")
-      .appName(s"graft-lc-$executors-$cores")
-      .config("spark.jars", classesJar())
-      .config("spark.executor.memory", s"${memMb - 512}m")
-      .config("spark.sql.shuffle.partitions", (executors * cores).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  def main(args: Array[String]): Unit = {
-    val executors = if (args.length > 0) args(0).toInt else 1
-    val cores = if (args.length > 1) args(1).toInt else 4
-    val pages = if (args.length > 2) args(2).toLong else 10000L
-    val spark = session(executors, cores, 4096)
-    val parts = executors * cores * 4
-    graft.pipeline.Pipeline.triples(spark, 1000, parts).count() // JIT warm
-    graft.pipeline.Pipeline.triples(spark, 1000, parts).count()
-    for (round <- 1 to 3) {
-      val t0 = System.nanoTime()
-      val n = graft.pipeline.Pipeline.triples(spark, pages, parts).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"LCPROBE round=$round executors=$executors cores=$cores pages=$pages triples=$n sec=$sec%.2f tps=${n / sec}%.0f")
-    }
-    spark.stop()
   }
 }

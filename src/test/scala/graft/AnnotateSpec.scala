@@ -24,12 +24,8 @@ class AnnotateSpec extends AnyFunSuite {
     Merge.SuffixSets.from(Vocab.suffixDict))
 
   /** The first sentence of the first fixture page, with its real lineage. */
-  private val first = {
-    val p = Corpus.page(0)
-    val source = if (p.url.contains("/med/c/")) "c" else "m"
-    Extract.sections(p.url, p.text.takeWhile(_ != '\n'), source, p.text)
-      .flatMap(Extract.sentences).head
-  }
+  private val first =
+    Extract.pageSections(Corpus.page(0)).flatMap(Extract.sentences).head
 
   test("a fixture sentence yields entity rows (positive control)") {
     val a = Annotate.annotateOne(first, ctx)

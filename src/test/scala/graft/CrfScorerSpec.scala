@@ -12,18 +12,19 @@ class CrfScorerSpec extends AnyFunSuite {
   )
   val trie = Gazetteer.buildTrie(dict)
   val scorers = CrfScorer.productionScorers(trie)
+  def predict(s: String) = CrfScorer.predictAll(trie, scorers, s)
 
   test("deterministic: same (model, sentence) → same output") {
     val s = "患者高血压伴呼吸困难，服阿司匹林。"
     scorers.foreach { sc =>
-      assert(sc.predictRaw(s).toPairs.toSeq == sc.predictRaw(s).toPairs.toSeq)
+      assert(predict(s)(sc.model).toPairs.toSeq == predict(s)(sc.model).toPairs.toSeq)
     }
   }
 
   test("BIO well-formed: no I- without preceding B-/I- of same type") {
     val s = "高血压呼吸困难阿司匹林心脏胸部X线"
     scorers.foreach { sc =>
-      val tags = sc.predictRaw(s).toPairs.map(_._1)
+      val tags = predict(s)(sc.model).toPairs.map(_._1)
       tags.zipWithIndex.foreach { case (t, i) =>
         if (t.startsWith("I-")) {
           val prev = tags(i - 1)
@@ -42,7 +43,7 @@ class CrfScorerSpec extends AnyFunSuite {
     var found = 0
     var expected = 0
     sents.foreach { s =>
-      val pred = scorers.map(sc => sc.model -> sc.predictRaw(s).toPairs).toMap
+      val pred = predict(s).map { case (m, t) => m -> t.toPairs }
       val r = Ensembles.run(pred, weights)
       val mentions = r.boundaries.map { case (st, e) => s.substring(st, e) }.toSet
       expected += 3
@@ -56,7 +57,7 @@ class CrfScorerSpec extends AnyFunSuite {
   test("probs are in (0,1) and spans carry higher probs than O chars on average") {
     val s = "高血压者呼吸困难。"
     val sc = scorers.head
-    val out = sc.predictRaw(s).toPairs
+    val out = predict(s)(sc.model).toPairs
     assert(out.forall { case (_, p) => p >= 0.0 && p < 1.0 })
     val (tagged, oTagged) = out.partition(_._1 != "O")
     if (tagged.nonEmpty && oTagged.nonEmpty) {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.corpus.{Corpus, Vocab}
 import graft.extract.{Extract, HtmlText}
-import graft.model.Ontology
+import graft.model.{Ontology, Page}
 
 class HtmlTextSpec extends AnyFunSuite {
   test("extract inverts the corpus generator byte-identically (SHA invariant)") {
@@ -54,6 +54,26 @@ class ExtractSpec extends AnyFunSuite {
     // manualKeywords order puts 检查内容→procedures before 检查→exams…
     // but 临床/操作/方法 etc are checked earlier; none contained here
     assert(secs.size == 1 && secs.head.paragraph == "procedures")
+  }
+
+  test("pageSections: zh pages only, text from html, source by url then first line") {
+    def secs(url: String, book: String, lang: String = "zh") = {
+      val lines = Seq(book, "第一章心部疾病与操作", "第一节心衰竭",
+        "【临床表现】患者常见心悸伴呼吸困难。")
+      // an empty text column: the sections must come from the html
+      Extract.pageSections(Page(url, Corpus.tsOf(0),
+        Corpus.htmlOf(book, lines).getBytes("UTF-8"), "", lang))
+    }
+    def sourceOf(url: String, book: String) = {
+      val s = secs(url, book)
+      assert(s.nonEmpty && s.forall(_.book == book), s"$url $book")
+      s.map(_.source).distinct
+    }
+    assert(sourceOf("https://example.org/med/c/1", "操作手册一分册") == Seq("c"))
+    assert(sourceOf("https://example.org/med/m/2", "临床指南一分册") == Seq("m"))
+    assert(sourceOf("https://example.org/kb/3", "临床指南一分册") == Seq("c"))
+    assert(sourceOf("https://example.org/kb/4", "操作手册一分册") == Seq("m"))
+    assert(secs("https://example.org/med/c/5", "临床指南一分册", "en").isEmpty)
   }
 
   test("sentence split + deterministic ind") {

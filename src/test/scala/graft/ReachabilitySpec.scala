@@ -16,12 +16,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * `val` or `trait`, after any of `final case implicit lazy abstract
   * sealed`, so `private` and `override` members are not matched. A use is
   * the name as a whole word (`[A-Za-z0-9_]`) on any other line; an
-  * interpolated `$x` or `${…}` is code and counts. What it cannot see:
+  * interpolated `$x` or `${…}` is code and counts, except in a file that
+  * declares the name `private` or `protected` (with or without a `[…]`
+  * qualifier): there every use resolves to that declaration, so
+  * Gazetteer's `private[dict] final class Node` reaches no public `Node`
+  * declared in another file. What it cannot see:
   *   - a name used only in its own file still counts as reached, e.g. a
   *     class whose companion object names it;
-  *   - names are not resolved: one use counts for every overload and every
-  *     other declaration of the name, so a local `val` that shadows a
-  *     member (SparkEntry's `val corpusSigs` beside the parameter of
+  *   - other names are not resolved: one use counts for every overload and
+  *     every other declaration of the name, so a local `val` that shadows
+  *     a member (SparkEntry's `val corpusSigs` beside the parameter of
   *     `Dedup.incrementalMinhash`) keeps the member reached;
   *   - local vals and defs are matched like members.
   */
@@ -83,6 +87,8 @@ object ReachabilitySpec {
 
   private val Decl =
     """^\s*(?:(?:final|case|implicit|lazy|abstract|sealed) +)*(?:def|class|object|val|trait) +([A-Za-z_][A-Za-z0-9_]*)""".r
+  private val Private =
+    """^\s*(?:@\w+ +)*(?:(?:final|case|implicit|lazy|abstract|sealed|override) +)*(?:private|protected)(?:\[\w+\])? +(?:(?:final|case|implicit|lazy|abstract|sealed|override) +)*(?:def|class|object|val|var|trait|type) +([A-Za-z_][A-Za-z0-9_]*)""".r
   private val Word = "[A-Za-z0-9_]+".r
 
   def tokens(line: String): Seq[String] = Word.findAllIn(line).toSeq
@@ -103,11 +109,16 @@ object ReachabilitySpec {
       (l, n) <- ls.zipWithIndex
       w <- tokens(l).distinct
     } yield w -> (f, n)).groupMap(_._1)(_._2)
+    val privateIn = lines.map { case (f, ls) =>
+      f -> ls.flatMap(l => Private.findPrefixMatchOf(l).map(_.group(1))).toSet
+    }.toMap
     (for {
       (f, ls) <- lines if f.startsWith(main)
       (l, n) <- ls.zipWithIndex
       name <- Decl.findPrefixMatchOf(l).map(_.group(1))
-      if uses(name).forall(_ == (f, n))
+      if uses(name).forall { case (g, m) =>
+        (g, m) == (f, n) || (g != f && privateIn(g)(name))
+      }
     } yield s"${main.relativize(f)} $name" -> s"$f:${n + 1}").toMap
   }
 
