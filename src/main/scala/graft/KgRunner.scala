@@ -18,7 +18,8 @@ import graft.snapshot.Snapshot.{Dag, Step}
   *   - the chain, declared first: triples (pages → extract → annotate,
   *     narrow) and mention_tokens → links (trie candidates + TF-IDF cosine)
   *     → canon (labels of the alias star forest: one aggregate, one join)
-  *     → nodes / edges (partitioned entType × bucket);
+  *     → nodes (canon's rows plus ontoId and bucket) / edges (partitioned
+  *     by type × bucket);
   *   - ner_result, source_segment, corpus_info, group_triples and the
   *     metadata tables (reference §1.3 + 6.3/6.4 table surface);
   *     ner_eval reads model_eval_results, source_labeled reads corpus_info
@@ -86,8 +87,8 @@ object KgRunner {
         Canon.canonicalize(Materialize.surfaces(triples.as[Triple]),
           Link.aliasEdges(links))
       },
-      Step("nodes", Seq("canon", "triples"), Seq("entType", "bucket")) {
-        case Seq(canon, triples) => Materialize.nodes(triples.as[Triple], canon)
+      Step("nodes", Seq("canon"), Seq("entType", "bucket")) {
+        case Seq(canon) => Materialize.nodes(canon)
       },
       Step("edges", Seq("canon", "triples"), Seq("objType", "bucket")) {
         case Seq(canon, triples) => Materialize.edges(triples.as[Triple], canon)

@@ -469,7 +469,7 @@ object SparkEntry {
       // floor-scaled to 1e6 — one IEEE division + multiply, identical in
       // both engines
       graft.textops.Dedup.minhashLsh(
-        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text", 0.5)
+        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text")
         .select(col("id_a"), col("id_b"),
           (col("est_sim") * 128).cast("int").as("n_eq"),
           floor(col("jaccard") * 1e6).cast("long").as("jac_x1e6"))
@@ -520,19 +520,21 @@ object SparkEntry {
     }),
     "sim_ivf_cells" -> ((s, dir) => {
       graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq)._1
+        t(s, dir, "embeddings"), (0L until 20L).toSeq,
+        graft.textops.Similarity.IvfProbes)._1
         .select(col("vec_id"), col("cell"))
     }),
     "sim_ivf_probes" -> ((s, dir) => {
       graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq)._2
+        t(s, dir, "embeddings"), (0L until 20L).toSeq,
+        graft.textops.Similarity.IvfProbes)._2
     }),
     // sim column intentionally dropped: membership is the oracle-checkable
     // contract (planted twins at cos≈1 vs organic max 0.51 at sf0.01 — far
     // from the 0.95 threshold on both sides)
     "dedup_embedding_cos" -> ((s, dir) => {
       graft.textops.Similarity.embeddingNearDup(
-        withPerturbedEmbeddings(s, t(s, dir, "embeddings")), 0.95)
+        withPerturbedEmbeddings(s, t(s, dir, "embeddings")))
         .select(col("id_a"), col("id_b"))
     }),
     // ---- SemDeDup semantic dedup (embedding-level, beside MinHash) ----
@@ -546,7 +548,7 @@ object SparkEntry {
     }),
     "dedup_semantic" -> ((s, dir) => {
       graft.textops.Similarity.semanticDedup(
-        withPerturbedEmbeddings(s, t(s, dir, "embeddings")), 0.95)
+        withPerturbedEmbeddings(s, t(s, dir, "embeddings")))
     }),
     // planted-twin recovery contracts — each deterministic by construction,
     // so the oracle is the exact planted list over the base table:
@@ -558,7 +560,7 @@ object SparkEntry {
     "dedup_minhash_planted" -> ((s, dir) => {
       val docs = t(s, dir, "documents").filter(col("n_chars") >= 250)
       graft.textops.Dedup.minhashLsh(
-        withNearDupes(s, docs), "doc_id", "text", 0.5)
+        withNearDupes(s, docs), "doc_id", "text")
         .filter(col("id_b") === col("id_a") + 10000000L)
         .select(col("id_a"), col("id_b"))
     }),
@@ -579,7 +581,7 @@ object SparkEntry {
         .withColumn("doc_id", col("doc_id") + lit(10000000L))
         .withColumn("text", concat(col("text"), lit(" nearduplicate")))
       graft.textops.Dedup.incrementalMinhash(
-        newDocs, "doc_id", "text", corpusSigs, 0.5)
+        newDocs, "doc_id", "text", corpusSigs)
         .filter(col("corpus_id") === col("new_id") - 10000000L)
         .select(col("new_id"), col("corpus_id"))
     }),
@@ -631,7 +633,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       graft.textops.Dedup.clusterCanonical(
         docs.select(col("doc_id")),
-        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2))
+        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
     }),
     // ---- deterministic stratified sampling (downsample majority lang) ----
     // ---- PII redaction over a corpus with planted emails/IPs/phones ----
@@ -793,7 +795,7 @@ object SparkEntry {
         .select(col("doc_id"), col("text"), col("source"))
       val kept1 = graft.textops.TextOps.qualityFilterPipeline(
         docs, "doc_id", "text", blockedDomains = urlBlocklist,
-        allowedLangs = Seq("en"), keepText = true, carryCol = Some("source"))
+        keepText = true, carryCol = Some("source"))
         .filter(col("verdict") === "keep")
         .select(col("doc_id"), col("text"), col("source"))
         // materialized ONCE: kept1's two consumers reach it through
@@ -851,14 +853,15 @@ object SparkEntry {
       val aug = plantedLinkAug(t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text")))
       graft.textops.WebGraph.hostRank(
-        graft.textops.WebGraph.hostGraphEdges(aug, "source", "text"), 3)
+        graft.textops.WebGraph.hostGraphEdges(aug, "source", "text"),
+        graft.textops.WebGraph.RankIterations)
     }),
     // ---- HITS hubs/authorities over the same planted host graph ----
     "web_host_hits" -> ((s, dir) => {
       val aug = plantedLinkAug(t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text")))
       graft.textops.WebGraph.hits(
-        graft.textops.WebGraph.hostGraphEdges(aug, "source", "text"), 3)
+        graft.textops.WebGraph.hostGraphEdges(aug, "source", "text"))
     }),
     // ---- weakly-connected components over a planted FIVE-component host
     // graph (site-family analysis; exercises the string-graph → md5-id →
@@ -941,7 +944,7 @@ object SparkEntry {
       val scored = docs.select(col("doc_id"),
         graft.textops.TextOps.qualityScoreX1e6(col("text")).as("score"))
       graft.textops.Dedup.clusterCanonicalBest(scored,
-        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2))
+        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
     }),
     // ---- model-based quality filter: count-trained linear classifier
     // (fastText/DCLM shape) — train on the hash-assigned 'train' split
@@ -958,8 +961,7 @@ object SparkEntry {
     // ---- deterministic training-order shuffle (bucketed permutation,
     // no global sort; pos is a pure function of the ids) ----
     "tq_corpus_shuffle" -> ((s, dir) => {
-      graft.textops.TextOps.corpusShuffle(
-        t(s, dir, "documents"), "doc_id", 8)
+      graft.textops.TextOps.corpusShuffle(t(s, dir, "documents"), "doc_id")
     }),
     // ---- BPE tokenizer training (merge table learned distributively on
     // the fixture corpus; oracle = generated VALUES from the sequential
@@ -1070,7 +1072,8 @@ object SparkEntry {
     // kg_refined_dict let it re-derive kg_seen_unseen (A11/U2 set ops)
     "kg_drug_instructions" -> ((s, _) => {
       import s.implicits._
-      s.createDataset(graft.corpus.Fixtures.drugInstructions(60)).toDF()
+      s.createDataset(graft.corpus.Fixtures.drugInstructions(
+        graft.pipeline.Pipeline.NDrugs)).toDF()
     }),
     "kg_refined_dict" -> ((s, _) => {
       import s.implicits._
@@ -1677,13 +1680,13 @@ object SparkEntry {
     // rank/hits derivations are GENERATED from the same WebGraph constants
     "web_host_rank" ->
       (s"WITH aug AS ($plantedLinkAugSql),\n" +
-        graft.textops.WebGraph.hostRankSql("aug", 3).stripPrefix("WITH ")),
+        graft.textops.WebGraph.hostRankSql("aug").stripPrefix("WITH ")),
     "web_host_hits" ->
       (s"WITH aug AS ($plantedLinkAugSql),\n" +
-        graft.textops.WebGraph.hitsSql("aug", 3).stripPrefix("WITH ")),
+        graft.textops.WebGraph.hitsSql("aug").stripPrefix("WITH ")),
     "web_host_components" ->
       (s"WITH RECURSIVE aug AS ($plantedComponentAugSql),\n" +
-        graft.textops.WebGraph.hostComponentsSql("aug", "host")
+        graft.textops.WebGraph.hostComponentsSql("aug")
           .stripPrefix("WITH RECURSIVE ")),
     "web_host_triangles" ->
       (s"WITH aug AS ($plantedLinkAugSql),\n" +
@@ -1730,7 +1733,7 @@ object SparkEntry {
     "tok_bpe_merges" ->
       graft.textops.Tokenizer.bpeMergesSql(12),
     "tq_corpus_shuffle" ->
-      graft.textops.TextOps.corpusShuffleSql("documents", 8),
+      graft.textops.TextOps.corpusShuffleSql("documents"),
     // mirrors GENERATED from the same TextOps builders (single source of
     // truth for the window frame / integer div / sqrt-rate arithmetic)
     "tq_pack_sequences" ->
@@ -1752,7 +1755,7 @@ object SparkEntry {
     // chunking, packing) — each stage's CTE is a complete generated SELECT
     "tq_corpus_prep" -> {
       val verd = graft.textops.TextOps.qualityFilterPipelineSql(
-        "documents", blockedDomains = urlBlocklist, allowedLangs = Seq("en"))
+        "documents", blockedDomains = urlBlocklist)
       val chunks = graft.textops.TextOps.chunkDocumentsSql("kept2", 64, 16)
       val pack = graft.textops.TextOps.packSequencesSql("cw", 2048L)
       s"""WITH verd AS ($verd),
@@ -1857,7 +1860,8 @@ object SparkEntry {
     },
     "kg_drug_instructions" -> {
       def q(s: String) = "'" + s.replace("'", "''") + "'"
-      val rows = graft.corpus.Fixtures.drugInstructions(60).map { d =>
+      val rows = graft.corpus.Fixtures
+        .drugInstructions(graft.pipeline.Pipeline.NDrugs).map { d =>
         s"(${q(d.product)}, ${q(d.woman)}, ${q(d.children)}, ${q(d.agedness)})"
       }.mkString(", ")
       s"SELECT * FROM (VALUES $rows) t(product, woman, children, agedness)"
@@ -1886,7 +1890,7 @@ object SparkEntry {
     // REAL BMP/WAV decode pinned by VALUES generated from the same
     // encode→decode round-trip the executors run (decodableRow →
     // decodeBmp/decodeWav; all-integer stats). Deterministic by
-    // construction — the oracle proves the distributed batched decode
+    // construction — the oracle proves the distributed decode
     // matches the driver-side reference decode byte-for-byte.
     "mm_decode" -> {
       val rows = (0L until 120L).map { i =>

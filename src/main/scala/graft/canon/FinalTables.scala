@@ -161,10 +161,9 @@ object FinalTables {
     * (a Python backslash-continuation inside the string literal, :774-775).
     * crte stamps follow this repo's fixed-timestamp convention.
     */
-  def trainingInfo(
-      spark: SparkSession,
-      baseDir: String = "ner_training_final"): DataFrame = {
+  def trainingInfo(spark: SparkSession): DataFrame = {
     import spark.implicits._
+    val baseDir = "ner_training_final"
     val corpusCodes = Seq("d", "c", "kd", "m", "a")
     val trainCorpora = corpusCodes.map(corpusNames) ++
       corpusCodes.map(corpusNames) ++

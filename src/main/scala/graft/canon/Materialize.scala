@@ -29,14 +29,22 @@ object Materialize {
       .distinct()
   }
 
-  /** Canonical node table: (surface, entType, canonId, ontoId, bucket). */
-  def nodes(triples: Dataset[Triple], canonMap: DataFrame): DataFrame = {
-    val spark = triples.sparkSession
-    import spark.implicits._
-    surfaces(triples).join(canonMap, Seq("surface", "entType"), "left")
-      .withColumn("ontoId", Ontology.ontologyIdCol($"entType"))
-      .withColumn("bucket", pmod($"canonId", lit(NumBuckets)).cast("int"))
-  }
+  /** Canonical node table: (surface, entType, canonId, ontoId, bucket).
+    * canonMap already holds one row per [[surfaces]] vocabulary entry with
+    * its canonId, so a node is a canon row plus its ontology id and hash
+    * bucket: a narrow projection, no aggregate and no join.
+    */
+  def nodes(canonMap: DataFrame): DataFrame =
+    canonMap
+      .withColumn("ontoId", Ontology.ontologyIdCol(col("entType")))
+      .withColumn("bucket", pmod(col("canonId"), lit(NumBuckets)).cast("int"))
+
+  /** The same node table as the one-argument `nodes`; `triples` is not
+    * read. Kept only because the benchmark's layer timings
+    * (`perfbench/src/perfbench/Layers.scala`) call this signature.
+    */
+  def nodes(triples: Dataset[Triple], canonMap: DataFrame): DataFrame =
+    nodes(canonMap)
 
   /** Canonical edge table: triples with subj/obj resolved to canon ids.
     * canonMap is vocabulary-sized → broadcast both joins (no shuffle of the

@@ -151,7 +151,7 @@ object Corpus {
   }
 
   /** Distributed generation: page id → row, embarrassingly parallel. */
-  def pages(spark: SparkSession, n: Long, partitions: Int = 32): Dataset[Page] = {
+  def pages(spark: SparkSession, n: Long, partitions: Int): Dataset[Page] = {
     import spark.implicits._
     spark.range(0, n, 1, partitions).map(i => page(i))
   }

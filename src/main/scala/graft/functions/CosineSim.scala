@@ -101,9 +101,4 @@ object CosineSim {
     GraftBridge.column(CosineSim(
       GraftBridge.expression(a), GraftBridge.expression(b)))
   }
-
-  /** SQL registration: SELECT cosine_sim(e1, e2) ... */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "scala_udf")
 }

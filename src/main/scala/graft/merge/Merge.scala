@@ -70,28 +70,10 @@ object Merge {
     val masks: Array[Long] = ids.map(_.foldLeft(0L)((m, i) => m | (1L << i)))
   }
 
-  /** First occurrence of `a` as a slice of `x` (clean_and_save.py:59-62).
-    * Array-indexed — this runs ~100 candidate sequences × every window start
-    * × every sentence, so no per-window slicing/allocation (a List.slice here
-    * dominated the whole pipeline's CPU profile).
+  /** Port of `is_a_in_x` (clean_and_save.py:59-62): first occurrence of
+    * `a` as a slice of `x`. The merge rounds run the allocation-free
+    * [[isAInXIds]] over tag ids instead.
     */
-  def isAInX(a: Array[String], x: Array[String]): (Int, Boolean) = {
-    val alen = a.length
-    var i = 0
-    val last = x.length - alen
-    while (i <= last) {
-      var j = 0
-      var ok = true
-      while (ok && j < alen) {
-        if (x(i + j) != a(j)) ok = false else j += 1
-      }
-      if (ok) return (i, true)
-      i += 1
-    }
-    (0, false)
-  }
-
-  /** Generic convenience (tests / small inputs). */
   def isAInX[T](a: Seq[T], x: Seq[T]): (Int, Boolean) = {
     var i = 0
     val last = x.length - a.length
@@ -385,13 +367,6 @@ object Merge {
         sufOf("SUR"))
     }
   }
-
-  def round2(
-      sentence: String,
-      seg: Seq[Token],
-      suffixDict: Map[String, String]
-  ): Seq[Token] =
-    round2(sentence, seg, SuffixSets.from(suffixDict))
 
   private val MaskDisSymBflOrg = maskOf(Set("DIS", "SYM", "BFL", "ORG"))
   private val MaskSurTesBflEqm = maskOf(Set("SUR", "TES", "BFL", "EQM"))

@@ -58,19 +58,6 @@ object Confidence {
     * @param dsEval   eval metrics for this dataset: model → type → [4]
     * @param spanModels for ensemble sequences: (start,end) → voting models
     */
-  def entityRows(
-      ind: Long,
-      modelKey: String,
-      tagged: Seq[(String, Double)],
-      sentence: String,
-      dsEval: Map[String, Map[String, Array[Double]]],
-      numModels: Int,
-      spanModels: Map[(Int, Int), Seq[String]] = Map.empty
-  ): Seq[EntityRow] =
-    entityRowsRaw(ind, modelKey, Tagged.fromPairs(tagged), sentence, dsEval,
-      numModels, spanModels)
-
-  /** Hot-path form over [[Tagged]]. */
   def entityRowsRaw(
       ind: Long,
       modelKey: String,

@@ -288,20 +288,9 @@ object CrfScorer {
   }
 
   /** Viterbi over an active-label sublattice; transitions: I-t reachable only
-    * from B-t/I-t of the same type (+0.2), everything else 0.
-    */
-  def viterbiActive(
-      emit: Array[Double],
-      n: Int,
-      nA: Int,
-      typeOfLocal: Array[Int],
-      isILocal: Array[Boolean]
-  ): Array[Int] =
-    viterbiActive(emit, n, nA, typeOfLocal, isILocal,
-      new Array[Double](n * nA), new Array[Int](n * nA), new Array[Int](n))
-
-  /** Buffer-reusing form: dp/bp sized ≥ n×nA, path ≥ n; every used cell is
-    * overwritten (bp row 0 is never read), so dirty buffers are fine.
+    * from B-t/I-t of the same type (+0.2), everything else 0. Buffers are
+    * reused: dp/bp sized ≥ n×nA, path ≥ n; every used cell is overwritten
+    * (bp row 0 is never read), so dirty buffers are fine.
     */
   def viterbiActive(
       emit: Array[Double],

@@ -31,21 +31,20 @@ object Ensembles {
     * @param weights  model → type → vote weight (multi_ner_prediction.py:139-159
     *                 normalization: per type, weight = strict_precision /
     *                 Σ strict_precision, so Σ_models weights(m)(t) = 1).
-    * @param modelOrder iteration order over models (the reference iterates a
-    *                 Python dict; we pin kd,a,c,d for determinism).
+    * Models are visited in [[Ontology.models]] order (the reference iterates
+    * a Python dict; we pin kd,a,c,d for determinism).
     */
   /** String-label wrapper over [[EnsemblesRaw.run]] — one core, two views:
     * tests exercise this surface, the pipeline uses the raw form directly.
     */
   def run(
       predDict: Map[String, Array[(String, Double)]],
-      weights: Map[String, Map[String, Double]],
-      modelOrder: Seq[String] = Ontology.models
+      weights: Map[String, Map[String, Double]]
   ): EnsembleResult = {
     val pred = predDict.map { case (k, v) => k -> Tagged.fromPairs(v.toSeq) }
     val wIdx = weightsIdx(weights)
-    val models = modelOrder.filter(predDict.contains)
-    val r = EnsemblesRaw.run(pred, wIdx, modelOrder)
+    val models = Ontology.models.filter(predDict.contains)
+    val r = EnsemblesRaw.run(pred, wIdx)
     EnsembleResult(
       votes = r.votes.toPairs,
       union = r.union.toPairs,

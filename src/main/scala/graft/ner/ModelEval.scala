@@ -31,16 +31,16 @@ object ModelEval {
   /** Evaluated types, sorted — the eval-matrix key order. */
   val types: Seq[String] = Ontology.essentialTypes.toSeq.sorted
 
+  /** Labeled sentences scored per source. */
+  val EvalSentences = 160
+
   /** model → type → [strict_p, partial_p, exact_p, type_p] on `source`'s
     * labeled corpus, each sentence scored by the pipeline's scorer pass.
     */
-  def evalFor(
-      source: String,
-      nSentences: Int = 160
-  ): Map[String, Map[String, Array[Double]]] = {
+  def evalFor(source: String): Map[String, Map[String, Array[Double]]] = {
     val trie = Gazetteer.buildTrie(Vocab.jiebaDict)
     val scorers = CrfScorer.productionScorers(trie)
-    val scored = Fixtures.labeledSentences(source, nSentences).map { ls =>
+    val scored = Fixtures.labeledSentences(source, EvalSentences).map { ls =>
       (ls, CrfScorer.predictAll(trie, scorers, ls.sentence))
     }
     scorers.map { sc =>

@@ -96,20 +96,19 @@ object EnsemblesRaw {
       union: Tagged,
       strong: Tagged,
       boundaries: Array[Long], // packed spans
-      modelMasks: Array[Int], // bitmask over modelOrder per kept span
+      modelMasks: Array[Int], // bitmask over Ontology.models per kept span
       typeIdxs: Array[Int]
   )
 
   /** @param weightsIdx model → per-typeIdx vote weight (dense array). */
   def run(
       pred: Map[String, Tagged],
-      weightsIdx: Map[String, Array[Double]],
-      modelOrder: Seq[String] = Ontology.models
+      weightsIdx: Map[String, Array[Double]]
   ): Result = {
     val base = pred("a")
     val n = base.length
     val nT = CrfScorer.Types.length
-    val models = modelOrder.filter(pred.contains).toArray
+    val models = Ontology.models.filter(pred.contains).toArray
     val nM = models.length
     val predArr = models.map(pred)
     val wArr = models.map(weightsIdx)

@@ -72,15 +72,18 @@ object Pipeline {
     Extract.sentencesOf(Extract.sectionsOf(pages))
 
   /** Full run from n synthetic pages to the triple table. */
-  def triples(spark: SparkSession, nPages: Long, partitions: Int = 32): Dataset[Triple] = {
+  def triples(spark: SparkSession, nPages: Long, partitions: Int): Dataset[Triple] = {
     implicit val s: SparkSession = spark
     Triples.fromArtifacts(artifacts(Corpus.pages(spark, nPages, partitions)))
   }
 
+  /** Rows of the synthetic drug-instruction table. */
+  val NDrugs = 60
+
   /** Group-taboo triples from the synthetic drug-instruction table. */
-  def groupTriples(spark: SparkSession, nDrugs: Int = 60): Dataset[Triples.GroupTriple] = {
+  def groupTriples(spark: SparkSession): Dataset[Triples.GroupTriple] = {
     implicit val s: SparkSession = spark
     import spark.implicits._
-    Triples.groupTriples(spark.createDataset(Fixtures.drugInstructions(nDrugs)))
+    Triples.groupTriples(spark.createDataset(Fixtures.drugInstructions(NDrugs)))
   }
 }

@@ -51,7 +51,7 @@ object Classifier {
       docs: DataFrame,
       textCol: String,
       labelCol: String,
-      minCount: Long = 3L): DataFrame = {
+      minCount: Long): DataFrame = {
     val counts = docs
       .select(col(labelCol).as("y"),
         explode(TextOps.tokenArray(col(textCol))).as("term"))
@@ -128,7 +128,7 @@ object Classifier {
       table: String,
       idExpr: String,
       labelExpr: String,
-      minCount: Long = 3L): String = {
+      minCount: Long): String = {
     val split = TextOps.hashSplitSql(idExpr)
     s"""WITH tr AS (
        |  SELECT $idExpr AS doc_id, text, $labelExpr AS y FROM $table

@@ -26,26 +26,31 @@ object Dedup {
   final val Bands = 16
   final val RowsPerBand = NumHashes / Bands // 8
   final val MaxBucket = 50 // cap candidate fan-out per bucket
+  final val ShingleWords = 3 // words per shingle
+  final val MinhashThreshold = 0.5 // exact Jaccard a minhash pair must reach
+  final val BloomFpp = 0.01 // corpus bloom false-positive rate
+  final val RareMinShared = 2 // df=2 shingles a rare-feature edge needs
+  final val SubstrWords = 8 // words per exact-substring gram
 
-  /** Word n-gram shingles, hashed to 64-bit. r6: the n-word windows are
+  /** Word [[ShingleWords]]-gram shingles, hashed to 64-bit. r6: the windows are
     * hashed by streaming each window's chars (words joined by one space)
     * straight through the fnv1a64 fold — no per-shingle mkString/sliding
     * allocation; value-identical to fnv1a64(window.mkString(" ")), pinned
     * by PropertySpec against [[shingleStrings]].
     */
-  def shingles(text: String, n: Int = 3): Array[Long] = {
+  def shingles(text: String): Array[Long] = {
     if (text == null) return Array.empty
     val words = text.split(" +").filter(_.nonEmpty)
-    if (words.length < n) {
+    if (words.length < ShingleWords) {
       if (words.isEmpty) Array.empty
       else Array(Hashing.fnv1a64(words.mkString(" ")))
     } else {
-      val out = new Array[Long](words.length - n + 1)
+      val out = new Array[Long](words.length - ShingleWords + 1)
       var i = 0
       while (i < out.length) {
         var h = Hashing.FnvOffset
         var j = i
-        while (j < i + n) {
+        while (j < i + ShingleWords) {
           if (j > i) { // the ' ' joiner, folded as its two UTF-16 bytes
             h ^= 0x20L; h *= Hashing.FnvPrime
             h *= Hashing.FnvPrime // high byte 0: h ^= 0 is a no-op
@@ -72,13 +77,13 @@ object Dedup {
     * engine (e.g. the DuckDB n-gram-Jaccard oracle). The hashed form stays
     * the hot-path representation.
     */
-  def shingleStrings(text: String, n: Int = 3): Array[String] = {
+  def shingleStrings(text: String): Array[String] = {
     if (text == null) return Array.empty
     val words = text.split(" +").filter(_.nonEmpty)
-    if (words.length < n) {
+    if (words.length < ShingleWords) {
       if (words.isEmpty) Array.empty else Array(words.mkString(" "))
     } else {
-      words.sliding(n).map(_.mkString(" ")).toArray
+      words.sliding(ShingleWords).map(_.mkString(" ")).toArray
     }
   }
 
@@ -223,7 +228,8 @@ object Dedup {
 
   /** MinHash+LSH candidate pairs with exact n-gram-Jaccard verification.
     * Input df must have (id: Long, text: String). Output:
-    * (id_a, id_b, est_sim, jaccard) with id_a < id_b, jaccard >= threshold.
+    * (id_a, id_b, est_sim, jaccard) with id_a < id_b, jaccard >=
+    * [[MinhashThreshold]].
     */
   /** Per-doc (id, sig[128], shingles) — the row-local signature stage of
     * [[minhashLsh]], exposed so oracles can dump the signatures and
@@ -263,8 +269,7 @@ object Dedup {
   def minhashLsh(
       docs: DataFrame,
       idCol: String,
-      textCol: String,
-      threshold: Double = 0.7
+      textCol: String
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -298,7 +303,7 @@ object Dedup {
           (a, b, eq.toDouble / NumHashes, exactJaccard(sha, shb))
         }
         .toDF("id_a", "id_b", "est_sim", "jaccard")
-        .filter($"jaccard" >= threshold)
+        .filter($"jaccard" >= MinhashThreshold)
         .localCheckpoint(true)
     } finally {
       sigs.unpersist(false)
@@ -316,7 +321,7 @@ object Dedup {
     * [[cappedPairs]] (an unbounded boilerplate bucket on the corpus side
     * would explode the join), and candidates are verified by exact
     * shingle Jaccard. Returns (new_id, corpus_id, est_sim, jaccard) with
-    * jaccard ≥ threshold. Truncation is observable via the
+    * jaccard ≥ [[MinhashThreshold]]. Truncation is observable via the
     * `graft.dedup.incr_buckets` observe metrics (listener channel — the
     * result is eagerly materialized like [[minhashLsh]]'s).
     */
@@ -324,8 +329,7 @@ object Dedup {
       newDocs: DataFrame,
       idCol: String,
       textCol: String,
-      corpusSigs: DataFrame,
-      threshold: Double = 0.7
+      corpusSigs: DataFrame
   ): DataFrame = {
     val spark = newDocs.sparkSession
     import spark.implicits._
@@ -368,7 +372,7 @@ object Dedup {
           (nid, cid, eq.toDouble / NumHashes, exactJaccard(shn, shc))
         }
         .toDF("new_id", "corpus_id", "est_sim", "jaccard")
-        .filter($"jaccard" >= threshold)
+        .filter($"jaccard" >= MinhashThreshold)
         .localCheckpoint(true)
     } finally {
       newSigs.unpersist(false)
@@ -385,7 +389,7 @@ object Dedup {
 
   /** Bloom filter over the corpus' content fingerprints (tree-aggregated
     * by Spark's sketch builder), sized to the corpus: ~1.2 GB at 10⁹ keys
-    * and 1% fpp — broadcastable; beyond ~10⁹ corpus documents skip
+    * and [[BloomFpp]] — broadcastable; beyond ~10⁹ corpus documents skip
     * the prefilter and run the plain anti-join of [[bloomNewDocs]]'s
     * resolve stage over everything. A zero-row sketch aggregate leaves the
     * bit buffer null, so an empty corpus gets a valid empty filter
@@ -393,12 +397,11 @@ object Dedup {
     */
   private def corpusBloom(
       corpus: DataFrame,
-      textCol: String,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+      textCol: String): org.apache.spark.util.sketch.BloomFilter = {
     val keys = corpus.select(contentFp(textCol).as("fp"))
     val n = keys.count()
-    if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, fpp)
-    else keys.stat.bloomFilter("fp", n, fpp)
+    if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, BloomFpp)
+    else keys.stat.bloomFilter("fp", n, BloomFpp)
   }
 
   /** Exact-membership dedup of a new crawl against a stored corpus with a
@@ -434,10 +437,9 @@ object Dedup {
       newCrawl: DataFrame,
       idCol: String,
       textCol: String,
-      corpus: DataFrame,
-      fpp: Double = 0.01): DataFrame = {
+      corpus: DataFrame): DataFrame = {
     val spark = newCrawl.sparkSession
-    val bf = corpusBloom(corpus, textCol, fpp)
+    val bf = corpusBloom(corpus, textCol)
     val bfB = spark.sparkContext.broadcast(bf)
     val mightContain =
       udf((fp: String) => bfB.value.mightContainString(fp))
@@ -456,7 +458,7 @@ object Dedup {
   }
 
   /** Similarity-graph edges by RARE-FEATURE linking: two documents are
-    * linked when they share at least `minShared` shingles that occur in
+    * linked when they share at least [[RareMinShared]] shingles that occur in
     * EXACTLY two documents corpus-wide (the df=2 inverted-index trick).
     * Scale shape: explode → one groupBy(shingle) whose output is bounded by
     * the rare-feature count, then one groupBy(pair) — never all-pairs, and
@@ -482,7 +484,6 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      minShared: Int = 2,
       hashShingles: Boolean = true
   ): DataFrame = {
     val spark = docs.sparkSession
@@ -504,7 +505,7 @@ object Dedup {
       .filter($"df" === 2 && $"src" =!= $"dst")
       .groupBy($"src", $"dst")
       .agg(count(lit(1)).as("n_shared"))
-      .filter($"n_shared" >= minShared)
+      .filter($"n_shared" >= RareMinShared)
       .select($"src", $"dst")
   }
 
@@ -624,7 +625,7 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      maxDist: Int = 3
+      maxDist: Int
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -653,7 +654,7 @@ object Dedup {
 
   /** Exact substring dedup (Lee et al., "Deduplicating Training Data Makes
     * Language Models Better", ACL 2022 — the ExactSubstr method): remove
-    * every k-word span whose text occurs elsewhere in the corpus, keeping
+    * every [[SubstrWords]]-word span whose text occurs elsewhere in the corpus, keeping
     * the globally-first occurrence ((doc_id, start)-minimal per gram).
     * Words covered by ANY removed duplicate window are dropped; the kept
     * text is the surviving words joined by single spaces (whitespace is
@@ -685,9 +686,9 @@ object Dedup {
   def exactSubstringDedup(
       docs: DataFrame,
       idCol: String,
-      textCol: String,
-      k: Int = 8
+      textCol: String
   ): DataFrame = {
+    val k = SubstrWords
     val base = docs.select(
       col(idCol).cast("long").as("doc_id"),
       filter(split(coalesce(col(textCol), lit("")), " +", -1),

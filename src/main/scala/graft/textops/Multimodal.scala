@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.util.Hashing
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, batch-shaped decode / feature-extract / resize /
+  * with typed metadata, row-local decode / feature-extract / resize /
   * frame-sample stages.
   *
   * UNCOMPRESSED formats decode for real: [[decodeBmp]] (24-bit BMP) and
@@ -16,9 +16,8 @@ import graft.util.Hashing
   * COMPRESSED codecs (png/jpeg/mp3/mp4) remain a DETERMINISTIC STUB
   * (clearly marked below): the container ships no codec libraries, so
   * `decodeStub` computes a byte histogram instead of real pixels for those.
-  * The surrounding plumbing — schema, binary payload handling,
-  * per-partition batching (the Scala analog of a pandas-batched UDF), and
-  * the partitioned write shape — is shared with the real decode path, so
+  * The surrounding plumbing — schema, binary payload handling, the
+  * row-local map and the partitioned write shape — is shared with the real decode path, so
   * swapping a real compressed codec in is a one-function change.
   */
 object Multimodal {
@@ -64,10 +63,13 @@ object Multimodal {
     MediaRow(i, kind, bytes, meta)
   }
 
+  /** Partitions of the synthetic [[mediaTable]] and [[decodableTable]]. */
+  final val MediaPartitions = 8
+
   /** Deterministic synthetic media table: payload bytes derive from the id. */
-  def mediaTable(spark: SparkSession, n: Long, partitions: Int = 8): Dataset[MediaRow] = {
+  def mediaTable(spark: SparkSession, n: Long): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map(i => mediaRow(i))
+    spark.range(0, n, 1, MediaPartitions).map(i => mediaRow(i))
   }
 
   final val FeatureDim = 16
@@ -367,58 +369,45 @@ object Multimodal {
   }
 
   /** Deterministic table of decodable BMP/WAV payloads. */
-  def decodableTable(spark: SparkSession, n: Long, partitions: Int = 8): Dataset[MediaRow] = {
+  def decodableTable(spark: SparkSession, n: Long): Dataset[MediaRow] = {
     import spark.implicits._
-    spark.range(0, n, 1, partitions).map(i => decodableRow(i))
+    spark.range(0, n, 1, MediaPartitions).map(i => decodableRow(i))
   }
 
-  /** Real batched decode over the binary column — same mapPartitions batch
-    * shape as [[extractFeatures]], but the payload is genuinely parsed
-    * (BMP pixel stats / WAV amplitude stats) by format sniffing on the
-    * leading magic, not the metadata column.
+  /** Real row-local decode over the binary column — same map shape as
+    * [[extractFeatures]], but the payload is genuinely parsed (BMP pixel
+    * stats / WAV amplitude stats) by format sniffing on the leading magic,
+    * not the metadata column.
     */
-  def decodeMedia(media: Dataset[MediaRow], batchSize: Int = 64): DataFrame = {
+  def decodeMedia(media: Dataset[MediaRow]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { m =>
-          val st =
-            if (m.bytes.length >= 2 && m.bytes(0) == 'B' && m.bytes(1) == 'M')
-              decodeBmp(m.bytes)
-            else decodeWav(m.bytes)
-          (m.mediaId, m.kind, m.bytes.length, st.width, st.height,
-            st.sumR, st.sumG, st.sumB, st.minLum, st.maxLum,
-            st.sampleRate, st.nChannels, st.nSamples,
-            st.ampMin, st.ampMax, st.sumAbs, st.zeroCross)
-        }
-      }
+    media.map { m =>
+      val st =
+        if (m.bytes.length >= 2 && m.bytes(0) == 'B' && m.bytes(1) == 'M')
+          decodeBmp(m.bytes)
+        else decodeWav(m.bytes)
+      (m.mediaId, m.kind, m.bytes.length, st.width, st.height,
+        st.sumR, st.sumG, st.sumB, st.minLum, st.maxLum,
+        st.sampleRate, st.nChannels, st.nSamples,
+        st.ampMin, st.ampMax, st.sumAbs, st.zeroCross)
     }.toDF("media_id", "kind", "n_bytes", "width", "height",
       "sum_r", "sum_g", "sum_b", "min_lum", "max_lum",
       "sample_rate", "n_channels", "n_samples",
       "amp_min", "amp_max", "sum_abs", "zero_cross")
   }
 
-  /** Batched feature extraction — the mapPartitions shape of a vectorized
-    * (pandas-style) UDF: per-partition setup once, rows processed in blocks
-    * of `batchSize`, feature column emitted alongside pruned metadata.
+  /** Row-local feature extraction: the stub decode, resize and frame
+    * sampling per row, feature column emitted alongside pruned metadata.
     */
-  def extractFeatures(
-      media: Dataset[MediaRow],
-      batchSize: Int = 64
-  ): DataFrame = {
+  def extractFeatures(media: Dataset[MediaRow]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.mapPartitions { it =>
-      // per-partition setup would open the codec once here
-      it.grouped(batchSize).flatMap { batch =>
-        batch.map { m =>
-          val feat = decodeStub(m.bytes)
-          val (rw, rh) = resizeDims(m.meta.width, m.meta.height, 256)
-          (m.mediaId, m.kind, m.bytes.length, feat, rw, rh,
-            frameOffsets(m.meta.durationMs, 4))
-        }
-      }
+    media.map { m =>
+      val feat = decodeStub(m.bytes)
+      val (rw, rh) = resizeDims(m.meta.width, m.meta.height, 256)
+      (m.mediaId, m.kind, m.bytes.length, feat, rw, rh,
+        frameOffsets(m.meta.durationMs, 4))
     }.toDF("media_id", "kind", "n_bytes", "features", "resized_w",
       "resized_h", "frame_offsets")
   }

@@ -18,6 +18,28 @@ import graft.util.Hashing
   */
 object Similarity {
 
+  /** Width of every embedding this object reads. */
+  val Dim = 64
+  /** Sign-LSH ANN ([[lshBucketsDf]], [[lshTopK]]): hyperplanes per table
+    * and tables per vector.
+    */
+  val LshBits = 8
+  val LshTables = 8
+  /** Embedding near-dup banding ([[embeddingNearDup]]). */
+  val NearDupBits = 8
+  val NearDupTables = 4
+  /** The IVF coarse quantizer: cells, Lloyd iterations, training-sample
+    * cap, and the cells [[ivfTopK]] probes per query.
+    */
+  val Nlist = 16
+  val KmeansIters = 5
+  val MaxTrain = 4096
+  val IvfProbes = 4
+  /** Cosine at or above which two embeddings are duplicates
+    * ([[semanticDedup]], [[embeddingNearDup]]).
+    */
+  val DupCosine = 0.95
+
   /** Cosine similarity between two float-array columns, computed in double.
     * Since round 3 this is the native codegen Catalyst expression
     * [[graft.functions.CosineSim]] — one fused generated loop instead of
@@ -56,7 +78,7 @@ object Similarity {
   def bruteForceTopK(
       embeddings: DataFrame, // (vec_id, embedding)
       queryIds: Seq[Long],
-      k: Int = 3
+      k: Int
   ): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -73,11 +95,11 @@ object Similarity {
       .select($"query_id", $"vec_id".as("neighbor_id"), $"sim", $"rank")
   }
 
-  /** Deterministic random hyperplanes for table `t`: nBits × dim sign matrix
-    * from hashing (each table gets an independent set).
+  /** Deterministic random hyperplanes for table `t`: nBits × [[Dim]] sign
+    * matrix from hashing (each table gets an independent set).
     */
-  def hyperplanes(nBits: Int, dim: Int, table: Int = 0): Array[Array[Double]] =
-    Array.tabulate(nBits, dim) { (b, d) =>
+  def hyperplanes(nBits: Int, table: Int): Array[Array[Double]] =
+    Array.tabulate(nBits, Dim) { (b, d) =>
       // centered uniform from splitmix — adequate for sign-LSH
       (Hashing.unit(Hashing.mix(0x51a7e5L ^ (table.toLong << 32),
         (b * 1315 + d).toLong)) - 0.5)
@@ -119,7 +141,7 @@ object Similarity {
     tables.indices.map(t => (t << 24) | signBucketArr(a, tables(t)))
   }
 
-  /** Multi-table LSH ANN: each vector lands in `nTables` sign buckets;
+  /** Multi-table LSH ANN: each vector lands in [[LshTables]] sign buckets;
     * queries search the union of their buckets. Output
     * (query_id, neighbor_id, sim, rank).
     *
@@ -134,16 +156,11 @@ object Similarity {
     * dump it and re-derive candidate generation + scoring + ranking in
     * plain SQL over it (the {OUT}-dump pattern).
     */
-  def lshBucketsDf(
-      embeddings: DataFrame,
-      nBits: Int = 8,
-      dim: Int = 64,
-      nTables: Int = 8
-  ): DataFrame = {
+  def lshBucketsDf(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val tables = spark.sparkContext.broadcast(
-      Array.tabulate(nTables)(t => hyperplanes(nBits, dim, t)))
+      Array.tabulate(LshTables)(t => hyperplanes(LshBits, t)))
     val bucketsUdf = udf { (emb: Seq[Float]) =>
       signBuckets(emb, tables.value)
     }
@@ -153,14 +170,11 @@ object Similarity {
   def lshTopK(
       embeddings: DataFrame, // (vec_id, embedding)
       queryIds: Seq[Long],
-      k: Int = 3,
-      nBits: Int = 8,
-      dim: Int = 64,
-      nTables: Int = 8
+      k: Int
   ): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val bucketed = lshBucketsDf(embeddings, nBits, dim, nTables)
+    val bucketed = lshBucketsDf(embeddings)
     val queries = bucketed
       .filter($"vec_id".isin(queryIds: _*))
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
@@ -178,35 +192,31 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN: a deterministic Lloyd's k-means coarse
-    * quantizer partitions the corpus into nlist cells; queries search only
+    * quantizer partitions the corpus into [[Nlist]] cells; queries search only
     * their nprobe nearest cells. The second scale path beside sign-LSH —
     * better recall/cost trade when the data has cluster structure.
     *
     * Scale shape: quantizer training reads a bounded hash-capped sample
-    * (distributed top-K, driver memory O(maxTrain)); assignment is a
+    * (distributed top-K, driver memory O(MaxTrain)); assignment is a
     * broadcast-centroid narrow map; search shuffles once on cell id.
     * Deterministic: sample and initial centroids are hash-picked, fixed
     * iteration count, ties broken by cell index.
     */
   def kmeansCentroids(
-      embeddings: DataFrame, // (vec_id, embedding)
-      nlist: Int = 16,
-      iters: Int = 5,
-      dim: Int = 64,
-      maxTrain: Int = 4096
+      embeddings: DataFrame // (vec_id, embedding)
   ): Array[Array[Double]] = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // Quantizer training set: deterministic hash-capped sample. orderBy+limit
     // plans as TakeOrderedAndProject — each partition keeps its local
-    // top-maxTrain by xxhash64(vec_id) and the driver merges, so driver
-    // memory is O(maxTrain) REGARDLESS of corpus size (the round-1 version
+    // top-MaxTrain by xxhash64(vec_id) and the driver merges, so driver
+    // memory is O(MaxTrain) REGARDLESS of corpus size (the round-1 version
     // collected the whole table — a driver OOM at real scale). The hash
     // order is a uniform pseudo-random permutation, so the cap is an
     // unbiased sample; ties (none for distinct ids) break by vec_id.
     val sample = embeddings.select($"vec_id", $"embedding")
       .orderBy(xxhash64($"vec_id").asc, $"vec_id".asc)
-      .limit(maxTrain)
+      .limit(MaxTrain)
       .as[(Long, Seq[Float])].collect()
       .sortBy(_._1)
       // primitive arrays once — the Lloyd iterations below do
@@ -214,7 +224,7 @@ object Similarity {
       // in the inner loop)
       .map { case (id, v) => (id, toArr(v)) }
     if (sample.isEmpty) return Array.empty // empty corpus → no quantizer
-    var centroids = Array.tabulate(nlist) { k =>
+    var centroids = Array.tabulate(Nlist) { k =>
       val idx = (Hashing.mix(0x1f5eedL, k.toLong) & Long.MaxValue) %
         sample.length
       sample(idx.toInt)._2.map(_.toDouble)
@@ -235,17 +245,17 @@ object Similarity {
       best
     }
     var it = 0
-    while (it < iters) {
-      val sums = Array.fill(nlist)(new Array[Double](dim))
-      val counts = new Array[Long](nlist)
+    while (it < KmeansIters) {
+      val sums = Array.fill(Nlist)(new Array[Double](Dim))
+      val counts = new Array[Long](Nlist)
       sample.foreach { case (_, v) =>
         val k = nearest(v, centroids)
         counts(k) += 1
         var i = 0
-        val n = math.min(dim, v.length)
+        val n = math.min(Dim, v.length)
         while (i < n) { sums(k)(i) += v(i); i += 1 }
       }
-      centroids = Array.tabulate(nlist) { k =>
+      centroids = Array.tabulate(Nlist) { k =>
         if (counts(k) == 0) centroids(k)
         else sums(k).map(_ / counts(k))
       }
@@ -264,13 +274,11 @@ object Similarity {
   def ivfAssignments(
       embeddings: DataFrame,
       queryIds: Seq[Long],
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      dim: Int = 64
+      nprobe: Int
   ): (DataFrame, DataFrame) = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val trained = kmeansCentroids(embeddings, nlist, 5, dim)
+    val trained = kmeansCentroids(embeddings)
     if (trained.isEmpty) { // empty corpus: empty frames, stable schemas
       val cells = embeddings.limit(0)
         .select($"vec_id", $"embedding", lit(0).as("cell"))
@@ -318,14 +326,11 @@ object Similarity {
   def ivfTopK(
       embeddings: DataFrame,
       queryIds: Seq[Long],
-      k: Int = 3,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      dim: Int = 64
+      k: Int
   ): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val (cells, probes) = ivfAssignments(embeddings, queryIds, nlist, nprobe, dim)
+    val (cells, probes) = ivfAssignments(embeddings, queryIds, IvfProbes)
     val queries = probes
       .join(embeddings.select($"vec_id".as("query_id"),
         $"embedding".as("q_emb")), "query_id")
@@ -345,9 +350,8 @@ object Similarity {
     * exposed so the oracle can dump it and re-derive capping, cosine
     * verification and the component pick in plain SQL ({OUT} pattern).
     */
-  def semanticCells(
-      embeddings: DataFrame, nlist: Int = 16, dim: Int = 64): DataFrame =
-    ivfAssignments(embeddings, Seq.empty, nlist, 1, dim)._1
+  def semanticCells(embeddings: DataFrame): DataFrame =
+    ivfAssignments(embeddings, Seq.empty, 1)._1
 
   /** SemDeDup-style semantic dedup (Abbas et al., "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication", arXiv
@@ -360,7 +364,7 @@ object Similarity {
     * paper replaces never exists here either; (2) intra-cell candidates
     * through the same BoundedEnds-capped bucket stage as every dedup path
     * (cap observable on `graft.dedup.semantic_cells`); (3) exact cosine
-    * verification at `threshold`; (4) connected components over verified
+    * verification at [[DupCosine]]; (4) connected components over verified
     * edges with keep-first (min-id) canonical pick — the same skew-guarded
     * CC engine as KG canonicalization.
     *
@@ -370,12 +374,7 @@ object Similarity {
     * cache contract of [[TextOps.ngramLogFreqScore]]) — quantizer TRAINING
     * runs once per call regardless (driver-side on a bounded sample).
     */
-  def semanticDedup(
-      embeddings: DataFrame,
-      threshold: Double = 0.95,
-      nlist: Int = 16,
-      dim: Int = 64
-  ): DataFrame = {
+  def semanticDedup(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     // The cell-assignment stage feeds FOUR consumers (banding, both sides
@@ -386,7 +385,7 @@ object Similarity {
     // finally. The returned frame re-derives cells ONCE lazily at
     // consumption (narrow scan + assignment UDF, no shuffle), so the total
     // is 2 corpus passes instead of 5.
-    val cells = semanticCells(embeddings, nlist, dim)
+    val cells = semanticCells(embeddings)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val banded = cells.select(lit(0).as("band"),
@@ -398,7 +397,7 @@ object Similarity {
         .join(cells.select($"vec_id".as("id_b"), $"embedding".as("emb_b")),
           "id_b")
         .withColumn("sim", round(cosine($"emb_a", $"emb_b"), 6))
-        .filter($"sim" >= threshold)
+        .filter($"sim" >= DupCosine)
         .select($"id_a".as("src"), $"id_b".as("dst"))
         .localCheckpoint(true)
       // CC materializes its labels internally (iterative, checkpointed per
@@ -418,7 +417,7 @@ object Similarity {
 
   /** Embedding-cosine near-duplicate pairs via multi-table LSH buckets (the
     * 5th dedup modality): pairs sharing any table's sign bucket with
-    * sim >= threshold.
+    * sim >= [[DupCosine]].
     *
     * Candidates flow through [[Dedup.cappedPairs]] — the same MaxBucket-
     * capped, observably-truncating bucket stage as the minhash/simhash
@@ -432,17 +431,11 @@ object Similarity {
     * trade: a twin at cos≈1 shares every table's bucket, so it gets
     * nTables independent chances to land in an un-truncated slice.
     */
-  def embeddingNearDup(
-      embeddings: DataFrame,
-      threshold: Double = 0.95,
-      nBits: Int = 8,
-      dim: Int = 64,
-      nTables: Int = 4
-  ): DataFrame = {
+  def embeddingNearDup(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val tables = spark.sparkContext.broadcast(
-      Array.tabulate(nTables)(t => hyperplanes(nBits, dim, t)))
+      Array.tabulate(NearDupTables)(t => hyperplanes(NearDupBits, t)))
     val bucketsUdf = udf { (emb: Seq[Float]) =>
       signBuckets(emb, tables.value)
     }
@@ -458,7 +451,7 @@ object Similarity {
       .join(embeddings.select($"vec_id".as("id_b"),
         $"embedding".as("emb_b")), "id_b")
       .withColumn("sim", round(cosine($"emb_a", $"emb_b"), 6))
-      .filter($"sim" >= threshold)
+      .filter($"sim" >= DupCosine)
       .select($"id_a", $"id_b", $"sim")
   }
 }

@@ -628,18 +628,23 @@ object TextOps {
        |  CAST(sum(nw) AS BIGINT) AS sum_words
        |FROM ex GROUP BY lang, q // 100000""".stripMargin
 
+  /** Distinct documents a line must occur in to be boilerplate, in
+    * [[boilerplateLineRemoval]] and its SQL mirror.
+    */
+  val BoilerplateMinDocs = 3
+
   /** Boilerplate line removal (the CCNet/RefinedWeb line-level cleanup:
     * Wenzek et al., "CCNet", 2020 §3 deduplicates at paragraph/line level):
-    * a non-blank line occurring in at least `minDocs` DISTINCT documents is
-    * boilerplate (nav bars, cookie banners, copyright footers) and is
-    * removed from EVERY document — unlike [[graft.textops.Dedup
+    * a non-blank line occurring in at least [[BoilerplateMinDocs]] DISTINCT
+    * documents is boilerplate (nav bars, cookie banners, copyright footers)
+    * and is removed from EVERY document — unlike [[graft.textops.Dedup
     * .exactSubstringDedup]]'s keep-first, boilerplate keeps no copy.
     * Kept lines are rejoined with newlines in original order.
     *
     * Scale shape: line explode is narrow; the hot-line table is one
     * groupBy(line) with a two-phase distinct-doc count (partial
     * aggregation per partition); the membership join back is the only
-    * wide join and its build side (lines above minDocs) is tiny relative
+    * wide join and its build side (the hot lines) is tiny relative
     * to the corpus, broadcastable at any realistic threshold.
     *
     * Returns (doc_id, n_lines, n_removed, kept_text).
@@ -647,8 +652,7 @@ object TextOps {
   def boilerplateLineRemoval(
       docs: DataFrame,
       idCol: String,
-      textCol: String,
-      minDocs: Int = 3): DataFrame = {
+      textCol: String): DataFrame = {
     val base = docs.select(col(idCol).cast("long").as("doc_id"),
       split(coalesce(col(textCol), lit("")), "\n", -1).as("ls"))
     val pl = base.select(col("doc_id"),
@@ -656,7 +660,7 @@ object TextOps {
     val hot = pl.filter(length(trim(col("line"))) > 0)
       .groupBy("line")
       .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= minDocs)
+      .filter(col("nd") >= BoilerplateMinDocs)
       .select(col("line"), lit(true).as("is_boiler"))
     val marked = pl.join(hot, Seq("line"), "left")
     val ka = marked.filter(col("is_boiler").isNull)
@@ -678,7 +682,7 @@ object TextOps {
   /** The DuckDB mirror of [[boilerplateLineRemoval]] over a
     * (doc_id, text) table, kept text reported as md5.
     */
-  def boilerplateLineRemovalSql(table: String, minDocs: Int = 3): String =
+  def boilerplateLineRemovalSql(table: String): String =
     s"""WITH ls AS (SELECT doc_id,
        |    string_split(coalesce(text, ''), chr(10)) AS l FROM $table),
        |pl AS (SELECT doc_id,
@@ -687,7 +691,7 @@ object TextOps {
        |  FROM ls),
        |plf AS (SELECT doc_id, s.p AS p, s.line AS line FROM pl),
        |hot AS (SELECT line FROM plf WHERE len(trim(line)) > 0
-       |        GROUP BY line HAVING count(DISTINCT doc_id) >= $minDocs),
+       |        GROUP BY line HAVING count(DISTINCT doc_id) >= $BoilerplateMinDocs),
        |kept AS (SELECT plf.doc_id AS doc_id, plf.p AS p, plf.line AS line
        |  FROM plf LEFT JOIN hot ON hot.line = plf.line
        |  WHERE hot.line IS NULL),
@@ -704,6 +708,18 @@ object TextOps {
 
   // ---- composed quality-filter pipeline ------------------------------------
 
+  /** The keep thresholds of [[qualityFilterPipeline]] and
+    * [[qualityFilterPipelineSql]]: allowed languages, word-count bounds,
+    * the quality floor and the Gopher §A1.1 repetition caps.
+    */
+  val AllowedLangs: Seq[String] = Seq("en")
+  val MinWords = 25L
+  val MaxWords = 100000L
+  val MinQualityX1e6 = 660000L
+  val MaxDupLineX1e6 = 300000L
+  val MaxTop2X1e6 = 200000L
+  val MaxTop3X1e6 = 180000L
+
   /** C4/Gopher-style composed keep/drop filter — the shape a production
     * pre-training cleanup run has: ALL per-document signals (language id,
     * word count, composite quality, repetition, URL blocklist) computed in
@@ -715,21 +731,14 @@ object TextOps {
     * [[urlBlocklistVerdict]]'s broadcast-join form as the n_blocked input).
     *
     * Rule order is fixed (lang, word_count, quality, repetition, blocklist)
-    * so the verdict is engine-deterministic; thresholds default to the
-    * Gopher §A1.1 repetition caps.
+    * so the verdict is engine-deterministic; the thresholds below are the
+    * Gopher §A1.1 caps, shared with [[qualityFilterPipelineSql]].
     */
   def qualityFilterPipeline(
       docs: DataFrame,
       idCol: String,
       textCol: String,
       blockedDomains: Seq[String],
-      allowedLangs: Seq[String] = Seq("en"),
-      minWords: Long = 25L,
-      maxWords: Long = 100000L,
-      minQualityX1e6: Long = 660000L,
-      maxDupLineX1e6: Long = 300000L,
-      maxTop2X1e6: Long = 200000L,
-      maxTop3X1e6: Long = 180000L,
       keepText: Boolean = false,
       carryCol: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
@@ -768,37 +777,31 @@ object TextOps {
       .select(Seq(col("doc_id"), col("lang"), col("n_words"),
         col("quality_x1e6"), col("dup_line_frac_x1e6"),
         col("top2_frac_x1e6"), col("top3_frac_x1e6"), col("n_blocked"),
-        when(!col("lang").isInCollection(allowedLangs), "drop:lang")
-          .when(col("n_words") < minWords || col("n_words") > maxWords,
+        when(!col("lang").isInCollection(AllowedLangs), "drop:lang")
+          .when(col("n_words") < MinWords || col("n_words") > MaxWords,
             "drop:word_count")
-          .when(col("quality_x1e6") < minQualityX1e6, "drop:quality")
-          .when(col("dup_line_frac_x1e6") > maxDupLineX1e6 ||
-            col("top2_frac_x1e6") > maxTop2X1e6 ||
-            col("top3_frac_x1e6") > maxTop3X1e6, "drop:repetition")
+          .when(col("quality_x1e6") < MinQualityX1e6, "drop:quality")
+          .when(col("dup_line_frac_x1e6") > MaxDupLineX1e6 ||
+            col("top2_frac_x1e6") > MaxTop2X1e6 ||
+            col("top3_frac_x1e6") > MaxTop3X1e6, "drop:repetition")
           .when(col("n_blocked") > 0, "drop:blocklist")
           .otherwise("keep").as("verdict")) ++ extraCols: _*)
   }
 
-  /** The DuckDB mirror of [[qualityFilterPipeline]], composed from the SAME
-    * generated sub-mirrors ([[langIdSql]], [[qualityScoreX1e6Sql]],
-    * [[repetitionSignalsSql]], [[urlHostPattern]]) so no threshold or
-    * pattern can drift between engines. `table` must have (doc_id, text).
+  /** The DuckDB mirror of [[qualityFilterPipeline]]. It reads the same
+    * threshold constants ([[AllowedLangs]], [[MinWords]] …
+    * [[MaxTop3X1e6]]) and is composed from the same generated sub-mirrors
+    * ([[langIdSql]], [[qualityScoreX1e6Sql]], [[repetitionSignalsSql]],
+    * [[urlHostPattern]]), so no threshold or pattern can drift between
+    * engines. `table` must have (doc_id, text).
     */
   def qualityFilterPipelineSql(
       table: String,
-      blockedDomains: Seq[String],
-      allowedLangs: Seq[String] = Seq("en"),
-      minWords: Long = 25L,
-      maxWords: Long = 100000L,
-      minQualityX1e6: Long = 660000L,
-      maxDupLineX1e6: Long = 300000L,
-      maxTop2X1e6: Long = 200000L,
-      maxTop3X1e6: Long = 180000L): String = {
-    // empty-list guards keep the two engines' contracts symmetric (Spark's
-    // isInCollection(empty) is simply never-true): no blocked domains →
-    // n_blocked is 0; no allowed langs → every doc is drop:lang. Without
-    // these, `IN ()` is a DuckDB syntax error while the Spark side runs.
-    val langList = allowedLangs.map(l => s"'$l'").mkString(", ")
+      blockedDomains: Seq[String]): String = {
+    // the empty-blocklist guard keeps the two engines' contracts symmetric
+    // (Spark's isInCollection(empty) is simply never-true, so n_blocked is
+    // 0); without it, `IN ()` is a DuckDB syntax error while Spark runs.
+    val langList = AllowedLangs.map(l => s"'$l'").mkString(", ")
     val domList = blockedDomains
       .map(d => "'" + d.replace("'", "''") + "'").mkString(", ")
     val pat = urlHostPattern.replace("'", "''")
@@ -807,8 +810,6 @@ object TextOps {
       else
         s"""CAST(len(list_filter(regexp_extract_all(coalesce(text, ''), '$pat', 1),
            |    h -> h IN ($domList))) AS BIGINT)""".stripMargin
-    val langDropCond =
-      if (allowedLangs.isEmpty) "TRUE" else s"s.lang NOT IN ($langList)"
     s"""WITH rep AS (${repetitionSignalsSql(table)}),
        |sig AS (SELECT doc_id,
        |  ${langIdSql("text")} AS lang,
@@ -820,13 +821,13 @@ object TextOps {
        |SELECT s.doc_id, s.lang, s.n_words, s.quality_x1e6,
        |  r.dup_line_frac_x1e6, r.top2_frac_x1e6, r.top3_frac_x1e6,
        |  s.n_blocked,
-       |  CASE WHEN $langDropCond THEN 'drop:lang'
-       |       WHEN s.n_words < $minWords OR s.n_words > $maxWords
+       |  CASE WHEN s.lang NOT IN ($langList) THEN 'drop:lang'
+       |       WHEN s.n_words < $MinWords OR s.n_words > $MaxWords
        |         THEN 'drop:word_count'
-       |       WHEN s.quality_x1e6 < $minQualityX1e6 THEN 'drop:quality'
-       |       WHEN r.dup_line_frac_x1e6 > $maxDupLineX1e6
-       |         OR r.top2_frac_x1e6 > $maxTop2X1e6
-       |         OR r.top3_frac_x1e6 > $maxTop3X1e6 THEN 'drop:repetition'
+       |       WHEN s.quality_x1e6 < $MinQualityX1e6 THEN 'drop:quality'
+       |       WHEN r.dup_line_frac_x1e6 > $MaxDupLineX1e6
+       |         OR r.top2_frac_x1e6 > $MaxTop2X1e6
+       |         OR r.top3_frac_x1e6 > $MaxTop3X1e6 THEN 'drop:repetition'
        |       WHEN s.n_blocked > 0 THEN 'drop:blocklist'
        |       ELSE 'keep' END AS verdict
        |FROM sig s JOIN rep r ON s.doc_id = r.doc_id""".stripMargin
@@ -1009,8 +1010,8 @@ object TextOps {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      chunkTokens: Int = 512,
-      overlapTokens: Int = 64,
+      chunkTokens: Int,
+      overlapTokens: Int,
       carryCols: Seq[String] = Nil): DataFrame = {
     require(chunkTokens > overlapTokens && overlapTokens >= 0,
       "chunkDocuments requires chunkTokens > overlapTokens >= 0")
@@ -1248,7 +1249,7 @@ object TextOps {
       docs: DataFrame,
       idCol: String,
       domainCol: String,
-      maxEpochs: Int = 4): DataFrame = {
+      maxEpochs: Int): DataFrame = {
     require(maxEpochs >= 1, s"maxEpochs must be >= 1, got $maxEpochs")
     val scale = 1048576L
     val nonNull = docs.filter(col(domainCol).isNotNull)
@@ -1281,8 +1282,7 @@ object TextOps {
     * matching the guarded explode).
     */
   def domainEpochSampleSql(
-      table: String, domainCol: String = "source",
-      maxEpochs: Int = 4): String =
+      table: String, domainCol: String, maxEpochs: Int): String =
     s"""WITH c AS (SELECT $domainCol, count(*) AS nd FROM $table
        |           WHERE $domainCol IS NOT NULL GROUP BY $domainCol),
        |m AS (SELECT max(nd) AS nmax FROM c),
@@ -1300,10 +1300,13 @@ object TextOps {
        |SELECT doc_id, $domainCol, CAST(k AS BIGINT) AS epoch
        |FROM d, LATERAL unnest(generate_series(1, n)) u(k)""".stripMargin
 
+  /** md5 buckets of [[corpusShuffle]] and [[corpusShuffleSql]]. */
+  val ShuffleBuckets = 8
+
   /** Deterministic training-order shuffle: a reproducible pseudo-random
     * global permutation of the corpus (the "shuffle once, read in order"
     * step before sequence packing / epoch serving) WITHOUT a global total
-    * sort. Docs hash into `buckets` md5 buckets; each bucket is sorted
+    * sort. Docs hash into [[ShuffleBuckets]] md5 buckets; each bucket is sorted
     * independently by (full md5, id) and positions are made global by
     * adding per-bucket offsets from a prefix sum over the tiny bucket
     * histogram. Readers consume buckets in order — the permutation is a
@@ -1312,18 +1315,16 @@ object TextOps {
     *
     * Scale shape: this is hash-range terasort made explicit — B
     * independent O(N/B log N/B) sorts instead of one global
-    * range-partitioned sort; size `buckets` so N/B rows fit a task
+    * range-partitioned sort; size [[ShuffleBuckets]] so N/B rows fit a task
     * (B ≈ N / 10^6 at 100 TB). The per-bucket rank is a window whose
     * partition IS the bucket — each task buffers exactly one bucket,
     * which is what B controls. The offset prefix sum runs on B rows
     * (single-partition window on the histogram — B is cluster-scale
     * metadata, not data).
     */
-  def corpusShuffle(
-      docs: DataFrame, idCol: String, buckets: Int = 64): DataFrame = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+  def corpusShuffle(docs: DataFrame, idCol: String): DataFrame = {
     val base = docs.select(col(idCol).as("doc_id"))
-      .withColumn("bucket", md5Bucket(col(idCol), buckets.toLong))
+      .withColumn("bucket", md5Bucket(col(idCol), ShuffleBuckets.toLong))
       .withColumn("h", md5(col(idCol).cast("string")))
     val wIn = org.apache.spark.sql.expressions.Window
       .partitionBy(col("bucket")).orderBy(col("h").asc, col("doc_id").asc)
@@ -1341,11 +1342,11 @@ object TextOps {
   }
 
   /** DuckDB mirror of [[corpusShuffle]] over a (doc_id) table. */
-  def corpusShuffleSql(table: String, buckets: Int = 64): String =
+  def corpusShuffleSql(table: String): String =
     s"""WITH b AS (
        |  SELECT doc_id,
        |    CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-       |      AS BIGINT) % $buckets AS bucket,
+       |      AS BIGINT) % $ShuffleBuckets AS bucket,
        |    md5(CAST(doc_id AS VARCHAR)) AS h
        |  FROM $table),
        |p AS (
@@ -1417,10 +1418,10 @@ object TextOps {
 
   /** Split fractions as (label, percent), cumulative over a 100-bucket
     * md5 hash of the id — the SINGLE SOURCE OF TRUTH for [[hashSplit]]
-    * and [[hashSplitSql]]. Percents must sum to 100 (every row gets
-    * exactly one label).
+    * and [[hashSplitSql]]. Percents sum to 100 (every row gets exactly
+    * one label).
     */
-  val defaultSplits: Seq[(String, Int)] =
+  val Splits: Seq[(String, Int)] =
     Seq("train" -> 80, "val" -> 10, "test" -> 10)
 
   /** Assign every document a deterministic split label by hashing its id
@@ -1430,16 +1431,11 @@ object TextOps {
     * executor saw it, unlike randomSplit). Narrow: runs inside the scan
     * stage, zero shuffle at any corpus size.
     */
-  def hashSplit(
-      docs: DataFrame,
-      idCol: String,
-      splits: Seq[(String, Int)] = defaultSplits): DataFrame = {
-    require(splits.map(_._2).sum == 100,
-      s"split percents must sum to 100, got $splits")
+  def hashSplit(docs: DataFrame, idCol: String): DataFrame = {
     val b = md5Bucket(col(idCol), 100L)
-    val cum = splits.scanLeft(0)(_ + _._2).tail
-    val labeled = splits.zip(cum).dropRight(1)
-      .foldRight(lit(splits.last._1)) { case (((label, _), hi), acc) =>
+    val cum = Splits.scanLeft(0)(_ + _._2).tail
+    val labeled = Splits.zip(cum).dropRight(1)
+      .foldRight(lit(Splits.last._1)) { case (((label, _), hi), acc) =>
         when(b < hi, lit(label)).otherwise(acc)
       }
     docs.withColumn("split", labeled)
@@ -1448,17 +1444,16 @@ object TextOps {
   /** DuckDB mirror of the [[hashSplit]] label expression over `idExpr`,
     * generated from the same split table.
     */
-  def hashSplitSql(idExpr: String,
-      splits: Seq[(String, Int)] = defaultSplits): String = {
+  def hashSplitSql(idExpr: String): String = {
     val bucket = s"CAST(('0x' || substr(md5(CAST($idExpr AS VARCHAR)), 1, 8))" +
       s" AS BIGINT) % 100"
-    val cum = splits.scanLeft(0)(_ + _._2).tail
-    val whens = splits.zip(cum).dropRight(1)
+    val cum = Splits.scanLeft(0)(_ + _._2).tail
+    val whens = Splits.zip(cum).dropRight(1)
       .map { case ((label, _), hi) =>
         s"WHEN $bucket < $hi THEN ${sqlLit(label)}"
       }
       .mkString(" ")
-    s"CASE $whens ELSE ${sqlLit(splits.last._1)} END"
+    s"CASE $whens ELSE ${sqlLit(Splits.last._1)} END"
   }
 
   // ---- per-domain document cap (C4/RefinedWeb host quota) -----------------

@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * one-merge-per-round merge-for-merge, count-for-count
   * (TokenizerSpec pins it on adversarial overlapping/tied fixtures and
   * randomized small-alphabet corpora). Early stop when the best pair
-  * drops below `minCount` is unchanged.
+  * drops below [[BpeMinCount]] is unchanged.
   *
   * Symbols are UTF-16 code-unit strings (`split(word, "")` on both the
   * distributed and local paths — identical by construction); tokenization
@@ -82,13 +82,14 @@ object Tokenizer {
     out.result()
   }
 
+  /** A pair is merged only while its count reaches this. */
+  val BpeMinCount = 2L
+
   /** Sequential reference trainer (plain Scala, no Spark): the single
     * source of truth the distributed trainer is checked against and the
     * generated-VALUES oracle is built from.
     */
-  def bpeTrainLocal(
-      texts: Seq[String], numMerges: Int,
-      minCount: Long = 2L): Seq[Merge] = {
+  def bpeTrainLocal(texts: Seq[String], numMerges: Int): Seq[Merge] = {
     var vocab: Map[List[String], Long] = texts.flatMap(wordsOf)
       .groupBy(identity).map { case (w, ws) =>
         w.split("").toList -> ws.size.toLong
@@ -103,7 +104,7 @@ object Tokenizer {
       val best = counts.toSeq
         .sortBy { case ((l, r), c) => (-c, l, r) }.headOption
       best match {
-        case Some(((l, r), c)) if c >= minCount =>
+        case Some(((l, r), c)) if c >= BpeMinCount =>
           merges += Merge(ix, l, r, c)
           vocab = vocab.groupMapReduce(kv => applyMerge(kv._1, l, r))(_._2)(_ + _)
           ix += 1
@@ -119,9 +120,7 @@ object Tokenizer {
     * the per-round argmax is a bounded SINGLE-ROW collect (the IVF
     * quantizer-sample stance on driver-side data).
     */
-  def bpeTrain(
-      docs: DataFrame, textCol: String, numMerges: Int,
-      minCount: Long = 2L): DataFrame = {
+  def bpeTrain(docs: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -178,7 +177,7 @@ object Tokenizer {
           while (!stop && i < rows.length && ix < numMerges) {
             val (l, r, c) = rows(i)
             val created = l + r
-            if (c < minCount) { rdone = true; stop = true }
+            if (c < BpeMinCount) { rdone = true; stop = true }
             else if (c <= cLow && rows.length == topK) stop = true
             else if (used.nonEmpty &&
               (used(l) || used(r) || used(created))) stop = true
@@ -234,7 +233,7 @@ object Tokenizer {
           .localCheckpoint(true)
       } else if (!done) {
         // defensive: an empty batch with work remaining cannot make
-        // progress (first candidate is always selected when >= minCount)
+        // progress (first candidate is always selected when >= BpeMinCount)
         done = true
       }
     }
@@ -288,7 +287,7 @@ object Tokenizer {
     */
   def ngramCounts(
       docs: DataFrame, textCol: String, n: Int,
-      minCount: Long = 2L): DataFrame = {
+      minCount: Long): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -326,7 +325,7 @@ object Tokenizer {
     */
   def ngramCountsSql(
       table: String, textExpr: String, n: Int,
-      minCount: Long = 2L): String =
+      minCount: Long): String =
     s"""WITH w AS (
        |  SELECT ${TextOps.tokenArraySql(textExpr)} AS ws
        |  FROM $table),
@@ -342,8 +341,8 @@ object Tokenizer {
     * generated by running the sequential reference at SQL-build time —
     * the distributed-equals-sequential contract, checked as data.
     */
-  def bpeMergesSql(numMerges: Int, minCount: Long = 2L): String = {
-    val rows = bpeTrainLocal(fixtureCorpus, numMerges, minCount)
+  def bpeMergesSql(numMerges: Int): String = {
+    val rows = bpeTrainLocal(fixtureCorpus, numMerges)
       .map(m => s"(${m.ix}, ${TextOps.sqlLit(m.left)}, " +
         s"${TextOps.sqlLit(m.right)}, ${m.pairCount})")
       .mkString(",\n  ")

@@ -50,6 +50,9 @@ object WebGraph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
   }
 
+  /** Power steps of the web_host_rank query and of [[hostRankSql]]. */
+  val RankIterations = 3
+
   /** Damped PageRank over a (src, dst) edge table, `iterations` synchronous
     * power-method steps, all integer:
     *
@@ -79,9 +82,7 @@ object WebGraph {
     * convergence) the lazy form is super-linear while the checkpointed
     * form stays linear in iterations.
     */
-  def hostRank(
-      edges0: DataFrame,
-      iterations: Int = 3): DataFrame = {
+  def hostRank(edges0: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val edges = edges0.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
@@ -143,11 +144,11 @@ object WebGraph {
   }
 
   /** DuckDB mirror of [[hostGraphEdges]] + [[hostRank]] over a
-    * (source, text) table — generated from the same constants and the same
-    * iteration count, one CTE layer per power step.
+    * (source, text) table — generated from the same constants and
+    * [[RankIterations]] power steps, one CTE layer per step.
     */
-  def hostRankSql(table: String, iterations: Int = 3): String = {
-    val iters = (1 to iterations).map { i =>
+  def hostRankSql(table: String): String = {
+    val iters = (1 to RankIterations).map { i =>
       s"""r$i AS (
          |  SELECT n.host,
          |    CAST($rankBase + ($dampPct * coalesce(s.m, 0)) // 100 AS BIGINT)
@@ -164,7 +165,7 @@ object WebGraph {
        |r0 AS (SELECT host, CAST($rankScale AS BIGINT) AS rank_x1e6
        |       FROM nodes),
        |$iters
-       |SELECT host, rank_x1e6 FROM r$iterations""".stripMargin
+       |SELECT host, rank_x1e6 FROM r$RankIterations""".stripMargin
   }
 
   /** Deterministic 60-bit host id: the leading 15 hex digits of md5(host),
@@ -220,13 +221,13 @@ object WebGraph {
   }
 
   /** DuckDB mirror of [[hostGraphEdges]] + [[hostComponents]] over a
-    * (srcCol, text) table: recursive-CTE transitive closure (the
+    * (host, text) table: recursive-CTE transitive closure (the
     * [[graft.textops.Dedup.clusterCanonical]] oracle pattern) with the
     * same md5 id space — a full cross-engine check of the string-graph →
     * CC path.
     */
-  def hostComponentsSql(table: String, srcCol: String = "source"): String =
-    s"""WITH RECURSIVE ${edgeCtes(table, srcCol)},
+  def hostComponentsSql(table: String): String =
+    s"""WITH RECURSIVE ${edgeCtes(table, "host")},
        |sym AS (SELECT src, dst FROM ex WHERE src != dst
        |        UNION SELECT dst, src FROM ex WHERE src != dst),
        |reach(v, u) AS (
@@ -316,8 +317,8 @@ object WebGraph {
     * DIFFERENT enumeration strategy from the degree-ordered Spark plan, so
     * the oracle checks the count semantics, not the plan.
     */
-  def triangleCountsSql(table: String, srcCol: String = "source"): String =
-    s"""WITH ${edgeCtes(table, srcCol)},
+  def triangleCountsSql(table: String): String =
+    s"""WITH ${edgeCtes(table)},
        |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
        |        FROM ex WHERE src != dst),
        |tri AS (
@@ -337,9 +338,12 @@ object WebGraph {
     */
   val hitsScale = 1048576L
 
+  /** Synchronous rounds of [[hits]] and [[hitsSql]]. */
+  val HitsIterations = 3
+
   /** HITS hubs & authorities (Kleinberg 1999, "Authoritative Sources in a
-    * Hyperlinked Environment") over a (src, dst) edge table, `iterations`
-    * synchronous rounds, all integer:
+    * Hyperlinked Environment") over a (src, dst) edge table,
+    * [[HitsIterations]] synchronous rounds, all integer:
     *
     *   auth_raw(v) = Σ_{u→v} hub(u);   auth = auth_raw div (amax div S, min 1)
     *   hub_raw(u)  = Σ_{u→v} auth(v);  hub  = hub_raw  div (hmax div S, min 1)
@@ -359,8 +363,7 @@ object WebGraph {
     * scores are checkpointed per iteration (same re-codegen lesson).
     * Output (host, hub_x2p20, auth_x2p20).
     */
-  def hits(edges0: DataFrame, iterations: Int = 3): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
+  def hits(edges0: DataFrame): DataFrame = {
     val edges = edges0.select(col("src"), col("dst"))
       .repartition(col("src")).persist()
     // r6: HITS probes edges from BOTH endpoints every round — the auth
@@ -395,7 +398,7 @@ object WebGraph {
         val row = Observed.await(obs)
         (ck, if (row.isNullAt(0)) 0L else row.getLong(0))
       }
-      for (_ <- 1 to iterations) {
+      for (_ <- 1 to HitsIterations) {
         val (ar, amx) = rawMax(
           edges.join(hub, col("src") === col("host"))
             .groupBy(col("dst")).agg(sum(col("s")).as("raw")))
@@ -432,8 +435,8 @@ object WebGraph {
     * table — one a/h CTE pair per round, scalar-subquery maxima, same
     * two-floor-division normalizer.
     */
-  def hitsSql(table: String, iterations: Int = 3): String = {
-    val iters = (1 to iterations).map { i =>
+  def hitsSql(table: String): String = {
+    val iters = (1 to HitsIterations).map { i =>
       s"""ar$i AS (
          |  SELECT e.dst, sum(h.s) AS raw FROM ex e
          |  JOIN h${i - 1} h ON e.src = h.host GROUP BY e.dst),
@@ -454,7 +457,7 @@ object WebGraph {
        |  CAST(coalesce(h.s, 0) AS BIGINT) AS hub_x2p20,
        |  CAST(coalesce(a.s, 0) AS BIGINT) AS auth_x2p20
        |FROM nodes n
-       |LEFT JOIN h$iterations h ON n.host = h.host
-       |LEFT JOIN a$iterations a ON n.host = a.dst""".stripMargin
+       |LEFT JOIN h$HitsIterations h ON n.host = h.host
+       |LEFT JOIN a$HitsIterations a ON n.host = a.dst""".stripMargin
   }
 }

@@ -395,7 +395,7 @@ class KgRunnerSpec extends AnyFunSuite {
     def parentOf(stage: String) = java.nio.file.Files.readString(java.nio.file
       .Paths.get(graft.snapshot.Snapshot.manifestPath(s"$out/$stage")))
     Seq("canon" -> "links,triples", "edges" -> "canon,triples",
-      "nodes" -> "canon,triples", "links" -> "mention_tokens",
+      "nodes" -> "canon", "links" -> "mention_tokens",
       "source_labeled" -> "corpus_info,training_info",
       "ner_eval" -> "model_eval_results").foreach { case (stage, parents) =>
       assert(parentOf(stage).endsWith(s""""parent":"$parents"}"""), stage)

@@ -52,7 +52,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       (4L, "one two three seven eight nine"), // shares only 1 3-gram with 3
       (5L, "common common common filler filler filler")
     ).toDF("doc_id", "text")
-    val edges = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2)
+    val edges = Dedup.sharedRareShingleEdges(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges.contains((1L, 2L)))
     assert(!edges.exists(e => e._1 == 3L || e._2 == 3L),
@@ -76,10 +76,10 @@ class CorpusOpsSpec extends AnyFunSuite {
       (9000007L, "beta qz1 qz2 qz3 qz4")
     ).toDF("doc_id", "text")
     val docs = real.unionByName(weird)
-    val hashed = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2,
+    val hashed = Dedup.sharedRareShingleEdges(docs, "doc_id", "text",
       hashShingles = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val strings = Dedup.sharedRareShingleEdges(docs, "doc_id", "text", 2,
+    val strings = Dedup.sharedRareShingleEdges(docs, "doc_id", "text",
       hashShingles = false)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(hashed == strings,

@@ -88,7 +88,7 @@ class MergeSpec extends AnyFunSuite {
     val s = "呼吸困难手术治疗"
     val seg = toks(s, ("呼吸困难", "SYM"), ("手术", "SUR"), ("治疗", "x"))
     val r1 = Merge.round1(s, seg)
-    val r2 = Merge.round2(s, r1, Map("手术" -> "SUR"))
+    val r2 = Merge.round2(s, r1, Merge.SuffixSets.from(Map("手术" -> "SUR")))
     assert(r2.nonEmpty)
   }
 }

@@ -106,7 +106,7 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("distributed decodeMedia matches driver-side reference decode for every row") {
     val spark = SparkTestBase.spark
-    val out = Multimodal.decodeMedia(Multimodal.decodableTable(spark, 60), 16)
+    val out = Multimodal.decodeMedia(Multimodal.decodableTable(spark, 60))
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out.size == 60)
     (0L until 60L).foreach { i =>

@@ -166,7 +166,7 @@ class NormalizeBloomSpec extends AnyFunSuite {
       "expected WindowGroupLimitExec in:\n" + executed.take(1200))
   }
 
-  test("hashSplit: total coverage, stability across parallelism, custom splits") {
+  test("hashSplit: total coverage, stability across parallelism") {
     import spark.implicits._
     val docs = (0 until 1000).map(_.toLong).toDF("doc_id")
     val got = TextOps.hashSplit(docs, "doc_id")
@@ -182,14 +182,5 @@ class NormalizeBloomSpec extends AnyFunSuite {
     val re = TextOps.hashSplit(docs.repartition(7), "doc_id")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(re == got)
-    // custom split table flows through both the labels and the cut points
-    val fine = TextOps.hashSplit(docs, "doc_id",
-      Seq("a" -> 50, "b" -> 30, "c" -> 20))
-      .groupBy("split").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(fine.keySet == Set("a", "b", "c") && fine("a") > fine("c"))
-    intercept[IllegalArgumentException] {
-      TextOps.hashSplit(docs, "doc_id", Seq("a" -> 60, "b" -> 30))
-    }
   }
 }

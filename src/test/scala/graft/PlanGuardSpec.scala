@@ -43,24 +43,10 @@ class PlanGuardSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * by the action's name and its query execution.
     */
   private def capturedPlan(name: String)(
-      pick: (String, QueryExecution) => Boolean): SparkPlan = {
-    @volatile var captured: Option[SparkPlan] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit =
-        if (captured.isEmpty && pick(funcName, qe))
-          captured = Some(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      SparkEntry.queries(name)(spark, sf).collect()
-      val deadline = System.nanoTime() + 10000000000L
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      captured.getOrElse(fail(s"internal plan for $name never surfaced"))
-    } finally spark.listenerManager.unregister(listener)
-  }
+      pick: (String, QueryExecution) => Boolean): SparkPlan =
+    SparkTestBase.onListener((f, qe) =>
+      Option.when(pick(f, qe))(qe.executedPlan))(
+      SparkEntry.queries(name)(spark, sf).collect())._2
 
   test("filters are pushed to the parquet scan (p13)") {
     val p = executedPlan("p13_filter_guards")

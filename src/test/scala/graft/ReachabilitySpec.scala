@@ -15,18 +15,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * A declaration is a line whose code starts with `def`, `class`, `object`,
   * `val` or `trait`, after any of `final case implicit lazy abstract
   * sealed`, so `private` and `override` members are not matched. A use is
-  * the name as a whole word (`[A-Za-z0-9_]`) on any other line; an
-  * interpolated `$x` or `${…}` is code and counts, except in a file that
-  * declares the name `private` or `protected` (with or without a `[…]`
-  * qualifier): there every use resolves to that declaration, so
-  * Gazetteer's `private[dict] final class Node` reaches no public `Node`
-  * declared in another file. What it cannot see:
+  * the name as a whole word (`[A-Za-z0-9_]`) on a line that does not
+  * itself declare that name (public or private), so overloads and
+  * same-name members in other files do not reach each other; an
+  * interpolated `$x` or `${…}` is code and counts. Two rules narrow a use:
+  *   - in a file that declares the name `private` or `protected` (with or
+  *     without a `[…]` qualifier) every use resolves to that declaration,
+  *     so Gazetteer's `private[dict] final class Node` reaches no public
+  *     `Node` declared in another file;
+  *   - a use written `Owner.name`, with `Owner` capitalised, reaches only
+  *     declarations in a file that declares `Owner`, so
+  *     `RulesMerging.entityRows` reaches no `entityRows` of Confidence.
+  * What it cannot see:
   *   - a name used only in its own file still counts as reached, e.g. a
   *     class whose companion object names it;
-  *   - other names are not resolved: one use counts for every overload and
-  *     every other declaration of the name, so a local `val` that shadows
-  *     a member (SparkEntry's `val corpusSigs` beside the parameter of
-  *     `Dedup.incrementalMinhash`) keeps the member reached;
+  *   - an unqualified use, or one on an instance (`sc.predictRaw`) or on a
+  *     chain broken across lines, counts for every overload and every
+  *     other declaration of the name, so a local `val` that shadows a
+  *     member keeps the member reached;
   *   - local vals and defs are matched like members.
   */
 class ReachabilitySpec extends AnyFunSuite {
@@ -37,6 +43,10 @@ class ReachabilitySpec extends AnyFunSuite {
     val src = "val a = s\"b $c ${d(\"e\")}\" + '\"' + x /* f \"g */ // h\n\"\"\"i\"\"\" j"
     assert(tokens(code(src)) == Seq("val", "a", "c", "d", "x", "j"))
     assert(code(src).count(_ == '\n') == 1)
+    // only a capitalised owner right before the dot qualifies a use
+    assert(words("r = RulesMerging.entityRows(sc.x, A .y)") == Seq(
+      "r" -> None, "RulesMerging" -> None, "entityRows" -> Some("RulesMerging"),
+      "sc" -> None, "x" -> None, "A" -> None, "y" -> None))
 
     val found = unreached()
     val missing = found.keySet -- allowed.keySet
@@ -59,6 +69,13 @@ object ReachabilitySpec {
     "graft/Verify.scala Verify" -> "main: `runMain graft.Verify <sfDir> <outDir>`, the oracle dump",
     "graft/tools/FreezeGoldens.scala FreezeGoldens" -> "main: regenerates src/test/resources/goldens",
     "graft/tools/ScaleProbe.scala ScaleProbe" -> "main: Bench spawns it with spark-submit `--class graft.tools.ScaleProbe`",
+    "graft/Bench.scala main" -> "main: the JVM entry point of `runMain graft.Bench`",
+    "graft/KgRunner.scala main" -> "main: the JVM entry point of `runMain graft.KgRunner` and spark-submit",
+    "graft/Verify.scala main" -> "main: the JVM entry point of `runMain graft.Verify`",
+    "graft/tools/FreezeGoldens.scala main" -> "main: the JVM entry point of `runMain graft.tools.FreezeGoldens`",
+    "graft/tools/ScaleProbe.scala main" -> "main: the JVM entry point Bench's spark-submit children run",
+    "graft/functions/NfcNormalize.scala register" -> "entry point: registers nfc_normalize, DuckDB's builtin name, for spark.sql queries",
+    "graft/functions/RollingHash.scala register" -> "entry point: registers rolling_hash for spark.sql queries",
     "graft/SparkEntry.scala entry" -> "entry point: the flagship triples call a driver smoke-checks (rows > 0 on sf0.001)",
     "graft/functions/NfcNormalize.scala nfcUtf8" -> "codegen entry point: the Java that NfcNormalize.doGenCode emits calls it",
     "graft/merge/Merge.scala wordsCombiner" -> "reference port: words_combiner, clean_and_save.py:65-110",
@@ -67,6 +84,8 @@ object ReachabilitySpec {
     "graft/ner/Bio.scala Bio" -> "reference port: the BIO codec of multi_ner_prediction.py:47-61, 174-185, 220-280",
     "graft/ner/Bio.scala toBio" -> "reference port: post_processing, multi_ner_prediction.py:174-185",
     "graft/ner/Bio.scala fromSpans" -> "reference port: the voted_seq reconstruction, EnsemblePredict_all.py:380-389",
+    "graft/ner/Bio.scala getPositions" -> "reference port: get_positions, EnsemblePredict_all.py:162-222",
+    "graft/merge/Merge.scala isAInX" -> "reference port: is_a_in_x, clean_and_save.py:59-62",
     "graft/ner/MucEvaluator.scala evaluate" -> "reference port: Evaluator(...).evaluate(), multi_ner_prediction.py:595-606",
     "graft/ner/MucEvaluator.scala recall" -> "reference port: the evaluator's recall, multi_ner_prediction.py:595-606",
     "graft/ner/OnlineNer.scala OnlineNer" -> "reference port: the Flask API, app_multi.py:154-253",
@@ -104,11 +123,17 @@ object ReachabilitySpec {
       finally s.close()
     }
     val lines = files.map(f => f -> code(Files.readString(f)).split("\n", -1).toSeq)
+    def declared(l: String) =
+      Decl.findPrefixMatchOf(l).orElse(Private.findPrefixMatchOf(l)).map(_.group(1))
+    // name → (file, line, owner) per use; owner is the capitalised `Owner`
+    // of an `Owner.name` use, None for any other use
     val uses = (for {
       (f, ls) <- lines
       (l, n) <- ls.zipWithIndex
-      w <- tokens(l).distinct
-    } yield w -> (f, n)).groupMap(_._1)(_._2)
+      self = declared(l)
+      (w, owner) <- words(l).distinct if !self.contains(w)
+    } yield w -> (f, n, owner)).groupMap(_._1)(_._2)
+    val declaredIn = lines.map { case (f, ls) => f -> ls.flatMap(declared).toSet }.toMap
     val privateIn = lines.map { case (f, ls) =>
       f -> ls.flatMap(l => Private.findPrefixMatchOf(l).map(_.group(1))).toSet
     }.toMap
@@ -116,10 +141,23 @@ object ReachabilitySpec {
       (f, ls) <- lines if f.startsWith(main)
       (l, n) <- ls.zipWithIndex
       name <- Decl.findPrefixMatchOf(l).map(_.group(1))
-      if uses(name).forall { case (g, m) =>
-        (g, m) == (f, n) || (g != f && privateIn(g)(name))
+      if uses.getOrElse(name, Nil).forall { case (g, _, owner) =>
+        (g != f && privateIn(g)(name)) || owner.exists(o => !declaredIn(f)(o))
       }
     } yield s"${main.relativize(f)} $name" -> s"$f:${n + 1}").toMap
+  }
+
+  /** Each word of `line` with the capitalised `Owner` it is written
+    * after (`Owner.word`), if any.
+    */
+  def words(line: String): Seq[(String, Option[String])] = {
+    val ms = Word.findAllMatchIn(line).toSeq
+    ms.indices.map { i =>
+      val prev = if (i > 0) Some(ms(i - 1)) else None
+      val owner = prev.filter(p => p.end == ms(i).start - 1 &&
+        line(p.end) == '.' && p.matched.head.isUpper).map(_.matched)
+      ms(i).matched -> owner
+    }
   }
 
   /** `src` with the text of every comment and string or character literal

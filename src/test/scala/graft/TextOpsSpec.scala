@@ -29,14 +29,14 @@ class TextOpsSpec extends AnyFunSuite {
       .withColumn("text", concat(col("text"), lit(" nearduplicate")))
     val all = docs.unionByName(dupes)
     val planted = docs.filter(col("doc_id") % 10 === 0).count()
-    val pairs = Dedup.minhashLsh(all, "doc_id", "text", 0.5)
+    val pairs = Dedup.minhashLsh(all, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val found = (0L until 500L by 10L)
       .count(i => pairs.contains((i, i + 10000000L)) ||
         pairs.contains((i + 10000000L, i)))
     assert(found.toDouble / planted >= 0.9, s"$found/$planted")
     // est_sim tracks exact jaccard within 0.15 on found pairs
-    val rows = Dedup.minhashLsh(all, "doc_id", "text", 0.5).collect()
+    val rows = Dedup.minhashLsh(all, "doc_id", "text").collect()
     rows.foreach { r =>
       assert(math.abs(r.getDouble(2) - r.getDouble(3)) < 0.15,
         s"est=${r.getDouble(2)} exact=${r.getDouble(3)}")
@@ -115,28 +115,12 @@ class TextOpsSpec extends AnyFunSuite {
     // cache), so the metric surfaces through the session-wide
     // QueryExecutionListener channel (fired by the internal action), not on
     // the returned DataFrame's own queryExecution
-    @volatile var captured: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.get("graft.dedup.minhash_buckets")
-          .foreach(r => captured = Some(r))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      Dedup.minhashLsh(boiler, "doc_id", "text", 0.5).collect()
-      // the listener bus is asynchronous
-      val deadline = System.nanoTime() + 10000000000L
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val m = captured.getOrElse(fail("observed metrics never surfaced"))
-      assert(m.getAs[Long]("truncated_buckets") == Dedup.Bands.toLong)
-      assert(m.getAs[Long]("dropped_ids") == Dedup.Bands.toLong * 10)
-      assert(m.getAs[Long]("max_bucket_size") == 60L)
-    } finally spark.listenerManager.unregister(listener)
+    val (_, m) = SparkTestBase.onListener((_, qe) =>
+      qe.observedMetrics.get("graft.dedup.minhash_buckets"))(
+      Dedup.minhashLsh(boiler, "doc_id", "text").collect())
+    assert(m.getAs[Long]("truncated_buckets") == Dedup.Bands.toLong)
+    assert(m.getAs[Long]("dropped_ids") == Dedup.Bands.toLong * 10)
+    assert(m.getAs[Long]("max_bucket_size") == 60L)
   }
 
   test("incrementalMinhash: new crawl finds its corpus near-dups; fresh docs don't") {
@@ -151,7 +135,7 @@ class TextOpsSpec extends AnyFunSuite {
       "completely unrelated fresh words matching nothing in that corpus body"))
       .toDF("doc_id", "text")
     val out = Dedup.incrementalMinhash(
-      twins.unionByName(fresh), "doc_id", "text", corpusSigs, 0.5).collect()
+      twins.unionByName(fresh), "doc_id", "text", corpusSigs).collect()
     val pairs = out.map(r => (r.getLong(0), r.getLong(1))).toSet
     val planted = docs.filter(col("doc_id") % 5 === 0 && col("n_chars") >= 250)
       .select("doc_id").as[Long].collect()
@@ -169,7 +153,7 @@ class TextOpsSpec extends AnyFunSuite {
     val boiler = ids
       .map(i => (i, "the same boilerplate text repeated again and again here"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.minhashLsh(boiler, "doc_id", "text", 0.5)
+    val pairs = Dedup.minhashLsh(boiler, "doc_id", "text")
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.contains((0L, 10000050L)),
       "pair straddling the cap boundary was dropped")
@@ -184,7 +168,7 @@ class TextOpsSpec extends AnyFunSuite {
       .withColumn("embedding",
         org.apache.spark.sql.functions.transform(col("embedding"),
           x => (x.cast("double") * lit(1.001)).cast("float")))
-    val res = Similarity.embeddingNearDup(emb.unionByName(twins), 0.95)
+    val res = Similarity.embeddingNearDup(emb.unionByName(twins))
     val got = res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = emb.filter(col("vec_id") % 20 === 0)
       .select(col("vec_id")).collect()
@@ -206,7 +190,7 @@ class TextOpsSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.transform(col("embedding"),
           x => (x.cast("double") * lit(1.001)).cast("float")))
     val all = emb.unionByName(twins)
-    val out = Similarity.semanticDedup(all, 0.95).collect()
+    val out = Similarity.semanticDedup(all).collect()
       .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2), r.getBoolean(3))))
       .toMap
     val n = emb.count()
@@ -237,8 +221,9 @@ class TextOpsSpec extends AnyFunSuite {
     // both-ends cap must keep (0, outlier) discoverable — and everything
     // verified collapses into one keep-first cluster
     val ids = (0L until 79L) :+ 10000050L
-    val same = ids.map(i => (i, Array.fill(8)(0.5f).toSeq)).toDF("vec_id", "embedding")
-    val out = Similarity.semanticDedup(same, 0.95, nlist = 4, dim = 8)
+    val same = ids.map(i => (i, Array.fill(Similarity.Dim)(0.5f).toSeq))
+      .toDF("vec_id", "embedding")
+    val out = Similarity.semanticDedup(same)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getBoolean(3)))
     assert(out.length == 80)
     val outlier = out.find(_._1 == 10000050L).get
@@ -355,7 +340,7 @@ class TextOpsSpec extends AnyFunSuite {
       (3L, "footer line\nunique three"),
       (4L, "solo doc\n\nwith blank"), // blank lines never count as hot
       (5L, "")).toDF("doc_id", "text")
-    val out = TextOps.boilerplateLineRemoval(docs, "doc_id", "text", 3)
+    val out = TextOps.boilerplateLineRemoval(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     assert(out(1L) == ((3L, 1L, "unique one\nbody a"))) // no copy kept
@@ -395,7 +380,7 @@ class TextOpsSpec extends AnyFunSuite {
       (4L, "too short to shingle"),
       (5L, "unique eight word sentence nothing shared at all")
     ).toDF("doc_id", "text")
-    val res = Dedup.exactSubstringDedup(docs, "doc_id", "text", k = 8)
+    val res = Dedup.exactSubstringDedup(docs, "doc_id", "text")
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
@@ -431,20 +416,16 @@ class TextOpsSpec extends AnyFunSuite {
   }
 
   test("qualityFilterPipelineSql guards empty lists (no `IN ()` syntax error)") {
-    val sqlBoth = TextOps.qualityFilterPipelineSql(
-      "documents", blockedDomains = Nil, allowedLangs = Nil)
-    assert(!sqlBoth.contains("IN ()"), "empty IN-list leaked into the SQL")
-    assert(sqlBoth.contains("CAST(0 AS BIGINT)")) // empty blocklist → 0
-    assert(sqlBoth.contains("WHEN TRUE THEN 'drop:lang'")) // no langs → drop all
-    // and the Spark side agrees: empty lists behave, every doc drop:lang
-    import org.apache.spark.sql.SparkSession
-    val spark2 = SparkTestBase.spark
-    import spark2.implicits._
+    val sql = TextOps.qualityFilterPipelineSql("documents", blockedDomains = Nil)
+    assert(!sql.contains("IN ()"), "empty IN-list leaked into the SQL")
+    assert(sql.contains("CAST(0 AS BIGINT)")) // empty blocklist → 0
+    // and the Spark side agrees: an empty blocklist blocks nothing
+    import spark.implicits._
     val out = TextOps.qualityFilterPipeline(
       Seq((1L, "some text here")).toDF("doc_id", "text"),
-      "doc_id", "text", blockedDomains = Nil, allowedLangs = Nil)
+      "doc_id", "text", blockedDomains = Nil)
       .collect()
-    assert(out.length == 1 && out.head.getString(8) == "drop:lang")
+    assert(out.length == 1)
     assert(out.head.getLong(7) == 0L) // n_blocked
   }
 
@@ -460,31 +441,15 @@ class TextOpsSpec extends AnyFunSuite {
     val newDoc = Seq(
       (500L, "the same boilerplate text repeated again and again here"))
       .toDF("doc_id", "text")
-    @volatile var captured: Option[org.apache.spark.sql.Row] = None
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        qe.observedMetrics.get("graft.dedup.incr_buckets")
-          .foreach(r => captured = Some(r))
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val pairs = Dedup.incrementalMinhash(
-        newDoc, "doc_id", "text", corpusSigs, 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      // both-ends cap: partners are the 25 smallest + 25 largest corpus ids
-      val kept = ((0L until 25L) ++ (35L until 60L)).map(i => (500L, i)).toSet
-      assert(pairs == kept, s"got ${pairs.size} pairs")
-      val deadline = System.nanoTime() + 10000000000L
-      while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      val m = captured.getOrElse(fail("incr metrics never surfaced"))
-      assert(m.getAs[Long]("truncated_buckets") == Dedup.Bands.toLong)
-      assert(m.getAs[Long]("max_bucket_size") == 60L)
-    } finally spark.listenerManager.unregister(listener)
+    val (pairs, m) = SparkTestBase.onListener((_, qe) =>
+      qe.observedMetrics.get("graft.dedup.incr_buckets"))(
+      Dedup.incrementalMinhash(newDoc, "doc_id", "text", corpusSigs)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    // both-ends cap: partners are the 25 smallest + 25 largest corpus ids
+    val kept = ((0L until 25L) ++ (35L until 60L)).map(i => (500L, i)).toSet
+    assert(pairs == kept, s"got ${pairs.size} pairs")
+    assert(m.getAs[Long]("truncated_buckets") == Dedup.Bands.toLong)
+    assert(m.getAs[Long]("max_bucket_size") == 60L)
   }
 
   test("ngramLogFreqScore: common collocations score high, junk near zero") {

@@ -55,7 +55,7 @@ class WebGraphClassifierSpec extends AnyFunSuite {
     //   iter3: a(b)=1048576 a(c)=1703936  h(a)=1376256 h(b)=851968
     // c has no out-links -> hub 0; a no in-links -> auth 0.
     val edges = Seq(("a", "b"), ("a", "c"), ("b", "c")).toDF("src", "dst")
-    val got = WebGraph.hits(edges, 3)
+    val got = WebGraph.hits(edges)
       .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     assert(got == Map(
@@ -173,7 +173,7 @@ class WebGraphClassifierSpec extends AnyFunSuite {
   test("corpusShuffle: exact permutation, cluster-size invariant") {
     import spark.implicits._
     val docs = (1L to 100L).toDF("doc_id")
-    val out = TextOps.corpusShuffle(docs, "doc_id", 8).collect()
+    val out = TextOps.corpusShuffle(docs, "doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // pos is an exact permutation of 1..N
     assert(out.map(_._3).sorted.toSeq == (1L to 100L).toSeq)
@@ -188,7 +188,7 @@ class WebGraphClassifierSpec extends AnyFunSuite {
     }
     // the permutation is a pure function of the ids: identical under a
     // different partitioning of the input
-    val out2 = TextOps.corpusShuffle(docs.repartition(13), "doc_id", 8)
+    val out2 = TextOps.corpusShuffle(docs.repartition(13), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.sortBy(_._1).toSeq == out2.sortBy(_._1).toSeq)
     // and it is not the identity order (it actually shuffles)
