@@ -520,14 +520,12 @@ object SparkEntry {
     }),
     "sim_ivf_cells" -> ((s, dir) => {
       graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq,
-        graft.textops.Similarity.IvfProbes)._1
+        t(s, dir, "embeddings"), (0L until 20L).toSeq)._1
         .select(col("vec_id"), col("cell"))
     }),
     "sim_ivf_probes" -> ((s, dir) => {
       graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq,
-        graft.textops.Similarity.IvfProbes)._2
+        t(s, dir, "embeddings"), (0L until 20L).toSeq)._2
     }),
     // sim column intentionally dropped: membership is the oracle-checkable
     // contract (planted twins at cos≈1 vs organic max 0.51 at sf0.01 — far
@@ -599,7 +597,7 @@ object SparkEntry {
         withPlantedTwins(s, emb), (0L until 20L).toSeq, 1)
         .select(col("query_id"), col("neighbor_id"))
     }),
-    // IVF can lose a twin across a cell boundary (nprobe < nlist), so the
+    // IVF can lose a twin across a cell boundary (IvfProbes < Nlist), so the
     // contract is a checked recall BOUND, not the exact list
     "sim_ivf_planted" -> ((s, dir) => {
       import s.implicits._
@@ -771,7 +769,8 @@ object SparkEntry {
     // remainders are both exercised on real rows ----
     "tq_domain_epochs" -> ((s, dir) => {
       graft.textops.TextOps.domainEpochSample(
-        t(s, dir, "documents"), "doc_id", "lang", 4)
+        t(s, dir, "documents"), "doc_id", graft.textops.TextOps.EpochDomain,
+        graft.textops.TextOps.EpochCap)
     }),
     // ---- the composed corpus-prep pipeline (the "user story" query):
     // quality filter → exact keep-first dedup → chunk → pack, each stage a
@@ -810,8 +809,9 @@ object SparkEntry {
         .select(col("doc_id"))
       val kept2 = kept1.join(keepIds, Seq("doc_id"))
       val chunks = graft.textops.TextOps
-        .chunkDocuments(kept2, "doc_id", "text", 64, 16,
-          carryCols = Seq("source"))
+        .chunkDocuments(kept2, "doc_id", "text",
+          graft.textops.TextOps.ChunkTokens,
+          graft.textops.TextOps.ChunkOverlap, carryCols = Seq("source"))
       val cw = chunks.select(
         graft.textops.TextOps.packedChunkId(col("doc_id"), col("chunk_ix"))
           .as("cid"),
@@ -830,7 +830,8 @@ object SparkEntry {
     // ---- long-document chunking (fixed 64-token windows, 16 overlap) ----
     "tq_chunk_docs" -> ((s, dir) => {
       graft.textops.TextOps.chunkDocuments(
-        t(s, dir, "documents"), "doc_id", "text", 64, 16)
+        t(s, dir, "documents"), "doc_id", "text",
+        graft.textops.TextOps.ChunkTokens, graft.textops.TextOps.ChunkOverlap)
     }),
     // ---- content-defined chunking (md5-nibble FastCDC-style boundaries,
     // edit-robust — the dedup-oriented complement of the fixed windows) ----
@@ -885,7 +886,8 @@ object SparkEntry {
     // count-collection pass; one partial-aggregated shuffle) ----
     "tok_ngram_counts" -> ((s, dir) =>
       graft.textops.Tokenizer.ngramCounts(
-        t(s, dir, "documents"), "text", 3, 2L)),
+        t(s, dir, "documents"), "text", graft.textops.Tokenizer.NgramOrder,
+        graft.textops.Tokenizer.NgramMinCount)),
     // ---- HyperLogLog distinct-token sketch: the full register STATE is
     // the oracle row set (every bit pinned, unlike approx_count_distinct's
     // engine-private HLL++ layout); estimate accuracy is spec-checked ----
@@ -1548,7 +1550,7 @@ object SparkEntry {
         |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
         |FROM scored WHERE rank <= 3""".stripMargin,
     // EXACT re-derivation of IVF ANN over the dumped quantizer assignments
-    // (corpus cell per vector, nprobe probe cells per query)
+    // (corpus cell per vector, IvfProbes probe cells per query)
     "sim_topk_ivf" ->
       """WITH cells AS (SELECT vec_id, cell
         |    FROM read_parquet('{OUT}/sim_ivf_cells/*.parquet')),
@@ -1693,7 +1695,7 @@ object SparkEntry {
         graft.textops.WebGraph.triangleCountsSql("aug")
           .stripPrefix("WITH ")),
     "tok_ngram_counts" ->
-      graft.textops.Tokenizer.ngramCountsSql("documents", "text", 3, 2L),
+      graft.textops.Tokenizer.ngramCountsSql("documents", "text"),
     "tq_hll_registers" ->
       graft.textops.TextOps.hllRegistersSql("documents", "text"),
     "tq_cms_counters" ->
@@ -1741,11 +1743,11 @@ object SparkEntry {
     "tq_domain_mix" ->
       graft.textops.TextOps.domainMixSampleSql("documents"),
     "tq_domain_epochs" ->
-      graft.textops.TextOps.domainEpochSampleSql("documents", "lang", 4),
+      graft.textops.TextOps.domainEpochSampleSql("documents"),
     "tq_domain_cap" ->
       graft.textops.TextOps.domainCapSql("documents", 10),
     "tq_chunk_docs" ->
-      graft.textops.TextOps.chunkDocumentsSql("documents", 64, 16),
+      graft.textops.TextOps.chunkDocumentsSql("documents"),
     "tq_cdc_chunks" ->
       graft.textops.TextOps.cdcChunksSql("documents"),
     "tq_fluency_score" ->
@@ -1756,7 +1758,7 @@ object SparkEntry {
     "tq_corpus_prep" -> {
       val verd = graft.textops.TextOps.qualityFilterPipelineSql(
         "documents", blockedDomains = urlBlocklist)
-      val chunks = graft.textops.TextOps.chunkDocumentsSql("kept2", 64, 16)
+      val chunks = graft.textops.TextOps.chunkDocumentsSql("kept2")
       val pack = graft.textops.TextOps.packSequencesSql("cw", 2048L)
       s"""WITH verd AS ($verd),
          |kept1 AS (

@@ -20,13 +20,12 @@ object Similarity {
 
   /** Width of every embedding this object reads. */
   val Dim = 64
-  /** Sign-LSH ANN ([[lshBucketsDf]], [[lshTopK]]): hyperplanes per table
-    * and tables per vector.
+  /** Hyperplanes per sign-LSH table ([[hyperplanes]]): one bucket bit each. */
+  val SignBits = 8
+  /** Tables per vector: sign-LSH ANN ([[lshBucketsDf]], [[lshTopK]]) and
+    * embedding near-dup banding ([[embeddingNearDup]]).
     */
-  val LshBits = 8
   val LshTables = 8
-  /** Embedding near-dup banding ([[embeddingNearDup]]). */
-  val NearDupBits = 8
   val NearDupTables = 4
   /** The IVF coarse quantizer: cells, Lloyd iterations, training-sample
     * cap, and the cells [[ivfTopK]] probes per query.
@@ -95,11 +94,11 @@ object Similarity {
       .select($"query_id", $"vec_id".as("neighbor_id"), $"sim", $"rank")
   }
 
-  /** Deterministic random hyperplanes for table `t`: nBits × [[Dim]] sign
-    * matrix from hashing (each table gets an independent set).
+  /** Deterministic random hyperplanes for table `t`: [[SignBits]] × [[Dim]]
+    * sign matrix from hashing (each table gets an independent set).
     */
-  def hyperplanes(nBits: Int, table: Int): Array[Array[Double]] =
-    Array.tabulate(nBits, Dim) { (b, d) =>
+  def hyperplanes(table: Int): Array[Array[Double]] =
+    Array.tabulate(SignBits, Dim) { (b, d) =>
       // centered uniform from splitmix — adequate for sign-LSH
       (Hashing.unit(Hashing.mix(0x51a7e5L ^ (table.toLong << 32),
         (b * 1315 + d).toLong)) - 0.5)
@@ -108,7 +107,7 @@ object Similarity {
   /** Sign-LSH bucket of one embedding over `planes`, on a primitive array —
     * the UDFs receive embeddings as Seq[Float] (WrappedArray), and every
     * element access through that interface boxes; converting once per row
-    * keeps the nTables × nBits × dim inner loop on primitive reads (r6: the
+    * keeps the tables × SignBits × Dim inner loop on primitive reads (r6: the
     * bucket-assignment UDF was warm-time-bound on boxed accesses, ~66M per
     * sf0.1 pass).
     */
@@ -145,8 +144,8 @@ object Similarity {
     * queries search the union of their buckets. Output
     * (query_id, neighbor_id, sim, rank).
     *
-    * Recall/cost trade: P(candidate found) = 1 − (1 − p^nBits)^nTables with
-    * p = 1 − θ/π. High-sim neighbors (the ANN contract) are recovered with
+    * Recall/cost trade: P(candidate found) = 1 − (1 − p^SignBits)^LshTables
+    * with p = 1 − θ/π. High-sim neighbors (the ANN contract) are recovered with
     * near-certainty; low-sim "neighbors" of random noise are not — that is
     * the saving vs brute force, not a defect. The spec measures recall on
     * planted near-identical twins.
@@ -160,7 +159,7 @@ object Similarity {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val tables = spark.sparkContext.broadcast(
-      Array.tabulate(LshTables)(t => hyperplanes(LshBits, t)))
+      Array.tabulate(LshTables)(t => hyperplanes(t)))
     val bucketsUdf = udf { (emb: Seq[Float]) =>
       signBuckets(emb, tables.value)
     }
@@ -193,7 +192,7 @@ object Similarity {
 
   /** IVF (inverted-file) ANN: a deterministic Lloyd's k-means coarse
     * quantizer partitions the corpus into [[Nlist]] cells; queries search only
-    * their nprobe nearest cells. The second scale path beside sign-LSH —
+    * their [[IvfProbes]] nearest cells. The second scale path beside sign-LSH —
     * better recall/cost trade when the data has cluster structure.
     *
     * Scale shape: quantizer training reads a bounded hash-capped sample
@@ -264,17 +263,17 @@ object Similarity {
     centroids
   }
 
-  /** The IVF quantizer assignments — corpus cell per vector plus the nprobe
-    * probe cells per query — the only non-SQL-expressible pieces of
-    * [[ivfTopK]] (deterministic: same input → same hash-picked training
-    * sample → same centroids → same assignments, so a separately-run dump
-    * sees byte-identical cells). Returned as (cells, probes) where
-    * cells = (vec_id, embedding, cell) and probes = (query_id, cell).
+  /** The IVF quantizer assignments — corpus cell per vector plus the
+    * [[IvfProbes]] probe cells per query — the only non-SQL-expressible
+    * pieces of [[ivfTopK]] (deterministic: same input → same hash-picked
+    * training sample → same centroids → same assignments, so a
+    * separately-run dump sees byte-identical cells). Returned as
+    * (cells, probes) where cells = (vec_id, embedding, cell) and
+    * probes = (query_id, cell).
     */
   def ivfAssignments(
       embeddings: DataFrame,
-      queryIds: Seq[Long],
-      nprobe: Int
+      queryIds: Seq[Long]
   ): (DataFrame, DataFrame) = {
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -312,7 +311,7 @@ object Similarity {
       val a = toArr(emb)
       cents.value.indices
         .map(i => (dist2(a, cents.value(i)), i))
-        .sorted.take(nprobe).map(_._2)
+        .sorted.take(IvfProbes).map(_._2)
     }
     val cells = embeddings
       .select($"vec_id", $"embedding", cellUdf($"embedding").as("cell"))
@@ -330,7 +329,7 @@ object Similarity {
   ): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val (cells, probes) = ivfAssignments(embeddings, queryIds, IvfProbes)
+    val (cells, probes) = ivfAssignments(embeddings, queryIds)
     val queries = probes
       .join(embeddings.select($"vec_id".as("query_id"),
         $"embedding".as("q_emb")), "query_id")
@@ -351,7 +350,7 @@ object Similarity {
     * verification and the component pick in plain SQL ({OUT} pattern).
     */
   def semanticCells(embeddings: DataFrame): DataFrame =
-    ivfAssignments(embeddings, Seq.empty, 1)._1
+    ivfAssignments(embeddings, Seq.empty)._1
 
   /** SemDeDup-style semantic dedup (Abbas et al., "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication", arXiv
@@ -422,20 +421,20 @@ object Similarity {
     * Candidates flow through [[Dedup.cappedPairs]] — the same MaxBucket-
     * capped, observably-truncating bucket stage as the minhash/simhash
     * paths. The round-2 version joined bucket-against-bucket UNCAPPED over
-    * only 2^nBits fixed buckets, so bucket size grew O(N) with the corpus
+    * only 2^SignBits fixed buckets, so bucket size grew O(N) with the corpus
     * and within-bucket pairs O(N²) — the one remaining all-pairs risk at
     * 100 TB. Multi-table banding (band = table id) plus the cap bounds
     * per-bucket fan-out at MaxBucket²/2 regardless of corpus size, with
     * dropped candidates counted in the `graft.dedup.embedding_buckets`
     * observe metrics. Recall for near-identical pairs survives the
     * trade: a twin at cos≈1 shares every table's bucket, so it gets
-    * nTables independent chances to land in an un-truncated slice.
+    * NearDupTables independent chances to land in an un-truncated slice.
     */
   def embeddingNearDup(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val tables = spark.sparkContext.broadcast(
-      Array.tabulate(NearDupTables)(t => hyperplanes(NearDupBits, t)))
+      Array.tabulate(NearDupTables)(t => hyperplanes(t)))
     val bucketsUdf = udf { (emb: Seq[Float]) =>
       signBuckets(emb, tables.value)
     }

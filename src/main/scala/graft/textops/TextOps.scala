@@ -1057,16 +1057,21 @@ object TextOps {
         .otherwise(raise_error(
           lit(s"packedChunkId: chunk_ix >= $chunkIdShift overflows packing")))
 
-  /** DuckDB mirror of [[chunkDocuments]] over a (doc_id, text) table. */
-  def chunkDocumentsSql(
-      table: String, chunkTokens: Int, overlapTokens: Int): String = {
-    require(chunkTokens > overlapTokens && overlapTokens >= 0,
-      "chunkDocumentsSql requires chunkTokens > overlapTokens >= 0")
-    val step = chunkTokens - overlapTokens
+  /** Window and overlap, in tokens, that the corpus-prep queries pass to
+    * [[chunkDocuments]] and that [[chunkDocumentsSql]] mirrors.
+    */
+  val ChunkTokens = 64
+  val ChunkOverlap = 16
+
+  /** DuckDB mirror of [[chunkDocuments]] over a (doc_id, text) table, at
+    * [[ChunkTokens]]/[[ChunkOverlap]].
+    */
+  def chunkDocumentsSql(table: String): String = {
+    val step = ChunkTokens - ChunkOverlap
     s"""SELECT doc_id, CAST(c.i AS INT) AS chunk_ix,
-       |  CAST(len(w[c.i * $step + 1 : c.i * $step + $chunkTokens]) AS BIGINT)
+       |  CAST(len(w[c.i * $step + 1 : c.i * $step + $ChunkTokens]) AS BIGINT)
        |    AS n_tokens,
-       |  array_to_string(w[c.i * $step + 1 : c.i * $step + $chunkTokens], ' ')
+       |  array_to_string(w[c.i * $step + 1 : c.i * $step + $ChunkTokens], ' ')
        |    AS chunk_text
        |FROM (
        |  SELECT doc_id,
@@ -1074,8 +1079,8 @@ object TextOps {
        |      x -> len(x) > 0) AS w
        |  FROM $table) t,
        |  LATERAL unnest(generate_series(0,
-       |    CASE WHEN len(w) <= $chunkTokens THEN 0
-       |      ELSE (len(w) - $chunkTokens + $step - 1) // $step END)) c(i)
+       |    CASE WHEN len(w) <= $ChunkTokens THEN 0
+       |      ELSE (len(w) - $ChunkTokens + $step - 1) // $step END)) c(i)
        |WHERE len(w) > 0""".stripMargin
   }
 
@@ -1276,19 +1281,25 @@ object TextOps {
       .select(col(idCol), col(domainCol), col("epoch"))
   }
 
-  /** DuckDB mirror of [[domainEpochSample]] over a (doc_id, domainCol)
-    * table — same histogram, rate arithmetic and hash remainder; the
-    * epoch fan-out is a LATERAL unnest of generate_series (empty below 1,
-    * matching the guarded explode).
+  /** Domain column and epoch cap that the epoch-sampling query passes to
+    * [[domainEpochSample]] and that [[domainEpochSampleSql]] mirrors.
     */
-  def domainEpochSampleSql(
-      table: String, domainCol: String, maxEpochs: Int): String =
+  val EpochDomain = "lang"
+  val EpochCap = 4
+
+  /** DuckDB mirror of [[domainEpochSample]] over a (doc_id, [[EpochDomain]])
+    * table at [[EpochCap]] — same histogram, rate arithmetic and hash
+    * remainder; the epoch fan-out is a LATERAL unnest of generate_series
+    * (empty below 1, matching the guarded explode).
+    */
+  def domainEpochSampleSql(table: String): String = {
+    val domainCol = EpochDomain
     s"""WITH c AS (SELECT $domainCol, count(*) AS nd FROM $table
        |           WHERE $domainCol IS NOT NULL GROUP BY $domainCol),
        |m AS (SELECT max(nd) AS nmax FROM c),
        |r AS (SELECT $domainCol,
        |        least(CAST(floor(sqrt(CAST(nmax AS DOUBLE) / nd) * 1048576)
-       |                AS BIGINT), CAST(${maxEpochs.toLong * 1048576L} AS BIGINT)) AS rate
+       |                AS BIGINT), CAST(${EpochCap.toLong * 1048576L} AS BIGINT)) AS rate
        |      FROM c, m),
        |d AS (SELECT t.doc_id, t.$domainCol,
        |        r.rate // 1048576 +
@@ -1299,6 +1310,7 @@ object TextOps {
        |      FROM $table t JOIN r ON t.$domainCol = r.$domainCol)
        |SELECT doc_id, $domainCol, CAST(k AS BIGINT) AS epoch
        |FROM d, LATERAL unnest(generate_series(1, n)) u(k)""".stripMargin
+  }
 
   /** md5 buckets of [[corpusShuffle]] and [[corpusShuffleSql]]. */
   val ShuffleBuckets = 8

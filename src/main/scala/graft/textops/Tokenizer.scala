@@ -320,12 +320,17 @@ object Tokenizer {
       .filter(col("n_occ") >= minCount)
   }
 
-  /** DuckDB mirror of [[ngramCounts]] — same split, same slice bounds,
-    * same cutoff, generated from the same constants.
+  /** Gram width and count cutoff that the LM count query passes to
+    * [[ngramCounts]] and that [[ngramCountsSql]] mirrors.
     */
-  def ngramCountsSql(
-      table: String, textExpr: String, n: Int,
-      minCount: Long): String =
+  val NgramOrder = 3
+  val NgramMinCount = 2L
+
+  /** DuckDB mirror of [[ngramCounts]] at [[NgramOrder]]/[[NgramMinCount]] —
+    * same split, same slice bounds, same cutoff.
+    */
+  def ngramCountsSql(table: String, textExpr: String): String = {
+    val n = NgramOrder
     s"""WITH w AS (
        |  SELECT ${TextOps.tokenArraySql(textExpr)} AS ws
        |  FROM $table),
@@ -335,7 +340,8 @@ object Tokenizer {
        |    i -> array_to_string(ws[i:i+${n - 1}], ' '))) AS gram
        |  FROM w WHERE len(ws) >= $n)
        |SELECT gram, CAST(count(*) AS BIGINT) AS n_occ
-       |FROM g GROUP BY gram HAVING count(*) >= $minCount""".stripMargin
+       |FROM g GROUP BY gram HAVING count(*) >= $NgramMinCount""".stripMargin
+  }
 
   /** The oracle SQL for [[bpeTrain]] over [[fixtureCorpus]]: VALUES
     * generated by running the sequential reference at SQL-build time —
