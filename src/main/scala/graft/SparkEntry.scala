@@ -744,7 +744,7 @@ object SparkEntry {
     // (tf DESC, df ASC, term ASC) ranking — no float idf ----
     "tq_keywords" -> ((s, dir) => {
       graft.textops.TextOps.keywords(t(s, dir, "documents"),
-        "doc_id", "text", 3)
+        "doc_id", "text", graft.textops.TextOps.KeywordsPerDoc)
     }),
     // ---- deterministic hash split: every doc gets exactly one of
     // train/val/test, stable across runs/engines/cluster sizes ----
@@ -755,7 +755,8 @@ object SparkEntry {
     // ---- training-batch assembly: token-budget sequence packing ----
     "tq_pack_sequences" -> ((s, dir) => {
       graft.textops.TextOps.packSequences(
-        t(s, dir, "documents"), "doc_id", "text", "source", 2048L)
+        t(s, dir, "documents"), "doc_id", "text", "source",
+        graft.textops.TextOps.PackBudget)
     }),
     // ---- domain-mix temperature rebalancing (alpha = 0.5) ----
     "tq_domain_mix" -> ((s, dir) => {
@@ -817,7 +818,8 @@ object SparkEntry {
           .as("cid"),
         col("chunk_text"), col("source"))
       graft.textops.TextOps
-        .packSequences(cw, "cid", "chunk_text", "source", 2048L)
+        .packSequences(cw, "cid", "chunk_text", "source",
+          graft.textops.TextOps.PackBudget)
         .groupBy(col("shard"), col("pack_id"))
         .agg(count(lit(1)).as("n_chunks"),
           sum(col("n_tokens")).as("pack_tokens"))
@@ -839,11 +841,12 @@ object SparkEntry {
       graft.textops.TextOps.cdcChunks(
         t(s, dir, "documents"), "doc_id", "text")
     }),
-    // ---- per-domain document cap (C4/RefinedWeb host quota; k=10 of 25
-    // docs per source so the cap binds on every domain) ----
+    // ---- per-domain document cap (C4/RefinedWeb host quota;
+    // DomainCapDocs=10 of 25 docs per source so the cap binds on every
+    // domain) ----
     "tq_domain_cap" -> ((s, dir) => {
       graft.textops.TextOps.domainCap(
-        t(s, dir, "documents"), "doc_id", "source", "n_chars", 10)
+        t(s, dir, "documents"), "doc_id", "source", "n_chars")
     }),
     // ---- host-graph PageRank over planted links (integer fixed-point;
     // the RefinedWeb-style domain-ranking curation signal). Links are
@@ -917,25 +920,20 @@ object SparkEntry {
       // r6: canon feeds BOTH the min-id aggregate and the keep join; the
       // two exchanges have different children (partial-agg vs plain), so
       // ReuseExchange cannot fire and the multi-step regex canonicalization
-      // chain ran twice over every URL. Persist the narrow (id, canon_url)
-      // projection (guide §8: decide with small rows), materialize the
-      // result, release the cache — one canonicalization pass total.
+      // chain ran twice over every URL. Caching the narrow (id, canon_url)
+      // projection (guide §8: decide with small rows) makes it one
+      // canonicalization pass total.
       // Both join sides fit under the broadcast threshold; the hint pins the
       // build side to canon, so the streamed `first` emits rows grouped by
       // URL, and the written file is the same, smaller one on every run.
       val canon = docs.select(col("doc_id"),
         graft.textops.TextOps.urlCanonicalize(col("url")).as("canon_url"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
+      graft.util.CacheScope(canon) {
         val first = canon.groupBy(col("canon_url"))
           .agg(min(col("doc_id")).as("first_doc"))
         broadcast(canon).join(first, Seq("canon_url"))
           .select(col("doc_id"), col("canon_url"),
             (col("doc_id") === col("first_doc")).as("keep"))
-          .localCheckpoint(true)
-      } finally {
-        canon.unpersist(false)
-        ()
       }
     }),
     // ---- cluster dedup, keep-BEST-quality variant (same rare-shingle
@@ -957,7 +955,7 @@ object SparkEntry {
         .filter(col("split") === "train")
         .withColumn("y", col("lang") === "en")
       val w = graft.textops.Classifier.classifierWeights(
-        labeled, "text", "y", 3L)
+        labeled, "text", "y", graft.textops.Classifier.WeightMinCount)
       graft.textops.Classifier.classifierScore(docs, "doc_id", "text", w)
     }),
     // ---- deterministic training-order shuffle (bucketed permutation,
@@ -971,7 +969,8 @@ object SparkEntry {
     "tok_bpe_merges" -> ((s, dir) => {
       import s.implicits._
       graft.textops.Tokenizer.bpeTrain(
-        graft.textops.Tokenizer.fixtureCorpus.toDF("text"), "text", 12)
+        graft.textops.Tokenizer.fixtureCorpus.toDF("text"), "text",
+        graft.textops.Tokenizer.BpeMerges)
     }),
     // ---- dataset-card corpus statistics (per-lang × quality-bucket
     // doc/char/word mass; fixed buckets, not quantiles — one partial agg) --
@@ -1677,7 +1676,7 @@ object SparkEntry {
         |  AS split, n_chars
         |FROM documents""".stripMargin,
     "tq_keywords" ->
-      graft.textops.TextOps.keywordsSql("documents", 3),
+      graft.textops.TextOps.keywordsSql("documents"),
     // the planted-link augmentation mirrors the Spark query's concat; the
     // rank/hits derivations are GENERATED from the same WebGraph constants
     "web_host_rank" ->
@@ -1729,23 +1728,23 @@ object SparkEntry {
       86400000000L),
     "tq_classifier_score" ->
       graft.textops.Classifier.classifierSql(
-        "documents", "doc_id", "lang = 'en'", 3L),
+        "documents", "doc_id", "lang = 'en'"),
     "tq_corpus_stats" ->
       graft.textops.TextOps.corpusStatsSql("documents"),
     "tok_bpe_merges" ->
-      graft.textops.Tokenizer.bpeMergesSql(12),
+      graft.textops.Tokenizer.bpeMergesSql,
     "tq_corpus_shuffle" ->
       graft.textops.TextOps.corpusShuffleSql("documents"),
     // mirrors GENERATED from the same TextOps builders (single source of
     // truth for the window frame / integer div / sqrt-rate arithmetic)
     "tq_pack_sequences" ->
-      graft.textops.TextOps.packSequencesSql("documents", 2048L),
+      graft.textops.TextOps.packSequencesSql("documents"),
     "tq_domain_mix" ->
       graft.textops.TextOps.domainMixSampleSql("documents"),
     "tq_domain_epochs" ->
       graft.textops.TextOps.domainEpochSampleSql("documents"),
     "tq_domain_cap" ->
-      graft.textops.TextOps.domainCapSql("documents", 10),
+      graft.textops.TextOps.domainCapSql("documents"),
     "tq_chunk_docs" ->
       graft.textops.TextOps.chunkDocumentsSql("documents"),
     "tq_cdc_chunks" ->
@@ -1759,7 +1758,7 @@ object SparkEntry {
       val verd = graft.textops.TextOps.qualityFilterPipelineSql(
         "documents", blockedDomains = urlBlocklist)
       val chunks = graft.textops.TextOps.chunkDocumentsSql("kept2")
-      val pack = graft.textops.TextOps.packSequencesSql("cw", 2048L)
+      val pack = graft.textops.TextOps.packSequencesSql("cw")
       s"""WITH verd AS ($verd),
          |kept1 AS (
          |  SELECT d.doc_id, d.text, d.source FROM documents d

@@ -58,7 +58,7 @@ object Canon {
     // joins, so the edge set re-shuffled by dst each round (the
     // WebGraph.hits lesson); one setup exchange now replaces an
     // edge-sized exchange per iteration.
-    var e = edges.select($"src", $"dst")
+    val e = edges.select($"src", $"dst")
       .union(edges.select($"dst".as("src"), $"src".as("dst")))
       .filter($"src" =!= $"dst")
       .distinct()
@@ -73,56 +73,57 @@ object Canon {
     // shuffle). The two no-op iterations an edge-free graph pays are
     // cheaper than probing for it.
 
-    // labels: v -> current candidate component (min over seen neighbors).
-    // Both labels persists (this one and each round's, over an output that
-    // is already a localCheckpoint) stay: without them the dedup_semantic
-    // query fails in Catalyst, `java.util.NoSuchElementException: key not
-    // found: v#1704L` at `UnionBase.rewriteConstraints`
-    // (basicLogicalOperators.scala:527); dropping only the per-round one
-    // fails the same way.
-    var labels = e.select($"src".as("v")).distinct()
-      .withColumn("label", $"v")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // labels: v -> current candidate component (min over seen neighbors).
+      // Both labels persists (this one and each round's, over an output that
+      // is already a localCheckpoint) stay: without them the dedup_semantic
+      // query fails in Catalyst, `java.util.NoSuchElementException: key not
+      // found: v#1704L` at `UnionBase.rewriteConstraints`
+      // (basicLogicalOperators.scala:527); dropping only the per-round one
+      // fails the same way.
+      var labels = e.select($"src".as("v")).distinct()
+        .withColumn("label", $"v")
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // Convergence detection: labels only ever DECREASE under min-propagation,
-    // so Σ labels is strictly monotone until the fixpoint — equality of the
-    // exact decimal sum across iterations ⟺ no label changed. The sum is an
-    // OBSERVED metric collected during the localCheckpoint materialization,
-    // so convergence costs zero extra jobs (round 1 ran a labels⋈labels
-    // diff-join + count per iteration). decimal(38,0) keeps the 63-bit id
-    // sums exact (a Long sum would overflow and could alias).
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (!converged && iter < MaxIter) {
-      // propagate: each vertex adopts min(label of neighbors, own label)
-      val prop = e.join(labels, e("dst") === labels("v"))
-        .select(e("src").as("v"), labels("label"))
-        .union(labels.select($"v", $"label"))
-        .groupBy($"v").agg(min($"label").as("label"))
-      // second hop (pointer-jumping): adopt the label's label — this is what
-      // makes convergence logarithmic instead of linear in diameter
-      val obs = Observation()
-      val jumped = prop.as("p")
-        .join(prop.select($"v".as("lv"), $"label".as("llabel")).as("q"),
-          col("p.label") === col("q.lv"), "left")
-        .select(col("p.v"),
-          least(col("p.label"), coalesce(col("q.llabel"), col("p.label")))
-            .as("label"))
-        .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"))
-        .localCheckpoint(eager = true)
-      // NULL sum = EMPTY vertex set (sum over no rows): read as zero
-      val sumNow = Option(Observed.await(obs).getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-      val changed = prevSum == null || sumNow.compareTo(prevSum) != 0
-      prevSum = sumNow
-      labels.unpersist(blocking = false)
-      labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)
-      converged = !changed
-      iter += 1
-    }
-    e.unpersist(blocking = false)
-    labels.select($"v", $"label".as("component"))
+      // Convergence detection: labels only ever DECREASE under min-propagation,
+      // so Σ labels is strictly monotone until the fixpoint — equality of the
+      // exact decimal sum across iterations ⟺ no label changed. The sum is an
+      // OBSERVED metric collected during the localCheckpoint materialization,
+      // so convergence costs zero extra jobs (round 1 ran a labels⋈labels
+      // diff-join + count per iteration). decimal(38,0) keeps the 63-bit id
+      // sums exact (a Long sum would overflow and could alias).
+      var prevSum: java.math.BigDecimal = null
+      var iter = 0
+      var converged = false
+      while (!converged && iter < MaxIter) {
+        // propagate: each vertex adopts min(label of neighbors, own label)
+        val prop = e.join(labels, e("dst") === labels("v"))
+          .select(e("src").as("v"), labels("label"))
+          .union(labels.select($"v", $"label"))
+          .groupBy($"v").agg(min($"label").as("label"))
+        // second hop (pointer-jumping): adopt the label's label — this is what
+        // makes convergence logarithmic instead of linear in diameter
+        val obs = Observation()
+        val jumped = prop.as("p")
+          .join(prop.select($"v".as("lv"), $"label".as("llabel")).as("q"),
+            col("p.label") === col("q.lv"), "left")
+          .select(col("p.v"),
+            least(col("p.label"), coalesce(col("q.llabel"), col("p.label")))
+              .as("label"))
+          .observe(obs, sum(col("label").cast("decimal(38,0)")).as("label_sum"))
+          .localCheckpoint(eager = true)
+        // NULL sum = EMPTY vertex set (sum over no rows): read as zero
+        val sumNow = Option(Observed.await(obs).getDecimal(0))
+          .getOrElse(java.math.BigDecimal.ZERO)
+        val changed = prevSum == null || sumNow.compareTo(prevSum) != 0
+        prevSum = sumNow
+        labels.unpersist(blocking = false)
+        labels = jumped.persist(StorageLevel.MEMORY_AND_DISK)
+        converged = !changed
+        iter += 1
+      }
+      labels.select($"v", $"label".as("component"))
+    } finally e.unpersist(blocking = false)
   }
 
   /** Canonicalize typed surfaces: vertices = (surface, entType) hashed by

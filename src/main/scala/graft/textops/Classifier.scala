@@ -2,6 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.CacheScope
 
 /** Model-based document filtering: a count-trained linear text classifier
   * in the fastText / DCLM quality-filter shape (Joulin et al. 2016, "Bag
@@ -31,6 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object Classifier {
 
+  /** Min-count cut of the tq_classifier_score query and of
+    * [[classifierSql]].
+    */
+  val WeightMinCount = 3L
+
   /** Train: per-term occurrence counts by class over the labeled docs,
     * emitted as (term, weight) with the rate-difference weight of the
     * object doc. Terms with fewer than `minCount` total occurrences are
@@ -59,12 +65,9 @@ object Classifier {
       .agg(
         sum(when(col("y"), 1L).otherwise(0L)).as("n_pos"),
         sum(when(col("y"), 0L).otherwise(1L)).as("n_neg"))
-    // persist the vocabulary-sized counts so the totals row and the weight
-    // projection share ONE pass over the training corpus, then eagerly
-    // materialize the (small) weight table and release the cache — the
-    // minhashLsh sig-stage pattern
-    counts.persist()
-    try {
+    // cached: the totals row and the weight projection share ONE pass over
+    // the training corpus
+    CacheScope(counts) {
       val totals = counts.agg(
         sum(col("n_pos")).as("tpos"), sum(col("n_neg")).as("tneg"))
       counts
@@ -79,8 +82,7 @@ object Classifier {
             " - (n_neg * CAST(1000000 AS BIGINT))" +
             " div greatest(tneg, CAST(1 AS BIGINT)) AS BIGINT)")
             .as("weight"))
-        .localCheckpoint(true)
-    } finally counts.unpersist()
+    }
   }
 
   /** Apply: score every document as Σ tf(term) · w(term) over the weight
@@ -127,8 +129,7 @@ object Classifier {
   def classifierSql(
       table: String,
       idExpr: String,
-      labelExpr: String,
-      minCount: Long): String = {
+      labelExpr: String): String = {
     val split = TextOps.hashSplitSql(idExpr)
     s"""WITH tr AS (
        |  SELECT $idExpr AS doc_id, text, $labelExpr AS y FROM $table
@@ -147,7 +148,7 @@ object Classifier {
        |      - (sum(CASE WHEN y THEN 0 ELSE 1 END) * 1000000)
        |        // greatest((SELECT tneg FROM tot), 1) AS BIGINT) AS weight
        |  FROM trterms GROUP BY term
-       |  HAVING count(*) >= $minCount),
+       |  HAVING count(*) >= $WeightMinCount),
        |terms AS (
        |  SELECT $idExpr AS doc_id, unnest(${TextOps.tokenArraySql("text")}) AS term
        |  FROM $table),

@@ -2,7 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.util.Hashing
+import graft.util.{CacheScope, Hashing}
 
 /** Near-duplicate detection at training-data scale: MinHash+LSH (Broder,
   * "On the resemblance and containment of documents", 1997; banding per
@@ -271,44 +271,40 @@ object Dedup {
       idCol: String,
       textCol: String
   ): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // The signature stage (128 splitmix mixes per shingle over the WHOLE
-    // corpus) feeds three consumers: the banding flatMap and both sides of
-    // the verify join. Left uncached, Spark recomputes it once per consumer
-    // — two extra full-corpus CPU passes at 100 TB (measured 5.1 s → ~2 s
-    // at sf0.1). So: persist for the duration of the call, materialize the
-    // verified-pair output eagerly (it is the small end of the LSH funnel —
-    // orders of magnitude below the corpus), and release the cache in
-    // `finally` — no storage outlives the call. At cluster scale, swap the
-    // local checkpoint for a reliable checkpoint dir if executor loss
-    // during the downstream consumer matters.
+    // the signature stage (128 splitmix mixes per shingle over the WHOLE
+    // corpus) is consumed by banding and both verify sides; uncached, it
+    // ran once per consumer (measured 5.1 s → ~2 s at sf0.1)
     val sigs = minhashSigsDf(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope(sigs) {
       val pairs = cappedPairs(bandedSigs(sigs, "id"),
         "graft.dedup.minhash_buckets")
-
-      // verification: exact Jaccard on shingle sets
-      val shA = sigs.select($"id".as("id_a"), $"shingles".as("sh_a"),
-        $"sig".as("sig_a"))
-      val shB = sigs.select($"id".as("id_b"), $"shingles".as("sh_b"),
-        $"sig".as("sig_b"))
-      pairs.join(shA, "id_a").join(shB, "id_b")
-        .as[(Long, Long, Array[Long], Array[Long], Array[Long], Array[Long])]
-        .map { case (b, a, shb, sigb, sha, siga) =>
-          var eq = 0
-          var i = 0
-          while (i < NumHashes) { if (siga(i) == sigb(i)) eq += 1; i += 1 }
-          (a, b, eq.toDouble / NumHashes, exactJaccard(sha, shb))
-        }
-        .toDF("id_a", "id_b", "est_sim", "jaccard")
-        .filter($"jaccard" >= MinhashThreshold)
-        .localCheckpoint(true)
-    } finally {
-      sigs.unpersist(false)
-      ()
+      verifyMinhash(pairs, "id_a", sigs, "id_b", sigs)
     }
+  }
+
+  /** Exact verification of MinHash candidate pairs `(a, b)` against their
+    * [[minhashSigsDf]] tables: est_sim is the share of equal signature
+    * slots, jaccard the exact shingle Jaccard, kept at ≥
+    * [[MinhashThreshold]]. Output (a, b, est_sim, jaccard).
+    */
+  private def verifyMinhash(pairs: DataFrame, a: String, sigsA: DataFrame,
+      b: String, sigsB: DataFrame): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs
+      .join(sigsA.select($"id".as(a), $"shingles".as("sh_a"),
+        $"sig".as("sig_a")), a)
+      .join(sigsB.select($"id".as(b), $"shingles".as("sh_b"),
+        $"sig".as("sig_b")), b)
+      .as[(Long, Long, Array[Long], Array[Long], Array[Long], Array[Long])]
+      .map { case (idB, idA, shA, sigA, shB, sigB) =>
+        var eq = 0
+        var i = 0
+        while (i < NumHashes) { if (sigA(i) == sigB(i)) eq += 1; i += 1 }
+        (idA, idB, eq.toDouble / NumHashes, exactJaccard(shA, shB))
+      }
+      .toDF(a, b, "est_sim", "jaccard")
+      .filter($"jaccard" >= MinhashThreshold)
   }
 
   /** INCREMENTAL near-dup: a new crawl against an EXISTING corpus
@@ -323,7 +319,8 @@ object Dedup {
     * shingle Jaccard. Returns (new_id, corpus_id, est_sim, jaccard) with
     * jaccard ≥ [[MinhashThreshold]]. Truncation is observable via the
     * `graft.dedup.incr_buckets` observe metrics (listener channel — the
-    * result is eagerly materialized like [[minhashLsh]]'s).
+    * result is eagerly materialized like [[minhashLsh]]'s). A corpus table
+    * the caller has cached stays cached.
     */
   def incrementalMinhash(
       newDocs: DataFrame,
@@ -334,21 +331,9 @@ object Dedup {
     val spark = newDocs.sparkSession
     import spark.implicits._
     val newSigs = minhashSigsDf(newDocs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the corpus side is consumed by banding AND the verify join — cache
-    // it for the call too (an unpersisted storage-backed table would be
-    // scanned, or a derived one recomputed, twice). Spark caching is NOT
-    // ref-counted, so only take ownership when the caller hasn't already
-    // cached it — unpersisting a caller-cached corpus table here would
-    // evict the caller's cache as a side effect (ADVICE r4).
-    val corpusAlreadyCached =
-      corpusSigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val cSigs =
-      if (corpusAlreadyCached) corpusSigs
-      else corpusSigs
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val corpusBuckets = cappedBuckets(bandedSigs(cSigs, "id"),
+    // the corpus side is consumed by banding AND the verify join
+    CacheScope(newSigs, corpusSigs) {
+      val corpusBuckets = cappedBuckets(bandedSigs(corpusSigs, "id"),
         "graft.dedup.incr_buckets")
         .withColumnRenamed("ids", "corpus_ids")
       // NOTE on id namespaces: new and corpus ids are INDEPENDENT — a pair
@@ -359,25 +344,7 @@ object Dedup {
         .join(corpusBuckets, Seq("band", "bucket"))
         .select($"new_id", explode($"corpus_ids").as("corpus_id"))
         .distinct()
-      val nj = newSigs.select($"id".as("new_id"), $"shingles".as("sh_n"),
-        $"sig".as("sig_n"))
-      val cj = cSigs.select($"id".as("corpus_id"),
-        $"shingles".as("sh_c"), $"sig".as("sig_c"))
-      pairs.join(nj, "new_id").join(cj, "corpus_id")
-        .as[(Long, Long, Array[Long], Array[Long], Array[Long], Array[Long])]
-        .map { case (cid, nid, shn, sign, shc, sigc) =>
-          var eq = 0
-          var i = 0
-          while (i < NumHashes) { if (sign(i) == sigc(i)) eq += 1; i += 1 }
-          (nid, cid, eq.toDouble / NumHashes, exactJaccard(shn, shc))
-        }
-        .toDF("new_id", "corpus_id", "est_sim", "jaccard")
-        .filter($"jaccard" >= MinhashThreshold)
-        .localCheckpoint(true)
-    } finally {
-      newSigs.unpersist(false)
-      if (!corpusAlreadyCached) cSigs.unpersist(false)
-      ()
+      verifyMinhash(pairs, "new_id", newSigs, "corpus_id", corpusSigs)
     }
   }
 
@@ -556,15 +523,13 @@ object Dedup {
     // consume it through DIFFERENT exchange children (partial-agg vs
     // plain), so AQE stage reuse cannot share it and the score scan + CC
     // join ran twice. The projection is NARROW (id, cluster, score — no
-    // text), so caching it is cheap; materialize the equally-narrow result
-    // and release the cache in finally.
+    // text), so caching it is cheap.
     val labeled = scoredDocs
       .join(cc, scoredDocs("doc_id") === cc("v"), "left")
       .select(scoredDocs("doc_id"),
         coalesce($"component", scoredDocs("doc_id")).as("cluster"),
         scoredDocs("score"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope(labeled) {
       val best = labeled
         .groupBy($"cluster")
         .agg(max(struct($"score", (-$"doc_id").as("negId"))).as("b"))
@@ -574,10 +539,6 @@ object Dedup {
       // hint: AQE decides from the measured size at runtime
       labeled.join(best, $"cluster" === $"bc")
         .select($"doc_id", $"cluster", ($"doc_id" === $"best_doc").as("keep"))
-        .localCheckpoint(true)
-    } finally {
-      labeled.unpersist(false)
-      ()
     }
   }
 
@@ -604,9 +565,6 @@ object Dedup {
     sig
   }
 
-  /** SimHash near-dup: pigeonhole banding on 4×16-bit chunks, verify by
-    * Hamming distance. Output (id_a, id_b, hamming) with hamming <= maxDist.
-    */
   /** Per-doc (id, 64-bit simhash) — the row-local signature stage of
     * [[simhashDedup]], exposed for the same {OUT}-dump oracle pattern as
     * [[minhashSigsDf]].
@@ -621,6 +579,9 @@ object Dedup {
       .toDF("id", "sig")
   }
 
+  /** SimHash near-dup: pigeonhole banding on 4×16-bit chunks, verify by
+    * Hamming distance. Output (id_a, id_b, hamming) with hamming <= maxDist.
+    */
   def simhashDedup(
       docs: DataFrame,
       idCol: String,
@@ -629,12 +590,9 @@ object Dedup {
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // same three-consumer shape as minhashLsh (banding + both join sides):
-    // persist the one-full-text-pass signature stage, materialize the small
-    // verified output, release the cache deterministically
+    // consumed by banding and both verify sides
     val sigs = simhashSigsDf(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope(sigs) {
       val banded = sigs.as[(Long, Long)].flatMap { case (id, sig) =>
         (0 until 4).map(b => (b, (sig >>> (b * 16)) & 0xffffL, id))
       }.toDF("band", "bucket", "id")
@@ -645,10 +603,6 @@ object Dedup {
         .withColumn("hamming", bit_count($"sig_a".bitwiseXOR($"sig_b")))
         .filter($"hamming" <= maxDist)
         .select($"id_a", $"id_b", $"hamming")
-        .localCheckpoint(true)
-    } finally {
-      sigs.unpersist(false)
-      ()
     }
   }
 

@@ -3,7 +3,7 @@ package graft.textops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Hashing
+import graft.util.{CacheScope, Hashing}
 
 /** Similarity search over an embedding column (`array<float>`):
   * brute-force cosine top-k as the exact baseline, and a random-hyperplane
@@ -368,51 +368,46 @@ object Similarity {
     * CC engine as KG canonicalization.
     *
     * Output (vec_id, cell, cluster, keep) covering EVERY input vector.
-    * The cells frame feeds three consumers (banding + both verify sides);
-    * at 100 TB persist [[semanticCells]]' output first (the caller-owned-
-    * cache contract of [[TextOps.ngramLogFreqScore]]) — quantizer TRAINING
-    * runs once per call regardless (driver-side on a bounded sample).
+    * Quantizer TRAINING runs once per call (driver-side on a bounded
+    * sample).
     */
   def semanticDedup(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
-    // The cell-assignment stage feeds FOUR consumers (banding, both sides
-    // of the cosine verify, the final labeled output). Same shape as
-    // minhashLsh's signature stage: persist for the duration of the call,
-    // eagerly materialize the verified edge set (the small end of the
-    // funnel — orders of magnitude below the corpus), release the cache in
-    // finally. The returned frame re-derives cells ONCE lazily at
-    // consumption (narrow scan + assignment UDF, no shuffle), so the total
-    // is 2 corpus passes instead of 5.
+    // the cell-assignment stage is consumed by banding and both verify
+    // sides; the returned frame re-derives cells ONCE lazily at consumption
+    // (narrow scan + assignment UDF, no shuffle), so the total is 2 corpus
+    // passes instead of 5
     val cells = semanticCells(embeddings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val edges = CacheScope(cells) {
       val banded = cells.select(lit(0).as("band"),
         $"cell".cast("long").as("bucket"), $"vec_id".as("id"))
       val pairs = Dedup.cappedPairs(banded, "graft.dedup.semantic_cells")
-      val edges = pairs
-        .join(cells.select($"vec_id".as("id_a"), $"embedding".as("emb_a")),
-          "id_a")
-        .join(cells.select($"vec_id".as("id_b"), $"embedding".as("emb_b")),
-          "id_b")
-        .withColumn("sim", round(cosine($"emb_a", $"emb_b"), 6))
-        .filter($"sim" >= DupCosine)
-        .select($"id_a".as("src"), $"id_b".as("dst"))
-        .localCheckpoint(true)
-      // CC materializes its labels internally (iterative, checkpointed per
-      // round), so it runs entirely against the tiny edge set
-      val cc = graft.canon.Canon.connectedComponents(edges)
-      // ONE pass over cells for the labeled output (clusterCanonical's
-      // docIds-join-then-cell-join shape would scan cells twice)
-      cells.join(cc, cells("vec_id") === cc("v"), "left")
-        .select(cells("vec_id"), $"cell",
-          coalesce($"component", cells("vec_id")).as("cluster"))
-        .withColumn("keep", $"vec_id" === $"cluster")
-    } finally {
-      cells.unpersist(false)
-      ()
+      verifyCosine(pairs, cells).select($"id_a".as("src"), $"id_b".as("dst"))
     }
+    // CC materializes its labels internally (iterative, checkpointed per
+    // round), so it runs entirely against the tiny edge set
+    val cc = graft.canon.Canon.connectedComponents(edges)
+    // ONE pass over cells for the labeled output (clusterCanonical's
+    // docIds-join-then-cell-join shape would scan cells twice)
+    cells.join(cc, cells("vec_id") === cc("v"), "left")
+      .select(cells("vec_id"), $"cell",
+        coalesce($"component", cells("vec_id")).as("cluster"))
+      .withColumn("keep", $"vec_id" === $"cluster")
   }
+
+  /** Cosine verification of candidate pairs (id_a, id_b) against a
+    * (vec_id, embedding) table: both sides joined, `sim` =
+    * round(cosine, 6), kept at ≥ [[DupCosine]].
+    */
+  private def verifyCosine(pairs: DataFrame, embeddings: DataFrame): DataFrame =
+    pairs
+      .join(embeddings.select(col("vec_id").as("id_a"),
+        col("embedding").as("emb_a")), "id_a")
+      .join(embeddings.select(col("vec_id").as("id_b"),
+        col("embedding").as("emb_b")), "id_b")
+      .withColumn("sim", round(cosine(col("emb_a"), col("emb_b")), 6))
+      .filter(col("sim") >= DupCosine)
 
   /** Embedding-cosine near-duplicate pairs via multi-table LSH buckets (the
     * 5th dedup modality): pairs sharing any table's sign bucket with
@@ -444,13 +439,6 @@ object Similarity {
       // band = table id (top bits of the combined key), bucket = full key
       .select(shiftright($"b", 24).as("band"), $"b".as("bucket"), $"id")
     val pairs = Dedup.cappedPairs(banded, "graft.dedup.embedding_buckets")
-    pairs
-      .join(embeddings.select($"vec_id".as("id_a"),
-        $"embedding".as("emb_a")), "id_a")
-      .join(embeddings.select($"vec_id".as("id_b"),
-        $"embedding".as("emb_b")), "id_b")
-      .withColumn("sim", round(cosine($"emb_a", $"emb_b"), 6))
-      .filter($"sim" >= DupCosine)
-      .select($"id_a", $"id_b", $"sim")
+    verifyCosine(pairs, embeddings).select($"id_a", $"id_b", $"sim")
   }
 }

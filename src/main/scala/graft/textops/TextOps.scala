@@ -906,12 +906,17 @@ object TextOps {
         col("pack_id"))
   }
 
+  /** Token budget per pack of the tq_pack_sequences and tq_corpus_prep
+    * queries and of [[packSequencesSql]].
+    */
+  val PackBudget = 2048L
+
   /** DuckDB mirror of [[packSequences]] over a (doc_id, source, text)
     * table, sharded by `source` (same window frame, same integer div).
     */
-  def packSequencesSql(table: String, budget: Long): String =
+  def packSequencesSql(table: String): String =
     s"""SELECT shard, doc_id, n_tokens,
-       |  CAST(cum // $budget AS BIGINT) AS pack_id
+       |  CAST(cum // $PackBudget AS BIGINT) AS pack_id
        |FROM (
        |  SELECT shard, doc_id, n_tokens,
        |    coalesce(sum(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id
@@ -1411,8 +1416,11 @@ object TextOps {
         col("rk").cast("int").as("rk"))
   }
 
+  /** Terms per document of the tq_keywords query and of [[keywordsSql]]. */
+  val KeywordsPerDoc = 3
+
   /** DuckDB mirror of [[keywords]] over a (doc_id, text) table. */
-  def keywordsSql(table: String, k: Int): String =
+  def keywordsSql(table: String): String =
     s"""WITH terms AS (
        |  SELECT doc_id, unnest(${tokenArraySql("text")}) AS term
        |  FROM $table),
@@ -1424,7 +1432,7 @@ object TextOps {
        |    row_number() OVER (PARTITION BY tf.doc_id
        |      ORDER BY tf.tf DESC, df.df ASC, tf.term ASC) AS rk
        |  FROM tf JOIN df USING (term))
-       |WHERE rk <= $k""".stripMargin
+       |WHERE rk <= $KeywordsPerDoc""".stripMargin
 
   // ---- deterministic corpus split (hash-assigned train/val/test) ----------
 
@@ -1470,7 +1478,10 @@ object TextOps {
 
   // ---- per-domain document cap (C4/RefinedWeb host quota) -----------------
 
-  /** Keep at most `k` documents per domain, by a deterministic priority
+  /** Documents [[domainCap]] keeps per domain. */
+  val DomainCapDocs = 10
+
+  /** Keep at most [[DomainCapDocs]] documents per domain, by a deterministic priority
     * (orderCol DESC, id ASC — "the k longest pages of every host", the
     * C4/RefinedWeb guard against a single boilerplate-heavy domain
     * swamming the mix; [[domainMixSample]] is its probabilistic sibling).
@@ -1489,26 +1500,25 @@ object TextOps {
       docs: DataFrame,
       idCol: String,
       domainCol: String,
-      orderCol: String,
-      k: Int): DataFrame = {
+      orderCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(domainCol))
       .orderBy(col(orderCol).desc_nulls_last, col(idCol).asc_nulls_last)
     docs.select(col(domainCol), col(idCol), col(orderCol))
       .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= DomainCapDocs)
   }
 
   /** DuckDB mirror of [[domainCap]] over a (doc_id, source, n_chars)
     * table.
     */
-  def domainCapSql(table: String, k: Int): String =
+  def domainCapSql(table: String): String =
     s"""SELECT source, doc_id, n_chars, CAST(rk AS INT) AS rk FROM (
        |  SELECT source, doc_id, n_chars,
        |    row_number() OVER (PARTITION BY source
        |      ORDER BY n_chars DESC NULLS LAST, doc_id ASC NULLS LAST) AS rk
        |  FROM $table)
-       |WHERE rk <= $k""".stripMargin
+       |WHERE rk <= $DomainCapDocs""".stripMargin
 
   // ---- unicode text normalization (ftfy-lite cleanup pass) ----------------
 

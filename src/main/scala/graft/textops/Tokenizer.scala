@@ -85,6 +85,9 @@ object Tokenizer {
   /** A pair is merged only while its count reaches this. */
   val BpeMinCount = 2L
 
+  /** Merges of the tok_bpe_merges query and of [[bpeMergesSql]]. */
+  val BpeMerges = 12
+
   /** Sequential reference trainer (plain Scala, no Spark): the single
     * source of truth the distributed trainer is checked against and the
     * generated-VALUES oracle is built from.
@@ -347,8 +350,8 @@ object Tokenizer {
     * generated by running the sequential reference at SQL-build time —
     * the distributed-equals-sequential contract, checked as data.
     */
-  def bpeMergesSql(numMerges: Int): String = {
-    val rows = bpeTrainLocal(fixtureCorpus, numMerges)
+  def bpeMergesSql: String = {
+    val rows = bpeTrainLocal(fixtureCorpus, BpeMerges)
       .map(m => s"(${m.ix}, ${TextOps.sqlLit(m.left)}, " +
         s"${TextOps.sqlLit(m.right)}, ${m.pairCount})")
       .mkString(",\n  ")

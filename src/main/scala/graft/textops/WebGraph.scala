@@ -2,7 +2,7 @@ package graft.textops
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.util.Observed
+import graft.util.{CacheScope, Observed}
 
 /** Host-level link-graph analytics for web corpora: edge extraction from
   * document text plus an integer-exact damped PageRank (Page et al. 1999,
@@ -85,7 +85,7 @@ object WebGraph {
   def hostRank(edges0: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val edges = edges0.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
+      .repartition(col("src"))
     // (src, dst, deg): reuses edges' src partitioning — AQE sees both
     // sides pre-partitioned on src, no extra exchange for the edge side.
     // r6: PERSISTED — left lazy, every iteration's checkpoint job re-ran
@@ -99,32 +99,25 @@ object WebGraph {
     val withDeg = {
       val outdeg = edges.groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
-      edges.join(outdeg, Seq("src")).persist()
+      edges.join(outdeg, Seq("src"))
     }
-    try {
-      val nodes = edges.select(col("src").as("host"))
-        .union(edges.select(col("dst").as("host")))
-        .distinct().persist()
-      var rank = nodes.select(col("host"),
-        lit(rankScale).as("rank_x1e6"))
-      for (_ <- 1 to iterations) {
-        val contrib = withDeg
-          .join(rank, col("src") === col("host"))
-          .select(col("dst"), expr("rank_x1e6 div deg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("m"))
-        rank = nodes.join(contrib, col("host") === col("dst"), "left")
-          .select(col("host"),
-            expr(s"CAST($rankBase + ($dampPct * coalesce(m, CAST(0 AS BIGINT)))" +
-              " div 100 AS BIGINT)").as("rank_x1e6"))
-          .localCheckpoint(true)
-      }
-      // rank is already materialized; the persisted inputs can go
-      nodes.unpersist()
-      rank
-    } finally {
-      withDeg.unpersist()
-      edges.unpersist()
-      ()
+    val nodes = edges.select(col("src").as("host"))
+      .union(edges.select(col("dst").as("host")))
+      .distinct()
+    def step(rank: DataFrame): DataFrame = {
+      val contrib = withDeg
+        .join(rank, col("src") === col("host"))
+        .select(col("dst"), expr("rank_x1e6 div deg").as("c"))
+        .groupBy(col("dst")).agg(sum(col("c")).as("m"))
+      nodes.join(contrib, col("host") === col("dst"), "left")
+        .select(col("host"),
+          expr(s"CAST($rankBase + ($dampPct * coalesce(m, CAST(0 AS BIGINT)))" +
+            " div 100 AS BIGINT)").as("rank_x1e6"))
+    }
+    CacheScope(edges, withDeg, nodes) {
+      var rank = nodes.select(col("host"), lit(rankScale).as("rank_x1e6"))
+      for (_ <- 1 until iterations) rank = step(rank).localCheckpoint(true)
+      step(rank) // the last round: the scope's checkpoint
     }
   }
 
@@ -200,11 +193,11 @@ object WebGraph {
     * Output: (host, component_id) covering every host in the edge set.
     */
   def hostComponents(edges0: DataFrame): DataFrame = {
-    // persisted: consumed by BOTH the host spine and the CC engine — the
-    // hostRank stance; without it the corpus-scan link extraction behind
-    // edges0 runs twice (different projections, no exchange reuse)
-    val edges = edges0.select(col("src"), col("dst")).persist()
-    try {
+    // cached: consumed by BOTH the host spine and the CC engine; without it
+    // the corpus-scan link extraction behind edges0 runs twice (different
+    // projections, no exchange reuse)
+    val edges = edges0.select(col("src"), col("dst"))
+    CacheScope(edges) {
       val hosts = edges.select(col("src").as("host"))
         .union(edges.select(col("dst").as("host")))
         .distinct()
@@ -215,9 +208,7 @@ object WebGraph {
       hosts.join(cc, hosts("hid") === cc("v"), "left")
         .select(col("host"),
           coalesce(col("component"), col("hid")).as("component_id"))
-        // materialize before the finally releases the edge cache
-        .localCheckpoint(true)
-    } finally { edges.unpersist(); () }
+    }
   }
 
   /** DuckDB mirror of [[hostGraphEdges]] + [[hostComponents]] over a
@@ -263,53 +254,47 @@ object WebGraph {
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-      .persist()
-    try {
-      val deg = und.select(col("a").as("host"))
-        .union(und.select(col("b").as("host")))
-        .groupBy(col("host")).agg(count(lit(1)).as("d"))
-      // orient each undirected edge low→high in (degree, host) order
-      val oriented = und
-        .join(deg.select(col("host").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("host").as("b"), col("d").as("db")), Seq("b"))
-        .select(
-          when(col("da") < col("db") ||
-            (col("da") === col("db") && col("a") < col("b")),
-            struct(col("a").as("u"), col("b").as("v"),
-              col("db").as("dv")))
-            .otherwise(struct(col("b").as("u"), col("a").as("v"),
-              col("da").as("dv"))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-        .persist()
-      try {
-        // wedges at the lowest-ranked vertex: (u, v, w) with v before w
-        val wedges = oriented.select(col("u"), col("v"), col("dv"))
-          .join(oriented.select(col("u"), col("v").as("w"),
-            col("dv").as("dw")), Seq("u"))
-          .filter(col("dv") < col("dw") ||
-            (col("dv") === col("dw") && col("v") < col("w")))
-        // the closing edge (v, w) is oriented v→w by the rank order above
-        val tri = wedges.join(
-          oriented.select(col("u").as("v"), col("v").as("w")),
-          Seq("v", "w"))
-        val counts = tri
-          .select(explode(array(col("u"), col("v"), col("w"))).as("host"))
-          .groupBy(col("host")).agg(count(lit(1)).as("n_tri"))
-        deg.select(col("host"))
-          .join(counts, Seq("host"), "left")
-          .select(col("host"),
-            coalesce(col("n_tri"), lit(0L)).as("n_tri"))
-          // observed during the checkpoint materialization (zero extra
-          // jobs); ALSO what lets PlanGuardSpec capture the real internal
-          // plan from the listener channel — the returned DF is a
-          // checkpoint scan (the minhashLsh caveat)
-          .observe("graft.webgraph.triangles",
-            count(lit(1)).as("n_hosts"),
-            sum(col("n_tri")).as("tri_mass"))
-          // materialize before the persisted inputs are released below
-          .localCheckpoint(true)
-      } finally { oriented.unpersist(); () }
-    } finally { und.unpersist(); () }
+    val deg = und.select(col("a").as("host"))
+      .union(und.select(col("b").as("host")))
+      .groupBy(col("host")).agg(count(lit(1)).as("d"))
+    // orient each undirected edge low→high in (degree, host) order
+    val oriented = und
+      .join(deg.select(col("host").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("host").as("b"), col("d").as("db")), Seq("b"))
+      .select(
+        when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("u"), col("b").as("v"),
+            col("db").as("dv")))
+          .otherwise(struct(col("b").as("u"), col("a").as("v"),
+            col("da").as("dv"))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
+    CacheScope(und, oriented) {
+      // wedges at the lowest-ranked vertex: (u, v, w) with v before w
+      val wedges = oriented.select(col("u"), col("v"), col("dv"))
+        .join(oriented.select(col("u"), col("v").as("w"),
+          col("dv").as("dw")), Seq("u"))
+        .filter(col("dv") < col("dw") ||
+          (col("dv") === col("dw") && col("v") < col("w")))
+      // the closing edge (v, w) is oriented v→w by the rank order above
+      val tri = wedges.join(
+        oriented.select(col("u").as("v"), col("v").as("w")),
+        Seq("v", "w"))
+      val counts = tri
+        .select(explode(array(col("u"), col("v"), col("w"))).as("host"))
+        .groupBy(col("host")).agg(count(lit(1)).as("n_tri"))
+      deg.select(col("host"))
+        .join(counts, Seq("host"), "left")
+        .select(col("host"),
+          coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+        // observed during the scope's checkpoint materialization (zero
+        // extra jobs); ALSO what lets PlanGuardSpec capture the real
+        // internal plan from the listener channel — the returned DF is a
+        // checkpoint scan
+        .observe("graft.webgraph.triangles",
+          count(lit(1)).as("n_hosts"),
+          sum(col("n_tri")).as("tri_mass"))
+    }
   }
 
   /** DuckDB mirror of [[hostGraphEdges]] + [[triangleCounts]]: canonical
@@ -365,39 +350,39 @@ object WebGraph {
     */
   def hits(edges0: DataFrame): DataFrame = {
     val edges = edges0.select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
+      .repartition(col("src"))
     // r6: HITS probes edges from BOTH endpoints every round — the auth
-    // half-step joins on src (co-partitioned with the cache above, free),
+    // half-step joins on src (co-partitioned with the edge cache, free),
     // but the hub half-step joins on dst, which re-shuffled the whole
     // corpus-sized edge table by dst ONCE PER ITERATION (the round-to-round
     // hub input differs, so AQE stage reuse cannot carry the exchange
-    // across rounds). A second persisted copy partitioned by dst pays that
+    // across rounds). A second cached copy partitioned by dst pays that
     // shuffle exactly once; each round's hub join is then exchange-free on
     // the edge side — per-iteration shuffle drops to the score tables only.
-    val edgesByDst = edges.repartition(col("dst")).persist()
-    try {
-      val nodes = edges.select(col("src").as("host"))
-        .union(edges.select(col("dst").as("host")))
-        .distinct().persist()
+    val edgesByDst = edges.repartition(col("dst"))
+    val nodes = edges.select(col("src").as("host"))
+      .union(edges.select(col("dst").as("host")))
+      .distinct()
+    // r6: each half-step's RAW table is checkpointed with its maximum
+    // collected as an OBSERVED metric during that same materialization
+    // (the Canon convergence-read pattern — zero extra jobs); the
+    // normalization is then a lazy projection over the checkpoint with
+    // the divisor as a LITERAL. The r5 form computed the max as a
+    // broadcast scalar (crossJoin(broadcast(agg))) — an extra stage set
+    // per half-step, plus the post-shuffle half-step aggregate executed
+    // twice (once under the broadcast, once under the join; stage reuse
+    // shares only the exchange). Same integer math, same divisors, same
+    // scores (warm 2.31 → 1.26 s at sf0.1 for the 3-iteration query).
+    def rawMax(df: DataFrame): (DataFrame, Long) = {
+      val obs = Observation()
+      val ck = df.observe(obs, max(col("raw")).as("mx"))
+        .localCheckpoint(true)
+      val row = Observed.await(obs)
+      (ck, if (row.isNullAt(0)) 0L else row.getLong(0))
+    }
+    CacheScope(edges, edgesByDst, nodes) {
       var hub = nodes.select(col("host"), lit(hitsScale).as("s"))
       var auth: DataFrame = null
-      // r6: each half-step's RAW table is checkpointed with its maximum
-      // collected as an OBSERVED metric during that same materialization
-      // (the Canon convergence-read pattern — zero extra jobs); the
-      // normalization is then a lazy projection over the checkpoint with
-      // the divisor as a LITERAL. The r5 form computed the max as a
-      // broadcast scalar (crossJoin(broadcast(agg))) — an extra stage set
-      // per half-step, plus the post-shuffle half-step aggregate executed
-      // twice (once under the broadcast, once under the join; stage reuse
-      // shares only the exchange). Same integer math, same divisors, same
-      // scores (warm 2.31 → 1.26 s at sf0.1 for the 3-iteration query).
-      def rawMax(df: DataFrame): (DataFrame, Long) = {
-        val obs = Observation()
-        val ck = df.observe(obs, max(col("raw")).as("mx"))
-          .localCheckpoint(true)
-        val row = Observed.await(obs)
-        (ck, if (row.isNullAt(0)) 0L else row.getLong(0))
-      }
       for (_ <- 1 to HitsIterations) {
         val (ar, amx) = rawMax(
           edges.join(hub, col("src") === col("host"))
@@ -414,20 +399,13 @@ object WebGraph {
         hub = hr.select(col("src").as("host"),
           expr(s"raw div CAST($hDiv AS BIGINT)").as("s"))
       }
-      val out = nodes
+      nodes
         .join(hub.withColumnRenamed("s", "hub_x2p20"), Seq("host"), "left")
         .join(auth.withColumnRenamed("dst", "host")
           .withColumnRenamed("s", "auth_x2p20"), Seq("host"), "left")
         .select(col("host"),
           coalesce(col("hub_x2p20"), lit(0L)).as("hub_x2p20"),
           coalesce(col("auth_x2p20"), lit(0L)).as("auth_x2p20"))
-        .localCheckpoint(true)
-      nodes.unpersist()
-      out
-    } finally {
-      edgesByDst.unpersist()
-      edges.unpersist()
-      ()
     }
   }
 

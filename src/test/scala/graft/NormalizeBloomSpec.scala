@@ -125,7 +125,7 @@ class NormalizeBloomSpec extends AnyFunSuite {
       (0 until 3).map(i => (100L + i, Some("b"), 50L)) ++
       Seq((200L, Option.empty[String], 10L)))
       .toDF("doc_id", "source", "n_chars")
-    val out = TextOps.domainCap(docs, "doc_id", "source", "n_chars", 10)
+    val out = TextOps.domainCap(docs, "doc_id", "source", "n_chars")
     val rows = out.collect()
     val byDom = rows.groupBy(r => Option(r.getString(0)))
     assert(byDom(Some("a")).length == 10, "cap must bind on the big domain")

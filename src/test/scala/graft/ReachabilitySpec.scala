@@ -76,6 +76,7 @@ object ReachabilitySpec {
     "graft/tools/ScaleProbe.scala main" -> "main: the JVM entry point Bench's spark-submit children run",
     "graft/functions/NfcNormalize.scala register" -> "entry point: registers nfc_normalize, DuckDB's builtin name, for spark.sql queries",
     "graft/functions/RollingHash.scala register" -> "entry point: registers rolling_hash for spark.sql queries",
+    "graft/util/CacheScope.scala apply" -> "entry point: the curation operators call it as `CacheScope(frames) { … }`, apply sugar that names no `apply`",
     "graft/SparkEntry.scala entry" -> "entry point: the flagship triples call a driver smoke-checks (rows > 0 on sf0.001)",
     "graft/functions/NfcNormalize.scala nfcUtf8" -> "codegen entry point: the Java that NfcNormalize.doGenCode emits calls it",
     "graft/merge/Merge.scala wordsCombiner" -> "reference port: words_combiner, clean_and_save.py:65-110",
