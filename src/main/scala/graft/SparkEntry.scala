@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.canon.Canon
+import graft.textops.{Dedup, Similarity}
 
 /** Driver contract — oracle-checked operator surface (SURVEY.md §2) plus the
   * KG pipeline itself as rows-only entries.
@@ -87,31 +89,18 @@ object SparkEntry {
     * rare-shingle edge derivation (the Dedup.sharedRareShingleEdges
     * semantics: 3-shingles over ' +'-split words, df=2 inverted index,
     * ≥2 shared shingles) + transitive-closure components, ending at
-    * comp(v, cluster) with cluster = min member id. dedup_cluster_pick and
-    * dedup_cluster_best compose their keep policies on top.
+    * comp(v, component) with component = min member id.
+    * dedup_cluster_pick and dedup_cluster_best compose their keep policies
+    * on top.
     */
   private val clusterCompCtes: String =
-    """WITH RECURSIVE sh AS (
-      |  SELECT doc_id,
-      |    list_distinct(CASE WHEN len(words) = 0 THEN CAST([] AS VARCHAR[])
-      |      WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-      |      ELSE list_transform(generate_series(1, len(words)-2),
-      |             i -> array_to_string(words[i:i+2], ' ')) END) AS s
-      |  FROM (SELECT doc_id,
-      |          list_filter(string_split_regex(text, ' +'), w -> len(w) > 0) AS words
-      |        FROM documents)),
+    s"""WITH RECURSIVE sh AS (${Dedup.shingleSetSql("documents")}),
       |expl AS (SELECT doc_id, unnest(s) AS g FROM sh),
       |rare AS (SELECT g, min(doc_id) AS a, max(doc_id) AS b
       |         FROM expl GROUP BY g HAVING count(*) = 2 AND min(doc_id) != max(doc_id)),
-      |edges AS (SELECT a AS src, b AS dst FROM rare GROUP BY a, b HAVING count(*) >= 2),
-      |sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-      |vertices AS (SELECT DISTINCT doc_id AS v FROM documents),
-      |reach(v, u) AS (
-      |  SELECT v, v FROM vertices
-      |  UNION
-      |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.u = s.src
-      |),
-      |comp AS (SELECT v, min(u) AS cluster FROM reach GROUP BY v)""".stripMargin
+      |edges AS (SELECT a AS src, b AS dst FROM rare GROUP BY a, b
+      |          HAVING count(*) >= ${Dedup.RareMinShared}),
+      |${Canon.componentsSql("edges", "SELECT DISTINCT doc_id FROM documents", "u")}""".stripMargin
 
   /** Planted messy-URL variants for tq_url_canon (single source of truth
     * for the Spark query and the generated oracle): A and D canonicalize
@@ -377,10 +366,10 @@ object SparkEntry {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val corpus = docs.filter(col("doc_id") % 3 =!= 0)
       val recrawl = corpus.filter(col("doc_id") % 21 === 1)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"), col("text"))
+        .select((col("doc_id") + lit(TwinOffset)).as("doc_id"), col("text"))
       val newCrawl = docs.filter(col("doc_id") % 3 === 0)
         .unionByName(recrawl)
-      graft.textops.Dedup.bloomNewDocs(newCrawl, "doc_id", "text", corpus)
+      Dedup.bloomNewDocs(newCrawl, "doc_id", "text", corpus)
     }),
     // ---- ExactSubstr dedup (Lee et al. 2022): remove duplicated k-word
     // spans, keep-first; boilerplate planted on doc_id%6 so removal is
@@ -390,7 +379,7 @@ object SparkEntry {
         concat(coalesce(col("text"), lit("")),
           when(col("doc_id") % 6 === 0, lit(" " + plantedBoilerplate))
             .otherwise(lit(""))).as("text"))
-      graft.textops.Dedup.exactSubstringDedup(aug, "doc_id", "text")
+      Dedup.exactSubstringDedup(aug, "doc_id", "text")
         .select(col("doc_id"), col("n_words"), col("n_removed"),
           md5(col("kept_text")).as("kept_md5"))
     }),
@@ -445,8 +434,8 @@ object SparkEntry {
     }),
     // ---- similarity search: exact brute-force cosine top-k ----
     "sim_topk_bruteforce" -> ((s, dir) => {
-      graft.textops.Similarity.bruteForceTopK(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq, 3)
+      Similarity.bruteForceTopK(
+        t(s, dir, "embeddings"), annQueryIds, Similarity.AnnK)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     // ---- probabilistic-structure queries, oracled via the {OUT}-dump
@@ -455,28 +444,30 @@ object SparkEntry {
     // re-derives candidate generation, capping, verification and ranking
     // from it in plain SQL ----
     "sim_topk_lsh" -> ((s, dir) => {
-      graft.textops.Similarity.lshTopK(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq, 3)
+      Similarity.lshTopK(
+        t(s, dir, "embeddings"), annQueryIds, Similarity.AnnK)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     "sim_topk_ivf" -> ((s, dir) => {
-      graft.textops.Similarity.ivfTopK(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq, 3)
+      Similarity.ivfTopK(
+        t(s, dir, "embeddings"), annQueryIds, Similarity.AnnK)
         .select(col("query_id"), col("neighbor_id"), col("rank"))
     }),
     "dedup_minhash_lsh" -> ((s, dir) => {
       // n_eq = est_sim·128 is EXACT (den is a power of two); jaccard is
       // floor-scaled to 1e6 — one IEEE division + multiply, identical in
       // both engines
-      graft.textops.Dedup.minhashLsh(
-        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text")
+      Dedup.minhashLsh(
+        withNearDupes(t(s, dir, "documents")), "doc_id", "text")
         .select(col("id_a"), col("id_b"),
-          (col("est_sim") * 128).cast("int").as("n_eq"),
+          (col("est_sim") * Dedup.NumHashes).cast("int")
+            .as("n_eq"),
           floor(col("jaccard") * 1e6).cast("long").as("jac_x1e6"))
     }),
     "dedup_simhash" -> ((s, dir) => {
-      graft.textops.Dedup.simhashDedup(
-        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text", 6)
+      Dedup.simhashDedup(
+        withNearDupes(t(s, dir, "documents")), "doc_id", "text",
+        SimhashMaxDist)
         .select(col("id_a"), col("id_b"), col("hamming").cast("long")
           .as("hamming"))
     }),
@@ -489,8 +480,8 @@ object SparkEntry {
     // never carried shingles, but the 3-column form encoded the shingle
     // array through the typed encoder just to drop it here
     "dedup_minhash_sigs" -> ((s, dir) => {
-      graft.textops.Dedup.minhashSigOnlyDf(
-        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text")
+      Dedup.minhashSigOnlyDf(
+        withNearDupes(t(s, dir, "documents")), "doc_id", "text")
         .select(col("id"), posexplode(col("sig")).as(Seq("pos", "val")))
     }),
     // exact-copy signature invariance: identical text ⇒ identical 128-long
@@ -501,38 +492,38 @@ object SparkEntry {
     // branch self-join would recompute the 128-hash map per branch.
     "dedup_minhash_sig_parity" -> ((s, dir) => {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val twins = docs.withColumn("doc_id", col("doc_id") + lit(10000000L))
-      graft.textops.Dedup.minhashSigOnlyDf(
+      val twins = docs.withColumn("doc_id", col("doc_id") + lit(TwinOffset))
+      Dedup.minhashSigOnlyDf(
         docs.unionByName(twins), "doc_id", "text")
-        .select((col("id") % 10000000L).as("id"),
+        .select((col("id") % TwinOffset).as("id"),
           xxhash64(col("sig").cast("string")).as("h"))
         .groupBy(col("id"))
         .agg((countDistinct(col("h")) === 1 && count(lit(1)) === 2)
           .as("sigs_equal"))
     }),
     "dedup_simhash_sigs" -> ((s, dir) => {
-      graft.textops.Dedup.simhashSigsDf(
-        withNearDupes(s, t(s, dir, "documents")), "doc_id", "text")
+      Dedup.simhashSigsDf(
+        withNearDupes(t(s, dir, "documents")), "doc_id", "text")
     }),
     "sim_lsh_buckets" -> ((s, dir) => {
-      graft.textops.Similarity.lshBucketsDf(t(s, dir, "embeddings"))
+      Similarity.lshBucketsDf(t(s, dir, "embeddings"))
         .select(col("vec_id"), col("bucket"))
     }),
     "sim_ivf_cells" -> ((s, dir) => {
-      graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq)._1
+      Similarity.ivfAssignments(
+        t(s, dir, "embeddings"), annQueryIds)._1
         .select(col("vec_id"), col("cell"))
     }),
     "sim_ivf_probes" -> ((s, dir) => {
-      graft.textops.Similarity.ivfAssignments(
-        t(s, dir, "embeddings"), (0L until 20L).toSeq)._2
+      Similarity.ivfAssignments(
+        t(s, dir, "embeddings"), annQueryIds)._2
     }),
     // sim column intentionally dropped: membership is the oracle-checkable
     // contract (planted twins at cos≈1 vs organic max 0.51 at sf0.01 — far
     // from the 0.95 threshold on both sides)
     "dedup_embedding_cos" -> ((s, dir) => {
-      graft.textops.Similarity.embeddingNearDup(
-        withPerturbedEmbeddings(s, t(s, dir, "embeddings")))
+      Similarity.embeddingNearDup(
+        withPerturbedEmbeddings(t(s, dir, "embeddings")))
         .select(col("id_a"), col("id_b"))
     }),
     // ---- SemDeDup semantic dedup (embedding-level, beside MinHash) ----
@@ -540,13 +531,13 @@ object SparkEntry {
     // consumer re-derives capping + cosine verification + the recursive-CTE
     // component pick entirely in SQL over it
     "dedup_semantic_cells" -> ((s, dir) => {
-      graft.textops.Similarity.semanticCells(
-        withPerturbedEmbeddings(s, t(s, dir, "embeddings")))
+      Similarity.semanticCells(
+        withPerturbedEmbeddings(t(s, dir, "embeddings")))
         .select(col("vec_id"), col("cell"))
     }),
     "dedup_semantic" -> ((s, dir) => {
-      graft.textops.Similarity.semanticDedup(
-        withPerturbedEmbeddings(s, t(s, dir, "embeddings")))
+      Similarity.semanticDedup(
+        withPerturbedEmbeddings(t(s, dir, "embeddings")))
     }),
     // planted-twin recovery contracts — each deterministic by construction,
     // so the oracle is the exact planted list over the base table:
@@ -557,9 +548,9 @@ object SparkEntry {
     //    shares all buckets; cos(v, 1.0001v)≈1 ⇒ rank-1
     "dedup_minhash_planted" -> ((s, dir) => {
       val docs = t(s, dir, "documents").filter(col("n_chars") >= 250)
-      graft.textops.Dedup.minhashLsh(
-        withNearDupes(s, docs), "doc_id", "text")
-        .filter(col("id_b") === col("id_a") + 10000000L)
+      Dedup.minhashLsh(
+        withNearDupes(docs), "doc_id", "text")
+        .filter(col("id_b") === col("id_a") + TwinOffset)
         .select(col("id_a"), col("id_b"))
     }),
     // incremental crawl-vs-corpus near-dup: new docs are planted twins of
@@ -572,29 +563,27 @@ object SparkEntry {
     // documented cap tradeoff, not an engine defect
     "dedup_incremental" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val corpusSigs = graft.textops.Dedup.minhashSigsDf(
+      val corpusSigs = Dedup.minhashSigsDf(
         docs, "doc_id", "text")
-      val newDocs = docs
-        .filter(col("doc_id") % 10 === 0 && col("n_chars") >= 250)
-        .withColumn("doc_id", col("doc_id") + lit(10000000L))
-        .withColumn("text", concat(col("text"), lit(" nearduplicate")))
-      graft.textops.Dedup.incrementalMinhash(
+      val newDocs =
+        nearDupes(docs.filter(col("doc_id") % 10 === 0 && col("n_chars") >= 250))
+      Dedup.incrementalMinhash(
         newDocs, "doc_id", "text", corpusSigs)
-        .filter(col("corpus_id") === col("new_id") - 10000000L)
+        .filter(col("corpus_id") === col("new_id") - TwinOffset)
         .select(col("new_id"), col("corpus_id"))
     }),
     "dedup_simhash_planted" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val copies = docs.withColumn("doc_id", col("doc_id") + lit(10000000L))
-      graft.textops.Dedup.simhashDedup(
-        docs.unionByName(copies), "doc_id", "text", 6)
-        .filter(col("id_b") === col("id_a") + 10000000L)
+      val copies = docs.withColumn("doc_id", col("doc_id") + lit(TwinOffset))
+      Dedup.simhashDedup(
+        docs.unionByName(copies), "doc_id", "text", SimhashMaxDist)
+        .filter(col("id_b") === col("id_a") + TwinOffset)
         .select(col("id_a"), col("id_b"))
     }),
     "sim_lsh_planted" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      graft.textops.Similarity.lshTopK(
-        withPlantedTwins(s, emb), (0L until 20L).toSeq, 1)
+      Similarity.lshTopK(
+        withPlantedTwins(emb), annQueryIds, 1)
         .select(col("query_id"), col("neighbor_id"))
     }),
     // IVF can lose a twin across a cell boundary (IvfProbes < Nlist), so the
@@ -602,11 +591,11 @@ object SparkEntry {
     "sim_ivf_planted" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val found = graft.textops.Similarity.ivfTopK(
-        withPlantedTwins(s, emb), (0L until 20L).toSeq, 1)
-        .filter(col("neighbor_id") === col("query_id") + 10000000L)
+      val found = Similarity.ivfTopK(
+        withPlantedTwins(emb), annQueryIds, 1)
+        .filter(col("neighbor_id") === col("query_id") + TwinOffset)
         .count()
-      Seq((20L, found >= 17L)).toDF("n_queries", "recall_ok")
+      Seq((AnnQueries, found >= 17L)).toDF("n_queries", "recall_ok")
     }),
     // column-expression language ID (codegen'd; SQL-mirrored for the oracle)
     "tq_langid" -> ((s, dir) => {
@@ -629,9 +618,9 @@ object SparkEntry {
     // a full cross-engine check of the CC implementation)
     "dedup_cluster_pick" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      graft.textops.Dedup.clusterCanonical(
+      Dedup.clusterCanonical(
         docs.select(col("doc_id")),
-        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
+        Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
     }),
     // ---- deterministic stratified sampling (downsample majority lang) ----
     // ---- PII redaction over a corpus with planted emails/IPs/phones ----
@@ -943,8 +932,8 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val scored = docs.select(col("doc_id"),
         graft.textops.TextOps.qualityScoreX1e6(col("text")).as("score"))
-      graft.textops.Dedup.clusterCanonicalBest(scored,
-        graft.textops.Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
+      Dedup.clusterCanonicalBest(scored,
+        Dedup.sharedRareShingleEdges(docs, "doc_id", "text"))
     }),
     // ---- model-based quality filter: count-trained linear classifier
     // (fastText/DCLM shape) — train on the hash-assigned 'train' split
@@ -1043,7 +1032,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
         .as[(Long, String)]
         .map { case (id, txt) =>
-          (id, graft.textops.Dedup.shingleStrings(txt).distinct)
+          (id, Dedup.shingleStrings(txt).distinct)
         }.toDF("doc_id", "sh")
       val a = docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a"))
       val b = docs.select((col("doc_id") - 1).as("id_a"),
@@ -1132,39 +1121,55 @@ object SparkEntry {
         .map(_.word)).distinct().toDF("word")
   }
 
-  /** Seed deterministic near-duplicates (id + 10_000_000, one word appended)
-    * so the near-dup detectors have planted positives to find in the
-    * otherwise duplicate-free synthetic corpus.
+  /** Id offset of every planted twin (a near-duplicate, a re-crawl, a
+    * perturbed or scaled embedding): twin id = original id + TwinOffset,
+    * on both engines.
     */
-  private def withNearDupes(s: SparkSession, docs: DataFrame): DataFrame = {
-    val dupes = docs.filter(col("doc_id") % 10 === 0)
-      .withColumn("doc_id", col("doc_id") + lit(10000000L))
-      .withColumn("text", concat(col("text"), lit(" nearduplicate")))
-    docs.unionByName(dupes)
-  }
+  private val TwinOffset = 10000000L
 
-  /** Same idea for embeddings: slightly perturbed copies (cos ≈ 0.9999). */
-  private def withPerturbedEmbeddings(s: SparkSession, emb: DataFrame): DataFrame = {
-    val pert = emb.filter(col("vec_id") % 20 === 0)
-      .withColumn("vec_id", col("vec_id") + lit(10000000L))
-      .withColumn("embedding",
-        org.apache.spark.sql.functions.transform(col("embedding"),
-          x => (x.cast("double") * lit(1.001)).cast("float")))
-    emb.unionByName(pert)
-  }
+  /** The ANN query set (vec_id < AnnQueries), on both engines. */
+  private val AnnQueries = 20L
+  private val annQueryIds = 0L until AnnQueries
 
-  /** Twin per ANN query vector (vec_id < 20 → id+10M, × 1.0001): a positive
-    * scalar multiple keeps every random-hyperplane dot-product sign, so the
-    * twin shares ALL sign-LSH buckets with its query deterministically.
+  /** The hamming distance the simhash queries pass, on both engines. */
+  private val SimhashMaxDist = 6
+
+  /** The near-duplicate of each doc: id + [[TwinOffset]], one word
+    * appended.
     */
-  private def withPlantedTwins(s: SparkSession, emb: DataFrame): DataFrame = {
-    val twins = emb.filter(col("vec_id") < 20)
-      .withColumn("vec_id", col("vec_id") + lit(10000000L))
-      .withColumn("embedding",
-        org.apache.spark.sql.functions.transform(col("embedding"),
-          x => (x.cast("double") * lit(1.0001)).cast("float")))
-    emb.unionByName(twins)
-  }
+  private val NearDupWord = "nearduplicate"
+  private def nearDupes(docs: DataFrame): DataFrame =
+    docs.withColumn("doc_id", col("doc_id") + lit(TwinOffset))
+      .withColumn("text", concat(col("text"), lit(" " + NearDupWord)))
+
+  /** Seed deterministic near-duplicates of every tenth doc so the near-dup
+    * detectors have planted positives to find in the otherwise
+    * duplicate-free synthetic corpus.
+    */
+  private def withNearDupes(docs: DataFrame): DataFrame =
+    docs.unionByName(nearDupes(docs.filter(col("doc_id") % 10 === 0)))
+
+  /** Embeddings plus a twin of each `picked` vector: id + [[TwinOffset]],
+    * every component × `factor` (in double, cast back to float).
+    */
+  private def withScaledTwins(
+      emb: DataFrame, picked: Column, factor: Double): DataFrame =
+    emb.unionByName(emb.filter(picked)
+      .withColumn("vec_id", col("vec_id") + lit(TwinOffset))
+      .withColumn("embedding", transform(col("embedding"),
+        x => (x.cast("double") * lit(factor)).cast("float"))))
+
+  /** Slightly perturbed copies of every 20th vector (cos ≈ 0.9999). */
+  private val PerturbFactor = 1.001
+  private def withPerturbedEmbeddings(emb: DataFrame): DataFrame =
+    withScaledTwins(emb, col("vec_id") % 20 === 0, PerturbFactor)
+
+  /** Twin per ANN query vector (× 1.0001): a positive scalar multiple keeps
+    * every random-hyperplane dot-product sign, so the twin shares ALL
+    * sign-LSH buckets with its query deterministically.
+    */
+  private def withPlantedTwins(emb: DataFrame): DataFrame =
+    withScaledTwins(emb, col("vec_id") < AnnQueries, 1.0001)
 
   def oracleSql: Map[String, String] = Map(
     "q1_agg" ->
@@ -1268,12 +1273,12 @@ object SparkEntry {
     "dedup_exact" ->
       "SELECT md5(text) AS h, count(*) AS n FROM documents GROUP BY md5(text)",
     "dedup_bloom_membership" ->
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 0),
         |nc AS (
         |  SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
         |  UNION ALL
-        |  SELECT doc_id + 10000000, text FROM corpus WHERE doc_id % 21 = 1)
+        |  SELECT doc_id + $TwinOffset, text FROM corpus WHERE doc_id % 21 = 1)
         |SELECT n.doc_id, md5(coalesce(n.text, '')) AS fp
         |FROM nc n
         |WHERE NOT EXISTS (
@@ -1281,7 +1286,7 @@ object SparkEntry {
         |  WHERE md5(coalesce(c.text, '')) = md5(coalesce(n.text, '')))"""
         .stripMargin,
     "dedup_substring" -> {
-      val k = 8
+      val k = Dedup.SubstrWords
       s"""WITH base AS (
          |  SELECT doc_id, coalesce(text, '')
          |    || CASE WHEN doc_id % 6 = 0 THEN ' $plantedBoilerplate'
@@ -1354,13 +1359,13 @@ object SparkEntry {
         |  CAST(strlen(text_norm) AS BIGINT) AS n_bytes_norm
         |FROM n""".stripMargin,
     "sim_topk_bruteforce" ->
-      """SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
+      s"""SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
         | SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
         |  row_number() OVER (PARTITION BY q.vec_id
         |    ORDER BY round(list_cosine_similarity(q.embedding, e.embedding), 6) DESC,
         |             e.vec_id ASC) AS rank
         | FROM embeddings q JOIN embeddings e ON q.vec_id != e.vec_id
-        | WHERE q.vec_id < 20) WHERE rank <= 3""".stripMargin,
+        | WHERE q.vec_id < $AnnQueries) WHERE rank <= ${Similarity.AnnK}""".stripMargin,
     "tq_token_count" ->
       """SELECT source,
         | CAST(sum(len(list_filter(string_split(text, ' '), x -> len(x) > 3)))
@@ -1377,116 +1382,78 @@ object SparkEntry {
          | count(*) AS n_docs
          |FROM documents GROUP BY source""".stripMargin,
     "dedup_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(words) = 0 THEN CAST([] AS VARCHAR[])
-        |      WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-        |      ELSE list_transform(generate_series(1, len(words)-2),
-        |             i -> array_to_string(words[i:i+2], ' ')) END) AS s
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(text, ' +'), w -> len(w) > 0) AS words
-        |        FROM documents)
-        |)
+      s"""WITH sh AS (${Dedup.shingleSetSql("documents")})
         |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
         |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS n_inter,
         |  CAST(len(list_distinct(list_concat(a.s, b.s))) AS BIGINT) AS n_union
         |FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1""".stripMargin,
     "dedup_embedding_cos" ->
-      """SELECT vec_id AS id_a, vec_id + 10000000 AS id_b
+      s"""SELECT vec_id AS id_a, vec_id + $TwinOffset AS id_b
         |FROM embeddings WHERE vec_id % 20 = 0""".stripMargin,
     // EXACT re-derivation of the SemDeDup pipeline over the dumped k-means
     // cells: perturbed twins rebuilt in SQL (same double-multiply-then-
-    // float-cast as withPerturbedEmbeddings), both-ends MaxBucket=50 cap,
-    // intra-cell pairs, cosine >= 0.95 verification (organic max 0.51 at
-    // this sf — membership is decided with a huge margin on both engines),
-    // recursive-CTE connected components, keep-first pick
+    // float-cast as withPerturbedEmbeddings), both-ends capped intra-cell
+    // pairs, cosine verification (organic max 0.51 at this sf — membership
+    // is decided with a huge margin on both engines), recursive-CTE
+    // connected components, keep-first pick
     "dedup_semantic" ->
-      """WITH RECURSIVE cells AS (
+      s"""WITH RECURSIVE cells AS (
         |  SELECT vec_id, cell
         |  FROM read_parquet('{OUT}/dedup_semantic_cells/*.parquet')),
         |emb AS (
         |  SELECT vec_id, embedding FROM embeddings
         |  UNION ALL
-        |  SELECT vec_id + 10000000,
-        |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) * 1.001 AS FLOAT))
+        |  SELECT vec_id + $TwinOffset,
+        |    list_transform(embedding, x -> CAST(CAST(x AS DOUBLE) * $PerturbFactor AS FLOAT))
         |  FROM embeddings WHERE vec_id % 20 = 0),
-        |buckets AS (SELECT cell, list_sort(list(vec_id)) AS all_ids
-        |  FROM cells GROUP BY cell),
-        |capped AS (SELECT CASE WHEN len(all_ids) <= 50 THEN all_ids
-        |    ELSE all_ids[1:25] || all_ids[len(all_ids)-24:len(all_ids)] END AS ids
-        |  FROM buckets WHERE len(all_ids) > 1),
-        |pairs AS (SELECT DISTINCT p.a AS id_a, p.b AS id_b
-        |  FROM capped, unnest(flatten(list_transform(generate_series(1, len(ids)),
-        |    i -> list_transform(ids[i+1:], bb -> {a: ids[i], b: bb})))) AS t(p)),
+        |${Dedup.cappedPairsSql("cells", "vec_id", "cell")},
         |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
         |  JOIN emb ea ON ea.vec_id = id_a JOIN emb eb ON eb.vec_id = id_b
-        |  WHERE round(list_cosine_similarity(ea.embedding, eb.embedding), 6) >= 0.95),
-        |sym AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
-        |vertices AS (SELECT vec_id AS v FROM cells),
-        |reach(v, u) AS (
-        |  SELECT v, v FROM vertices
-        |  UNION
-        |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.u = s.src)
-        |SELECT c.vec_id, CAST(c.cell AS INT) AS cell, comp.cluster,
-        |  (c.vec_id = comp.cluster) AS keep
-        |FROM cells c JOIN (SELECT v, min(u) AS cluster FROM reach GROUP BY v)
-        |  comp ON comp.v = c.vec_id""".stripMargin,
+        |  WHERE round(list_cosine_similarity(ea.embedding, eb.embedding), 6)
+        |    >= ${Similarity.DupCosine}),
+        |${Canon.componentsSql("edges", "SELECT vec_id FROM cells", "u")}
+        |SELECT c.vec_id, CAST(c.cell AS INT) AS cell, comp.component AS cluster,
+        |  (c.vec_id = comp.component) AS keep
+        |FROM cells c JOIN comp ON comp.v = c.vec_id""".stripMargin,
     "dedup_minhash_planted" ->
-      """SELECT doc_id AS id_a, doc_id + 10000000 AS id_b
+      s"""SELECT doc_id AS id_a, doc_id + $TwinOffset AS id_b
         |FROM documents WHERE doc_id % 10 = 0 AND n_chars >= 250""".stripMargin,
     "dedup_simhash_planted" ->
-      """SELECT doc_id AS id_a, doc_id + 10000000 AS id_b
+      s"""SELECT doc_id AS id_a, doc_id + $TwinOffset AS id_b
         |FROM documents""".stripMargin,
     "dedup_minhash_sig_parity" ->
       "SELECT doc_id AS id, CAST(TRUE AS BOOLEAN) AS sigs_equal FROM documents",
     "dedup_incremental" ->
-      """SELECT doc_id + 10000000 AS new_id, doc_id AS corpus_id
+      s"""SELECT doc_id + $TwinOffset AS new_id, doc_id AS corpus_id
         |FROM documents WHERE doc_id % 10 = 0 AND n_chars >= 250""".stripMargin,
     "sim_lsh_planted" ->
-      """SELECT vec_id AS query_id, vec_id + 10000000 AS neighbor_id
-        |FROM embeddings WHERE vec_id < 20""".stripMargin,
+      s"""SELECT vec_id AS query_id, vec_id + $TwinOffset AS neighbor_id
+        |FROM embeddings WHERE vec_id < $AnnQueries""".stripMargin,
     "sim_ivf_planted" ->
-      "SELECT CAST(20 AS BIGINT) AS n_queries, CAST(1 AS BOOLEAN) AS recall_ok",
+      s"SELECT CAST($AnnQueries AS BIGINT) AS n_queries, CAST(1 AS BOOLEAN) AS recall_ok",
     // EXACT re-derivation of the MinHash LSH pipeline over the dumped
     // 128-long signatures: band keys are the signature slices themselves
     // (bucket equality ⇔ slice equality, modulo negligible 64-bit mix
-    // collisions which could only ADD a Spark pair), both-ends MaxBucket=50
-    // cap replicated, pairs, n_eq verification against the same sigs, exact
+    // collisions which could only ADD a Spark pair), both-ends cap
+    // replicated, pairs, n_eq verification against the same sigs, exact
     // jaccard re-derived from STRING shingles over the re-built augmented
     // corpus (hashed-set sizes equal string-set sizes barring fnv1a64
     // collisions)
-    "dedup_minhash_lsh" ->
-      """WITH sigs AS (SELECT id, list(val ORDER BY pos) AS sig
+    "dedup_minhash_lsh" -> {
+      import Dedup.{Bands, NumHashes, RowsPerBand, MinhashThreshold}
+      s"""WITH sigs AS (SELECT id, list(val ORDER BY pos) AS sig
         |    FROM read_parquet('{OUT}/dedup_minhash_sigs/*.parquet')
         |    GROUP BY id),
         |banded AS (
-        |  SELECT b.band, s.id, s.sig[b.band*8+1 : b.band*8+8] AS key
-        |  FROM sigs s, (SELECT unnest(generate_series(0,15)) AS band) b),
-        |buckets AS (
-        |  SELECT band, key, list_sort(list(id)) AS all_ids
-        |  FROM banded GROUP BY band, key),
-        |capped AS (
-        |  SELECT CASE WHEN len(all_ids) <= 50 THEN all_ids
-        |    ELSE all_ids[1:25] || all_ids[len(all_ids)-24:len(all_ids)] END AS ids
-        |  FROM buckets WHERE len(all_ids) > 1),
-        |pairs AS (
-        |  SELECT DISTINCT p.a AS id_a, p.b AS id_b
-        |  FROM capped, unnest(flatten(list_transform(generate_series(1, len(ids)),
-        |    i -> list_transform(ids[i+1:], bb -> {a: ids[i], b: bb})))) AS t(p)),
+        |  SELECT b.band, s.id, s.sig[b.band*$RowsPerBand+1 : b.band*$RowsPerBand+$RowsPerBand] AS key
+        |  FROM sigs s, (SELECT unnest(generate_series(0,${Bands - 1})) AS band) b),
+        |${Dedup.cappedPairsSql("banded", "id", "band, key")},
         |aug AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
-        |  SELECT doc_id + 10000000, text || ' nearduplicate'
+        |  SELECT doc_id + $TwinOffset, text || ' $NearDupWord'
         |  FROM documents WHERE doc_id % 10 = 0),
-        |sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(words) = 0 THEN CAST([] AS VARCHAR[])
-        |      WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-        |      ELSE list_transform(generate_series(1, len(words)-2),
-        |             i -> array_to_string(words[i:i+2], ' ')) END) AS s
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(text, ' +'), w -> len(w) > 0) AS words
-        |        FROM aug)),
+        |sh AS (${Dedup.shingleSetSql("aug")}),
         |jac AS (
         |  SELECT p.id_a, p.id_b,
         |    len(list_intersect(a.s, b.s)) AS n_i,
@@ -1494,21 +1461,22 @@ object SparkEntry {
         |  FROM pairs p JOIN sh a ON a.doc_id = p.id_a
         |               JOIN sh b ON b.doc_id = p.id_b)
         |SELECT j.id_a, j.id_b,
-        |  CAST(len(list_filter(generate_series(1, 128),
+        |  CAST(len(list_filter(generate_series(1, $NumHashes),
         |    i -> sa.sig[i] = sb.sig[i])) AS INT) AS n_eq,
         |  CAST(floor((CASE WHEN j.n_u = 0 THEN 1.0
         |    ELSE CAST(j.n_i AS DOUBLE) / j.n_u END) * 1000000.0) AS BIGINT) AS jac_x1e6
         |FROM jac j JOIN sigs sa ON sa.id = j.id_a
         |           JOIN sigs sb ON sb.id = j.id_b
         |WHERE (CASE WHEN j.n_u = 0 THEN 1.0
-        |  ELSE CAST(j.n_i AS DOUBLE) / j.n_u END) >= 0.5""".stripMargin,
+        |  ELSE CAST(j.n_i AS DOUBLE) / j.n_u END) >= $MinhashThreshold""".stripMargin
+    },
     // EXACT re-derivation of the SimHash pipeline over the dumped 64-bit
     // signatures: unsigned 16-bit chunk banding via HUGEINT arithmetic
     // (replicating Java's >>> on the two's-complement long), both-ends cap,
     // pairs, xor/bit_count hamming verification (DuckDB bit_count matches
     // Long.bitCount on the 64-bit pattern)
     "dedup_simhash" ->
-      """WITH sigs AS (
+      s"""WITH sigs AS (
         |  SELECT id, sig,
         |    CASE WHEN sig < 0 THEN CAST(sig AS HUGEINT) + 18446744073709551616
         |         ELSE CAST(sig AS HUGEINT) END AS u
@@ -1517,59 +1485,37 @@ object SparkEntry {
         |  SELECT band.b AS band, id, CAST((u // band.dv) % 65536 AS BIGINT) AS bucket
         |  FROM sigs, (VALUES (0, 1::HUGEINT), (1, 65536::HUGEINT),
         |    (2, 4294967296::HUGEINT), (3, 281474976710656::HUGEINT)) band(b, dv)),
-        |buckets AS (SELECT band, bucket, list_sort(list(id)) AS all_ids
-        |  FROM banded GROUP BY band, bucket),
-        |capped AS (SELECT CASE WHEN len(all_ids) <= 50 THEN all_ids
-        |    ELSE all_ids[1:25] || all_ids[len(all_ids)-24:len(all_ids)] END AS ids
-        |  FROM buckets WHERE len(all_ids) > 1),
-        |pairs AS (SELECT DISTINCT p.a AS id_a, p.b AS id_b
-        |  FROM capped, unnest(flatten(list_transform(generate_series(1, len(ids)),
-        |    i -> list_transform(ids[i+1:], bb -> {a: ids[i], b: bb})))) AS t(p))
+        |${Dedup.cappedPairsSql("banded", "id", "band, bucket")}
         |SELECT p.id_a, p.id_b,
         |  CAST(bit_count(xor(sa.sig, sb.sig)) AS BIGINT) AS hamming
         |FROM pairs p JOIN sigs sa ON sa.id = p.id_a
         |             JOIN sigs sb ON sb.id = p.id_b
-        |WHERE bit_count(xor(sa.sig, sb.sig)) <= 6""".stripMargin,
+        |WHERE bit_count(xor(sa.sig, sb.sig)) <= $SimhashMaxDist""".stripMargin,
     // EXACT re-derivation of multi-table sign-LSH ANN over the dumped
     // (vec_id, bucket) assignments: bucket-join candidates, cosine scoring
     // and top-k ranking in SQL (same rounding/tie-break as the green
     // brute-force oracle)
     "sim_topk_lsh" ->
-      """WITH b AS (SELECT vec_id, bucket
+      s"""WITH b AS (SELECT vec_id, bucket
         |    FROM read_parquet('{OUT}/sim_lsh_buckets/*.parquet')),
-        |q AS (SELECT vec_id AS query_id, bucket FROM b WHERE vec_id < 20),
+        |q AS (SELECT vec_id AS query_id, bucket FROM b WHERE vec_id < $AnnQueries),
         |cand AS (SELECT DISTINCT q.query_id, b.vec_id AS neighbor_id
         |  FROM q JOIN b USING (bucket) WHERE b.vec_id != q.query_id),
-        |scored AS (SELECT c.query_id, c.neighbor_id,
-        |    row_number() OVER (PARTITION BY c.query_id ORDER BY
-        |      round(list_cosine_similarity(qe.embedding, ne.embedding), 6) DESC,
-        |      c.neighbor_id ASC) AS rank
-        |  FROM cand c JOIN embeddings qe ON qe.vec_id = c.query_id
-        |              JOIN embeddings ne ON ne.vec_id = c.neighbor_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
-        |FROM scored WHERE rank <= 3""".stripMargin,
+        |${Similarity.topKSql}""".stripMargin,
     // EXACT re-derivation of IVF ANN over the dumped quantizer assignments
     // (corpus cell per vector, IvfProbes probe cells per query)
     "sim_topk_ivf" ->
-      """WITH cells AS (SELECT vec_id, cell
+      s"""WITH cells AS (SELECT vec_id, cell
         |    FROM read_parquet('{OUT}/sim_ivf_cells/*.parquet')),
         |probes AS (SELECT query_id, cell
         |    FROM read_parquet('{OUT}/sim_ivf_probes/*.parquet')),
         |cand AS (SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id
         |  FROM probes p JOIN cells c USING (cell) WHERE c.vec_id != p.query_id),
-        |scored AS (SELECT c.query_id, c.neighbor_id,
-        |    row_number() OVER (PARTITION BY c.query_id ORDER BY
-        |      round(list_cosine_similarity(qe.embedding, ne.embedding), 6) DESC,
-        |      c.neighbor_id ASC) AS rank
-        |  FROM cand c JOIN embeddings qe ON qe.vec_id = c.query_id
-        |              JOIN embeddings ne ON ne.vec_id = c.neighbor_id)
-        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
-        |FROM scored WHERE rank <= 3""".stripMargin,
-    // shared shingle-set CTE text (string shingles over ' +'-split words,
-    // the Dedup.shingleStrings tiling) reused by several oracles below
+        |${Similarity.topKSql}""".stripMargin,
     "dedup_cluster_pick" ->
       s"""$clusterCompCtes
-        |SELECT v AS doc_id, cluster, (v = cluster) AS keep FROM comp""".stripMargin,
+        |SELECT v AS doc_id, component AS cluster, (v = component) AS keep
+        |FROM comp""".stripMargin,
     // same components, quality-argmax representative (score mirror is the
     // generated qualityScoreX1e6Sql; ties → min doc_id via the window order)
     "dedup_cluster_best" ->
@@ -1577,7 +1523,7 @@ object SparkEntry {
         |q AS (SELECT doc_id,
         |        ${graft.textops.TextOps.qualityScoreX1e6Sql("text")} AS score
         |      FROM documents),
-        |lab AS (SELECT q.doc_id, c.cluster, q.score
+        |lab AS (SELECT q.doc_id, c.component AS cluster, q.score
         |        FROM q JOIN comp c ON c.v = q.doc_id),
         |best AS (SELECT cluster, doc_id AS best_doc,
         |    row_number() OVER (PARTITION BY cluster
@@ -1795,15 +1741,7 @@ object SparkEntry {
          |FROM raws GROUP BY 1""".stripMargin
     },
     "tq_contamination" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    list_distinct(CASE WHEN len(words) = 0 THEN CAST([] AS VARCHAR[])
-        |      WHEN len(words) < 3 THEN [array_to_string(words, ' ')]
-        |      ELSE list_transform(generate_series(1, len(words)-2),
-        |             i -> array_to_string(words[i:i+2], ' ')) END) AS s
-        |  FROM (SELECT doc_id,
-        |          list_filter(string_split_regex(text, ' +'), w -> len(w) > 0) AS words
-        |        FROM documents)),
+      s"""WITH sh AS (${Dedup.shingleSetSql("documents")}),
         |bench AS (SELECT DISTINCT unnest(s) AS g FROM sh WHERE doc_id < 5),
         |expl AS (SELECT doc_id, unnest(s) AS g FROM sh)
         |SELECT doc_id, count(*) AS n_shared

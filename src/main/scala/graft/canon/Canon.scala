@@ -73,15 +73,17 @@ object Canon {
     // shuffle). The two no-op iterations an edge-free graph pays are
     // cheaper than probing for it.
 
+    // labels: v -> current candidate component (min over seen neighbors).
+    // Both labels persists (this one and each round's, over an output that
+    // is already a localCheckpoint) stay: without them the dedup_semantic
+    // query fails in Catalyst, `java.util.NoSuchElementException: key not
+    // found: v#1704L` at `UnionBase.rewriteConstraints`
+    // (basicLogicalOperators.scala:527); dropping only the per-round one
+    // fails the same way. The last round's persist is released on return:
+    // the result reads that round's checkpoint.
+    var labels: DataFrame = null
     try {
-      // labels: v -> current candidate component (min over seen neighbors).
-      // Both labels persists (this one and each round's, over an output that
-      // is already a localCheckpoint) stay: without them the dedup_semantic
-      // query fails in Catalyst, `java.util.NoSuchElementException: key not
-      // found: v#1704L` at `UnionBase.rewriteConstraints`
-      // (basicLogicalOperators.scala:527); dropping only the per-round one
-      // fails the same way.
-      var labels = e.select($"src".as("v")).distinct()
+      labels = e.select($"src".as("v")).distinct()
         .withColumn("label", $"v")
         .persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -123,8 +125,25 @@ object Canon {
         iter += 1
       }
       labels.select($"v", $"label".as("component"))
-    } finally e.unpersist(blocking = false)
+    } finally {
+      if (labels != null) labels.unpersist(blocking = false)
+      e.unpersist(blocking = false)
+    }
   }
+
+  /** DuckDB mirror of [[connectedComponents]] as a recursive-CTE closure:
+    * the sym/reach/comp CTEs over an `edges` (src, dst) table and a
+    * one-column `vertices` query, comp = (v, component) with component the
+    * min `label` (an SQL expression over the reached vertex `u`).
+    */
+  def componentsSql(edges: String, vertices: String, label: String): String =
+    s"""sym AS (SELECT src, dst FROM $edges WHERE src != dst
+       |        UNION SELECT dst, src FROM $edges WHERE src != dst),
+       |reach(v, u) AS (
+       |  SELECT v, v FROM ($vertices) t(v)
+       |  UNION
+       |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.u = s.src),
+       |comp AS (SELECT v, min($label) AS component FROM reach GROUP BY v)""".stripMargin
 
   /** Canonicalize typed surfaces: vertices = (surface, entType) hashed by
     * [[vertexId]]; returns (surface, entType, canonId), canonId = the

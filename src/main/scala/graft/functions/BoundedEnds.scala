@@ -3,8 +3,7 @@ package graft.functions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -53,7 +52,7 @@ case class BoundedEnds(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[EndsBuffer] {
+) extends TypedImperativeAggregate[EndsBuffer] with ExpectsInputTypes {
 
   require(k > 0, "bounded_ends requires k > 0")
 
@@ -61,12 +60,8 @@ case class BoundedEnds(
   // integral inputs are accepted and widened in update(); anything else
   // fails at ANALYSIS time instead of throwing a mid-query
   // ClassCastException from a blind Long cast
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType | IntegerType | ShortType | ByteType =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bounded_ends requires an integral input, got ${other.catalogString}")
-  }
+  override def inputTypes =
+    Seq(org.apache.spark.sql.GraftBridge.integralType)
   override def nullable: Boolean = false
   override def dataType: DataType = StructType(Seq(
     StructField("n_total", LongType, nullable = false),

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * total ≤ 32 digits (md5 has 32).
   */
 case class Md5Slices(child: Expression, widths: Seq[Int])
-    extends UnaryExpression {
+    extends UnaryExpression with ExpectsInputTypes {
 
   require(widths.nonEmpty && widths.forall(w => w >= 1 && w <= 15) &&
     widths.sum <= 32,
@@ -40,13 +40,7 @@ case class Md5Slices(child: Expression, widths: Seq[Int])
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"md5_slices requires STRING, got ${child.dataType}")
+  override def inputTypes = Seq(StringType)
 
   override def nullSafeEval(input: Any): Any =
     Md5Slices.slices(input.asInstanceOf[UTF8String], widthsArr)

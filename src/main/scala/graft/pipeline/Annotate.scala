@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.dict.{Gazetteer, Trie}
 import graft.merge.{Merge, RulesMerging}
@@ -30,27 +29,21 @@ object Annotate {
       entities: Seq[EntityRow]
   )
 
-  def annotate(
-      sentences: Dataset[SentenceRow],
-      trieB: Broadcast[Trie],
-      weightsB: Broadcast[Map[String, Map[String, Double]]],
-      evalB: Broadcast[Map[String, Map[String, Map[String, Array[Double]]]]],
-      refinedB: Broadcast[Set[String]],
-      suffixB: Broadcast[Map[String, String]]
-  )(implicit spark: SparkSession): Dataset[SentenceArtifacts] = {
+  def annotate(sentences: Dataset[SentenceRow], b: Pipeline.Broadcasts)(
+      implicit spark: SparkSession): Dataset[SentenceArtifacts] = {
     import spark.implicits._
     sentences.mapPartitions { it =>
       // per-partition setup: everything derivable from broadcasts is
       // computed ONCE here, never per sentence
-      val trie = trieB.value
+      val trie = b.trie.value
       val ctx = Ctx(
         trie,
         CrfScorer.productionScorers(trie),
-        weightsB.value,
-        Ensembles.weightsIdx(weightsB.value),
-        evalB.value,
-        refinedB.value,
-        graft.merge.Merge.SuffixSets.from(suffixB.value))
+        b.weights.value,
+        Ensembles.weightsIdx(b.weights.value),
+        b.eval.value,
+        b.refined.value,
+        graft.merge.Merge.SuffixSets.from(b.suffix.value))
       it.map(sr => annotateOne(sr, ctx))
     }
   }

@@ -60,8 +60,7 @@ object Pipeline {
     */
   def artifacts(pages: Dataset[Page], b: Broadcasts)(
       implicit spark: SparkSession): Dataset[Annotate.SentenceArtifacts] =
-    Annotate.annotate(sentences(pages), b.trie, b.weights, b.eval, b.refined,
-      b.suffix)
+    Annotate.annotate(sentences(pages), b)
 
   /** The extract layer: pages → sections → sentence rows. Annotate copies
     * these nine fields 1:1 into each artifact's row, so a table that reads

@@ -87,6 +87,19 @@ object Dedup {
     }
   }
 
+  /** DuckDB mirror of [[shingleStrings]], distinct per document: a
+    * (doc_id, s) select over a (doc_id, text) table.
+    */
+  def shingleSetSql(table: String): String =
+    s"""SELECT doc_id,
+       |    list_distinct(CASE WHEN len(words) = 0 THEN CAST([] AS VARCHAR[])
+       |      WHEN len(words) < $ShingleWords THEN [array_to_string(words, ' ')]
+       |      ELSE list_transform(generate_series(1, len(words)-${ShingleWords - 1}),
+       |             i -> array_to_string(words[i:i+${ShingleWords - 1}], ' ')) END) AS s
+       |  FROM (SELECT doc_id,
+       |          list_filter(string_split_regex(text, ' +'), w -> len(w) > 0) AS words
+       |        FROM $table)""".stripMargin
+
   /** mix(s, h) = mix(s ^ mix(h)) — the inner mix(h) depends only on the
     * permutation index, so the 128 values are precomputed once (r6: halves
     * the dominant per-(shingle, permutation) work of the signature kernel;
@@ -209,6 +222,20 @@ object Dedup {
       .select($"p.a".as("id_a"), $"p.b".as("id_b"))
       .distinct()
   }
+
+  /** DuckDB mirror of [[cappedPairs]]: the buckets/capped/pairs CTEs over
+    * a `table` of `id`s grouped by the `keys` columns, each bucket's sorted
+    * ids cut to their MaxBucket/2 smallest and largest.
+    */
+  def cappedPairsSql(table: String, id: String, keys: String): String =
+    s"""buckets AS (SELECT $keys, list_sort(list($id)) AS all_ids
+       |  FROM $table GROUP BY $keys),
+       |capped AS (SELECT CASE WHEN len(all_ids) <= $MaxBucket THEN all_ids
+       |    ELSE all_ids[1:${MaxBucket / 2}] || all_ids[len(all_ids)-${MaxBucket / 2 - 1}:len(all_ids)] END AS ids
+       |  FROM buckets WHERE len(all_ids) > 1),
+       |pairs AS (SELECT DISTINCT p.a AS id_a, p.b AS id_b
+       |  FROM capped, unnest(flatten(list_transform(generate_series(1, len(ids)),
+       |    i -> list_transform(ids[i+1:], bb -> {a: ids[i], b: bb})))) AS t(p))""".stripMargin
 
   /** Audit view of the MinHash LSH bucket distribution:
     * (band, bucket, n_total, truncated). Run this to quantify how many
@@ -669,18 +696,9 @@ object Dedup {
     val pw = base
       .select(col("doc_id"), posexplode(col("w")).as(Seq("p", "word")))
       .select(col("doc_id"), (col("p") + 1).as("idx"), col("word"))
-    val kept = pw.join(cov, Seq("doc_id", "idx"), "left_anti")
-    val ka = kept.groupBy("doc_id").agg(
-      array_join(transform(
-        array_sort(collect_list(struct(col("idx"), col("word")))),
-        s => s.getField("word")), " ").as("kept_text"))
-    val rc = cov.groupBy("doc_id").agg(count(lit(1)).as("n_removed"))
-    base.select(col("doc_id"), size(col("w")).cast("long").as("n_words"))
-      .join(rc, Seq("doc_id"), "left")
-      .join(ka, Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_removed"))
-      .select(col("doc_id"), col("n_words"),
-        col("n_removed").cast("long").as("n_removed"),
-        coalesce(col("kept_text"), lit("")).as("kept_text"))
+    TextOps.keptText(
+      base.select(col("doc_id"), size(col("w")).cast("long").as("n_words")),
+      pw.join(cov, Seq("doc_id", "idx"), "left_anti"), "idx", "word", " ",
+      cov)
   }
 }

@@ -38,6 +38,10 @@ object Similarity {
     * ([[semanticDedup]], [[embeddingNearDup]]).
     */
   val DupCosine = 0.95
+  /** The k of the ANN top-k queries ([[bruteForceTopK]], [[lshTopK]],
+    * [[ivfTopK]]) and of their DuckDB ranking [[topKSql]].
+    */
+  val AnnK = 3
 
   /** Cosine similarity between two float-array columns, computed in double.
     * Since round 3 this is the native codegen Catalyst expression
@@ -84,15 +88,37 @@ object Similarity {
     val queries = embeddings
       .filter($"vec_id".isin(queryIds: _*))
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    val scored = embeddings.crossJoin(broadcast(queries))
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("sim", simOrNeg($"q_emb", $"embedding"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"sim".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"sim", $"rank")
+    topK(embeddings.crossJoin(broadcast(queries))
+      .filter($"vec_id" =!= $"query_id"), k)
   }
+
+  /** The ranking tail of every top-k path: [[simOrNeg]] sim of each
+    * (query_id, q_emb, vec_id, embedding) candidate, the first k per query
+    * by (sim desc, vec_id asc). Output (query_id, neighbor_id, sim, rank).
+    */
+  private def topK(candidates: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("sim").desc, col("vec_id").asc)
+    candidates.withColumn("sim", simOrNeg(col("q_emb"), col("embedding")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("sim"),
+        col("rank"))
+  }
+
+  /** DuckDB mirror of [[topK]] at k = [[AnnK]] over the (query_id,
+    * neighbor_id) candidate CTE `cand`, scored against the `embeddings`
+    * table.
+    */
+  def topKSql: String =
+    s"""scored AS (SELECT c.query_id, c.neighbor_id,
+       |    row_number() OVER (PARTITION BY c.query_id ORDER BY
+       |      round(list_cosine_similarity(qe.embedding, ne.embedding), 6) DESC,
+       |      c.neighbor_id ASC) AS rank
+       |  FROM cand c JOIN embeddings qe ON qe.vec_id = c.query_id
+       |              JOIN embeddings ne ON ne.vec_id = c.neighbor_id)
+       |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank
+       |FROM scored WHERE rank <= $AnnK""".stripMargin
 
   /** Deterministic random hyperplanes for table `t`: [[SignBits]] × [[Dim]]
     * sign matrix from hashing (each table gets an independent set).
@@ -178,16 +204,36 @@ object Similarity {
       .filter($"vec_id".isin(queryIds: _*))
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         $"bucket")
-    val scored = bucketed.join(queries, "bucket")
+    val candidates = bucketed.join(queries, "bucket")
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"q_emb", $"vec_id", $"embedding")
       .distinct() // a pair can collide in several tables
-      .withColumn("sim", simOrNeg($"q_emb", $"embedding"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"sim".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"sim", $"rank")
+    topK(candidates, k)
+  }
+
+  /** Squared Euclidean distance on primitive arrays (r6: the assignment
+    * UDFs read nlist × dim elements per row — boxed Seq access dominated
+    * them).
+    */
+  private def dist2(v: Array[Float], c: Array[Double]): Double = {
+    var d = 0.0
+    var i = 0
+    val n = math.min(c.length, v.length)
+    while (i < n) { val x = v(i) - c(i); d += x * x; i += 1 }
+    d
+  }
+
+  /** Index of the centroid nearest to `v`; a tie keeps the lower index. */
+  private def nearest(v: Array[Float], cs: Array[Array[Double]]): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var k = 0
+    while (k < cs.length) {
+      val d = dist2(v, cs(k))
+      if (d < bestD) { bestD = d; best = k }
+      k += 1
+    }
+    best
   }
 
   /** IVF (inverted-file) ANN: a deterministic Lloyd's k-means coarse
@@ -227,21 +273,6 @@ object Similarity {
       val idx = (Hashing.mix(0x1f5eedL, k.toLong) & Long.MaxValue) %
         sample.length
       sample(idx.toInt)._2.map(_.toDouble)
-    }
-    def nearest(v: Array[Float], cs: Array[Array[Double]]): Int = {
-      var best = 0
-      var bestD = Double.MaxValue
-      var k = 0
-      while (k < cs.length) {
-        var d = 0.0
-        var i = 0
-        val c = cs(k)
-        val n = math.min(c.length, v.length)
-        while (i < n) { val x = v(i) - c(i); d += x * x; i += 1 }
-        if (d < bestD) { bestD = d; best = k }
-        k += 1
-      }
-      best
     }
     var it = 0
     while (it < KmeansIters) {
@@ -286,27 +317,7 @@ object Similarity {
       return (cells, probes)
     }
     val cents = spark.sparkContext.broadcast(trained)
-    // primitive-array distance kernel (r6: the assignment UDF reads
-    // nlist × dim elements per row — boxed Seq access dominated it)
-    def dist2(v: Array[Float], c: Array[Double]): Double = {
-      var d = 0.0
-      var i = 0
-      val n = math.min(c.length, v.length)
-      while (i < n) { val x = v(i) - c(i); d += x * x; i += 1 }
-      d
-    }
-    val cellUdf = udf { (emb: Seq[Float]) =>
-      val a = toArr(emb)
-      val cs = cents.value
-      var best = 0; var bestD = Double.MaxValue
-      var i = 0
-      while (i < cs.length) {
-        val d = dist2(a, cs(i))
-        if (d < bestD) { bestD = d; best = i }
-        i += 1
-      }
-      best
-    }
+    val cellUdf = udf((emb: Seq[Float]) => nearest(toArr(emb), cents.value))
     val probeUdf = udf { (emb: Seq[Float]) =>
       val a = toArr(emb)
       cents.value.indices
@@ -333,14 +344,7 @@ object Similarity {
     val queries = probes
       .join(embeddings.select($"vec_id".as("query_id"),
         $"embedding".as("q_emb")), "query_id")
-    val scored = cells.join(queries, "cell")
-      .filter($"vec_id" =!= $"query_id")
-      .withColumn("sim", simOrNeg($"q_emb", $"embedding"))
-    val w = Window.partitionBy($"query_id")
-      .orderBy($"sim".desc, $"vec_id".asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter($"rank" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"sim", $"rank")
+    topK(cells.join(queries, "cell").filter($"vec_id" =!= $"query_id"), k)
   }
 
   /** The k-means cell assignment (vec_id, embedding, cell) used by

@@ -663,20 +663,32 @@ object TextOps {
       .filter(col("nd") >= BoilerplateMinDocs)
       .select(col("line"), lit(true).as("is_boiler"))
     val marked = pl.join(hot, Seq("line"), "left")
-    val ka = marked.filter(col("is_boiler").isNull)
-      .groupBy("doc_id").agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("p"), col("line")))),
-          s => s.getField("line")), "\n").as("kept_text"))
-    val rc = marked.filter(col("is_boiler").isNotNull)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_removed"))
-    base.select(col("doc_id"), size(col("ls")).cast("long").as("n_lines"))
+    keptText(
+      base.select(col("doc_id"), size(col("ls")).cast("long").as("n_lines")),
+      marked.filter(col("is_boiler").isNull), "p", "line", "\n",
+      marked.filter(col("is_boiler").isNotNull))
+  }
+
+  /** The result of a unit-removal pass ([[boilerplateLineRemoval]],
+    * [[Dedup.exactSubstringDedup]]): every column of `counts` (doc_id and
+    * its per-doc counts) extended with n_removed, the `removed` rows per
+    * doc, and kept_text, the `kept` rows' `unit` values joined by `sep` in
+    * `pos` order ("" when none).
+    */
+  private[textops] def keptText(counts: DataFrame, kept: DataFrame,
+      pos: String, unit: String, sep: String, removed: DataFrame): DataFrame = {
+    val ka = kept.groupBy("doc_id").agg(
+      array_join(transform(
+        array_sort(collect_list(struct(col(pos), col(unit)))),
+        s => s.getField(unit)), sep).as("kept_text"))
+    val rc = removed.groupBy("doc_id").agg(count(lit(1)).as("n_removed"))
+    counts
       .join(rc, Seq("doc_id"), "left")
       .join(ka, Seq("doc_id"), "left")
       .na.fill(0L, Seq("n_removed"))
-      .select(col("doc_id"), col("n_lines"),
-        col("n_removed").cast("long").as("n_removed"),
-        coalesce(col("kept_text"), lit("")).as("kept_text"))
+      .select(counts.columns.map(col) :+
+        col("n_removed").cast("long").as("n_removed") :+
+        coalesce(col("kept_text"), lit("")).as("kept_text"): _*)
   }
 
   /** The DuckDB mirror of [[boilerplateLineRemoval]] over a

@@ -101,9 +101,7 @@ object WebGraph {
         .agg(count(lit(1)).as("deg"))
       edges.join(outdeg, Seq("src"))
     }
-    val nodes = edges.select(col("src").as("host"))
-      .union(edges.select(col("dst").as("host")))
-      .distinct()
+    val nodes = hostNodes(edges)
     def step(rank: DataFrame): DataFrame = {
       val contrib = withDeg
         .join(rank, col("src") === col("host"))
@@ -120,6 +118,12 @@ object WebGraph {
       step(rank) // the last round: the scope's checkpoint
     }
   }
+
+  /** The hosts of an edge table: distinct src ∪ dst, as (host). */
+  private def hostNodes(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("host"))
+      .union(edges.select(col("dst").as("host")))
+      .distinct()
 
   /** The shared edge-extraction + node CTE prefix of the SQL mirrors
     * (exr/ex/nodes — the [[hostGraphEdges]] semantics in DuckDB).
@@ -198,10 +202,7 @@ object WebGraph {
     // projections, no exchange reuse)
     val edges = edges0.select(col("src"), col("dst"))
     CacheScope(edges) {
-      val hosts = edges.select(col("src").as("host"))
-        .union(edges.select(col("dst").as("host")))
-        .distinct()
-        .withColumn("hid", hostId(col("host")))
+      val hosts = hostNodes(edges).withColumn("hid", hostId(col("host")))
       val cc = graft.canon.Canon.connectedComponents(
         edges.select(hostId(col("src")).as("src"),
           hostId(col("dst")).as("dst")))
@@ -219,14 +220,8 @@ object WebGraph {
     */
   def hostComponentsSql(table: String): String =
     s"""WITH RECURSIVE ${edgeCtes(table, "host")},
-       |sym AS (SELECT src, dst FROM ex WHERE src != dst
-       |        UNION SELECT dst, src FROM ex WHERE src != dst),
-       |reach(v, u) AS (
-       |  SELECT host, host FROM nodes
-       |  UNION
-       |  SELECT r.v, s.dst FROM reach r JOIN sym s ON r.u = s.src)
-       |SELECT v AS host, min(${hostIdSql("u")}) AS component_id
-       |FROM reach GROUP BY v""".stripMargin
+       |${graft.canon.Canon.componentsSql("ex", "SELECT host FROM nodes", hostIdSql("u"))}
+       |SELECT v AS host, component AS component_id FROM comp""".stripMargin
 
   /** Per-host triangle counts over the undirected host graph — the local
     * clustering signal link-spam detection uses (spam farms are near-
@@ -360,9 +355,7 @@ object WebGraph {
     // shuffle exactly once; each round's hub join is then exchange-free on
     // the edge side — per-iteration shuffle drops to the score tables only.
     val edgesByDst = edges.repartition(col("dst"))
-    val nodes = edges.select(col("src").as("host"))
-      .union(edges.select(col("dst").as("host")))
-      .distinct()
+    val nodes = hostNodes(edges)
     // r6: each half-step's RAW table is checkpointed with its maximum
     // collected as an OBSERVED metric during that same materialization
     // (the Canon convergence-read pattern — zero extra jobs); the

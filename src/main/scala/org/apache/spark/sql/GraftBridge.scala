@@ -10,4 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The `inputTypes` entry that accepts every integral type; the type
+    * collection is private[sql] in Spark 4.
+    */
+  def integralType = types.IntegralType
 }

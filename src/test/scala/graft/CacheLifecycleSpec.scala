@@ -46,7 +46,7 @@ object CacheLifecycleSpec {
     "graft/util/CacheScope.scala apply" ->
       "the helper: persists the frames an operator holds for one call and releases them in finally",
     "graft/canon/Canon.scala connectedComponents" ->
-      "its labels roll from round to round (each round's persist releases the last one) and the edge cache is released in finally",
+      "its labels roll from round to round (each round's persist releases the last one); the last labels and the edge cache are released in finally",
     "graft/link/Link.scala contextProfiles" ->
       "its tf cache lives for the session; Dag.run's clearCache releases it"
   )

@@ -53,44 +53,44 @@ class CacheScopeSpec extends AnyFunSuite {
     val hostEdges = Seq(("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
       ("d", "d")).toDF("src", "dst")
     val docEdges = Seq((2L, 1L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
-    // Canon.connectedComponents keeps its last round's labels cached (its
-    // output reads them), one entry per call; an operator that calls it
-    // adds that entry and nothing else
-    val ccKeeps = {
-      val before = entries
-      Canon.connectedComponents(docEdges).count()
-      entries - before
-    }
-    assert(ccKeeps == 1)
-    val ops: Seq[(String, Int, () => DataFrame)] = Seq(
-      ("minhashLsh", 0, () => Dedup.minhashLsh(docs, "doc_id", "text")),
-      ("incrementalMinhash", 0, () => Dedup.incrementalMinhash(
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      ("minhashLsh", () => Dedup.minhashLsh(docs, "doc_id", "text")),
+      ("incrementalMinhash", () => Dedup.incrementalMinhash(
         docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
         Dedup.minhashSigsDf(docs, "doc_id", "text"))),
-      ("clusterCanonicalBest", ccKeeps, () => Dedup.clusterCanonicalBest(
+      ("clusterCanonicalBest", () => Dedup.clusterCanonicalBest(
         docs.select(col("doc_id"), col("n_chars").as("score")), docEdges)),
-      ("simhashDedup", 0, () => Dedup.simhashDedup(docs, "doc_id", "text", 3)),
-      ("semanticDedup", ccKeeps, () => Similarity.semanticDedup(emb)),
-      ("hostRank", 0, () =>
+      ("simhashDedup", () => Dedup.simhashDedup(docs, "doc_id", "text", 3)),
+      ("semanticDedup", () => Similarity.semanticDedup(emb)),
+      ("hostRank", () =>
         WebGraph.hostRank(hostEdges, WebGraph.RankIterations)),
-      ("hostComponents", ccKeeps, () => WebGraph.hostComponents(hostEdges)),
-      ("triangleCounts", 0, () => WebGraph.triangleCounts(hostEdges)),
-      ("hits", 0, () => WebGraph.hits(hostEdges)),
-      ("classifierWeights", 0, () => Classifier.classifierWeights(
+      ("hostComponents", () => WebGraph.hostComponents(hostEdges)),
+      ("triangleCounts", () => WebGraph.triangleCounts(hostEdges)),
+      ("hits", () => WebGraph.hits(hostEdges)),
+      ("classifierWeights", () => Classifier.classifierWeights(
         docs.withColumn("y", col("lang") === "en"), "text", "y",
         Classifier.WeightMinCount)),
-      ("dedup_url_exact", 0, () =>
+      ("dedup_url_exact", () =>
         SparkEntry.queries("dedup_url_exact")(spark, dir.toString)))
-    try callerCached { held =>
-      ops.foreach { case (name, kept, op) =>
-        val before = entries
-        val out = op()
-        assert(entries == before + kept, s"$name changed the cached entries")
-        assert(held.storageLevel == StorageLevel.MEMORY_AND_DISK,
-          s"$name released a cache its caller holds")
-        assert(out.count() >= 0L)
+    // a failed check clears what it left, so that later specs counting
+    // cached entries do not fail for it
+    try {
+      // Canon.connectedComponents, which four of them call, releases its
+      // caches too: its result reads the last round's checkpoint
+      val before = entries
+      Canon.connectedComponents(docEdges).count()
+      assert(entries == before)
+      callerCached { held =>
+        ops.foreach { case (name, op) =>
+          val before = entries
+          val out = op()
+          assert(entries == before, s"$name changed the cached entries")
+          assert(held.storageLevel == StorageLevel.MEMORY_AND_DISK,
+            s"$name released a cache its caller holds")
+          assert(out.count() >= 0L)
+        }
       }
-    } finally spark.catalog.clearCache() // the labels the CC calls kept
+    } finally spark.catalog.clearCache()
   }}
 
   test("a body that throws still releases every frame the scope persisted") {

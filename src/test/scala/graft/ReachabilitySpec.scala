@@ -166,13 +166,19 @@ object ReachabilitySpec {
     * interpolated string (`s"…"`, `f"…"`, `raw"…"`) the `$x` and `${…}`
     * parts stay as code, blanked recursively.
     */
-  def code(src: String): String = {
+  def code(src: String): String = blanked(src, literals = true)
+
+  /** `src` with only the comment text blanked: literal text stays. */
+  def uncommented(src: String): String = blanked(src, literals = false)
+
+  private def blanked(src: String, literals: Boolean): String = {
     val out = src.toCharArray
     val n = src.length
     var i = 0
     def at(s: String) = src.startsWith(s, i)
     def blank(from: Int, to: Int): Unit =
       (from until math.min(to, n)).foreach(k => if (out(k) != '\n') out(k) = ' ')
+    def blankLiteral(from: Int, to: Int): Unit = if (literals) blank(from, to)
     def isId(c: Char) = c.isLetterOrDigit || c == '_'
 
     // code up to the end, or (inside `${`) up to its closing brace
@@ -195,14 +201,14 @@ object ReachabilitySpec {
         } else if (src(i) == '"') {
           var s = i
           while (s > 0 && isId(src(s - 1))) s -= 1
-          blank(s, i)
+          blankLiteral(s, i)
           string(interpolated = s < i)
         } else if (src(i) == '\'') {
           val end =
             if (i + 1 < n && src(i + 1) == '\\') math.max(src.indexOf('\'', i + 3) + 1, i + 1)
             else if (i + 2 < n && src(i + 2) == '\'') i + 3
             else i + 1
-          blank(i, end); i = end
+          blankLiteral(i, end); i = end
         } else {
           if (src(i) == '{') depth += 1
           else if (src(i) == '}') depth -= 1
@@ -214,29 +220,29 @@ object ReachabilitySpec {
     // a literal from its opening quote on, blanked but for interpolations
     def string(interpolated: Boolean): Unit = {
       val triple = at("\"\"\"")
-      blank(i, i + (if (triple) 3 else 1))
+      blankLiteral(i, i + (if (triple) 3 else 1))
       i += (if (triple) 3 else 1)
       var open = true
       while (i < n && open) {
         if (triple && at("\"\"\"")) {
           var end = i + 3
           while (end < n && src(end) == '"') end += 1
-          blank(i, end); i = end; open = false
+          blankLiteral(i, end); i = end; open = false
         } else if (!triple && src(i) == '"') {
-          blank(i, i + 1); i += 1; open = false
+          blankLiteral(i, i + 1); i += 1; open = false
         } else if (!triple && src(i) == '\\') {
-          blank(i, i + 2); i += 2
+          blankLiteral(i, i + 2); i += 2
         } else if (interpolated && at("${")) {
-          blank(i, i + 2); i += 2
+          blankLiteral(i, i + 2); i += 2
           codeUntil(closing = true)
-          blank(i, i + 1); i += 1
+          blankLiteral(i, i + 1); i += 1
         } else if (interpolated && at("$$")) {
-          blank(i, i + 2); i += 2
+          blankLiteral(i, i + 2); i += 2
         } else if (interpolated && src(i) == '$') {
-          blank(i, i + 1); i += 1
+          blankLiteral(i, i + 1); i += 1
           while (i < n && isId(src(i))) i += 1
         } else {
-          blank(i, i + 1); i += 1
+          blankLiteral(i, i + 1); i += 1
         }
       }
     }
